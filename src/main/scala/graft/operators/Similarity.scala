@@ -108,7 +108,7 @@ object Similarity {
     // per-query argmax as a HASH aggregate, not a window: min over the
     // struct (-score, cand_id) is lexicographically "max score, tie ->
     // min cand_id" — identical semantics to the row_number()==1 window
-    // (the [[ivfAssign]] nProbe=1 convention) with map-side partials
+    // (the [[ivfAssign]] convention) with map-side partials
     // and no per-step sort+exchange. No -0.0 ambiguity: rel/mmr are
     // half-up-rounded 1e-4 multiples whose zero is always +0.0, and
     // cand_id is unique per query so ties cannot occur.
@@ -278,35 +278,87 @@ object Similarity {
     * half of IVF. Output: (idCol, cid). */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
                 centroids: DataFrame, cidCol: String = "cid",
-                centCol: String = "centroid",
-                nProbe: Int = 1): DataFrame = {
-    val scored = df.crossJoin(broadcast(
-        centroids.select(col(cidCol), col(centCol))))
+                centCol: String = "centroid"): DataFrame =
+    // argmax as a hash aggregate (map-side partials, no sort) instead of
+    // a window — min over the struct (-cos, cid) is lexicographically
+    // "max cosine, tie -> min cid", the order [[ivfProbeRanks]] ranks by
+    centroidCosines(df, vecCol, centroids, cidCol, centCol)
+      .groupBy(col(idCol)).agg(
+        min_by(col(cidCol), struct(negate(col("c_cos")), col(cidCol)))
+          .as(cidCol))
+
+  /** Every (vector, centroid) pair with its cosine `c_cos`; centroids
+    * broadcast. */
+  private def centroidCosines(df: DataFrame, vecCol: String,
+                              centroids: DataFrame, cidCol: String,
+                              centCol: String): DataFrame =
+    df.crossJoin(broadcast(centroids.select(col(cidCol), col(centCol))))
       .withColumn("c_cos", cosineFromParts(
         dot(col(vecCol), col(centCol)),
         normSq(col(vecCol)), normSq(col(centCol))))
-    if (nProbe == 1) {
-      // the corpus-side hot path: argmax as a hash aggregate (map-side
-      // partials, no sort) instead of a window — min over the struct
-      // (-cos, cid) is lexicographically "max cosine, tie -> min cid",
-      // identical semantics to the window form below
-      scored.groupBy(col(idCol)).agg(
-        min_by(col(cidCol), struct(negate(col("c_cos")), col(cidCol)))
-          .as(cidCol))
-    } else {
-      val w = Window.partitionBy(idCol)
-        .orderBy(col("c_cos").desc, col(cidCol).asc)
-      scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= nProbe)
-        .select(col(idCol), col(cidCol))
-    }
+
+  /** The query side of every IVF probe: each query's `maxProbe` nearest
+    * lists, ranked once. Output: (query_id, cid, p_rank), where `p_rank`
+    * 1 is the nearest list and ties break by cid — the [[ivfAssign]]
+    * order, so p_rank 1 is exactly the list a query would be assigned
+    * to. Queries are few, so the window costs nothing; what matters is
+    * that the rank survives onto every candidate: the lists probed at
+    * nProbe=p are exactly those with p_rank <= p, so one probe at the
+    * deepest level serves every shallower one ([[sliceLevels]]). */
+  private def ivfProbeRanks(queries: DataFrame, idCol: String,
+                            vecCol: String, centroids: DataFrame,
+                            cidCol: String, centCol: String,
+                            maxProbe: Int): DataFrame = {
+    val w = Window.partitionBy(idCol)
+      .orderBy(col("c_cos").desc, col(cidCol).asc)
+    centroidCosines(queries, vecCol, centroids, cidCol, centCol)
+      .withColumn("p_rank", row_number().over(w))
+      .filter(col("p_rank") <= maxProbe)
+      .select(col(idCol).as("query_id"), col(cidCol), col("p_rank"))
+  }
+
+  /** The probed lists' members as (query_id, neighbor_id, p_rank); a
+    * neighbor listed more than once enters once, at its nearest probed
+    * list. `probes` is queries x nProbe rows — broadcast so the
+    * corpus-sized inverted lists never shuffle. */
+  private def ivfCandidates(probes: DataFrame, lists: DataFrame,
+                            cidCol: String,
+                            excludeSelf: Boolean): DataFrame =
+    broadcast(probes).join(lists, cidCol)
+      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
+              else lit(true))
+      .groupBy("query_id", "neighbor_id").agg(min("p_rank").as("p_rank"))
+
+  /** Cross scored candidates (query_id, neighbor_id, p_rank, cosine) with
+    * the requested probe levels, keeping a candidate at level `n_probe`
+    * iff its list ranked within the first `n_probe` probes. Exact, not
+    * approximate: a candidate's score does not depend on the level, and
+    * the level-p candidate set is precisely the p_rank <= p slice of the
+    * deepest level's. Output replaces p_rank with n_probe. */
+  private def sliceLevels(scored: DataFrame, nProbes: Seq[Int]): DataFrame =
+    scored.withColumn("n_probe", explode(typedLit(nProbes.distinct.sorted)))
+      .filter(col("p_rank") <= col("n_probe"))
+      .drop("p_rank")
+
+  private def requireLevels(nProbes: Seq[Int]): Unit =
+    require(nProbes.nonEmpty && nProbes.forall(_ >= 1),
+      s"nProbe levels must be a non-empty set of positive list counts, " +
+        s"got ${nProbes.mkString("[", ", ", "]")}")
+
+  /** Top-k per `keys` group by (cosine desc, neighbor_id asc). */
+  private def topKPer(scored: DataFrame, keys: Seq[String],
+                      k: Int): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("cosine").desc, col("neighbor_id").asc)
+    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .select((keys ++ Seq("neighbor_id", "cosine")).map(col): _*)
   }
 
   /** IVF-style approximate top-k: corpus vectors are inverted-listed under
     * their nearest centroid, each query probes only its `nProbe` nearest
     * lists, and exact cosine ranks the candidates — the classic
     * coarse-quantizer ANN, complementing the hyperplane-LSH path in
-    * [[lshTopK]].
+    * [[lshTopK]]. The one-level case of [[ivfTopKSweep]].
     *
     * The centroid set is an input (any (cid, centroid) frame): here it
     * comes from [[labelCentroids]]; production would train unsupervised
@@ -331,32 +383,40 @@ object Similarity {
               nProbe: Int = 3, cidCol: String = "cid",
               centCol: String = "centroid",
               excludeSelf: Boolean = true,
-              prebuiltLists: Option[DataFrame] = None): DataFrame = {
+              prebuiltLists: Option[DataFrame] = None): DataFrame =
+    ivfTopKSweep(corpus, queries, idCol, vecCol, centroids, Seq(nProbe),
+      k, cidCol, centCol, excludeSelf, prebuiltLists).drop("n_probe")
+
+  /** [[ivfTopK]] at several nProbe levels in one pass — the recall curve
+    * a user sweeps. Lists are ranked once per query up to the deepest
+    * level, every candidate is scored once with its list's p_rank, and
+    * each level is the p_rank <= n_probe slice of that one scored frame,
+    * cut by a top-k window per (n_probe, query_id). Exact cosine makes
+    * recall monotone in n_probe (a deeper level only adds candidates).
+    * Output: (n_probe, query_id, neighbor_id, cosine), k rows per
+    * (level, query). */
+  def ivfTopKSweep(corpus: DataFrame, queries: DataFrame, idCol: String,
+                   vecCol: String, centroids: DataFrame, nProbes: Seq[Int],
+                   k: Int = 10, cidCol: String = "cid",
+                   centCol: String = "centroid",
+                   excludeSelf: Boolean = true,
+                   prebuiltLists: Option[DataFrame] = None): DataFrame = {
+    requireLevels(nProbes)
     val lists = prebuiltLists
       .getOrElse(ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol))
       .withColumnRenamed(idCol, "neighbor_id")
-    val probes = ivfAssign(queries, idCol, vecCol, centroids, cidCol,
-        centCol, nProbe)
-      .withColumnRenamed(idCol, "query_id")
-    // probes is queries x nProbe rows — broadcast it so the inverted
-    // lists (corpus-sized) never shuffle
-    val cand = broadcast(probes).join(lists, cidCol)
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
-              else lit(true))
-      .select("query_id", "neighbor_id").distinct()
+    val cand = ivfCandidates(ivfProbeRanks(queries, idCol, vecCol,
+      centroids, cidCol, centCol, nProbes.max), lists, cidCol, excludeSelf)
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       normSq(col(vecCol)).as("q_nsq"))
     val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
       normSq(col(vecCol)).as("c_nsq"))
     // prune before the window — same reasoning as in [[bruteForceTopK]]
     val scored = cand.join(broadcast(qv), "query_id").join(cv, "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
+      .select(col("query_id"), col("neighbor_id"), col("p_rank"),
         cosineFromParts(dot(col("q_vec"), col("c_vec")),
           col("q_nsq"), col("c_nsq")).as("cosine"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "cosine")
+    topKPer(sliceLevels(scored, nProbes), Seq("n_probe", "query_id"), k)
   }
 
   /** Deterministic k-means over an embedding column — the unsupervised
@@ -624,9 +684,9 @@ object Similarity {
     * width probe never calls `Dataset.rdd`: on an AQE plan `.rdd`
     * materializes every intermediate query stage EAGERLY at
     * query-construction time — the first cut did exactly that, and the
-    * recall sweeps (which pass in-memory pqEncode/ivfAssign frames as
-    * `prebuiltCodes`/`prebuiltLists`) re-executed their encode
-    * subtrees once per nProbe variant, doubling
+    * recall sweeps (which then passed in-memory pqEncode/ivfAssign
+    * frames as `prebuiltCodes`/`prebuiltLists`) re-executed their
+    * encode subtrees once per nProbe variant, doubling
     * sim_recall_sweep_ivfpq(_res) (1.5 -> 2.9 s measured). Those
     * frames arrive through an exchange whose width AQE's
     * parallelism-first coalescing already keeps at session width — the
@@ -669,7 +729,8 @@ object Similarity {
               else lit(true))
       .select(col("query_id"), col("neighbor_id"),
         pqAdcCosine(offsets).as("cosine"))
-    pqRank(scored, corpus, queries, idCol, vecCol, k, shortlist)
+    pqRank(scored, corpus, queries, idCol, vecCol, k, shortlist,
+      Seq("query_id"))
   }
 
   /** IVF-PQ: the composed billion-scale index layout (FAISS's default) —
@@ -684,28 +745,40 @@ object Similarity {
     * side never shuffles. The ADC cut ranks the floor-4dp estimate with
     * id tie-breaks (engine-portable, the [[pqTopK]] discipline);
     * `shortlist > 0` re-ranks the ADC top-`shortlist` with true vectors
-    * for exact cosines. */
+    * for exact cosines. The one-level case of [[ivfPqTopKSweep]]. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, centroids: DataFrame,
                 codebooks: DataFrame, k: Int = 10, nProbe: Int = 3,
                 excludeSelf: Boolean = true, shortlist: Int = 0,
                 cidCol: String = "cid", centCol: String = "centroid",
                 prebuiltLists: Option[DataFrame] = None,
-                prebuiltCodes: Option[DataFrame] = None): DataFrame = {
+                prebuiltCodes: Option[DataFrame] = None): DataFrame =
+    ivfPqTopKSweep(corpus, queries, idCol, vecCol, centroids, codebooks,
+      Seq(nProbe), k, excludeSelf, shortlist, cidCol, centCol,
+      prebuiltLists, prebuiltCodes).drop("n_probe")
+
+  /** [[ivfPqTopK]] at several nProbe levels in one pass: candidates of
+    * the deepest level are ADC-scored once, carrying their list's
+    * p_rank, and each level ranks its p_rank <= n_probe slice. The cut
+    * ranks the ADC ESTIMATE, so unlike [[ivfTopKSweep]] recall is not a
+    * lattice guarantee: a flattering estimate that enters at a deeper
+    * level can displace a true neighbor. Output:
+    * (n_probe, query_id, neighbor_id, cosine). */
+  def ivfPqTopKSweep(corpus: DataFrame, queries: DataFrame, idCol: String,
+                     vecCol: String, centroids: DataFrame,
+                     codebooks: DataFrame, nProbes: Seq[Int], k: Int = 10,
+                     excludeSelf: Boolean = true, shortlist: Int = 0,
+                     cidCol: String = "cid", centCol: String = "centroid",
+                     prebuiltLists: Option[DataFrame] = None,
+                     prebuiltCodes: Option[DataFrame] = None): DataFrame = {
+    requireLevels(nProbes)
     val (m, dsub, offsets) = pqMeta(codebooks)
     val lists = prebuiltLists.map(widenScan)
       .getOrElse(ivfAssign(corpus, idCol, vecCol, centroids, cidCol,
         centCol))
       .withColumnRenamed(idCol, "neighbor_id")
-    val probes = ivfAssign(queries, idCol, vecCol, centroids, cidCol,
-        centCol, nProbe)
-      .withColumnRenamed(idCol, "query_id")
-    // probes is queries x nProbe rows — broadcast so the corpus-sized
-    // inverted lists never shuffle (the ivfTopK shape)
-    val cand = broadcast(probes).join(lists, cidCol)
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
-              else lit(true))
-      .select("query_id", "neighbor_id").distinct()
+    val cand = ivfCandidates(ivfProbeRanks(queries, idCol, vecCol,
+      centroids, cidCol, centCol, nProbes.max), lists, cidCol, excludeSelf)
     val codes = prebuiltCodes.map(widenScan)
       .getOrElse(pqEncode(corpus, idCol, vecCol, codebooks))
       .select(col(idCol).as("neighbor_id"), col("codes"), col("r_nsq"))
@@ -713,9 +786,10 @@ object Similarity {
       m, dsub, offsets)
     val scored = cand.join(codes, "neighbor_id")
       .join(broadcast(lutFrame), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
+      .select(col("query_id"), col("neighbor_id"), col("p_rank"),
         pqAdcCosine(offsets).as("cosine"))
-    pqRank(scored, corpus, queries, idCol, vecCol, k, shortlist)
+    pqRank(sliceLevels(scored, nProbes), corpus, queries, idCol, vecCol, k,
+      shortlist, Seq("n_probe", "query_id"))
   }
 
   /** Residual frame for residual IVF-PQ: each corpus vector's offset
@@ -787,17 +861,17 @@ object Similarity {
             col("xn").as("nn")))), x => x.getField("nn")),
           lit(0.0), (a, x) => a + x).as("x_nsq"))
       // exactly m collected codes per id, enforced in the same job — a
-      // residuals frame with >1 row per id (e.g. prebuiltLists built at
-      // nProbe > 1) fans the pq_id join out, collects duplicate
-      // subspace entries, and double-counts x_nsq (r13 advice); the
-      // when-guard costs nothing on the green path and fails loudly
-      // instead of mis-encoding
+      // residuals frame with >1 row per id (e.g. prebuiltLists listing a
+      // vector under several centroids) fans the pq_id join out,
+      // collects duplicate subspace entries, and double-counts x_nsq
+      // (r13 advice); the when-guard costs nothing on the green path and
+      // fails loudly instead of mis-encoding
       .withColumn("codes",
         when(size(col("codes")) === lit(m), col("codes"))
           .otherwise(raise_error(format_string(
             s"ivfPqResidualEncode: id %s collected %s codes, expected $m" +
               " — the residuals frame must have exactly one row per id" +
-              " (build lists at nProbe=1)",
+              " (build lists with ivfAssign)",
             col("pq_id").cast("string"),
             size(col("codes")).cast("string")))))
       .select(col("pq_id").as(idCol), col(cidCol), col("codes"),
@@ -821,7 +895,8 @@ object Similarity {
     * (query, cid) frame against codes ON cid IS the inverted-list
     * probe (each neighbor has exactly one cid). Cut ranks the
     * floor-4dp estimate with id tie-breaks; `shortlist > 0` re-ranks
-    * with true vectors, as in [[pqTopK]]. */
+    * with true vectors, as in [[pqTopK]]. The one-level case of
+    * [[ivfPqResidualTopKSweep]]. */
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String,
                         centroids: DataFrame, codebooks: DataFrame,
@@ -831,7 +906,28 @@ object Similarity {
                         centCol: String = "centroid",
                         prebuiltLists: Option[DataFrame] = None,
                         prebuiltCodes: Option[DataFrame] = None)
+      : DataFrame =
+    ivfPqResidualTopKSweep(corpus, queries, idCol, vecCol, centroids,
+      codebooks, Seq(nProbe), k, excludeSelf, shortlist, cidCol, centCol,
+      prebuiltLists, prebuiltCodes).drop("n_probe")
+
+  /** [[ivfPqResidualTopK]] at several nProbe levels in one pass: the
+    * (query, probed cid) frame is built once at the deepest level with
+    * each list's p_rank, so every candidate is ADC-scored once and each
+    * level ranks its p_rank <= n_probe slice (the [[ivfPqTopKSweep]]
+    * shape; recall is measured, not a lattice guarantee). Output:
+    * (n_probe, query_id, neighbor_id, cosine). */
+  def ivfPqResidualTopKSweep(corpus: DataFrame, queries: DataFrame,
+                             idCol: String, vecCol: String,
+                             centroids: DataFrame, codebooks: DataFrame,
+                             nProbes: Seq[Int], k: Int = 10,
+                             excludeSelf: Boolean = true,
+                             shortlist: Int = 0, cidCol: String = "cid",
+                             centCol: String = "centroid",
+                             prebuiltLists: Option[DataFrame] = None,
+                             prebuiltCodes: Option[DataFrame] = None)
       : DataFrame = {
+    requireLevels(nProbes)
     val (m, dsub, offsets) = pqMeta(codebooks)
     // NOT widened (contrast pqTopK): the residual probe is candidate-
     // bounded — it touches nProbe/lists of the codes per query, and the
@@ -850,15 +946,13 @@ object Similarity {
       }
       .select(col(idCol).as("neighbor_id"), col(cidCol), col("codes"),
         col("x_nsq"))
-    val probes = ivfAssign(queries, idCol, vecCol, centroids, cidCol,
-        centCol, nProbe)
-      .withColumnRenamed(idCol, "query_id")
-    val qc = probes
+    val qc = ivfProbeRanks(queries, idCol, vecCol, centroids, cidCol,
+        centCol, nProbes.max)
       .join(broadcast(centroids.select(col(cidCol),
         col(centCol).as("__qc_cent"))), cidCol)
       .join(queries.select(col(idCol).as("query_id"),
         toDouble(col(vecCol)).as("__q_f")), "query_id")
-      .select(col("query_id"), col(cidCol),
+      .select(col("query_id"), col(cidCol), col("p_rank"),
         dot(col("__q_f"), col("__qc_cent")).as("qc"))
     val lutFrame = pqQueryLut(queries, idCol, vecCol, codebooks,
       m, dsub, offsets)
@@ -866,12 +960,13 @@ object Similarity {
       .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
               else lit(true))
       .join(broadcast(lutFrame), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
+      .select(col("query_id"), col("neighbor_id"), col("p_rank"),
         TextAnalysis.round4(cosineFromParts(
           col("qc") + graft.plans.VectorExpressions.pqAdc(col("codes"),
             col("lut"), offsets),
           col("q_nsq"), col("x_nsq"))).as("cosine"))
-    pqRank(scored, corpus, queries, idCol, vecCol, k, shortlist)
+    pqRank(sliceLevels(scored, nProbes), corpus, queries, idCol, vecCol, k,
+      shortlist, Seq("n_probe", "query_id"))
   }
 
   /** A materialized PQ index read back from parquet: codebooks + encoded
@@ -1634,33 +1729,26 @@ object Similarity {
       col("q_nsq"), col("r_nsq")))
 
   /** Shared PQ ranking tail: ADC top-k, or ADC top-`shortlist` + exact
-    * re-rank over true vectors when `shortlist > 0`. */
+    * re-rank over true vectors when `shortlist > 0`, per `keys` group
+    * (query_id, plus n_probe for the sweeps). */
   private def pqRank(scored: DataFrame, corpus: DataFrame,
                      queries: DataFrame, idCol: String, vecCol: String,
-                     k: Int, shortlist: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
+                     k: Int, shortlist: Int, keys: Seq[String]): DataFrame = {
     if (shortlist <= 0) {
-      scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+      topKPer(scored, keys, k)
     } else {
       require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-      val cand = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= shortlist)
-        .select("query_id", "neighbor_id")
+      val cand = topKPer(scored, keys, shortlist).drop("cosine")
       // exact re-rank: true vectors for shortlist rows only
       val cv = corpus.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("c_vec"), normSq(col(vecCol)).as("c_nsq"))
       val qv = queries.select(col(idCol).as("query_id"),
         col(vecCol).as("q_vec"), normSq(col(vecCol)).as("q_nsq"))
       val exact = cand.join(cv, "neighbor_id").join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("neighbor_id"),
+        .select((keys ++ Seq("neighbor_id")).map(col) :+
           cosineFromParts(dot(col("q_vec"), col("c_vec")),
-            col("q_nsq"), col("c_nsq")).as("cosine"))
-      val w2 = Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      exact.withColumn("rn", row_number().over(w2)).filter(col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
+            col("q_nsq"), col("c_nsq")).as("cosine"): _*)
+      topKPer(exact, keys, k)
     }
   }
 

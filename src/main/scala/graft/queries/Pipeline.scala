@@ -220,6 +220,28 @@ object Pipeline {
       .select(col("label").as("cid"),
         transform(col("centroid"), x => round(x, 6)).as("centroid"))
 
+  /** The nProbe levels every recall sweep reports. */
+  private val SweepLevels = Seq(1, 2, 4)
+
+  /** Recall@k per probe level: the exact top-k (computed once) crossed
+    * with [[SweepLevels]] and left-joined to a sweep's
+    * (n_probe, query_id, neighbor_id) rows, grouped by n_probe as the
+    * oracle groups — so an empty corpus yields no rows, not one
+    * zero-count row per level. */
+  private def sweepRecall(brute: DataFrame, sweep: DataFrame): DataFrame =
+    brute.select(col("query_id"), col("neighbor_id"),
+        explode(typedLit(SweepLevels)).as("n_probe"))
+      .join(sweep.select(col("n_probe"), col("query_id"),
+          col("neighbor_id"), lit(1L).as("hit")),
+        Seq("n_probe", "query_id", "neighbor_id"), "left")
+      .groupBy("n_probe")
+      .agg(count(lit(1)).as("k"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+      .select(col("n_probe").cast("long").as("n_probe"), col("k"),
+        col("n_hit"),
+        round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
+      .orderBy("n_probe")
+
   val queries: Map[String, Q] = Map(
     // exact content dedup: survivors + multiplicity per content hash
     "dd_exact" -> ((s, dir) => {
@@ -1197,24 +1219,20 @@ object Pipeline {
     // IVF recall sweep: the knob a 100 TB user actually turns — mean
     // recall@5 at nProbe 1 / 2 / 4 in one artifact, verifying the
     // probes/recall tradeoff is monotone (more lists probed can only add
-    // candidates, so recall never drops; its cost grows linearly). One
-    // brute pass shared across the sweep; each nProbe is one
-    // broadcast-probe candidate pass (oracled).
+    // candidates, so recall never drops). One pass, not one per level:
+    // brute force runs once, the probe ranks each query's lists once up
+    // to the deepest level and scores every candidate once, and each
+    // level is the slice of candidates whose list ranks within its
+    // nProbe — exact, because the level-p candidates are precisely
+    // those. Cost follows the deepest level, not the number of levels
+    // (oracled).
     "sim_recall_sweep" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
-      val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      Seq(1, 2, 4).map { np =>
-        val ivf = Similarity.ivfTopK(e, q, "vec_id", "embedding",
-            ivfCentroids(e), k = 5, nProbe = np)
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-        brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("k"),
-            sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-          .select(lit(np.toLong).as("n_probe"), col("k"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
-      }.reduce(_ union _).orderBy("n_probe")
+      sweepRecall(
+        Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5),
+        Similarity.ivfTopKSweep(e, q, "vec_id", "embedding",
+          ivfCentroids(e), SweepLevels, k = 5))
     }),
 
     // the same sweep through the COMPOSED billion-scale index (r12
@@ -1223,61 +1241,33 @@ object Pipeline {
     // the ADC ESTIMATE, so unlike the exact-cosine sweep above the
     // recall curve is a measured fact, not a lattice guarantee (a
     // flattering estimate entering at higher nProbe can displace a true
-    // neighbor). Both index halves are prebuilt once and shared across
-    // the sweep (the production build-once / probe-per-batch shape);
-    // oracled per probe level against the full DuckDB PQ replay.
+    // neighbor). The deepest level's candidates are ADC-scored once and
+    // every level ranks its probe-rank slice of them — the slice is
+    // exactly that level's candidate set, so each level's cut is the one
+    // a single-level probe makes. Oracled per probe level against the
+    // full DuckDB PQ replay.
     "sim_recall_sweep_ivfpq" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
-      val books = pqBooks(s, dir)
-      val cents = ivfCentroids(e)
-      val lists = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
-      val codes = Similarity.pqEncode(e, "vec_id", "embedding", books)
-      val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
-          k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      Seq(1, 2, 4).map { np =>
-        val ipq = Similarity.ivfPqTopK(e, q, "vec_id", "embedding",
-            cents, books, k = 5, nProbe = np,
-            prebuiltLists = Some(lists), prebuiltCodes = Some(codes))
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-        brute.join(ipq, Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("k"),
-            sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-          .select(lit(np.toLong).as("n_probe"), col("k"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
-      }.reduce(_ union _).orderBy("n_probe")
+      sweepRecall(
+        Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5),
+        Similarity.ivfPqTopKSweep(e, q, "vec_id", "embedding",
+          ivfCentroids(e), pqBooks(s, dir), SweepLevels, k = 5))
     }),
 
     // the residual index through the same knob (completes the sweep
-    // family: plain IVF, composed IVF-PQ, residual IVF-PQ): both index
-    // halves prebuilt once; the residual codes carry each neighbor's
-    // coarse cid, so no separate inverted-list frame is needed and the
-    // probe is the codes-join itself at every level
+    // family: plain IVF, composed IVF-PQ, residual IVF-PQ): the residual
+    // codes carry each neighbor's coarse cid, so the probe is the
+    // codes-join itself, made once at the deepest level with each
+    // list's probe rank; every level ranks its slice of the once-scored
+    // candidates
     "sim_recall_sweep_ivfpq_res" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
-      val cents = ivfCentroids(e)
-      val books = resBooks(s, dir)
-      val lists = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
-      val codes = Similarity.ivfPqResidualEncode(
-        Similarity.ivfResiduals(e, "vec_id", "embedding", cents,
-          prebuiltLists = Some(lists)),
-        "vec_id", cents, books)
-      val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
-          k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      Seq(1, 2, 4).map { np =>
-        val res = Similarity.ivfPqResidualTopK(e, q, "vec_id",
-            "embedding", cents, books, k = 5, nProbe = np,
-            prebuiltCodes = Some(codes))
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-        brute.join(res, Seq("query_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("k"),
-            sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-          .select(lit(np.toLong).as("n_probe"), col("k"), col("n_hit"),
-            round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
-      }.reduce(_ union _).orderBy("n_probe")
+      sweepRecall(
+        Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5),
+        Similarity.ivfPqResidualTopKSweep(e, q, "vec_id", "embedding",
+          ivfCentroids(e), resBooks(s, dir), SweepLevels, k = 5))
     }),
 
     // Gopher-style repetition filter: duplicate-3-gram fraction and

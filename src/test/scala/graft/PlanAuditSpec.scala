@@ -381,6 +381,43 @@ class PlanAuditSpec extends SparkTestBase {
       "q·centroid terms and LUTs must both arrive broadcast:\n" + p)
   }
 
+  test("recall sweeps are one pass: at most half the joins of a probe " +
+      "per level") {
+    // one probe and one brute pass per nProbe level planned 27 joins
+    // (sim_recall_sweep) and 78 (sim_recall_sweep_ivfpq_res); the sweep
+    // form scores the deepest level once and slices the rest
+    def joins(name: String): Int =
+      SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
+        .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join
+          => j }.size
+    val (ivf, res) =
+      (joins("sim_recall_sweep"), joins("sim_recall_sweep_ivfpq_res"))
+    assert(ivf <= 27 / 2, s"sim_recall_sweep plans $ivf joins")
+    assert(res <= 78 / 2, s"sim_recall_sweep_ivfpq_res plans $res joins")
+  }
+
+  test("recall sweeps at sf0.001: each level equals its single-level " +
+      "probe (IVF, IVF-PQ, residual IVF-PQ)") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.Similarity
+    val e = graft.sources.Tables.load(spark, dir, "embeddings").cache()
+    try {
+      // the contract's coarse quantizer: label centroids, 6dp
+      val cents = Similarity.labelCentroids(e, "label", "embedding")
+        .select(col("label").as("cid"),
+          transform(col("centroid"), x => round(x, 6)).as("centroid"))
+        .localCheckpoint()
+      val books = Similarity.pqTrain(e, "vec_id", "embedding", m = 4,
+        ksub = 8, iters = 2).localCheckpoint()
+      val resBooks = Similarity.pqTrain(
+        Similarity.ivfResiduals(e, "vec_id", "embedding", cents),
+        "vec_id", "rvec", m = 4, ksub = 8, iters = 2).localCheckpoint()
+      val bad = IvfSweepReference.mismatches(e, e.filter(col("vec_id") < 8),
+        cents, books, resBooks, Seq(1, 2, 4), k = 5)
+      assert(bad.isEmpty, bad.mkString("\n"))
+    } finally e.unpersist()
+  }
+
   test("ANN corpus split width follows the session, not a hardcoded 32") {
     // Local default: the test session runs local[4] ⇒ width 4, so the
     // corpus scan is never capped at fewer tasks than cores — and, on a

@@ -345,12 +345,13 @@ class PqSpec extends SparkTestBase {
       Similarity.ivfPqResidualEncode(resid, "vec_id", cents, mixed)
     }
     assert(ex2.getMessage.contains("uniform dsub"))
-    // residuals built from nProbe=2 lists carry 2 rows per id — the
-    // encode groupBy would collect 2m subspace entries and double-count
-    // x_nsq; the in-job guard must raise, not mis-encode
+    // residuals built from lists that file every vector under both
+    // centroids carry 2 rows per id — the encode groupBy would collect
+    // 2m subspace entries and double-count x_nsq; the in-job guard must
+    // raise, not mis-encode
     val fanned = Similarity.ivfResiduals(corpus, "vec_id", "embedding",
-      cents, prebuiltLists = Some(Similarity.ivfAssign(corpus, "vec_id",
-        "embedding", cents, nProbe = 2)))
+      cents, prebuiltLists = Some(corpus.select("vec_id")
+        .crossJoin(cents.select("cid"))))
     val ex3 = intercept[Exception] {
       Similarity.ivfPqResidualEncode(fanned, "vec_id", cents, books)
         .collect()
