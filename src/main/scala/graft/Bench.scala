@@ -2019,6 +2019,10 @@ object Bench {
       "plans/VectorExpressions.scala", "plans/RewriteVectorDot.scala",
       "functions/VectorFunctions.scala")
     val zorder = Seq("operators/ZOrder.scala", "operators/ParquetStats.scala")
+    // the index certifications also run the shared artifact lifecycle
+    // (append guard, staged swaps) and its bloom sidecar
+    val idx = sim ++ Seq("operators/ArtifactMaintenance.scala",
+      "operators/Sketches.scala", "queries/Pipeline.scala")
     Map(
       "ds_curate_staged" -> Seq("operators/Curate.scala",
         "queries/Pipeline.scala"),
@@ -2040,9 +2044,9 @@ object Bench {
       "bench_bpe_enc_guard" -> Seq("operators/Bpe.scala"),
       "txt_bpe_artifact" -> Seq("operators/Bpe.scala",
         "queries/Pipeline.scala"),
-      "sim_topk_pq_idx" -> (sim :+ "queries/Pipeline.scala"),
-      "sim_topk_ivfpq_res_inc" -> (sim :+ "queries/Pipeline.scala"),
-      "sim_topk_ivfpq_res_del" -> (sim :+ "queries/Pipeline.scala"))
+      "sim_topk_pq_idx" -> idx,
+      "sim_topk_ivfpq_res_inc" -> idx,
+      "sim_topk_ivfpq_res_del" -> idx)
   }
 
   private def certCachePath(): Option[Path] =

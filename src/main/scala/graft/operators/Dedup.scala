@@ -261,13 +261,8 @@ object Dedup {
     // the index frames carry the id column name THEY were built with —
     // resolve it from the frames so a batch with a different id column
     // name probes cleanly
-    val idxSigId = index.signatures.columns.find(_ != "signature")
-      .getOrElse(throw new IllegalArgumentException(
-        "index signatures frame has no id column"))
-    val idxBktId = index.buckets.columns
-      .find(c => c != "band" && c != "bucket")
-      .getOrElse(throw new IllegalArgumentException(
-        "index buckets frame has no id column"))
+    val idxSigId = SignaturesDir.idCol(index.signatures)
+    val idxBktId = BucketsDir.idCol(index.buckets)
     val h = md5(col(textCol).cast("binary"))
     // (a) exact: any corpus twin, or a smaller-id batch twin
     val bh = batch.withColumn("__h", h)
@@ -337,6 +332,24 @@ object Dedup {
                                 bands: Int, shingleSize: Int, seed: Long,
                                 mode: HashMode)
 
+  /** Each mode's `hashMode` stamp, written by [[writeMinhashIndex]] and
+    * parsed back by [[readMinhashIndex]]. */
+  private val StampedModes: Map[HashMode, String] =
+    Map(HashMode.Xx -> "xx", HashMode.Md5 -> "md5")
+
+  /** The minhash index's three data dirs for [[ArtifactMaintenance]],
+    * each compacted by its PROBE key — hashes by content_hash, buckets
+    * by (band, bucket), signatures by id — and signatures, the counted
+    * dir carrying the stamps, last. */
+  private val BucketsDir = ArtifactMaintenance.DataDir("buckets",
+    Seq("band", "bucket"), _ => Seq("band", "bucket"))
+  private val SignaturesDir = ArtifactMaintenance.DataDir("signatures",
+    Seq("signature"), id => Seq(id))
+  private val MinhashArtifact = ArtifactMaintenance.Artifact[MinhashIndex](
+    Seq(ArtifactMaintenance.DataDir("hashes", Seq("content_hash"),
+      _ => Seq("content_hash")), BucketsDir, SignaturesDir),
+    idx => Seq(idx.hashes, idx.buckets, idx.signatures))
+
   /** Build the index frames in one corpus pass (signatures are cached —
     * they feed both the bucket derivation and the verify join; same
     * plan-lifetime cache convention as [[minhashPairs]]). */
@@ -352,25 +365,6 @@ object Dedup {
     MinhashIndex(hashes, sigs,
       minhashBuckets(sigs, idCol, bands, numHashes / bands, mode),
       numHashes, bands, shingleSize, seed, mode)
-  }
-
-  private def modeName(m: HashMode): String = m match {
-    case HashMode.Xx => "xx"
-    case HashMode.Md5 => "md5"
-  }
-
-  /** The stamped hyperparameter metadata (see [[writeMinhashIndex]]) —
-    * shared by the initial write and every append, so parquet schema
-    * resolution can read ANY file's footer and find the contract. */
-  private def indexMeta(numHashes: Int, bands: Int, shingleSize: Int,
-                        seed: Long, mode: HashMode,
-                        sourceTag: String = "") = {
-    val b = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("numHashes", numHashes).putLong("bands", bands)
-      .putLong("shingleSize", shingleSize).putLong("seed", seed)
-      .putString("hashMode", modeName(mode))
-    if (sourceTag.nonEmpty) b.putString("source", sourceTag)
-    b.build()
   }
 
   /** Write the corpus index as three parquet dirs (`hashes/`,
@@ -390,45 +384,25 @@ object Dedup {
                         sourceTag: String = ""): Unit = {
     val idx = buildMinhashIndex(corpus, idCol, textCol, numHashes, bands,
       shingleSize, seed, mode)
-    val meta = indexMeta(numHashes, bands, shingleSize, seed, mode,
-      sourceTag)
-    // a fresh write over a path that already holds an index: drop the
-    // OLD idbloom sidecar before touching the data dirs (the PQ twins'
-    // r16 crash-window lesson, Similarity.invalidateIdBloom: a crash
-    // between the signatures overwrite and the bloom rebuild must
-    // degrade the append guard to the full scan, never leave a stale
-    // bloom whose false negatives would admit duplicate ids)
-    Similarity.invalidateIdBloom(corpus.sparkSession, path)
-    idx.hashes.write.mode("overwrite").parquet(s"$path/hashes")
-    idx.signatures.select(col(idCol), col("signature").as("signature", meta))
-      .write.mode("overwrite").parquet(s"$path/signatures")
-    idx.buckets.write.mode("overwrite").parquet(s"$path/buckets")
-    // bloom from the STILL-CACHED signatures (r19, r18 verdict #4):
-    // the sidecar used to be rebuilt by RE-READING signatures/ from
-    // disk — a redundant pass over the just-written artifact (at
-    // 100 TB, a second object-storage scan of the id column) when the
-    // identical rows sit in the build cache that fed the three writes.
-    // Same crash window as before: the old sidecar is invalidated
-    // above, and a death anywhere before the bloom lands leaves NO
-    // readable bloom — the append guard then full-scans, never trusts
-    // a stale filter.
-    Similarity.writeIdBloom(idx.signatures.select(col(idCol)), idCol,
-      Similarity.idBloomPath(path), idx.signatures.count())
+    // appends copy this stamp verbatim onto their files, so parquet
+    // schema resolution can read ANY file's footer and find the contract
+    val b = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong("numHashes", numHashes).putLong("bands", bands)
+      .putLong("shingleSize", shingleSize).putLong("seed", seed)
+      .putString("hashMode", StampedModes(mode))
+    if (sourceTag.nonEmpty) b.putString("source", sourceTag)
+    val meta = b.build()
+    // the bloom comes from the STILL-CACHED signatures (r19, r18
+    // verdict #4), not from a re-read of the just-written signatures/ —
+    // at 100 TB a second object-storage scan of the id column
+    ArtifactMaintenance.freshWrite(corpus.sparkSession, path,
+        MinhashArtifact, counted = Some(idx.signatures)) {
+      idx.hashes.write.mode("overwrite").parquet(s"$path/hashes")
+      idx.signatures.select(col(idCol), col("signature").as("signature", meta))
+        .write.mode("overwrite").parquet(s"$path/signatures")
+      idx.buckets.write.mode("overwrite").parquet(s"$path/buckets")
+    }
     idx.signatures.unpersist()
-  }
-
-  /** (Re)build the minhash artifact's `idbloom/` sidecar from the
-    * JUST-WRITTEN signatures dir — one pruned id-column read whose
-    * footers are hot. Still the right shape for delete/compact, whose
-    * surviving rows exist only on disk after the swap; the fresh WRITE
-    * builds from its cached signatures instead (see
-    * [[writeMinhashIndex]]). */
-  private def rebuildIdBloomFromSignatures(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val sigs = spark.read.parquet(s"$path/signatures")
-    val sigId = sigs.columns.find(_ != "signature").get
-    Similarity.writeIdBloom(sigs.select(col(sigId)), sigId,
-      Similarity.idBloomPath(path), sigs.count())
   }
 
   /** Read a [[writeMinhashIndex]] artifact back as probe-ready frames.
@@ -441,25 +415,16 @@ object Dedup {
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String,
                        expectedSource: Option[String] = None): MinhashIndex = {
-    val sigs = spark.read.parquet(s"$path/signatures")
-    val m = sigs.schema("signature").metadata
-    val needed = Seq("numHashes", "bands", "shingleSize", "seed", "hashMode")
-    val missing = needed.filterNot(m.contains)
-    require(missing.isEmpty,
-      s"$path/signatures is missing minhash-index metadata " +
-        s"${missing.mkString(", ")} — was it written by writeMinhashIndex?")
-    expectedSource.foreach { want =>
-      val got = if (m.contains("source")) m.getString("source") else ""
-      require(got == want,
-        s"minhash index at $path was built from '$got' but this probe " +
-          s"expects '$want' — refusing to dedup against the wrong corpus")
-    }
-    val mode = m.getString("hashMode") match {
-      case "xx" => HashMode.Xx
-      case "md5" => HashMode.Md5
-      case other => throw new IllegalArgumentException(
-        s"unknown hashMode '$other' in index metadata at $path")
-    }
+    val (sigs, m) = ArtifactMaintenance.readStamped(spark, path,
+      "signatures", "signature",
+      Seq("numHashes", "bands", "shingleSize", "seed", "hashMode"),
+      "minhash-index", "writeMinhashIndex")
+    ArtifactMaintenance.requireSource(m, expectedSource,
+      s"minhash index at $path", "dedup against")
+    val name = m.getString("hashMode")
+    val mode = StampedModes.collectFirst { case (md, `name`) => md }
+      .getOrElse(throw new IllegalArgumentException(
+        s"unknown hashMode '$name' in index metadata at $path"))
     MinhashIndex(spark.read.parquet(s"$path/hashes"), sigs,
       spark.read.parquet(s"$path/buckets"),
       m.getLong("numHashes").toInt, m.getLong("bands").toInt,
@@ -483,130 +448,41 @@ object Dedup {
     * a batch sharing ids with the index. Without it a RE-DELIVERED
     * drop (the crash-retry scenario the rest of this artifact family
     * defends against) silently double-counts signatures and inflates
-    * bucket collision stats in every later probe. The check is
-    * bloom-gated exactly as the PQ twins
-    * ([[graft.operators.Similarity.appendPqIndex]]): batch ids are
-    * cast to the on-disk id type with round-trip fidelity enforced,
-    * probed against the broadcast `idbloom/` sidecar first (no false
-    * negatives — a clean drop never scans signatures/ at all), and
-    * only maybe-hits fall through to a pruned left_semi scan. The
-    * sidecar merges BEFORE the data appends (a crash between the two
-    * leaves only spurious bloom bits, never an indexed id the bloom
-    * would miss). Turn it off only when upstream id discipline
-    * guarantees disjointness — [[streamingDedup]]'s probe-then-append
-    * cycle keeps it on: [[incrementalSurvivors]] already drops ids
-    * the index holds, so a replayed micro-batch appends an empty
-    * frame and passes the guard vacuously. */
+    * bucket collision stats in every later probe. The check is the
+    * shared bloom-gated guard ([[ArtifactMaintenance.append]], which
+    * also fixes the write order): a clean drop never scans signatures/
+    * at all. Turn it off only when upstream id discipline guarantees
+    * disjointness — [[streamingDedup]]'s probe-then-append cycle keeps
+    * it on: [[incrementalSurvivors]] already drops ids the index holds,
+    * so a replayed micro-batch appends an empty frame and passes the
+    * guard vacuously. */
   def appendToMinhashIndex(survivors: DataFrame, idCol: String,
                            textCol: String, path: String,
-                           requireNewIds: Boolean = true): Unit = {
-    val spark = survivors.sparkSession
-    val idx = readMinhashIndex(spark, path)
-    val sigId = idx.signatures.columns.find(_ != "signature").get
-    val sigIdType = idx.signatures.schema(sigId).dataType
-    val batchIds = Similarity.castIdsLossless(survivors, idCol,
-      sigIdType, sigId, "appendToMinhashIndex")
-    if (requireNewIds)
-      Similarity.requireDisjointIds(spark, idx.signatures, sigId,
-        batchIds, path, "appendToMinhashIndex")
-    // sidecar first, data dirs second (the PQ twins' crash ordering)
-    Similarity.mergeIdBloom(spark, batchIds, sigId, path, idx.signatures,
-      upgradeLegacy = requireNewIds)
-    val add = buildMinhashIndex(survivors, idCol, textCol, idx.numHashes,
-      idx.bands, idx.shingleSize, idx.seed, idx.mode)
-    // appended files carry the SAME stamp as the originals — including
-    // the provenance tag, which schema resolution may read from any file
-    val prevMeta = idx.signatures.schema("signature").metadata
-    val prevSource =
-      if (prevMeta.contains("source")) prevMeta.getString("source") else ""
-    val meta = indexMeta(idx.numHashes, idx.bands, idx.shingleSize,
-      idx.seed, idx.mode, prevSource)
-    val bktId = idx.buckets.columns
-      .find(c => c != "band" && c != "bucket").get
-    val hashId = idx.hashes.columns.find(_ != "content_hash").get
-    // appended rows carry the index's OWN id type (the cast was proven
-    // lossless above): each dir keeps ONE id type across drops
-    add.hashes
-      .select(col(idCol).cast(sigIdType).as(hashId), col("content_hash"))
-      .write.mode("append").parquet(s"$path/hashes")
-    add.signatures
-      .select(col(idCol).cast(sigIdType).as(sigId),
-        col("signature").as("signature", meta))
-      .write.mode("append").parquet(s"$path/signatures")
-    add.buckets
-      .select(col(idCol).cast(sigIdType).as(bktId), col("band"),
-        col("bucket"))
-      .write.mode("append").parquet(s"$path/buckets")
-    add.signatures.unpersist()
-  }
+                           requireNewIds: Boolean = true): Unit =
+    ArtifactMaintenance.append(MinhashArtifact, path, survivors, idCol,
+        requireNewIds, "appendToMinhashIndex")(
+        readMinhashIndex(survivors.sparkSession, path)) { idx =>
+      val add = buildMinhashIndex(survivors, idCol, textCol, idx.numHashes,
+        idx.bands, idx.shingleSize, idx.seed, idx.mode)
+      Seq(add.hashes, add.buckets, add.signatures)
+    }
 
   /** Delete documents from a [[writeMinhashIndex]] artifact by id —
     * the minhash twin of
     * [[graft.operators.Similarity.deleteFromIvfPqResidualIndex]]
     * (right-to-be-forgotten): stamps are verified first through
-    * [[readMinhashIndex]], then each of the three dirs (hashes,
-    * signatures, buckets) is rewritten WITHOUT the given ids via a
-    * left-anti join on its own id column and swapped in crash-safe via
-    * [[ArtifactMaintenance.stagedSwap]] (dirs swap independently; a
-    * crash between dirs leaves a consistent-per-dir index whose next
-    * delete of the same ids is a no-op for the dirs already done).
-    * Hyperparameter stamps are preserved verbatim. Ids absent from the
-    * index are a no-op. Returns the number of documents removed
-    * (signature rows — one per doc). Signatures — the COUNTED dir —
-    * swap LAST (r16, from the r15 advice): a retry of a delete that
-    * crashed mid-way then reads its before-count from the
-    * not-yet-rewritten signatures and reports every document the retry
-    * actually removes, instead of "0 removed" for a delete that was
-    * half-applied (the right-to-be-forgotten caller's audit trail).
-    *
-    * Cost shape: parquet immutability makes any delete a full rewrite
-    * of all three dirs — batch deletion requests and apply them in one
-    * pass (or fold them into the next [[compactMinhashIndex]] window)
-    * at production scale. */
+    * [[readMinhashIndex]], then each of the three dirs is rewritten
+    * WITHOUT the given ids via a left-anti join on its own id column and
+    * swapped in crash-safe, signatures last
+    * ([[ArtifactMaintenance.delete]]; dirs swap independently, so a
+    * crash between dirs leaves a consistent-per-dir index whose retry
+    * completes the delete). Hyperparameter stamps are preserved
+    * verbatim. Ids absent from the index are a no-op. Returns the
+    * number of documents removed (signature rows — one per doc). */
   def deleteFromMinhashIndex(ids: DataFrame, idCol: String,
-                             path: String): Long = {
-    val spark = ids.sparkSession
-    val idx = readMinhashIndex(spark, path) // stamps verified
-    val sigMeta = idx.signatures.schema("signature").metadata
-    val sigId = idx.signatures.columns.find(_ != "signature").get
-    val bktId = idx.buckets.columns
-      .find(c => c != "band" && c != "bucket").get
-    val hashId = idx.hashes.columns.find(_ != "content_hash").get
-    // materialize the id set first: it may derive from the index
-    // itself, and the swaps rename the dirs the plan would re-read
-    val del = ids.select(col(idCol).as("__del_id")).distinct()
-      .localCheckpoint()
-    val before = idx.signatures.count() // footer stats, not a scan
-    ArtifactMaintenance.stagedSwap(spark, s"$path/hashes") { staged =>
-      idx.hashes
-        .join(del.select(col("__del_id").as(hashId)), Seq(hashId),
-          "left_anti")
-        .write.mode("overwrite").parquet(staged)
-    }
-    ArtifactMaintenance.stagedSwap(spark, s"$path/buckets") { staged =>
-      idx.buckets
-        .join(del.select(col("__del_id").as(bktId)), Seq(bktId),
-          "left_anti")
-        .write.mode("overwrite").parquet(staged)
-    }
-    // counted dir last (see scaladoc): a crash before this swap leaves
-    // the retry's before-count intact, so the retry reports what it
-    // actually removed
-    ArtifactMaintenance.stagedSwap(spark, s"$path/signatures") { staged =>
-      idx.signatures
-        .join(del.select(col("__del_id").as(sigId)), Seq(sigId),
-          "left_anti")
-        .select(col(sigId), col("signature").as("signature", sigMeta))
-        .write.mode("overwrite").parquet(staged)
-    }
-    // a bloom cannot subtract: rebuild the append-guard sidecar from
-    // the survivors (the PQ twins' convention). A crash before this
-    // rebuild leaves a SUPERSET-stale bloom — only spurious maybe-hits
-    // that fall through to a scan finding nothing, never a false
-    // negative
-    rebuildIdBloomFromSignatures(spark, path)
-    before - spark.read.parquet(s"$path/signatures").count()
-  }
+                             path: String): Long =
+    ArtifactMaintenance.delete(MinhashArtifact, path, ids, idCol)(
+      readMinhashIndex(ids.sparkSession, path))
 
   /** Compact a [[writeMinhashIndex]] artifact after a run of
     * [[appendToMinhashIndex]] drops — the maintenance twin of
@@ -614,46 +490,15 @@ object Dedup {
     * append lands its own parquet files in all THREE dirs, and a year
     * of daily drops leaves thousands of small files whose per-file
     * open/footer cost dominates the probe long before data volume does.
-    * Each frame rewrites at `targetPartitions` (default: the session's
-    * shuffle parallelism), repartitioned by its PROBE key — hashes by
-    * content_hash, buckets by (band, bucket), signatures by id — so the
-    * incremental probe's joins read the fewest row groups per key. All
-    * stamps are preserved verbatim (the read path verified them before
-    * the rewrite) and each dir replaces via
-    * [[ArtifactMaintenance.stagedSwap]] (crash-safe; dirs swap
-    * independently, and since compaction never changes rows a crash
-    * between dirs leaves a mixed-layout but data-identical index). */
+    * Each dir rewrites at `targetPartitions` (default: the session's
+    * shuffle parallelism), repartitioned by its probe key (see
+    * [[MinhashArtifact]]), with every stamp preserved verbatim
+    * ([[ArtifactMaintenance.compact]]). */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String,
-                          targetPartitions: Int = 0): Unit = {
-    // repair a swap that crashed mid-exchange on any of the three dirs
-    // before reading (the read would otherwise fail on a missing dir)
-    for (d <- Seq("hashes", "signatures", "buckets"))
-      ArtifactMaintenance.healCrashState(spark, s"$path/$d")
-    val idx = readMinhashIndex(spark, path) // stamps verified
-    val n = if (targetPartitions > 0) targetPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sigMeta = idx.signatures.schema("signature").metadata
-    val sigId = idx.signatures.columns.find(_ != "signature").get
-    ArtifactMaintenance.stagedSwap(spark, s"$path/hashes") { staged =>
-      idx.hashes.repartition(n, col("content_hash"))
-        .write.mode("overwrite").parquet(staged)
-    }
-    ArtifactMaintenance.stagedSwap(spark, s"$path/signatures") { staged =>
-      idx.signatures
-        .repartition(n, col(sigId))
-        .select(col(sigId), col("signature").as("signature", sigMeta))
-        .write.mode("overwrite").parquet(staged)
-    }
-    ArtifactMaintenance.stagedSwap(spark, s"$path/buckets") { staged =>
-      idx.buckets.repartition(n, col("band"), col("bucket"))
-        .write.mode("overwrite").parquet(staged)
-    }
-    // resize the append-guard sidecar to the compacted corpus (the
-    // bloom's bits/key budget is sized at build time — a year of
-    // appends outgrows it; compaction is the natural resize point)
-    rebuildIdBloomFromSignatures(spark, path)
-  }
+                          targetPartitions: Int = 0): Unit =
+    ArtifactMaintenance.compact(MinhashArtifact, spark, path,
+      targetPartitions)(readMinhashIndex(spark, path))
 
   /** Continuous-ingest dedup: the probe-then-append cycle as a
     * Structured Streaming sink. Each micro-batch is probed against the
@@ -688,7 +533,10 @@ object Dedup {
     stream.writeStream.foreachBatch {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
        _: Long) =>
-        val idx = readMinhashIndex(batch.sparkSession, indexPath)
+        // opened through the lifecycle: a crashed swap heals before the
+        // probe reads the index, not only at the append
+        val idx = ArtifactMaintenance.open(batch.sparkSession, indexPath,
+          MinhashArtifact)(readMinhashIndex(batch.sparkSession, indexPath))
         val survivors = incrementalSurvivors(batch.toDF(), idx, idCol,
           textCol, threshold).localCheckpoint()
         appendToMinhashIndex(survivors, idCol, textCol, indexPath)

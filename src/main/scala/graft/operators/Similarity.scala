@@ -973,238 +973,13 @@ object Similarity {
     * corpus, with the build geometry recovered from stamped metadata. */
   case class PqIndex(books: DataFrame, codes: DataFrame, m: Int, dsub: Int)
 
-  // ------------------------------------------------------------------
-  // id-membership Bloom sidecar (r15): every persisted index carries an
-  // `idbloom/` dir — a [[Sketches.bloomBuild]] filter over the codes id
-  // column — so the append duplicate guard can certify a CLEAN drop
-  // without touching codes/ at all. Bloom's no-false-negative contract
-  // makes the fast-path refusal sound: "no bit hit" IS "definitely not
-  // in the index"; only maybe-hits fall through to the pruned id-column
-  // scan. The sidecar is advisory for every other purpose — a missing
-  // or unreadable idbloom/ (pre-r15 artifact, torn write) degrades to
-  // the full pre-bloom scan, never to a wrong answer.
-  // ------------------------------------------------------------------
-
-  /** Bits for the id bloom: ~10 bits/key (k=3 -> ~1.7% fp), floored at
-    * 64 Kbit, capped at 32 Mbit (a <=1M-row (word, mask) frame — still
-    * comfortably broadcastable). Past ~3M ids the fp rate rises and
-    * appends degrade gracefully toward the pre-bloom scan (maybe-hits
-    * fall through); the rebuilds at write/compact/delete keep the
-    * sidecar sized to the corpus it serves. */
-  private def idBloomBits(n: Long): Int =
-    math.min(math.max(1L << 16, n * 10L), 1L << 25).toInt
-
-  /** Sidecar dir for ANY id-guarded index artifact — shared with the
-    * minhash dedup index (r17: `Dedup.appendToMinhashIndex` grew the
-    * same bloom-gated duplicate refusal as the PQ twins). */
-  private[graft] def idBloomPath(path: String): String = s"$path/idbloom"
-
-  /** (Re)build the sidecar from an id frame — called by the index
-    * writers, compactions, and deletions (a bloom cannot subtract, so
-    * delete rebuilds from the survivors). Routed through
-    * [[ArtifactMaintenance.stagedReplace]] (r16, from the r15 advice):
-    * a plain overwrite could crash mid-job-commit and leave a
-    * partially-committed but READABLE dir that still carries the
-    * bf_bits/bf_k stamps — missing (word, mask) rows then manufacture
-    * bloom false negatives and duplicate appends get admitted. Staged,
-    * a torn rebuild is either the intact old bloom or no dir at all
-    * (readIdBloom → None → full-scan guard). */
-  private[graft] def writeIdBloom(ids: DataFrame, idCol: String,
-                                  bloomDir: String, n: Long): Unit = {
-    val bloom = Sketches.bloomBuild(ids.select(col(idCol)), idCol,
-      bits = idBloomBits(n), k = 3)
-    ArtifactMaintenance.stagedReplace(ids.sparkSession, bloomDir) {
-      staged => bloom.write.mode("overwrite").parquet(staged)
-    }
-  }
-
-  /** Remove the sidecar (live dir plus any staged/old leftovers a
-    * crashed swap could resurrect) BEFORE a fresh codes/ overwrite.
-    * The fresh-write crash window must leave NO readable bloom (r15
-    * advice): the previous artifact's still-valid, correctly-stamped
-    * bloom sitting beside brand-new codes would answer "definitely
-    * not indexed" for ids that ARE in the new codes — a false
-    * negative, the one failure the bloom contract cannot absorb. No
-    * sidecar = full-scan guard, which is always sound. Append keeps
-    * its merge-before-codes ordering and delete/compact their
-    * superset-stale rebuilds — only the fresh write needs this. */
-  private[graft] def invalidateIdBloom(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    for (suffix <- Seq("", "__old", "__compact")) {
-      val p = new org.apache.hadoop.fs.Path(idBloomPath(path) + suffix)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
-
-  /** Rebuild the sidecar from the JUST-WRITTEN codes dir — one pruned
-    * id-column read of data whose footers are hot; count comes from
-    * the same frame's footer stats. Used by fresh writes AND
-    * append/delete/compact: the cache-the-encode fuse was measured
-    * slower on the fresh writes too (see the r19 rejection note
-    * above rebuildIdBloomFromCodes's callers). */
-  private def rebuildIdBloomFromCodes(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val ids = spark.read.parquet(s"$path/codes")
-    val diskIdCol = ids.columns.head
-    writeIdBloom(ids.select(col(diskIdCol)), diskIdCol,
-      idBloomPath(path), ids.count())
-  }
-
-  // r19 note (r18 verdict #4, MEASURED and REJECTED for the PQ
-  // writes): fusing the bloom build into the fresh write — caching the
-  // encode frame and building the sidecar from the cache instead of
-  // re-reading the just-written codes/ — was implemented and A/B'd
-  // interleaved (fresh JVM per run, cert-cache off, cold single-run
-  // cert conditions). The fuse LOST on all three PQ-family
-  // certifications: sim_topk_pq_idx 5.3-5.9 s unfused vs 6.3 s fused,
-  // res_inc 7.6-8.0 vs 7.8-8.6, res_del 15.2-15.6 vs 16.8-17.2.
-  // Mechanism: the encode frame was never cached before, so the fuse
-  // ADDS a full-width MEMORY_AND_DISK materialization of the codes
-  // (binary arrays) to save a re-read that column pruning already
-  // makes cheap — the disk rebuild reads ONLY the id column of an
-  // artifact whose footers are hot. The minhash twin keeps its fuse:
-  // there the signatures frame is ALREADY cached for the build, so
-  // fusing adds nothing and drops the re-read (dd_incremental_idx flat
-  // at 3.8 s). See Dedup.writeMinhashIndex.
-
-  /** The sidecar, if present AND well-formed (stamps validate) —
-    * anything else is None: the guard then takes the full scan, which
-    * is always sound. */
-  private[graft] def readIdBloom(spark: org.apache.spark.sql.SparkSession,
-                                 bloomDir: String): Option[DataFrame] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(bloomDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val df = spark.read.parquet(bloomDir)
-        Sketches.bloomParams(df) // demand the stamps
-        Some(df)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** What the duplicate guard actually did — the spec hook behind the
-    * clean-append-never-scans-codes certification. */
-  private[graft] final case class DupCheckStats(bloomUsed: Boolean,
-                                                maybeHits: Long,
-                                                scannedCodes: Boolean)
-
-  /** The append-time duplicate-id refusal, bloom-gated (r15): probe
-    * the batch against the broadcast sidecar first — ids with no bit
-    * hit are DEFINITELY new (no false negatives), so a clean drop
-    * never constructs a codes/ scan at all; only maybe-hits fall
-    * through to a left_semi probe from the (small) maybe side against
-    * the pruned id column, join strategy left to AQE (r14 advice: the
-    * old guard force-broadcast the whole batch, which at crawl-drop
-    * scale fails as a broadcast/driver OOM instead of the named
-    * refusal). Without a sidecar (pre-r15 artifact, torn bloom) the
-    * guard degrades to the full id-column scan — same refusal, more
-    * IO. */
-  private[graft] def requireDisjointIds(
-      spark: org.apache.spark.sql.SparkSession, codes: DataFrame,
-      diskIdCol: String, batchIds: DataFrame, path: String,
-      opName: String): DupCheckStats = {
-    val batch = batchIds.select(col(diskIdCol)).distinct()
-    def refuse(): Nothing = throw new IllegalArgumentException(
-      s"$opName: the batch shares ids with the index at $path — a " +
-        "re-delivered drop would duplicate neighbors in every probe " +
-        "(set requireNewIds = false only if upstream id discipline " +
-        "guarantees disjointness)")
-    readIdBloom(spark, idBloomPath(path)) match {
-      case Some(bloom) =>
-        val maybe = Sketches.bloomMightContain(bloom, batch, diskIdCol)
-          .filter(col("might_contain")).select(col(diskIdCol))
-          .localCheckpoint()
-        val nMaybe = maybe.count()
-        if (nMaybe == 0L) DupCheckStats(bloomUsed = true, 0L,
-          scannedCodes = false)
-        else {
-          if (maybe.join(codes.select(col(diskIdCol)), Seq(diskIdCol),
-              "left_semi").limit(1).count() > 0) refuse()
-          DupCheckStats(bloomUsed = true, nMaybe, scannedCodes = true)
-        }
-      case None =>
-        if (batch.join(codes.select(col(diskIdCol)), Seq(diskIdCol),
-            "left_semi").limit(1).count() > 0) refuse()
-        DupCheckStats(bloomUsed = false, -1L, scannedCodes = true)
-    }
-  }
-
-  /** Fold a batch's ids into the sidecar (blooms union losslessly by
-    * bitwise OR). Called BEFORE the codes append: a crash between the
-    * two leaves only spurious extra bits (maybe-hits that fall through
-    * to a scan finding nothing), never a stale bloom that would miss an
-    * indexed id. A legacy artifact without a sidecar is upgraded from
-    * the full id column union the batch — the LAST corpus-sized id
-    * read it ever pays (unless `upgradeLegacy` is false: the caller
-    * opted out of scans via requireNewIds = false). */
-  private[graft] def mergeIdBloom(spark: org.apache.spark.sql.SparkSession,
-                                  batchIds: DataFrame, diskIdCol: String,
-                                  path: String, codes: DataFrame,
-                                  upgradeLegacy: Boolean): Unit = {
-    val bloomDir = idBloomPath(path)
-    readIdBloom(spark, bloomDir) match {
-      case Some(old) =>
-        val (bits, k) = Sketches.bloomParams(old)
-        val meta = old.schema("mask").metadata
-        val merged = old.unionByName(
-            Sketches.bloomBuild(batchIds.select(col(diskIdCol)),
-              diskIdCol, bits, k))
-          .groupBy(col("word")).agg(expr("bit_or(mask)").as("mask"))
-          .select(col("word"), col("mask").as("mask", meta))
-          .localCheckpoint() // sever from the dir about to be swapped
-        ArtifactMaintenance.stagedSwap(spark, bloomDir) { staged =>
-          merged.write.mode("overwrite").parquet(staged)
-        }
-      case None if upgradeLegacy =>
-        val all = codes.select(col(diskIdCol))
-          .unionByName(batchIds.select(col(diskIdCol)))
-        writeIdBloom(all, diskIdCol, bloomDir, all.count())
-      case None => // requireNewIds = false on a legacy artifact: the
-        // caller opted out of corpus-sized reads; stay legacy
-    }
-  }
-
-  /** Cast a batch's id column to the artifact's ON-DISK id type with
-    * round-trip fidelity enforced (r16 advice): the bare cast
-    * truncated silently — a genuinely-new DOUBLE id 5.5 coerced to
-    * BIGINT 5 and was wrongly refused as a duplicate (or, with
-    * requireNewIds = false, appended under a COLLIDING id so two docs
-    * share id 5), and an unparseable string id cast to null and
-    * bypassed the bloom entirely. Any non-null id whose cast is null
-    * or fails to cast BACK equal is named and refused before a byte
-    * is written. A same-type batch passes through untouched (no
-    * filter job). Returns the single-column frame named `diskIdCol`. */
-  private[graft] def castIdsLossless(batch: DataFrame, idCol: String,
-      target: org.apache.spark.sql.types.DataType, diskIdCol: String,
-      opName: String): DataFrame = {
-    val src = batch.select(col(idCol))
-    val srcType = src.schema(idCol).dataType
-    if (srcType == target) src.select(col(idCol).as(diskIdCol))
-    else {
-      // try_cast, not cast: under ANSI mode a malformed value would
-      // THROW inside the detection filter — the guard's job is to NAME
-      // the offending ids, so null-on-failure feeds the refusal below
-      // (both directions: the back-cast must not throw either)
-      val fwd = expr(s"try_cast(`$idCol` AS ${target.sql})")
-      val back = expr(s"try_cast(try_cast(`$idCol` AS ${target.sql}) " +
-        s"AS ${srcType.sql})")
-      val lossy = src.filter(col(idCol).isNotNull &&
-        (fwd.isNull || !(back <=> col(idCol))))
-      val sample = lossy.select(col(idCol).cast("string"))
-        .limit(3).collect().map(_.getString(0))
-      if (sample.nonEmpty) throw new IllegalArgumentException(
-        s"$opName: batch ids of type ${srcType.simpleString} do not " +
-          s"round-trip through the index's on-disk id type " +
-          s"${target.simpleString} (e.g. ${sample.mkString(", ")}) — a " +
-          "truncating cast would collide with or shadow existing ids; " +
-          "align the batch id column's type with the index before " +
-          "appending")
-      src.select(col(idCol).cast(target).as(diskIdCol))
-    }
-  }
+  /** The flat PQ index's one mutable dir for [[ArtifactMaintenance]]:
+    * `codes/`, the counted dir; the flat scan has no probe key, so
+    * compaction only normalizes file sizes. `books/` never changes
+    * after the write (codes encoded under it stay valid). */
+  private val PqArtifact = ArtifactMaintenance.Artifact[PqIndex](
+    Seq(ArtifactMaintenance.DataDir("codes", Seq("codes", "r_nsq"))),
+    idx => Seq(idx.codes))
 
   /** Write the PQ index as two parquet dirs (`books/`, `codes/`) under
     * `path` — the build-once half of the build-once / probe-per-batch
@@ -1220,28 +995,13 @@ object Similarity {
   def writePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
                    codebooks: DataFrame, path: String,
                    sourceTag: String = ""): Unit = {
-    // validates density/uniform dsub up front; the terminal offset
-    // (total LUT length = Σ per-subspace centroid counts) is stamped
-    // too — m and dsub alone cannot tell codes encoded against one
-    // ksub from books retrained at another (r12 advice: that pairing
-    // passed the torn-check and mis-scored)
-    val (m, dsub, offsets) = pqMeta(codebooks)
-    val b = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("pqM", m).putLong("pqDsub", dsub)
-      .putLong("pqLut", offsets.last)
-    if (sourceTag.nonEmpty) b.putString("source", sourceTag)
-    val meta = b.build()
-    // a fresh write over a path that already holds an index: drop the
-    // OLD sidecar before touching codes/ (see invalidateIdBloom — a
-    // crash between the codes overwrite and the bloom rebuild must
-    // degrade to the full scan, never to a stale bloom's false
-    // negatives)
-    invalidateIdBloom(corpus.sparkSession, path)
-    codebooks.write.mode("overwrite").parquet(s"$path/books")
-    pqEncode(corpus, idCol, vecCol, codebooks)
-      .select(col(idCol), col("codes").as("codes", meta), col("r_nsq"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    rebuildIdBloomFromCodes(corpus.sparkSession, path)
+    val meta = pqStamps(codebooks, sourceTag).build()
+    ArtifactMaintenance.freshWrite(corpus.sparkSession, path, PqArtifact) {
+      codebooks.write.mode("overwrite").parquet(s"$path/books")
+      pqEncode(corpus, idCol, vecCol, codebooks)
+        .select(col(idCol), col("codes").as("codes", meta), col("r_nsq"))
+        .write.mode("overwrite").parquet(s"$path/codes")
+    }
   }
 
   /** Read a [[writePqIndex]] artifact back probe-ready. Geometry comes
@@ -1252,12 +1012,8 @@ object Similarity {
     * `codebooks` and `prebuiltCodes`. */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                   expectedSource: Option[String] = None): PqIndex = {
-    val codes = spark.read.parquet(s"$path/codes")
-    val m = codes.schema("codes").metadata
-    val missing = Seq("pqM", "pqDsub").filterNot(m.contains)
-    require(missing.isEmpty,
-      s"$path/codes is missing PQ-index metadata " +
-        s"${missing.mkString(", ")} — was it written by writePqIndex?")
+    val (codes, m) = ArtifactMaintenance.readStamped(spark, path, "codes",
+      "codes", Seq("pqM", "pqDsub"), "PQ-index", "writePqIndex")
     // a geometry-stamped artifact without the LUT-size stamp is a
     // pre-r13 write, not a foreign path — name the remedy (r13 advice:
     // the generic "was it written by writePqIndex?" misled here)
@@ -1265,27 +1021,46 @@ object Similarity {
       s"PQ index at $path predates the LUT-size stamp (pqLut): the " +
         "m/dsub-only torn check cannot catch books retrained at a " +
         "different ksub — rebuild the artifact with writePqIndex")
-    expectedSource.foreach { want =>
-      val got = if (m.contains("source")) m.getString("source") else ""
-      require(got == want,
-        s"PQ index at $path was built from '$got' but this probe " +
-          s"expects '$want' — refusing to search the wrong corpus")
-    }
+    ArtifactMaintenance.requireSource(m, expectedSource,
+      s"PQ index at $path", "search")
+    val (books, bm, bdsub) = readPqBooks(spark, path, s"PQ index at $path", m)
+    PqIndex(books, codes, bm, bdsub)
+  }
+
+  /** The codes stamps both PQ writers share: geometry (m, dsub) and the
+    * provenance tag. pqMeta validates density/uniform dsub up front;
+    * the terminal offset (total LUT length = Σ per-subspace centroid
+    * counts) is stamped too — m and dsub alone cannot tell codes
+    * encoded against one ksub from books retrained at another (r12
+    * advice: that pairing passed the torn-check and mis-scored). */
+  private def pqStamps(codebooks: DataFrame, sourceTag: String)
+      : org.apache.spark.sql.types.MetadataBuilder = {
+    val (m, dsub, offsets) = pqMeta(codebooks)
+    val b = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong("pqM", m).putLong("pqDsub", dsub)
+      .putLong("pqLut", offsets.last)
+    if (sourceTag.nonEmpty) b.putString("source", sourceTag)
+    b
+  }
+
+  /** `<path>/books` checked against the codes stamps `m` — shared by the
+    * two PQ readers: geometry first, then the total codebook size, the
+    * check that catches books RETRAINED at a different ksub under the
+    * same m/dsub (those codes would index the wrong block and mis-score;
+    * r12 advice). `what` names the artifact in the tear messages. */
+  private def readPqBooks(spark: org.apache.spark.sql.SparkSession,
+      path: String, what: String,
+      m: org.apache.spark.sql.types.Metadata): (DataFrame, Int, Int) = {
     val books = spark.read.parquet(s"$path/books")
     val (bm, bdsub, boffsets) = pqMeta(books)
     require(bm == m.getLong("pqM").toInt && bdsub == m.getLong("pqDsub").toInt,
-      s"PQ index at $path is torn: books geometry (${bm}x$bdsub) does " +
-        s"not match the codes stamp " +
-        s"(${m.getLong("pqM")}x${m.getLong("pqDsub")})")
-    // the LUT-length check is what catches books RETRAINED at a
-    // different ksub under the same m/dsub — those codes would index
-    // the wrong block and mis-score (r12 advice)
+      s"$what is torn: books geometry (${bm}x$bdsub) does not match the " +
+        s"codes stamp (${m.getLong("pqM")}x${m.getLong("pqDsub")})")
     require(boffsets.last.toLong == m.getLong("pqLut"),
-      s"PQ index at $path is torn: books total codebook size " +
-        s"${boffsets.last} does not match the codes stamp " +
-        s"${m.getLong("pqLut")} — the books were retrained after these " +
-        "codes were encoded")
-    PqIndex(books, codes, bm, bdsub)
+      s"$what is torn: books total codebook size ${boffsets.last} does " +
+        s"not match the codes stamp ${m.getLong("pqLut")} — the books " +
+        "were retrained after these codes were encoded")
+    (books, bm, bdsub)
   }
 
   /** Incremental append to a [[writePqIndex]] artifact — the flat-PQ
@@ -1293,105 +1068,44 @@ object Similarity {
     * the artifact's OWN books (every stamp verified first through
     * [[readPqIndex]] — appending under retrained books refuses before
     * writing a byte) and appends to `codes/`. Same duplicate-id guard,
-    * same O(batch) cost shape. */
+    * same O(batch) cost shape ([[ArtifactMaintenance.append]]). */
   def appendPqIndex(newDocs: DataFrame, idCol: String, vecCol: String,
                     path: String,
                     expectedSource: Option[String] = None,
-                    requireNewIds: Boolean = true): Unit = {
-    val spark = newDocs.sparkSession
-    val idx = readPqIndex(spark, path, expectedSource)
-    val diskIdCol = idx.codes.columns.head
-    // cast to the ON-DISK id type before any bloom work: the bloom
-    // hashes string renderings, and a batch id that renders differently
-    // from its on-disk twin (DOUBLE '5.0' vs BIGINT '5') would always
-    // miss the bloom and bypass the duplicate refusal the join-based
-    // guard used to catch via numeric coercion (r15 advice); round-trip
-    // fidelity enforced so a lossy cast refuses instead of truncating
-    // (r16 advice)
-    val batchIds = castIdsLossless(newDocs, idCol,
-      idx.codes.schema(diskIdCol).dataType, diskIdCol, "appendPqIndex")
-    if (requireNewIds)
-      requireDisjointIds(spark, idx.codes, diskIdCol, batchIds, path,
-        "appendPqIndex")
-    // sidecar first, codes second: a crash between the two leaves only
-    // spurious bloom bits, never an indexed id the bloom would miss
-    mergeIdBloom(spark, batchIds, diskIdCol, path, idx.codes,
-      upgradeLegacy = requireNewIds)
-    val meta = idx.codes.schema("codes").metadata
-    pqEncode(newDocs, idCol, vecCol, idx.books)
-      // same cast on the appended rows: codes/ keeps ONE id type
-      .select(col(idCol).cast(idx.codes.schema(diskIdCol).dataType)
-        .as(diskIdCol), col("codes").as("codes", meta), col("r_nsq"))
-      .write.mode("append").parquet(s"$path/codes")
-  }
+                    requireNewIds: Boolean = true): Unit =
+    ArtifactMaintenance.append(PqArtifact, path, newDocs, idCol,
+        requireNewIds, "appendPqIndex")(
+        readPqIndex(newDocs.sparkSession, path, expectedSource)) { idx =>
+      Seq(pqEncode(newDocs, idCol, vecCol, idx.books))
+    }
 
   /** Delete rows from a [[writePqIndex]] artifact by id — FAISS's
     * `remove_ids` applied to the parquet-backed index (the
     * right-to-be-forgotten operation): every stamp is verified first
     * through [[readPqIndex]], then `codes/` is rewritten WITHOUT the
-    * given ids via a left-anti join and swapped in crash-safe
-    * ([[ArtifactMaintenance.stagedSwap]] — nothing is deleted before
-    * the replacement is live). Stamps are preserved verbatim; the
-    * books half is untouched (codes encoded under it remain valid).
+    * given ids and swapped in crash-safe
+    * ([[ArtifactMaintenance.delete]]). Stamps are preserved verbatim;
+    * the books half is untouched (codes encoded under it remain valid).
     * Ids absent from the index are a no-op, mirroring remove_ids.
-    * Returns the number of code rows removed (both counts are parquet
-    * footer-stat reads, not scans).
-    *
-    * Cost shape: parquet immutability makes any delete a full codes/
-    * rewrite — O(index), like FAISS's array compaction. At 100 TB
-    * batch deletion requests and apply them in one pass (or fold them
-    * into the next [[compactPqIndex]] window) rather than rewriting
-    * per id. */
+    * Returns the number of code rows removed. Like FAISS's array
+    * compaction the rewrite is O(index): batch deletion requests (or
+    * fold them into the next [[compactPqIndex]] window) rather than
+    * rewriting per id. */
   def deleteFromPqIndex(ids: DataFrame, idCol: String, path: String,
-                        expectedSource: Option[String] = None): Long = {
-    val spark = ids.sparkSession
-    val idx = readPqIndex(spark, path, expectedSource)
-    val diskIdCol = idx.codes.columns.head
-    val meta = idx.codes.schema("codes").metadata
-    // materialize the id set first: it may derive from the index
-    // itself, and the swap renames the dir the plan would re-read
-    val del = ids.select(col(idCol).as(diskIdCol)).distinct()
-      .localCheckpoint()
-    val before = idx.codes.count()
-    ArtifactMaintenance.stagedSwap(spark, s"$path/codes") { staged =>
-      idx.codes.join(del, Seq(diskIdCol), "left_anti")
-        .select(col(diskIdCol), col("codes").as("codes", meta),
-          col("r_nsq"))
-        .write.mode("overwrite").parquet(staged)
-    }
-    // a bloom cannot subtract: rebuild the sidecar from the survivors
-    // (also what lets a deleted id be RE-ADDED without a stale maybe)
-    rebuildIdBloomFromCodes(spark, path)
-    before - spark.read.parquet(s"$path/codes").count()
-  }
+                        expectedSource: Option[String] = None): Long =
+    ArtifactMaintenance.delete(PqArtifact, path, ids, idCol)(
+      readPqIndex(ids.sparkSession, path, expectedSource))
 
   /** Compact a [[writePqIndex]] artifact's `codes/` after a run of
     * [[appendPqIndex]] drops — flat-PQ twin of
     * [[compactIvfPqResidualIndex]]. The flat scan has no probe key, so
     * the rewrite just normalizes file sizes at `targetPartitions`
     * (default: the session's shuffle parallelism); stamps preserved,
-    * swap via [[ArtifactMaintenance.stagedSwap]]. */
+    * swap and bloom resize via [[ArtifactMaintenance.compact]]. */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     path: String, targetPartitions: Int = 0): Unit = {
-    // repair a swap that crashed mid-exchange before reading (the read
-    // below would otherwise fail on the missing live dir)
-    ArtifactMaintenance.healCrashState(spark, s"$path/codes")
-    val idx = readPqIndex(spark, path) // stamps verified
-    val n = if (targetPartitions > 0) targetPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val meta = idx.codes.schema("codes").metadata
-    val diskIdCol = idx.codes.columns.head
-    ArtifactMaintenance.stagedSwap(spark, s"$path/codes") { staged =>
-      idx.codes.repartition(n)
-        .select(col(diskIdCol), col("codes").as("codes", meta),
-          col("r_nsq"))
-        .write.mode("overwrite").parquet(staged)
-    }
-    // compaction is the natural resize point for the id-bloom sidecar:
-    // rebuild it from the compacted codes so its fp rate tracks the
-    // corpus the guard actually serves
-    rebuildIdBloomFromCodes(spark, path)
-  }
+                     path: String, targetPartitions: Int = 0): Unit =
+    ArtifactMaintenance.compact(PqArtifact, spark, path, targetPartitions)(
+      readPqIndex(spark, path))
 
   /** A materialized RESIDUAL IVF-PQ index read back probe-ready: the
     * coarse centroids, the residual codebooks, and the encoded corpus —
@@ -1401,6 +1115,17 @@ object Similarity {
     * it; probing against retrained centroids mis-scores silently). */
   case class IvfPqResidualIndex(centroids: DataFrame, books: DataFrame,
                                 codes: DataFrame, m: Int, dsub: Int)
+
+  /** The residual index's one mutable dir for [[ArtifactMaintenance]]:
+    * `codes/`, the counted dir, compacted by `cid` so each inverted list
+    * lands contiguously. `cents/` and `books/` are immutable by
+    * construction — residual codes are only meaningful against the
+    * exact coarse set they were encoded under. */
+  private val ResidualArtifact =
+    ArtifactMaintenance.Artifact[IvfPqResidualIndex](
+      Seq(ArtifactMaintenance.DataDir("codes", Seq("cid", "codes", "x_nsq"),
+        _ => Seq("cid"))),
+      idx => Seq(idx.codes))
 
   /** Fingerprint-algorithm version stamped alongside `ivfCentsFp`:
     * bump when [[centroidFingerprint]]'s byte derivation changes, so a
@@ -1450,7 +1175,6 @@ object Similarity {
                               sourceTag: String = "",
                               cidCol: String = "cid",
                               centCol: String = "centroid"): Unit = {
-    val (m, dsub, offsets) = pqMeta(codebooks)
     // normalize the coarse frame to (cid, centroid) at write time —
     // the artifact's on-disk names are part of its contract, so a
     // caller's custom cidCol/centCol must not leak into cents/ (read
@@ -1458,9 +1182,7 @@ object Similarity {
     // advice: a custom-named write used to fail read-back)
     val cents = centroids.select(col(cidCol).as("cid"),
       col(centCol).as("centroid"))
-    val b = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("pqM", m).putLong("pqDsub", dsub)
-      .putLong("pqLut", offsets.last)
+    val meta = pqStamps(codebooks, sourceTag)
       .putString("ivfCentsFp", centroidFingerprint(cents, "cid", "centroid"))
       // fingerprint-ALGORITHM version (r14 advice): v2 = raw IEEE-754
       // bits. A mismatch on an artifact WITHOUT this key means the
@@ -1468,21 +1190,18 @@ object Similarity {
       // doubles), not that the artifact tore — read distinguishes the
       // two so an intact pre-v2 index gets a rebuild/restamp message
       // instead of a false tear report.
-      .putLong("ivfCentsFpV", CentroidFpVersion)
-    if (sourceTag.nonEmpty) b.putString("source", sourceTag)
-    val meta = b.build()
-    // same fresh-write ordering as writePqIndex: old sidecar out
-    // before any half is overwritten (see invalidateIdBloom)
-    invalidateIdBloom(corpus.sparkSession, path)
-    cents.write.mode("overwrite").parquet(s"$path/cents")
-    codebooks.write.mode("overwrite").parquet(s"$path/books")
-    ivfPqResidualEncode(
-      ivfResiduals(corpus, idCol, vecCol, cents),
-      idCol, cents, codebooks)
-      .select(col(idCol), col("cid"), col("codes").as("codes", meta),
-        col("x_nsq"))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    rebuildIdBloomFromCodes(corpus.sparkSession, path)
+      .putLong("ivfCentsFpV", CentroidFpVersion).build()
+    ArtifactMaintenance.freshWrite(corpus.sparkSession, path,
+        ResidualArtifact) {
+      cents.write.mode("overwrite").parquet(s"$path/cents")
+      codebooks.write.mode("overwrite").parquet(s"$path/books")
+      ivfPqResidualEncode(
+        ivfResiduals(corpus, idCol, vecCol, cents),
+        idCol, cents, codebooks)
+        .select(col(idCol), col("cid"), col("codes").as("codes", meta),
+          col("x_nsq"))
+        .write.mode("overwrite").parquet(s"$path/codes")
+    }
   }
 
   /** Read a [[writeIvfPqResidualIndex]] artifact back probe-ready: every
@@ -1496,32 +1215,12 @@ object Similarity {
                              path: String,
                              expectedSource: Option[String] = None)
       : IvfPqResidualIndex = {
-    val codes = spark.read.parquet(s"$path/codes")
-    val m = codes.schema("codes").metadata
-    val needed = Seq("pqM", "pqDsub", "pqLut", "ivfCentsFp")
-    val missing = needed.filterNot(m.contains)
-    require(missing.isEmpty,
-      s"$path/codes is missing residual-index metadata " +
-        s"${missing.mkString(", ")} — was it written by " +
-        "writeIvfPqResidualIndex?")
-    expectedSource.foreach { want =>
-      val got = if (m.contains("source")) m.getString("source") else ""
-      require(got == want,
-        s"residual IVF-PQ index at $path was built from '$got' but this " +
-          s"probe expects '$want' — refusing to search the wrong corpus")
-    }
-    val books = spark.read.parquet(s"$path/books")
-    val (bm, bdsub, boffsets) = pqMeta(books)
-    require(bm == m.getLong("pqM").toInt &&
-        bdsub == m.getLong("pqDsub").toInt,
-      s"residual IVF-PQ index at $path is torn: books geometry " +
-        s"(${bm}x$bdsub) does not match the codes stamp " +
-        s"(${m.getLong("pqM")}x${m.getLong("pqDsub")})")
-    require(boffsets.last.toLong == m.getLong("pqLut"),
-      s"residual IVF-PQ index at $path is torn: books total codebook " +
-        s"size ${boffsets.last} does not match the codes stamp " +
-        s"${m.getLong("pqLut")} — the books were retrained after these " +
-        "codes were encoded")
+    val (codes, m) = ArtifactMaintenance.readStamped(spark, path, "codes",
+      "codes", Seq("pqM", "pqDsub", "pqLut", "ivfCentsFp"),
+      "residual-index", "writeIvfPqResidualIndex")
+    val what = s"residual IVF-PQ index at $path"
+    ArtifactMaintenance.requireSource(m, expectedSource, what, "search")
+    val (books, bm, bdsub) = readPqBooks(spark, path, what, m)
     val cents = spark.read.parquet(s"$path/cents")
     val fp = centroidFingerprint(cents, "cid", "centroid")
     if (fp != m.getString("ivfCentsFp")) {
@@ -1564,46 +1263,23 @@ object Similarity {
     *
     * `requireNewIds` (default on) refuses on id overlap: a re-delivered
     * drop would otherwise surface the same neighbor twice in every
-    * probe. Since r15 the check probes the `idbloom/` sidecar first
-    * (see [[requireDisjointIds]]) — a clean drop certifies "all new"
-    * against the broadcast bloom without touching codes/ at all (no
-    * false negatives); only maybe-hits fall through to a pruned
-    * id-column scan, left_semi from the batch side, strategy chosen by
-    * AQE (r14 advice: no force-broadcast of the batch). Turn it off
-    * only when the caller's id discipline already guarantees
-    * disjointness. */
+    * probe. The check is bloom-gated ([[ArtifactMaintenance.append]]):
+    * a clean drop certifies "all new" against the broadcast `idbloom/`
+    * sidecar without touching codes/ at all; only maybe-hits fall
+    * through to a pruned id-column scan. Turn it off only when the
+    * caller's id discipline already guarantees disjointness. */
   def appendIvfPqResidualIndex(newDocs: DataFrame, idCol: String,
                                vecCol: String, path: String,
                                expectedSource: Option[String] = None,
-                               requireNewIds: Boolean = true): Unit = {
-    val spark = newDocs.sparkSession
-    val idx = readIvfPqResidualIndex(spark, path, expectedSource)
-    val diskIdCol = idx.codes.columns.head
-    // on-disk id type before bloom work — same rendering-mismatch
-    // hazard as appendPqIndex (r15 advice), same round-trip fidelity
-    // enforcement (r16 advice: no silent truncation)
-    val batchIds = castIdsLossless(newDocs, idCol,
-      idx.codes.schema(diskIdCol).dataType, diskIdCol,
-      "appendIvfPqResidualIndex")
-    if (requireNewIds)
-      requireDisjointIds(spark, idx.codes, diskIdCol, batchIds, path,
-        "appendIvfPqResidualIndex")
-    // sidecar first, codes second: a crash between the two leaves only
-    // spurious bloom bits, never an indexed id the bloom would miss
-    mergeIdBloom(spark, batchIds, diskIdCol, path, idx.codes,
-      upgradeLegacy = requireNewIds)
-    // re-stamp the new files with the artifact's OWN codes metadata —
-    // verified identical to the books/cents on disk by the read above
-    val meta = idx.codes.schema("codes").metadata
-    ivfPqResidualEncode(
-      ivfResiduals(newDocs, idCol, vecCol, idx.centroids),
-      idCol, idx.centroids, idx.books)
-      // same cast on the appended rows: codes/ keeps ONE id type
-      .select(col(idCol).cast(idx.codes.schema(diskIdCol).dataType)
-        .as(diskIdCol), col("cid"),
-        col("codes").as("codes", meta), col("x_nsq"))
-      .write.mode("append").parquet(s"$path/codes")
-  }
+                               requireNewIds: Boolean = true): Unit =
+    ArtifactMaintenance.append(ResidualArtifact, path, newDocs, idCol,
+        requireNewIds, "appendIvfPqResidualIndex")(
+        readIvfPqResidualIndex(newDocs.sparkSession, path,
+          expectedSource)) { idx =>
+      Seq(ivfPqResidualEncode(
+        ivfResiduals(newDocs, idCol, vecCol, idx.centroids),
+        idCol, idx.centroids, idx.books))
+    }
 
   /** Delete rows from a [[writeIvfPqResidualIndex]] artifact by id —
     * [[deleteFromPqIndex]]'s residual twin (FAISS `remove_ids`): every
@@ -1621,24 +1297,9 @@ object Similarity {
   def deleteFromIvfPqResidualIndex(ids: DataFrame, idCol: String,
                                    path: String,
                                    expectedSource: Option[String] = None)
-      : Long = {
-    val spark = ids.sparkSession
-    val idx = readIvfPqResidualIndex(spark, path, expectedSource)
-    val diskIdCol = idx.codes.columns.head
-    val meta = idx.codes.schema("codes").metadata
-    val del = ids.select(col(idCol).as(diskIdCol)).distinct()
-      .localCheckpoint()
-    val before = idx.codes.count()
-    ArtifactMaintenance.stagedSwap(spark, s"$path/codes") { staged =>
-      idx.codes.join(del, Seq(diskIdCol), "left_anti")
-        .select(col(diskIdCol), col("cid"),
-          col("codes").as("codes", meta), col("x_nsq"))
-        .write.mode("overwrite").parquet(staged)
-    }
-    // a bloom cannot subtract: rebuild the sidecar from the survivors
-    rebuildIdBloomFromCodes(spark, path)
-    before - spark.read.parquet(s"$path/codes").count()
-  }
+      : Long =
+    ArtifactMaintenance.delete(ResidualArtifact, path, ids, idCol)(
+      readIvfPqResidualIndex(ids.sparkSession, path, expectedSource))
 
   /** Compact a [[writeIvfPqResidualIndex]] artifact's `codes/` after a
     * run of [[appendIvfPqResidualIndex]] drops — the maintenance half
@@ -1649,30 +1310,13 @@ object Similarity {
     * the session's shuffle parallelism), REPARTITIONED BY `cid` so each
     * inverted list lands contiguously — the probe's cid equi-join then
     * reads the fewest row groups per probed list. Stamps are preserved
-    * verbatim (the read path verified them before the rewrite) and the
-    * rewrite replaces `codes/` via [[ArtifactMaintenance.stagedSwap]]
-    * (crash-safe: nothing is deleted before its replacement is live). */
+    * verbatim (the read path verified them before the rewrite); swap
+    * and bloom resize via [[ArtifactMaintenance.compact]]. */
   def compactIvfPqResidualIndex(spark: org.apache.spark.sql.SparkSession,
                                 path: String,
-                                targetPartitions: Int = 0): Unit = {
-    // repair a swap that crashed mid-exchange before reading (the read
-    // below would otherwise fail on the missing live dir)
-    ArtifactMaintenance.healCrashState(spark, s"$path/codes")
-    val idx = readIvfPqResidualIndex(spark, path) // every stamp verified
-    val n = if (targetPartitions > 0) targetPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val meta = idx.codes.schema("codes").metadata
-    val diskIdCol = idx.codes.columns.head
-    ArtifactMaintenance.stagedSwap(spark, s"$path/codes") { staged =>
-      idx.codes
-        .repartition(n, col("cid"))
-        .select(col(diskIdCol), col("cid"), col("codes").as("codes", meta),
-          col("x_nsq"))
-        .write.mode("overwrite").parquet(staged)
-    }
-    // compaction is the natural resize point for the id-bloom sidecar
-    rebuildIdBloomFromCodes(spark, path)
-  }
+                                targetPartitions: Int = 0): Unit =
+    ArtifactMaintenance.compact(ResidualArtifact, spark, path,
+      targetPartitions)(readIvfPqResidualIndex(spark, path))
 
   /** Codebook metadata in ONE driver action (m x ksub rows — the same
     * bounded-scalar class as ZOrder's min/max row): subspace count,

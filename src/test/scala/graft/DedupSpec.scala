@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{ArtifactMaintenance, Dedup, Similarity}
 
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -545,7 +545,7 @@ class DedupSpec extends SparkTestBase {
     // r16 verdict asked for, via the same DupCheckStats hook PqSpec
     // uses)
     val idx = Dedup.readMinhashIndex(spark, path)
-    val clean = Similarity.requireDisjointIds(spark, idx.signatures,
+    val clean = ArtifactMaintenance.requireDisjointIds(spark, idx.signatures,
       "doc_id", Seq(10L).toDF("doc_id"), path, "appendToMinhashIndex")
     assert(clean.bloomUsed && !clean.scannedCodes && clean.maybeHits == 0)
     val drop = Seq((10L, C)).toDF("doc_id", "text")
@@ -721,6 +721,52 @@ class DedupSpec extends SparkTestBase {
     // and only now is a re-delete the documented no-op
     assert(Dedup.deleteFromMinhashIndex(
       Seq(10L).toDF("doc_id"), "doc_id", path) == 0L)
+  }
+
+  test("minhash index: append, delete and compact self-heal the " +
+      "staged-swap crash state (live dir missing, __old present)") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mh-heal")
+    val path = tmp.resolve("index").toString
+    val A = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val C = "red orange yellow green blue indigo violet cyan magenta teal pink grey"
+    val D = "north south east west up down left right front back over under"
+    Dedup.writeMinhashIndex(Seq((1L, A), (10L, C)).toDF("doc_id", "text"),
+      "doc_id", "text", path, sourceTag = "unit")
+    val dir = java.nio.file.Paths.get(path)
+    // a swap of `sub` that died between its two renames: the intact
+    // original at <sub>__old, an orphaned rewrite at <sub>__compact
+    def crash(sub: String): Unit = {
+      java.nio.file.Files.move(dir.resolve(sub), dir.resolve(sub + "__old"))
+      if (!java.nio.file.Files.exists(dir.resolve(sub + "__compact")))
+        java.nio.file.Files.createDirectory(dir.resolve(sub + "__compact"))
+    }
+    def counts() = {
+      val idx = Dedup.readMinhashIndex(spark, path,
+        expectedSource = Some("unit"))
+      (idx.hashes.count(), idx.signatures.count())
+    }
+    crash("signatures")
+    Dedup.appendToMinhashIndex(Seq((11L, D)).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    assert(counts() == ((3L, 3L)))
+    crash("signatures"); crash("buckets")
+    assert(Dedup.deleteFromMinhashIndex(Seq(10L).toDF("doc_id"), "doc_id",
+      path) == 1L)
+    assert(counts() == ((2L, 2L)))
+    crash("hashes")
+    Dedup.compactMinhashIndex(spark, path, targetPartitions = 1)
+    assert(counts() == ((2L, 2L)))
+    for (sub <- Seq("hashes", "signatures", "buckets");
+         sfx <- Seq("__old", "__compact"))
+      assert(!java.nio.file.Files.exists(dir.resolve(sub + sfx)),
+        s"leftover $sub$sfx")
+    // the healed index still gates: a near-dup of the surviving D drops
+    val surv = Dedup.incrementalSurvivors(
+        Seq((20L, D.replace("under", "zz"))).toDF("doc_id", "text"),
+        Dedup.readMinhashIndex(spark, path), "doc_id", "text",
+        threshold = 0.3)
+      .select("doc_id").as[Long].collect()
+    assert(surv.isEmpty)
   }
 
   test("minhash index provenance: a probe expecting a different source refuses") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Similarity, TextAnalysis}
+import graft.operators.{ArtifactMaintenance, Dedup, Similarity, TextAnalysis}
 
 /** Product-quantization ANN: codebook shape, encode/ADC semantics, the
   * flat-LUT indexing under dropped clusters, and the re-rank path. */
@@ -656,13 +656,13 @@ class PqSpec extends SparkTestBase {
     // certified WITHOUT constructing a codes/ scan at all (the helper
     // returns before any plan over `codes` exists — scannedCodes is
     // the structural witness)
-    val clean = Similarity.requireDisjointIds(spark, idx.codes, "id",
+    val clean = ArtifactMaintenance.requireDisjointIds(spark, idx.codes, "id",
       Seq(100L, 101L, 102L).toDF("id"), path, "test")
     assert(clean.bloomUsed && !clean.scannedCodes && clean.maybeHits == 0)
     // a real duplicate: bloom maybe-hit falls through to the pruned
     // id-column probe and refuses with the same named message
     val ex = intercept[IllegalArgumentException] {
-      Similarity.requireDisjointIds(spark, idx.codes, "id",
+      ArtifactMaintenance.requireDisjointIds(spark, idx.codes, "id",
         Seq(5L, 200L).toDF("id"), path, "test")
     }
     assert(ex.getMessage.contains("shares ids"))
@@ -685,7 +685,7 @@ class PqSpec extends SparkTestBase {
       d.listFiles().foreach(_.delete()); d.delete()
     }
     rmBloom()
-    val legacy = Similarity.requireDisjointIds(spark,
+    val legacy = ArtifactMaintenance.requireDisjointIds(spark,
       Similarity.readPqIndex(spark, path).codes, "id",
       Seq(500L).toDF("id"), path, "test")
     assert(!legacy.bloomUsed && legacy.scannedCodes)
@@ -697,12 +697,35 @@ class PqSpec extends SparkTestBase {
       "a requireNewIds append on a legacy artifact must upgrade it")
     // the upgraded sidecar covers BASE + both drops: re-delivery of any
     // of them refuses, and a genuinely clean drop stays scan-free
-    val again = Similarity.requireDisjointIds(spark,
+    val again = ArtifactMaintenance.requireDisjointIds(spark,
       Similarity.readPqIndex(spark, path).codes, "id",
       Seq(900L, 901L).toDF("id"), path, "test")
     assert(again.bloomUsed && !again.scannedCodes)
     intercept[IllegalArgumentException] {
       Similarity.appendPqIndex(drop2, "id", "vec", path)
+    }
+    // the residual index runs the same guard: a clean drop is certified
+    // by the bloom alone, before and after a residual append
+    val cents = Seq((0, Array(0.1, 0.1, 0.1, 0.1)),
+      (1, Array(0.8, 0.8, 0.8, 0.8))).toDF("cid", "centroid")
+    val resBooks = Similarity.pqTrain(
+      Similarity.ivfResiduals(corpus, "id", "vec", cents), "id", "rvec",
+      m = 2, ksub = 4)
+    val resPath = java.nio.file.Files
+      .createTempDirectory("respq_bloom").toString
+    Similarity.writeIvfPqResidualIndex(corpus, "id", "vec", cents,
+      resBooks, resPath)
+    def resClean(ids: Long*) = ArtifactMaintenance.requireDisjointIds(spark,
+      Similarity.readIvfPqResidualIndex(spark, resPath).codes, "id",
+      ids.toDF("id"), resPath, "test")
+    val resClean1 = resClean(100L, 101L)
+    assert(resClean1.bloomUsed && !resClean1.scannedCodes &&
+      resClean1.maybeHits == 0)
+    Similarity.appendIvfPqResidualIndex(drop, "id", "vec", resPath)
+    val resClean2 = resClean(900L)
+    assert(resClean2.bloomUsed && !resClean2.scannedCodes)
+    intercept[IllegalArgumentException] {
+      Similarity.appendIvfPqResidualIndex(drop, "id", "vec", resPath)
     }
   }
 
@@ -800,13 +823,32 @@ class PqSpec extends SparkTestBase {
     // original sits at codes__old, an orphaned rewrite at
     // codes__compact, and there is NO live codes dir
     val dir = java.nio.file.Paths.get(path)
-    java.nio.file.Files.move(dir.resolve("codes"),
-      dir.resolve("codes__old"))
-    java.nio.file.Files.createDirectory(dir.resolve("codes__compact"))
+    def crash(): Unit = {
+      java.nio.file.Files.move(dir.resolve("codes"),
+        dir.resolve("codes__old"))
+      if (!java.nio.file.Files.exists(dir.resolve("codes__compact")))
+        java.nio.file.Files.createDirectory(dir.resolve("codes__compact"))
+    }
+    crash()
     // the next compaction heals at entry (pre-heal, its read failed on
     // the missing live dir) and completes normally
     Similarity.compactPqIndex(spark, path, targetPartitions = 1)
     assert(probe() == before && before.nonEmpty)
+    assert(!java.nio.file.Files.exists(dir.resolve("codes__old")) &&
+      !java.nio.file.Files.exists(dir.resolve("codes__compact")))
+    // the same crash state heals at the entry of an append and of a
+    // delete too: both read the artifact before they write
+    crash()
+    val drop = (32 until 36).map(i =>
+      (i.toLong, Array.tabulate(4)(d => (i * 4 + d) / 160.0f)))
+      .toDF("id", "vec")
+    Similarity.appendPqIndex(drop, "id", "vec", path,
+      expectedSource = Some("unit"))
+    assert(Similarity.readPqIndex(spark, path).codes.count() == 36L)
+    crash()
+    assert(Similarity.deleteFromPqIndex(drop.select("id"), "id", path,
+      expectedSource = Some("unit")) == 4L)
+    assert(probe() == before)
     assert(!java.nio.file.Files.exists(dir.resolve("codes__old")) &&
       !java.nio.file.Files.exists(dir.resolve("codes__compact")))
   }
@@ -840,6 +882,39 @@ class PqSpec extends SparkTestBase {
         "rebuild must leave NO sidecar — absence degrades to the " +
         "full-scan guard; a stale readable bloom manufactures false " +
         "negatives")
+    // the same aborted rewrite through the residual and minhash writers
+    val cents = Seq((0, Array(0.1, 0.1, 0.1, 0.1)),
+      (1, Array(0.8, 0.8, 0.8, 0.8))).toDF("cid", "centroid")
+    val resBooks = Similarity.pqTrain(
+      Similarity.ivfResiduals(base, "id", "vec", cents), "id", "rvec",
+      m = 2, ksub = 4)
+    val resPath = java.nio.file.Files
+      .createTempDirectory("respq_fresh_crash").toString
+    Similarity.writeIvfPqResidualIndex(base, "id", "vec", cents, resBooks,
+      resPath, sourceTag = "unit")
+    assert(new java.io.File(s"$resPath/idbloom").exists())
+    intercept[Throwable] {
+      Similarity.writeIvfPqResidualIndex(bad, "id", "vec", cents,
+        resBooks, resPath, sourceTag = "unit")
+    }
+    assert(!new java.io.File(s"$resPath/idbloom").exists(),
+      "an aborted writeIvfPqResidualIndex must leave NO sidecar")
+    val mhPath = java.nio.file.Files
+      .createTempDirectory("mh_fresh_crash").toString
+    Dedup.writeMinhashIndex(Seq((1L, "alpha beta gamma delta epsilon"))
+      .toDF("doc_id", "text"), "doc_id", "text", mhPath)
+    assert(new java.io.File(s"$mhPath/idbloom").exists())
+    val boomText = udf((i: Long) =>
+      if (i < 0) "" else throw new RuntimeException("boom"))
+    // over a range, not a local Seq: the optimizer would fold a local
+    // relation's projection on the driver — at the build's cache(),
+    // before the write starts — and the job would never run
+    intercept[Throwable] {
+      Dedup.writeMinhashIndex(spark.range(32).select(col("id").as("doc_id"),
+        boomText(col("id")).as("text")), "doc_id", "text", mhPath)
+    }
+    assert(!new java.io.File(s"$mhPath/idbloom").exists(),
+      "an aborted writeMinhashIndex must leave NO sidecar")
   }
 
   test("append duplicate guard coerces the batch id type: a DOUBLE-" +
@@ -903,7 +978,7 @@ class PqSpec extends SparkTestBase {
     assertClean("after compact")
     // and the rebuilt sidecar still serves the fast path
     val idx = Similarity.readPqIndex(spark, path)
-    val clean = Similarity.requireDisjointIds(spark, idx.codes,
+    val clean = ArtifactMaintenance.requireDisjointIds(spark, idx.codes,
       idx.codes.columns.head, Seq(700L).toDF(idx.codes.columns.head),
       path, "test")
     assert(clean.bloomUsed && !clean.scannedCodes)
