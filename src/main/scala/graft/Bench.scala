@@ -57,19 +57,25 @@ import org.apache.spark.sql.functions._
   * `bench_out.json` — overridable via SPARK_GRAFT_BENCH_OUT so judge-side
   * reruns can't clobber a round artifact (which happened twice).
   *
-  * Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-  * SPARK_GRAFT_BENCH_RUNS, SPARK_GRAFT_BENCH_ONLY (comma-separated query
-  * filter; implies in-process), SPARK_GRAFT_BENCH_FORK=0 (force the
-  * shared-session path), SPARK_GRAFT_BENCH_OUT (full-JSON path),
-  * SPARK_GRAFT_BENCH_EXTRAS=0 (skip the synthetic-corpus crossover
-  * entries), SPARK_GRAFT_BENCH_CHUNK (max queries per child JVM),
-  * SPARK_GRAFT_BENCH_WARMUP=0 (skip the untimed warmup pass — the
-  * artifact's baseline_break marker then says so),
-  * SPARK_GRAFT_BENCH_BUDGET_S (global wall budget, default 2700 s;
-  * exhausted -> remaining entries named in skipped_budget, exit 0;
-  * <= 0 disables), SPARK_GRAFT_BENCH_CHILD_TIMEOUT_S (per-child hard
-  * timeout, default 1800 s, clamped to the remaining budget),
-  * SPARK_GRAFT_BENCH_RESULT_TSV (internal — marks a child).
+  * Env knobs (the complete set; BenchSpec pins it):
+  *  - SPARK_GRAFT_SF_DIR (table directory), SPARK_GRAFT_CPUS;
+  *  - SPARK_GRAFT_BENCH_RUNS (timed runs per entry, default 3);
+  *  - SPARK_GRAFT_BENCH_ONLY (comma-separated query filter; implies
+  *    in-process);
+  *  - SPARK_GRAFT_BENCH_FORK=0 (force the shared-session path);
+  *  - SPARK_GRAFT_BENCH_OUT (full-JSON path);
+  *  - SPARK_GRAFT_BENCH_EXTRAS=0 (skip the synthetic-corpus crossover
+  *    entries);
+  *  - SPARK_GRAFT_BENCH_CHUNK (max queries per child JVM);
+  *  - SPARK_GRAFT_BENCH_WARMUP=0 (skip the untimed warmup pass — the
+  *    artifact's baseline_break marker then says so);
+  *  - SPARK_GRAFT_BENCH_CHILD_TIMEOUT_S (per-child hard timeout,
+  *    default 1800 s);
+  *  - SPARK_GRAFT_BENCH_CERT_CACHE (certification cache file, default
+  *    bench_cert_cache.json; 0 disables);
+  *  - SPARK_GRAFT_RIG_CACHE (synthetic-rig parquet cache directory,
+  *    default data/bench_rigs; 0 disables);
+  *  - SPARK_GRAFT_BENCH_RESULT_TSV (internal — marks a child).
   */
 object Bench {
 
@@ -2147,9 +2153,6 @@ object Bench {
                     partial: Option[(Int, Int)] = None,
                     certCached: Set[String] = Set.empty,
                     loadQualified: Set[String] = Set.empty,
-                    skippedBudget: Set[String] = Set.empty,
-                    failedSkipped: Set[String] = Set.empty,
-                    degradedSingleRun: Set[String] = Set.empty,
                     failedChunks: Map[String, ChunkFailure] = Map.empty)
       : String = {
     val byName = results.map(r => r.name -> r).toMap
@@ -2178,25 +2181,10 @@ object Bench {
     // r13 verdict #3: the compact line also counts entries timed under
     // external load (the full artifact names them in load_qualified)
     val nLoadq = loadQualified.count(n => results.exists(_.name == n))
-    // wall-budget self-truncation (r16): the COUNT rides the budgeted
-    // line — a reader can't mistake a truncated run for full coverage —
-    // and the full artifact names every skipped entry
-    val skipField =
-      if (skippedBudget.isEmpty) ""
-      else s""""n_skipped_budget":${skippedBudget.size},"""
-    // crash-then-skipped count (r16 advice — full artifact has names)
-    val failedField =
-      if (failedSkipped.isEmpty) ""
-      else s""""n_failed_skipped":${failedSkipped.size},"""
-    // rescue-pass count (r18 — full artifact names them and flags the
-    // claims they fed in claims_single_run)
-    val degradedField =
-      if (degradedSingleRun.isEmpty) ""
-      else s""""n_degraded_single_run":${degradedSingleRun.size},"""
     val failedChunksField =
       if (failedChunks.isEmpty) ""
       else s""""n_failed_chunks":${failedChunks.size},"""
-    s"""{"metric":"total","value":${f3(total)},"unit":"sec",${partialField(partial)}"queries":$qs,"other_families":$fams,"n_queries":${results.size},"sf":"$sfDir","cpus":$cpus,"runs":$runs,${fastRunsFields(runs, results)}"timing":"min_of_runs",${baselineBreak(warmupOn, compact = true)}${crossoverField(results)}${claimsFields(results, compact = true, degraded = degradedSingleRun)}${certFields(results, compact = true, certCached)}$skipField$failedField$degradedField$failedChunksField"mode":${jstr(mode)},"n_outliers":${outlierEntries(results).size},"n_cold":$nCold,"n_loadq":$nLoadq,"n_err":$nErr,"full":${jstr(outPath)}}"""
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec",${partialField(partial)}"queries":$qs,"other_families":$fams,"n_queries":${results.size},"sf":"$sfDir","cpus":$cpus,"runs":$runs,${fastRunsFields(runs, results)}"timing":"min_of_runs",${baselineBreak(warmupOn, compact = true)}${crossoverField(results)}${claimsFields(results, compact = true)}${certFields(results, compact = true, certCached)}$failedChunksField"mode":${jstr(mode)},"n_outliers":${outlierEntries(results).size},"n_cold":$nCold,"n_loadq":$nLoadq,"n_err":$nErr,"full":${jstr(outPath)}}"""
   }
 
   /** Marker for an INCREMENTALLY-written artifact (r12 verdict #1: the
@@ -2248,7 +2236,7 @@ object Bench {
   private def baselineBreak(warmupOn: Boolean, compact: Boolean): String =
     (warmupOn, compact) match {
       case (true, false) =>
-        """"baseline_break":"r8 interleaved cohorts + r9 untimed warmup + r10 chunked forks + r11 straggler retry (a >3x-spread entry gets 2 extra samples, all recorded) + r12 cold-run absorption (a leading run that is strictly worst and >3x the rest is extended warmup, reclassified into cold_warmup_secs with a replacement sample taken) + r13 single-run controls (designed-to-lose twins take one warm sample, named in single_run_controls) + r13 cert cache (a guard whose certified sources are hash-unchanged reuses its cached pass, named in certification_cached) + r14 load qualification (entries timed in a fork that observed 1-min load above 1.25x the core count are named in load_qualified and excluded from round-over-round deltas) + r16 wall budget (contract-family chunks fork first, bench_* rigs last; once SPARK_GRAFT_BENCH_BUDGET_S is exhausted remaining entries are named in skipped_budget instead of the harness killing the run; children tolerate GC-storm heartbeat gaps) + r17 chunk repack (light families x/q/txt/mm share child JVMs, claim-operand atoms pack and fork before the claim-free rig tail, GC-storm runs >20% wall-in-GC take 2 extra samples — chunk membership changed, so per-entry JVM-lifetime context differs from r16) + r17 rig shrink (the cc 2M-edge rigs are 600k same-shape; bench_cc600k_* minima are NOT comparable to bench_cc2m_*) + r18 rig persistence (whitelisted synthetic corpora/index artifacts load from a content-keyed parquet cache instead of regenerating per child JVM; the cached read restores the generator's row order and parallelism via a stamped __rig_order column, so cached and generated runs share one layout regime — an interim r18 cut round-robined cached loads instead, scattering the row co-location the CC pre-pass exploits, and cc600k minima from that cut are not reference points) + r18 claim rescue (under budget pressure claim operands degrade to one flagged single-run sample, named in degraded_single_run, instead of vanishing into skipped_budget); pre-r10 minima are a different timing regime, not comparable","""
+        """"baseline_break":"r8 interleaved cohorts + r9 untimed warmup + r10 chunked forks + r11 straggler retry (a >3x-spread entry gets 2 extra samples, all recorded) + r12 cold-run absorption (a leading run that is strictly worst and >3x the rest is extended warmup, reclassified into cold_warmup_secs with a replacement sample taken) + r13 single-run controls (designed-to-lose twins take one warm sample, named in single_run_controls) + r13 cert cache (a guard whose certified sources are hash-unchanged reuses its cached pass, named in certification_cached) + r14 load qualification (entries timed in a fork that observed 1-min load above 1.25x the core count are named in load_qualified and excluded from round-over-round deltas) + r16 heartbeat tolerance (children ride out GC-storm heartbeat gaps instead of dying mid-chunk) + r17 chunk repack (light families x/q/txt/mm share child JVMs, claim-operand atoms pack ahead of the claim-free rig tail, GC-storm runs >20% wall-in-GC take 2 extra samples — chunk membership changed, so per-entry JVM-lifetime context differs from r16) + r17 rig shrink (the cc 2M-edge rigs are 600k same-shape; bench_cc600k_* minima are NOT comparable to bench_cc2m_*) + r18 rig persistence (whitelisted synthetic corpora/index artifacts load from a content-keyed parquet cache instead of regenerating per child JVM; the cached read restores the generator's row order and parallelism via a stamped __rig_order column, so cached and generated runs share one layout regime — an interim r18 cut round-robined cached loads instead, scattering the row co-location the CC pre-pass exploits, and cc600k minima from that cut are not reference points) + chunks fork in family order, and a failed child's chunk re-runs in the parent JVM (mode fork_per_chunk_partial, cause in failed_chunks); pre-r10 minima are a different timing regime, not comparable","""
       // the compact line is budget-pinned (<1800 chars): the break
       // marker names the regime rounds and defers the method list to
       // the full artifact's self-describing baseline_break
@@ -2440,32 +2428,16 @@ object Bench {
   // miss (its name lands on the line) and the full map is in
   // bench_out.json.
   private[graft] def claimsFields(results: Seq[QTime],
-                                  compact: Boolean = false,
-                                  degraded: Set[String] = Set.empty)
-      : String = {
+                                  compact: Boolean = false): String = {
     val ok = results.collect { case q if q.err.isEmpty => q.name -> q.secs }.toMap
     val eval = claimSpecs.flatMap { case (name, lhs, rhs, factor) =>
       for (l <- ok.get(lhs); r <- ok.get(rhs)) yield name -> (l < factor * r)
     }
-    // claims whose operands include a rescue-pass single-run sample
-    // (r18, r17 verdict #1): evaluated — a flagged verdict beats three
-    // rounds of silence — but the flag says the ratio rests on one
-    // sample per degraded operand, so nobody reads a flip as definitive
-    val singleRunClaims = claimSpecs.collect {
-      case (name, lhs, rhs, _)
-        if ok.contains(lhs) && ok.contains(rhs) &&
-          (degraded(lhs) || degraded(rhs)) => name
-    }
-    val singleRunField =
-      if (singleRunClaims.isEmpty) ""
-      else if (compact) s""""n_claims_single_run":${singleRunClaims.size},"""
-      else singleRunClaims.map(jstr)
-        .mkString("\"claims_single_run\":[", ",", "],")
-    // claims whose operands were skipped/errored are NAMED, not just
+    // claims whose operands are missing or errored are NAMED, not just
     // omitted (r17, r16 verdict #7): a claim that FAILED last round
-    // must not silently disappear from the record because a budget
-    // truncation skipped its operands — bench_compare.py flags a
-    // previously-failed claim that went unevaluated
+    // must not silently disappear from the record because a chunk
+    // failed or a slice left its operands out — bench_compare.py flags
+    // a previously-failed claim that went unevaluated
     val unevaluated = claimSpecs.collect {
       case (name, lhs, rhs, _)
         if !(ok.contains(lhs) && ok.contains(rhs)) => name
@@ -2489,12 +2461,12 @@ object Bench {
       val more = if (failedNames.size > 8)
         s""""claims_failed_more":${failedNames.size - 8},""" else ""
       s""""n_claims":${eval.size},"claims_failed":${
-        shown.mkString("[", ",", "]")},$more$singleRunField$unevalField"""
+        shown.mkString("[", ",", "]")},$more$unevalField"""
     } else {
       val body = eval.map { case (n, v) => jstr(n) + ":" + v }
         .mkString("{", ",", "}")
       s""""claims":$body,"n_claims_failed":${eval.count(!_._2)},""" +
-        singleRunField + unevalField
+        unevalField
     }
   }
 
@@ -2510,9 +2482,6 @@ object Bench {
                  partial: Option[(Int, Int)] = None,
                  certCached: Set[String] = Set.empty,
                  loadQualified: Set[String] = Set.empty,
-                 skippedBudget: Set[String] = Set.empty,
-                 failedSkipped: Set[String] = Set.empty,
-                 degradedSingleRun: Set[String] = Set.empty,
                  failedChunks: Map[String, ChunkFailure] = Map.empty)
       : String = {
     val qs = results.map { r =>
@@ -2601,32 +2570,6 @@ object Bench {
       s""""load_threshold_x100":${loadQualifyThresholdX100(cpus)},""" +
         present.map(jstr).mkString("\"load_qualified\":[", ",", "],")
     }
-    // wall-budget self-truncation (r16): every entry the budget left
-    // untimed, by name, plus the budget that bound — so a reader (and
-    // bench_compare.py) can tell "absent because skipped" from
-    // "dropped from the bench"
-    val skipField =
-      if (skippedBudget.isEmpty) ""
-      else skippedBudget.toSeq.sorted.map(jstr)
-        .mkString("\"skipped_budget\":[", ",", "],") +
-        s""""budget_s":${f3(budgetSeconds)},"""
-    // crash-then-skipped entries (r16 advice): a chunk whose child
-    // FAILED and whose in-process re-run the budget then refused is a
-    // different fact from "never attempted" — named separately so the
-    // artifact distinguishes the two (skipped_budget keeps only the
-    // never-attempted)
-    val failedField =
-      if (failedSkipped.isEmpty) ""
-      else failedSkipped.toSeq.sorted.map(jstr)
-        .mkString("\"failed_skipped\":[", ",", "],")
-    // rescue-pass samples (r18): one warm run each, taken under budget
-    // pressure so the claim could carry a verdict — named so nobody
-    // reads them as min-of-N minima (bench_compare.py excludes them
-    // from round-over-round deltas like load_qualified)
-    val degradedField =
-      if (degradedSingleRun.isEmpty) ""
-      else degradedSingleRun.toSeq.sorted.map(jstr)
-        .mkString("\"degraded_single_run\":[", ",", "],")
     // per-failed-chunk cause (r18, r17 verdict #3): exit code (null =
     // timeout kill) + the child log's tail, so a crash diagnosis no
     // longer depends on stderr the harness discards
@@ -2636,324 +2579,7 @@ object Bench {
         jstr(c) + s""":{"exit":${f.exit.fold("null")(_.toString)},""" +
           s""""log_tail":${jstr(f.logTail)}}"""
       }.mkString("\"failed_chunks\":{", ",", "},")
-    s"""{"metric":"total","value":$total,"unit":"sec",${partialField(partial)}"queries":$qs,"spread":$spread,$runsField$coldField$outlierField$headlineField$ctrlField$loadField"sf":"$sfDir","cpus":$cpus,"runs":$runs,${fastRunsFields(runs, results)}"timing":"min_of_runs","gc_retry_fraction":$GcRetryFraction,${baselineBreak(warmupOn, compact = false)}${crossoverField(results)}${claimsFields(results, degraded = degradedSingleRun)}${certFields(results, compact = false, certCached)}$forkField$skipField$failedField$degradedField$failedChunksField"mode":${jstr(mode)},"n_outliers":${outlierEntries(results).size},"n_err":$nErr}"""
-  }
-
-  // ---------------------------------------------------------------------
-  // Doc sync: the prose in README.md / SCALING.md argues from measured
-  // numbers, and for three rounds running a hand-typed number went stale
-  // against the final artifact (the builder re-syncs mid-round, the
-  // driver's definitive bench runs later). The numbers now live in
-  // marker-delimited blocks that THIS main regenerates from its own
-  // results after every full run — the same run that writes
-  // bench_out.json rewrites the docs, so they cannot diverge.
-  // ---------------------------------------------------------------------
-
-  private def fmtS(t: Double): String = f3(t)
-
-  private def ratio(num: Option[QTime], den: Option[QTime]): String =
-    (for (n <- num; d <- den; if n.err.isEmpty && d.err.isEmpty && d.secs > 0)
-      yield String.format(java.util.Locale.ROOT, "%.2f", Double.box(n.secs / d.secs)))
-      .getOrElse("n/a")
-
-  /** The chronologically FIRST timed sample of an entry — interleave
-    * slot r=1, the one block a single-run control also ran in. Cold
-    * absorption moves reclassified leading runs into coldSecs, so the
-    * true slot-1 sample is coldSecs.head when any were reclassified. */
-  private def firstTimed(t: QTime): Option[Double] =
-    t.coldSecs.headOption.orElse(t.runSecs.headOption)
-
-  /** Ratio from ONE interleaved block (r13 verdict: the dd50k table
-    * divided a single-run control's only sample — whatever machine
-    * regime it landed in — by a min-of-5 denominator spanning regimes,
-    * inflating the printed multiplier ~50% over the same-regime bisect).
-    * Both samples here come from interleave slot r=1 of the same child
-    * JVM, so regime lands on numerator and denominator equally. */
-  private def sameBlockRatio(num: Option[QTime], den: Option[QTime])
-      : String =
-    (for (n <- num; d <- den; if n.err.isEmpty && d.err.isEmpty;
-          nv <- firstTimed(n); dv <- firstTimed(d); if dv > 0)
-      yield String.format(java.util.Locale.ROOT, "%.2f",
-        Double.box(nv / dv)))
-      .getOrElse("n/a")
-
-  /** The generated markdown blocks, keyed by marker name. Pure function
-    * of the results so the spec can pin shape and idempotence. */
-  private[graft] def docTables(results: Seq[QTime], sfDir: String,
-                               runs: Int, mode: String,
-                               certCached: Set[String] = Set.empty,
-                               trend: Seq[(String, Double, Int)] = Nil)
-      : Map[String, String] = {
-    val byName = results.map(r => r.name -> r).toMap
-    def q(n: String) = byName.get(n)
-    def row(n: String): String = q(n) match {
-      case Some(r) if r.err.isEmpty =>
-        val cert =
-          if (certCached(n)) " (certification, cached pass)"
-          else if (certificationOnly(n)) " (certification, 1 run)" else ""
-        s"| `$n` | ${fmtS(r.secs)} | ${fmtS(r.maxSecs)}$cert |"
-      case Some(r) => s"| `$n` | err | ${r.err.get.take(40)} |"
-      case None => s"| `$n` | absent | — |"
-    }
-    def table(names: Seq[String]): String =
-      ("| entry | min s | max s |" :: "|---|---|---|" ::
-        names.map(row).toList).mkString("\n")
-    val stamp =
-      s"_Generated by `graft.Bench` from this run's bench_out.json " +
-        s"(sf=`$sfDir`, $mode, min-of-$runs + untimed warmup unless " +
-        "flagged; [min,max] seconds). Hand edits between these markers " +
-        "are overwritten by the next full bench run._"
-    val claims = {
-      val ok = results.collect { case q if q.err.isEmpty => q.name -> q.secs }.toMap
-      claimSpecs.flatMap { case (name, lhs, rhs, factor) =>
-        for (l <- ok.get(lhs); r <- ok.get(rhs))
-          yield s"| `$name` | ${if (l < factor * r) "holds" else "FAILED"} |"
-      }
-    }
-    Map(
-      "ann50k" -> (stamp + "\n\n" +
-        table(Seq("bench_lsh50k_brute", "bench_lsh50k_lsh",
-          "bench_lsh50k_ivf", "bench_lsh50k_q8", "bench_lsh50k_pq",
-          "bench_lsh50k_ivfpq")) + "\n\n" +
-        s"brute/LSH ratio ${ratio(q("bench_lsh50k_brute"), q("bench_lsh50k_lsh"))}x, " +
-        s"brute/IVF ${ratio(q("bench_lsh50k_brute"), q("bench_lsh50k_ivf"))}x, " +
-        s"brute/PQ ${ratio(q("bench_lsh50k_brute"), q("bench_lsh50k_pq"))}x " +
-        "(PQ: 8-byte codes + top-100 exact re-rank; its claim is the " +
-        "footprint guard, not seconds), " +
-        s"brute/IVF-PQ ${ratio(q("bench_lsh50k_brute"), q("bench_lsh50k_ivfpq"))}x " +
-        "(probe-bounded ADC scan)."),
-      "cc" -> (stamp + "\n\n" +
-        table(Seq("bench_cc450k_driver", "bench_cc450k_dist",
-          "bench_cc600k_dist", "bench_cc600k_skew",
-          "bench_cc600k_skew_nopre")) + "\n\n" +
-        s"450k dist/driver same-block ratio ${sameBlockRatio(q("bench_cc450k_dist"), q("bench_cc450k_driver"))}x " +
-        s"(the adaptive gate's win); 600k skew/uniform ${ratio(q("bench_cc600k_skew"), q("bench_cc600k_dist"))}x (min/min); " +
-        s"skew nopre/pre same-block ${sameBlockRatio(q("bench_cc600k_skew_nopre"), q("bench_cc600k_skew"))}x " +
-        "(the partition-local union-find pre-pass, Dedup.localContract; " +
-        "same-block ratios pair a single-run control's sample with its " +
-        "contender's slot-1 sample from the same interleave)."),
-      "dd50k" -> (stamp + "\n\n" +
-        table(Seq("bench_dd50k_ngram", "bench_dd50k_ngram_pruned",
-          "bench_dd50k_minhash", "bench_dd12k_ngram",
-          "bench_dd12k_minhash")) + "\n\n" +
-        "Ratios against the single-run naive control come from ONE " +
-        "interleaved block (slot-1 sample over slot-1 sample, same " +
-        "child JVM — r13 verdict: a control's only sample over a " +
-        "min-of-5 mixes machine regimes): " +
-        s"naive/pruned same-block ratio ${sameBlockRatio(q("bench_dd50k_ngram"), q("bench_dd50k_ngram_pruned"))}x, " +
-        s"naive/minhash same-block ${sameBlockRatio(q("bench_dd50k_ngram"), q("bench_dd50k_minhash"))}x; " +
-        s"12.5k->50k scaling (min/min, both contenders multi-run): " +
-        s"naive x${ratio(q("bench_dd50k_ngram"), q("bench_dd12k_ngram"))}, " +
-        s"minhash x${ratio(q("bench_dd50k_minhash"), q("bench_dd12k_minhash"))} " +
-        "(4x docs: the df^2 term vs shingle-linear signatures)."),
-      "kmrig" -> (stamp + "\n\n" +
-        table(Seq("bench_km50k_full", "bench_km50k_sampled",
-          "bench_km50k_full_train", "bench_km50k_sampled_train",
-          "bench_km200k_full_train", "bench_km200k_sampled_train",
-          "bench_km50k_guard")) + "\n\n" +
-        "Scale ladder (training only, 4x corpus): sampled " +
-        s"${ratio(q("bench_km200k_sampled_train"), q("bench_km50k_sampled_train"))}x " +
-        "(claimed < 2.0 — only the take-N term grows); full " +
-        s"${sameBlockRatio(q("bench_km200k_full_train"), q("bench_km50k_full_train"))}x " +
-        "(single-sample/single-sample — both sizes are controls; NO " +
-        "growth claim: the full trainer is largely overhead-bound at " +
-        "this rig's size — its linear term dominates at real corpus " +
-        "scale, which is the regime the sampled trainer exists for). " +
-        s"full/sampled same-block training ratio ${sameBlockRatio(q("bench_km50k_full"), q("bench_km50k_sampled"))}x " +
-        s"at k=$KmK, $KmIters iterations, ${KmSampleN} of 50k vectors " +
-        "sampled — both contenders end with the identical full-corpus " +
-        "assignment, so the delta is training cost alone; at 100 TB " +
-        "the sampled trainer's per-iteration cost is fixed while the " +
-        "full trainer's grows with the corpus. The win only counts at " +
-        "stated quality: bench_km50k_guard THROWS if full-corpus " +
-        "inertia under the sampled centroids exceeds 1.10x the full " +
-        "trainer's (deterministic rig; measured 1.0102x)."),
-      "ddinc" -> (stamp + "\n\n" +
-        table(Seq("bench_ddinc_inline", "bench_ddinc_probe")) + "\n\n" +
-        s"inline-recompute/index-probe ratio ${ratio(q("bench_ddinc_inline"), q("bench_ddinc_probe"))}x " +
-        "at sf0.1 (corpus only 4x the batch here; at corpus >> batch the probe's " +
-        "O(batch) cost is the whole point)."),
-      "asofrig" -> (stamp + "\n\n" +
-        table(Seq("bench_asof_union", "bench_asof_argmax")) + "\n\n" +
-        s"argmax/union same-block ratio ${sameBlockRatio(q("bench_asof_argmax"), q("bench_asof_union"))}x " +
-        "at ~8k views x 500 purchases per key; the argmax side grows " +
-        "with pairs-per-key, the union side with rows."),
-      "rjrig" -> (stamp + "\n\n" +
-        table(Seq("bench_rj_bucketed", "bench_rj_theta")) + "\n\n" +
-        s"theta/bucketed ratio ${ratio(q("bench_rj_theta"), q("bench_rj_bucketed"))}x " +
-        "at 500k points x 5k intervals; the theta side grows with " +
-        "|points| x |intervals|, the bucketed side with matches."),
-      "skewrig" -> (stamp + "\n\n" +
-        table(Seq("bench_skew_plain", "bench_skew_salted")) + "\n\n" +
-        s"plain/salted ratio ${ratio(q("bench_skew_plain"), q("bench_skew_salted"))}x " +
-        "with AQE and auto-broadcast disabled (8M rows, 90% on one " +
-        "key, salt factor 32) — the regime saltedJoin exists for; " +
-        "under the normal session AQE's skew-split handles this shape."),
-      "layoutrig" -> (stamp + "\n\n" +
-        table(Seq("bench_layout_plain", "bench_layout_clustered")) + "\n\n" +
-        s"plain/clustered wall ratio ${ratio(q("bench_layout_plain"), q("bench_layout_clustered"))}x " +
-        "on a ~1%-selective range scan (8M rows, 1 MiB row groups, " +
-        "identical bytes per copy) — local seconds are overhead-bound " +
-        "and carry NO claim; the conclusion is bench_layout_guard's " +
-        "hard >=10x decoded-row reduction (row-group min/max pruning), " +
-        "the number a 100 TB scan pays for."),
-      "layoutskew" -> (stamp + "\n\n" +
-        table(Seq("bench_layout2d_skew_scaled",
-          "bench_layout2d_skew_ranked")) + "\n\n" +
-        "Local seconds carry NO claim (overhead-bound warm scans); the " +
-        "conclusion is bench_layout2d_skew_guard's hard >=3x " +
-        "decoded-row recovery: under 90%-on-one-slice key skew, " +
-        "proportional scaling collapses the hot mass into ~one curve " +
-        "cell while rank bucketing keeps row-group stanzas narrow."),
-      "bpeenc" -> (stamp + "\n\n" +
-        table(Seq("bench_bpe_enc64", "bench_bpe_enc512")) + "\n\n" +
-        s"512/64-merge encode cost ratio ${ratio(q("bench_bpe_enc512"), q("bench_bpe_enc64"))}x " +
-        "over the same corpus — encode scales with merge count " +
-        "(vocabulary-sized stages), not expression depth; the " +
-        "pre-batching form could not analyze past ~64 merges at all."),
-      "simtwins" -> (stamp + "\n\n" +
-        table(Seq("sim_topk", "sim_topk_q8", "sim_topk_lsh",
-          "dd_embed_pairs", "dd_embed_lsh")) + "\n\n" +
-        s"embed brute/LSH ratio ${ratio(q("dd_embed_pairs"), q("dd_embed_lsh"))}x."),
-      "contract" -> {
-        val contract = results.filter(r =>
-          SparkEntry.queries.contains(r.name) && r.err.isEmpty)
-        val heaviest = contract.sortBy(-_.secs).take(10)
-        val total = contract.filterNot(r => certificationOnly(r.name))
-          .map(_.secs).sum
-        stamp + "\n\n" +
-          s"Contract-query total ${fmtS(total)} s across ${contract.size} " +
-          "entries (certification entries excluded from the sum); " +
-          "heaviest:\n\n" + table(heaviest.map(_.name)) +
-          "\n\nClaims (computed into the artifact each run):\n\n" +
-          ("| claim | status |" :: "|---|---|" :: claims.toList)
-            .mkString("\n")
-      },
-      "contract_trend" -> (stamp + "\n\n" + renderContractTrend(trend)))
-  }
-
-  /** The round-over-round contract-total line (r16 verdict #6/#8 of
-    * r15: a judge had to three-way `git show` to reconstruct
-    * 81.7 → 135.0 → 139.8 s — now the history is a committed file each
-    * doc-syncing full run APPENDS to, and this line is generated from
-    * it). */
-  private[graft] def renderContractTrend(
-      trend: Seq[(String, Double, Int)]): String =
-    if (trend.isEmpty) "(no sealed-run history recorded yet)"
-    else "Sealed contract-query totals, round-over-round (appended " +
-      "automatically by every doc-syncing full bench run from " +
-      s"`$ContractHistoryPath`): " +
-      trend.map { case (label, total, n) =>
-        val nStr = if (n > 0) s"/$n entries" else ""
-        s"${fmtS(total)} s$nStr ($label)"
-      }.mkString(" → ") + "."
-
-  /** Committed history of sealed-run contract totals. Each doc-syncing
-    * full bench run appends its own total (same conditions as the doc
-    * blocks: full run, extras on, warmup on, nothing skipped) when it
-    * differs from the last entry; labels are the run date (the early
-    * rounds were back-filled from the judges' reconstruction). */
-  private[graft] val ContractHistoryPath = "bench_contract_history.json"
-
-  private[graft] def readContractHistory(path: Path)
-      : Seq[(String, Double, Int)] =
-    if (!Files.isReadable(path)) Nil
-    else try {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper
-      val root = mapper.readTree(Files.readString(path))
-      import scala.jdk.CollectionConverters._
-      root.elements().asScala.flatMap { e =>
-        for (l <- Option(e.get("label")).map(_.asText());
-             t <- Option(e.get("total_s")).map(_.asDouble()))
-          yield (l, t, Option(e.get("n")).map(_.asInt(-1)).getOrElse(-1))
-      }.toVector
-    } catch { case _: Throwable => Nil }
-
-  private[graft] def renderContractHistory(
-      entries: Seq[(String, Double, Int)]): String =
-    entries.map { case (l, t, n) =>
-      val nField = if (n > 0) s""", "n": $n""" else ""
-      s"""  {"label": ${jstr(l)}, "total_s": ${f3(t)}$nField}"""
-    }.mkString("[\n", ",\n", "\n]\n")
-
-  /** True when the history file EXISTS with non-empty, non-"[]" content
-    * that [[readContractHistory]] could not parse into any entry —
-    * the transiently-truncated-file case whose silent overwrite the
-    * r17 advice flagged. */
-  private[graft] def contractHistoryCorrupt(path: Path): Boolean =
-    Files.isReadable(path) && readContractHistory(path).isEmpty && {
-      val txt = try Files.readString(path).trim
-        catch { case _: Throwable => "" }
-      txt.nonEmpty && txt != "[]"
-    }
-
-  /** Append this run's contract total to the committed history when it
-    * moved (>2% or entry-count change) — called only on doc-syncing
-    * full runs, so the history stays a sealed-run-to-sealed-run
-    * series. Returns the updated trend for rendering. */
-  private def updateContractHistory(results: Seq[QTime])
-      : Seq[(String, Double, Int)] = {
-    val contract = results.filter(r =>
-      SparkEntry.queries.contains(r.name) && r.err.isEmpty)
-    val total = contract.filterNot(r => certificationOnly(r.name))
-      .map(_.secs).sum
-    val n = contract.size
-    val path = Paths.get(ContractHistoryPath)
-    val prior = readContractHistory(path)
-    // an existing-but-unparseable history must not be silently replaced
-    // by a one-entry file (r18, r17 advice: a transiently truncated
-    // write would discard the committed round-over-round trend) — warn,
-    // leave the file untouched, and render this run without a trend.
-    // A legitimately EMPTY history ("[]" or a missing file) still seeds.
-    if (prior.isEmpty && contractHistoryCorrupt(path)) {
-      System.err.println(s"bench: $ContractHistoryPath exists but did " +
-        "not parse — leaving it untouched (fix or delete it to resume " +
-        "the trend)")
-      return prior
-    }
-    val label = java.time.LocalDate.now().toString
-    val changed = prior.lastOption.forall { case (_, t, pn) =>
-      pn != n || math.abs(t - total) > 0.02 * math.max(t, 1.0) }
-    val updated =
-      if (!changed) prior
-      else if (prior.lastOption.exists(_._1 == label))
-        prior.init :+ ((label, total, n))
-      else prior :+ ((label, total, n))
-    if (updated != prior)
-      try Files.writeString(path, renderContractHistory(updated))
-      catch { case e: Throwable => System.err.println(
-        s"bench: contract history write failed: ${e.getMessage}") }
-    updated
-  }
-
-  /** Replace every `<!-- bench:KEY -->`..`<!-- /bench:KEY -->` block in
-    * `doc` whose KEY has generated content; unknown keys and docs
-    * without markers pass through untouched. */
-  private[graft] def syncDocText(doc: String,
-                                 tables: Map[String, String]): String =
-    tables.foldLeft(doc) { case (d, (key, body)) =>
-      val begin = s"<!-- bench:$key -->"
-      val end = s"<!-- /bench:$key -->"
-      val (i, j) = (d.indexOf(begin), d.indexOf(end))
-      if (i < 0 || j < 0 || j < i) d
-      else d.substring(0, i + begin.length) + "\n" + body + "\n" +
-        d.substring(j)
-    }
-
-  private def syncDocs(results: Seq[QTime], sfDir: String, runs: Int,
-                       mode: String,
-                       certCached: Set[String] = Set.empty): Unit = {
-    val trend = updateContractHistory(results)
-    val tables = docTables(results, sfDir, runs, mode, certCached, trend)
-    for (p <- Seq("README.md", "SCALING.md");
-         path = Paths.get(p) if Files.exists(path)) {
-      val before = Files.readString(path)
-      val after = syncDocText(before, tables)
-      if (after != before) {
-        Files.writeString(path, after)
-        System.err.println(s"bench: synced measured-number blocks in $p")
-      }
-    }
+    s"""{"metric":"total","value":$total,"unit":"sec",${partialField(partial)}"queries":$qs,"spread":$spread,$runsField$coldField$outlierField$headlineField$ctrlField$loadField"sf":"$sfDir","cpus":$cpus,"runs":$runs,${fastRunsFields(runs, results)}"timing":"min_of_runs","gc_retry_fraction":$GcRetryFraction,${baselineBreak(warmupOn, compact = false)}${crossoverField(results)}${claimsFields(results)}${certFields(results, compact = false, certCached)}$forkField$failedChunksField"mode":${jstr(mode)},"n_outliers":${outlierEntries(results).size},"n_err":$nErr}"""
   }
 
   // ---------------------------------------------------------------------
@@ -3069,86 +2695,18 @@ object Bench {
   private[graft] val famChunkOverride: Map[String, Int] =
     Map("x" -> 64, "q" -> 14, "txt" -> 12, "mm" -> 12)
 
-  // ---------------------------------------------------------------------
-  // Wall budget (r16, from the r15 invalid driver artifact): the round's
-  // artifact of record is whatever the harness's stdout-tail window holds
-  // when the process ends, and r15's run was KILLED (rc 124) at chunk
-  // 3/38 with only the heavy synthetic rigs timed — no contract family
-  // made it into the record at all. Two policies fix that class of
-  // failure without touching healthy-run numbers:
-  //   1. orderChunks: contract families fork FIRST, the bench_* rigs
-  //      last, so a truncated run's prefix is the part a reader needs
-  //      most (r15 ran alphabetically: bench_* first).
-  //   2. a global wall budget: once it is exhausted the parent STOPS
-  //      LAUNCHING chunks, names every untimed entry in the artifact
-  //      (skipped_budget), and exits 0 with a complete, non-partial
-  //      final line — a self-truncated valid artifact instead of a
-  //      harness-killed invalid one. Claims whose operands were skipped
-  //      are omitted, not guessed (claimsFields already does this).
-  // ---------------------------------------------------------------------
-
-  /** Wall-clock origin of this JVM (object init — main's first touch). */
-  private val benchT0Nanos: Long = System.nanoTime()
-
-  /** Global wall budget in seconds (SPARK_GRAFT_BENCH_BUDGET_S, default
-    * 2700). The r16 advice flagged that healthy full runs at
-    * ~1900-2600 s had no margin under this default and suggested
-    * raising it to ~3300 — deliberately NOT done: the harness kill that
-    * produced r15's rc-124 invalid artifact arrives near the same
-    * ~2700 s mark (r13's 2761 s sbt total barely survived), so a
-    * budget above it trades graceful self-truncation for being killed
-    * mid-run. The r17 fix attacks the COST side instead: the big CC
-    * rig shrank 2M -> 600k edges, the ~85 sub-second x/q/txt/mm
-    * queries merged from 13 child JVMs into 6, and claim-operand rig
-    * atoms pack/fork before the claim-free layout/encode tail — the
-    * r17 sealed full run (certs cached, the driver condition) measured
-    * 2413 s of chunk wall, ~290 s of margin, with ~500 s of strictly
-    * claim-free tail as the degradation buffer before anything a
-    * reader needs can be skipped. 0 or negative disables the
-    * budget. */
-  private def budgetSeconds: Double =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "2700").toDouble
-
-  private def remainingBudgetSeconds: Double = {
-    val b = budgetSeconds
-    if (b <= 0) Double.PositiveInfinity
-    else b - (System.nanoTime() - benchT0Nanos) / 1e9
-  }
-
-  /** Seconds of budget that must remain to START more work — below it
-    * the run wraps up and writes the final artifact instead. */
-  private val BudgetWrapUpMarginSeconds = 30.0
-
   /** Per-child hard timeout in seconds (SPARK_GRAFT_BENCH_CHILD_TIMEOUT_S,
-    * default 1800) — clamped to the remaining wall budget, so one wedged
-    * child can no longer eat the whole run (r15: the old flat 45 min
-    * cap was larger than the entire budget). */
-  private def childTimeoutCapSeconds: Long =
+    * default 1800): a wedged child is killed, recorded in failed_chunks,
+    * and its chunk re-runs in-process. */
+  private def childTimeoutSeconds: Long =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_CHILD_TIMEOUT_S", "1800").toLong
 
-  /** Contract families first, the synthetic `bench_*` crossover rigs
-    * LAST: alphabetical order put the heaviest chunks at the head of
-    * the run, which is exactly the wrong truncation order. Within the
-    * contract group the single all-sub-second x_* chunk forks FIRST
-    * (r17, r16 verdict #1c): on a degraded host the budget's
-    * truncation point should land after the cheapest third of the
-    * contract, not before it. Within the rig group, chunks carrying a
-    * CLAIM OPERAND fork before claim-free ones (r17): the layout and
-    * BPE-encode rigs carry guards (cert-cached) but no claims, and
-    * ~500 s of them used to sit BETWEEN the contract and the claim
-    * operands — exactly where a degraded host's truncation landed in
-    * r15/r16, which is how the CC-skew claims went two driver rounds
-    * unevaluated. Relative order within each band is preserved
-    * (family clustering and chunk naming are untouched). */
-  private[graft] def orderChunks(chunks: Seq[(String, Seq[String])])
-      : Seq[(String, Seq[String])] = {
-    val (rigs, contract) = chunks.partition(
-      _._2.headOption.exists(_.startsWith("bench_")))
-    val (xs, rest) = contract.partition(_._1.startsWith("x"))
-    val claimOps = claimSpecs.flatMap(c => Seq(c._2, c._3)).toSet
-    val (claimRigs, otherRigs) = rigs.partition(_._2.exists(claimOps))
-    xs ++ rest ++ claimRigs ++ otherRigs
-  }
+  /** Fork family of a query name: the name prefix, except the flagship
+    * `q1_agg`, which rides with the q_* relational family it belongs
+    * to (r17: its 1-query chunk was a whole Spark spin-up for one
+    * sub-second aggregate). */
+  private[graft] def famOf(name: String): String =
+    if (name == "q1_agg") "q" else name.takeWhile(_ != '_')
 
   /** Split the query list into fork units: per name-prefix family first
     * (rigs and tables cluster by prefix, so chunk-mates share setup),
@@ -3157,13 +2715,6 @@ object Bench {
     * ATOM (cohort or singleton), greedy in sorted order; an atom larger
     * than `maxPer` gets its own chunk. Chunk names are `fam` when the
     * family fits one chunk, else `fam_1`, `fam_2`, ... */
-  /** Fork family of a query name: the name prefix, except the flagship
-    * `q1_agg`, which rides with the q_* relational family it belongs
-    * to (r17: its 1-query chunk was a whole Spark spin-up for one
-    * sub-second aggregate). */
-  private[graft] def famOf(name: String): String =
-    if (name == "q1_agg") "q" else name.takeWhile(_ != '_')
-
   private[graft] def forkChunks(names: Seq[String],
       maxPer: Int = maxChildQueries,
       envChunkCap: Option[Int] =
@@ -3196,10 +2747,11 @@ object Bench {
         }
       }
       // claim-operand atoms pack FIRST within the family (r17): the
-      // bench_* rigs all share one fork family, so without this a
-      // chunk mixes claim operands with claim-free layout/encode
-      // entries and the budget's truncation point can strand a claim.
-      // Stable within each band, so chunk-mates still share setup.
+      // bench_* rigs all share one fork family, and this keeps the
+      // claim operands in chunks of their own, ahead of the claim-free
+      // layout/encode entries. Chunk membership fixes each entry's
+      // JVM-lifetime context, so changing it changes what the numbers
+      // mean. Stable within each band, so chunk-mates still share setup.
       val orderedAtoms = {
         val (withClaim, free) = atoms.partition(_.exists(claimOps))
         withClaim ++ free
@@ -3224,20 +2776,8 @@ object Bench {
   /** Below this min time a query gets topped up to min-of-5 runs. */
   private val StableMinSeconds = 0.5
 
-  /** `enforceBudget` (parent-side callers only — the fork-unavailable
-    * fallback and the failed-chunk re-run): stop STARTING units once
-    * the wall budget is exhausted; the un-run entries are simply
-    * absent from the result and the caller names them in
-    * skipped_budget. Child JVMs never enforce it themselves — the
-    * parent's budget-clamped child timeout is their bound.
-    * `reserveSeconds` (r18): extra budget this run must LEAVE OVER —
-    * the failed-chunk re-run passes the claim-rescue reserve so a
-    * full-quality retry cannot eat the budget that guarantees every
-    * claim at least a flagged single-run verdict. */
   private def runInProcess(sfDir: String, cpus: String, runs: Int,
-      only: Option[Set[String]],
-      enforceBudget: Boolean = false,
-      reserveSeconds: Double = 0.0): Seq[QTime] = {
+      only: Option[Set[String]]): Seq[QTime] = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -3306,13 +2846,6 @@ object Bench {
       } else { seen += name; Some(Seq(name)) }
     }
     val results = units.flatMap { unit =>
-      if (enforceBudget &&
-          remainingBudgetSeconds <
-            BudgetWrapUpMarginSeconds + reserveSeconds) {
-        // budget exhausted: stop starting units (the caller records the
-        // absent names as skipped_budget)
-        Nil
-      } else {
       val errs = scala.collection.mutable.Map.empty[String, String]
       val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
         .withDefaultValue(Vector.empty)
@@ -3470,7 +3003,6 @@ object Bench {
       // outside every timed window.
       System.gc()
       unitResults
-      }
     }
     spark.stop()
     results
@@ -3619,129 +3151,37 @@ object Bench {
     }
   }
 
-  /** Everything one forked bench run produced (r18 — the flat tuple
-    * outgrew itself when claim rescue and failed-chunk causes landed).
-    * degradedSingleRun = entries timed ONCE in a rescue fork under
-    * budget pressure (their sample is warm but single — never a
-    * min-of-N number); failedChunks = per failed chunk, the exit code
-    * and log tail that used to die with the harness's stderr. */
+  /** Everything one forked bench run produced. failedChunks = per
+    * failed chunk, the exit code and log tail of its child JVM. */
   private[graft] final case class ForkOutcome(
       results: Seq[QTime], forks: Map[String, ForkStats], mode: String,
-      loadQualified: Set[String], skippedBudget: Set[String],
-      failedSkipped: Set[String],
-      degradedSingleRun: Set[String] = Set.empty,
+      loadQualified: Set[String],
       failedChunks: Map[String, ChunkFailure] = Map.empty)
-
-  /** Claim operands: the entries whose seconds any claim in claimSpecs
-    * reads. Under budget pressure these must DEGRADE (one flagged
-    * sample), never vanish (r18, r17 verdict #1 — the CC-skew claims
-    * went three driver rounds unevaluated because budget truncation
-    * skipped their operands). */
-  private[graft] val claimOperandNames: Set[String] =
-    claimSpecs.flatMap(c => Seq(c._2, c._3)).toSet
-
-  /** Budget to hold back for the claim-rescue pass while untimed claim
-    * operands remain: a flat Spark-spin-up allowance per rescue chunk
-    * plus a per-operand single-run allowance. Deliberately lean — the
-    * reserve only matters on a degraded host, and over-reserving would
-    * truncate healthy runs' claim-free tail for nothing. Overridable
-    * via SPARK_GRAFT_BENCH_RESCUE_RESERVE_S (a flat number). */
-  private[graft] def rescueReserveSeconds(nPendingOps: Int): Double =
-    if (nPendingOps == 0) 0.0
-    else sys.env.get("SPARK_GRAFT_BENCH_RESCUE_RESERVE_S")
-      .map(_.toDouble)
-      .getOrElse(120.0 + 15.0 * nPendingOps)
-
-  /** Hard per-rescue-chunk wall in seconds (r19, r18 verdict #2): the
-    * r18 rescue packed all 18 pending operands into ONE chunk whose
-    * timeout was the entire remaining budget — it wedged, timed out,
-    * and every operand stayed unevaluated. Rescue chunks are per-atom
-    * now, and each gets at most this slice of the remaining budget, so
-    * one wedged operand forfeits only itself. */
-  private def rescueChunkCapSeconds: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_RESCUE_CHUNK_S", "240").toLong
-
-  /** Whitelisted rig-cache keys a claim operand's setup loads — the
-    * rescue scheduler's cost signal (an operand whose rigs are all
-    * cached skips generation and runs in seconds). Scheduling heuristic
-    * only, never a correctness surface: an unlisted operand (cheap rig
-    * or contract query) counts as ready. */
-  private[graft] def rescueRigKeys(name: String): Seq[String] =
-    if (name.startsWith("bench_lsh50k_ivf")) // ivf & ivfpq prefixes
-      Seq("ann_corpus", "ann_cents", "ann_lists")
-    else if (name.startsWith("bench_lsh50k_q8")) Seq("ann_q8")
-    else if (name.startsWith("bench_lsh50k")) Seq("ann_corpus")
-    else if (name.startsWith("bench_km50k")) Seq("ann_corpus")
-    else if (name.startsWith("bench_km200k")) Seq("km200k_corpus")
-    else if (name.startsWith("bench_cc450k")) Seq("cc450k")
-    else if (name.startsWith("bench_cc600k_skew")) Seq("ccskew")
-    else if (name.startsWith("bench_cc600k")) Seq("cc600k")
-    else if (name.startsWith("bench_dd50k")) Seq("dd50k")
-    else if (name.startsWith("bench_dd12k")) Seq("dd12k")
-    else Seq.empty
-
-  /** True when every whitelisted rig `name`'s setup needs is already in
-    * the content-keyed cache (cores must match the child's — rig keys
-    * embed the core count). */
-  private def rigCacheReady(name: String, cores: Int): Boolean =
-    rescueRigKeys(name).forall { key =>
-      (for (dir <- rigCacheDir; hash <- rigKey(key, cores)) yield
-        Files.exists(dir.resolve(s"$key@$hash").resolve("_SUCCESS")))
-        .getOrElse(false)
-    }
-
-  /** The rescue pass's fork plan (r19, r18 verdict #2): PER-ATOM
-    * chunks — `maxPer = 1`, so each crossover cohort or singleton
-    * forks alone and is budget-gated individually — ordered
-    * rig-cache-first: atoms whose rigs are all cached fork before
-    * atoms that would pay generation, so a thin remaining budget
-    * rescues the cheap operands instead of dying inside an expensive
-    * one. Stable within each band. */
-  private[graft] def rescuePlan(pending: Seq[String],
-      cacheReady: String => Boolean): Seq[(String, Seq[String])] = {
-    val atoms = forkChunks(pending.sorted, maxPer = 1,
-      envChunkCap = None)
-    val (ready, cold) = atoms.partition(_._2.forall(cacheReady))
-    ready ++ cold
-  }
 
   /** Returns the run's ForkOutcome. mode: "fork_per_chunk" when every
     * chunk ran isolated, "fork_per_chunk_partial" when any child JVM
-    * FAILED (r18, closing the r17 advice: a crash now flips the label
-    * even when nothing was re-timed in the shared session — re-timed
-    * entries additionally lack the JIT/GC isolation the label
-    * promises), "shared_session" when forking was unavailable
-    * entirely. skippedBudget/failedSkipped split the untimed entries
-    * by CAUSE (r16 advice): skipped_budget = never attempted because
-    * the budget ran out; failed_skipped = the chunk's child FAILED and
-    * the budget then refused the in-process re-run. Claim operands are
-    * exempt from vanishing: when the budget can no longer afford
-    * full-quality chunks, still-untimed operands run ONCE each in
-    * rescue forks (runs=1 — the single-run-control methodology: one
-    * untimed warmup, one warm sample) and land in degradedSingleRun;
-    * claims evaluated from them are flagged claims_single_run. */
+    * FAILED (its chunk is re-run in this JVM, so those entries lack the
+    * JIT/GC isolation the label promises), "shared_session" when
+    * forking was unavailable entirely. */
   private def runForked(sfDir: String, cpus: String, runs: Int,
       exclude: Set[String] = Set.empty,
       onChunk: (Seq[QTime], Map[String, ForkStats], Set[String], Int, Int)
           => Unit = (_, _, _, _, _) => ()): ForkOutcome = {
     val names = allBenchQueries.keys.toSeq.filterNot(exclude).sorted
-    val chunks = orderChunks(forkChunks(names))
+    val chunks = forkChunks(names)
     val cp = forkClasspath()
     val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java")
     if (cp.isEmpty || !Files.isExecutable(javaBin)) {
       System.err.println("bench: fork unavailable, falling back in-process")
       val rs = runInProcess(sfDir, cpus, runs,
-        if (exclude.isEmpty) None else Some(names.toSet),
-        enforceBudget = true)
-      return ForkOutcome(rs, Map.empty, "shared_session", Set.empty,
-        names.toSet -- rs.map(_.name), Set.empty)
+        if (exclude.isEmpty) None else Some(names.toSet))
+      return ForkOutcome(rs, Map.empty, "shared_session", Set.empty)
     }
     val logDir = Paths.get("target", "bench-fork")
     Files.createDirectories(logDir)
     val jvmArgs = childJvmArgs()
     val buf = scala.collection.mutable.ArrayBuffer.empty[QTime]
     val stats = scala.collection.mutable.Map.empty[String, ForkStats]
-    val failed = Seq.newBuilder[String]
     val failedChunks =
       scala.collection.mutable.Map.empty[String, ChunkFailure]
     // load-qualification (r13 verdict #3: the fork telemetry RECORDS
@@ -3757,152 +3197,43 @@ object Bench {
           if stats.get(chunk).exists(s =>
             s.loadX100 >= 0 && s.loadX100 > loadQualifyThresholdX100(cpus))
         => qs }.flatten.toSet
-    val skipped = scala.collection.mutable.Set.empty[String]
-    // claim operands present in chunks idx.. (suffix sets, precomputed):
-    // the per-chunk stop condition reserves rescue budget for exactly
-    // the operands a stop would strand
-    val suffixClaimOps: Array[Set[String]] = {
-      val arr = new Array[Set[String]](chunks.size + 1)
-      arr(chunks.size) = Set.empty
-      for (i <- chunks.indices.reverse)
-        arr(i) = arr(i + 1) ++ chunks(i)._2.filter(claimOperandNames)
-      arr
-    }
-    // ONE-WAY wrap-up switch: once the budget can no longer afford a
-    // normal chunk PLUS the rescue reserve for the claim operands a
-    // stop would strand, no further normal chunk launches — without
-    // the latch, later chunks whose suffix carries few operands see a
-    // small reserve, resume launching, and eat the very budget the
-    // rescue pass was reserved (caught by the r18 tight-budget drill)
-    var wrappingUp = false
     for (((chunk, qs), idx) <- chunks.zipWithIndex) {
-      val remaining = remainingBudgetSeconds
-      val timedSoFar = buf.iterator.map(_.name).toSet
-      val pendingOps = suffixClaimOps(idx) -- timedSoFar
-      if (wrappingUp || remaining < BudgetWrapUpMarginSeconds +
-            rescueReserveSeconds(pendingOps.size)) {
-        if (!wrappingUp)
-          System.err.println(f"bench: wall budget " +
-            f"(${budgetSeconds}%.0f s) exhausted after ${idx} of " +
-            s"${chunks.size} chunks — remaining entries will be named " +
-            s"in skipped_budget" + (if (pendingOps.isEmpty) ""
-            else s"; ${pendingOps.size} claim operands go to the " +
-              "single-run rescue pass"))
-        wrappingUp = true
-        skipped ++= qs
-      } else {
-        val t0 = System.nanoTime()
-        runChild(javaBin.toString, jvmArgs, cp, chunk, qs, sfDir, cpus,
-            runs, logDir, timeoutSeconds = math.max(60L,
-              math.min(childTimeoutCapSeconds, remaining.toLong))) match {
-          case Right((rs, st)) =>
-            buf ++= rs
-            st.foreach(s => stats += chunk -> s)
-            System.err.println(f"bench: chunk $chunk (${qs.size} queries) " +
-              f"done in ${(System.nanoTime() - t0) / 1e9}%.1f s" +
-              st.fold("")(s => s" [gc ${s.gcMs} ms/${s.gcCount}, " +
-                s"heap peak ${s.heapPeakMb} MB]"))
-          case Left(why) =>
-            failed ++= qs
-            failedChunks += chunk -> why
-            System.err.println(s"bench: chunk $chunk child FAILED " +
-              s"(exit ${why.exit.fold("timeout")(_.toString)}, " +
-              s"see $logDir/bench_$chunk.log), will re-run in-process")
-        }
+      val t0 = System.nanoTime()
+      runChild(javaBin.toString, jvmArgs, cp, chunk, qs, sfDir, cpus,
+          runs, logDir, childTimeoutSeconds) match {
+        case Right((rs, st)) =>
+          buf ++= rs
+          st.foreach(s => stats += chunk -> s)
+          System.err.println(f"bench: chunk $chunk (${qs.size} queries) " +
+            f"done in ${(System.nanoTime() - t0) / 1e9}%.1f s" +
+            st.fold("")(s => s" [gc ${s.gcMs} ms/${s.gcCount}, " +
+              s"heap peak ${s.heapPeakMb} MB]"))
+        case Left(why) =>
+          failedChunks += chunk -> why
+          System.err.println(s"bench: chunk $chunk child FAILED " +
+            s"(exit ${why.exit.fold("timeout")(_.toString)}, " +
+            s"see $logDir/bench_$chunk.log), will re-run in-process")
       }
-      // incremental artifact checkpoint (r12 verdict #1): a run killed
-      // by the harness wall budget leaves the best-so-far prefix as a
-      // parseable artifact + stdout line instead of nothing
+      // incremental artifact checkpoint (r12 verdict #1): a run that is
+      // killed leaves the best-so-far prefix as a parseable artifact +
+      // stdout line instead of nothing
       try onChunk(buf.toVector.sortBy(_.name), stats.toMap,
         loadQualifiedSoFar(), idx + 1, chunks.size)
       catch { case e: Throwable =>
         System.err.println(s"bench: progress checkpoint failed: " +
           e.getMessage) }
     }
-    // failed-child re-runs are budget-gated too: finishing with named
-    // skips beats being killed mid-fallback (r15: the chunk-1 rerun
-    // plus two degraded chunks consumed the whole wall) — and they now
-    // RESERVE the claim-rescue budget (r18), so a full-quality retry
-    // cannot starve the rescue pass
-    val leftover = failed.result().filterNot(skipped)
-    // crash-then-skipped entries land in their OWN bucket (r16 advice):
-    // "child crashed and the retry was refused" and "never attempted"
-    // are different facts, and only stderr used to record the former
-    val failedSkipped = scala.collection.mutable.Set.empty[String]
-    var rerunTimed = false
-    if (leftover.nonEmpty) {
-      val pendingAfterLeftover =
-        (claimOperandNames -- buf.iterator.map(_.name).toSet)
-          .intersect(names.toSet) -- leftover
-      val reserve = rescueReserveSeconds(pendingAfterLeftover.size)
-      if (remainingBudgetSeconds >
-          BudgetWrapUpMarginSeconds + reserve + 90) {
-        val rs = runInProcess(sfDir, cpus, runs, Some(leftover.toSet),
-          enforceBudget = true, reserveSeconds = reserve)
-        buf ++= rs
-        rerunTimed = rs.nonEmpty
-        failedSkipped ++= leftover.toSet -- rs.map(_.name)
-      } else {
-        System.err.println(s"bench: no budget left for the in-process " +
-          s"re-run of ${leftover.size} failed-chunk entries — skipping")
-        failedSkipped ++= leftover
-      }
-    }
-    // claim-rescue pass (r18, r17 verdict #1): every claim operand the
-    // run still has not timed — budget-skipped, crash-skipped, or
-    // refused-retry — gets ONE warm sample in a fresh rescue fork
-    // (runs=1; the single-run-control methodology) so the claim can
-    // carry a FLAGGED verdict instead of going unevaluated. r19 (r18
-    // verdict #2, the rescue_bench_1 exit-timeout): rescue chunks are
-    // PER-ATOM (one cohort or singleton each), scheduled
-    // rig-cache-first, each hard-capped at rescueChunkCapSeconds — a
-    // wedged operand forfeits only its own chunk; whatever still
-    // cannot run stays in its skip bucket.
-    val degraded = scala.collection.mutable.Set.empty[String]
-    val pendingRescue = (claimOperandNames --
-      buf.iterator.map(_.name).toSet).intersect(names.toSet)
-    if (pendingRescue.nonEmpty &&
-        remainingBudgetSeconds > BudgetWrapUpMarginSeconds) {
-      System.err.println(s"bench: claim-rescue pass for " +
-        s"${pendingRescue.size} operands (single-run, flagged, " +
-        s"per-atom): " + pendingRescue.toSeq.sorted.mkString(", "))
-      val cores = scala.util.Try(cpus.trim.toInt)
-        .getOrElse(Runtime.getRuntime.availableProcessors())
-      for ((chunk, qs) <- rescuePlan(pendingRescue.toSeq,
-             rigCacheReady(_, cores))
-           if remainingBudgetSeconds > BudgetWrapUpMarginSeconds) {
-        val rchunk = s"rescue_$chunk"
-        runChild(javaBin.toString, jvmArgs, cp, rchunk, qs, sfDir, cpus,
-            runs = 1, logDir, timeoutSeconds = math.max(60L,
-              math.min(math.min(childTimeoutCapSeconds,
-                rescueChunkCapSeconds),
-                remainingBudgetSeconds.toLong))) match {
-          case Right((rs, st)) =>
-            buf ++= rs
-            degraded ++= rs.map(_.name)
-            skipped --= rs.map(_.name)
-            failedSkipped --= rs.map(_.name)
-            st.foreach(s => stats += rchunk -> s)
-            System.err.println(s"bench: rescue chunk $rchunk " +
-              s"(${qs.size} operands) done")
-          case Left(why) =>
-            failedChunks += rchunk -> why
-            System.err.println(s"bench: rescue chunk $rchunk FAILED " +
-              s"(exit ${why.exit.fold("timeout")(_.toString)})")
-        }
-      }
-    }
-    // "partial" now means EITHER shared-session retimes are mixed into
-    // a forked artifact OR at least one child crashed (r18, r17 advice
-    // — a crash must flip the label even when nothing was re-timed);
-    // entries that were skipped instead are named in
-    // skipped_budget/failed_skipped
+    // fault recovery: a failed child's chunk re-runs in this JVM; an
+    // entry that fails again is recorded as `"err"` like any other
+    val leftover = chunks.collect {
+      case (chunk, qs) if failedChunks.contains(chunk) => qs }.flatten
+    if (leftover.nonEmpty)
+      buf ++= runInProcess(sfDir, cpus, runs, Some(leftover.toSet))
     val mode =
-      if (rerunTimed || failedChunks.nonEmpty) "fork_per_chunk_partial"
+      if (failedChunks.nonEmpty) "fork_per_chunk_partial"
       else "fork_per_chunk"
     ForkOutcome(buf.toVector.sortBy(_.name), stats.toMap, mode,
-      loadQualifiedSoFar(), skipped.toSet, failedSkipped.toSet,
-      degraded.toSet, failedChunks.toMap)
+      loadQualifiedSoFar(), failedChunks.toMap)
   }
 
   /** Load threshold in load_x100 units: a 1-minute load average above
@@ -3984,10 +3315,10 @@ object Bench {
         // shared-session runs carry the one JVM's own footprint so even
         // the fallback path is diagnosable
         ForkOutcome(rs, Map("shared" -> currentForkStats()),
-          "shared_session", Set.empty, Set.empty, Set.empty)
+          "shared_session", Set.empty)
       }
-    val ForkOutcome(results0, forks, mode, loadQualified, skippedBudget,
-      failedSkipped, degradedSingleRun, failedChunks) = outcome
+    val ForkOutcome(results0, forks, mode, loadQualified, failedChunks) =
+      outcome
     val results = (results0 ++ certHits).sortBy(_.name)
     // seed/refresh the cache from this run's FRESH green certifications
     // (composite storage keys; the guard's legacy bare-name entry, if
@@ -4006,27 +3337,12 @@ object Bench {
     Files.writeString(Paths.get(outPath),
       renderFull(results, sfDir, cpus, runs, mode, warmupOn, forks,
         certCached = cachedNames, loadQualified = loadQualified,
-        skippedBudget = skippedBudget, failedSkipped = failedSkipped,
-        degradedSingleRun = degradedSingleRun,
         failedChunks = failedChunks) + "\n")
-    // a FULL run regenerates the measured-number blocks in the docs —
-    // partial/sliced/extras-off/budget-truncated/crash-holed runs must
-    // not overwrite them with holes (degraded single-run samples count
-    // as holes too — their minima must never become doc numbers)
-    // (disable explicitly with SPARK_GRAFT_BENCH_DOCSYNC=0)
-    if (only.isEmpty && extrasEnabled && warmupOn && skippedBudget.isEmpty &&
-        failedSkipped.isEmpty && degradedSingleRun.isEmpty &&
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCSYNC", "1") != "0")
-      try syncDocs(results, sfDir, runs, mode, cachedNames)
-      catch { case e: Throwable =>
-        System.err.println(s"bench: doc sync failed: ${e.getMessage}") }
     // printed LAST so it lands inside the harness's stdout-tail window
     // (the incremental per-chunk lines above are all `partial`-marked;
     // this one is not, which is how a reader tells a completed run)
     println(renderCompact(results, sfDir, cpus, runs, mode, outPath,
       warmupOn, certCached = cachedNames, loadQualified = loadQualified,
-      skippedBudget = skippedBudget, failedSkipped = failedSkipped,
-      degradedSingleRun = degradedSingleRun,
       failedChunks = failedChunks))
   }
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.EngineError.AnalysisError
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -559,7 +560,7 @@ object Similarity {
     * memory-bound end. */
   def pqTrain(df: DataFrame, idCol: String, vecCol: String,
               m: Int = 4, ksub: Int = 8, iters: Int = 2): DataFrame = {
-    val dim = vecDim(df, vecCol)
+    val dim = vecDim(df, vecCol, "pqTrain")
     require(m >= 1 && dim % m == 0, s"m=$m must divide dim=$dim")
     require(ksub >= 1 && ksub <= 127,
       s"ksub=$ksub must fit a tinyint code (1..127)")
@@ -627,7 +628,10 @@ object Similarity {
     * shortlist. Output: (idCol, codes, r_nsq). */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame): DataFrame = {
-    val dsub = codebooks.select(size(col("centroid"))).head().getInt(0)
+    val dsub = firstRow(codebooks.select(size(col("centroid"))),
+      "pqEncode: empty codebooks, no centroid to read the subspace " +
+        "dimension from").getInt(0)
+    // non-empty codebooks (checked above) give a non-null max
     val m = codebooks.agg(max(col("sub"))).head().getInt(0) + 1
     val subs = pqSubVectors(df, idCol, vecCol, m, dsub)
     val withN = pqAssign(subs, codebooks)
@@ -1415,16 +1419,24 @@ object Similarity {
                     projCol: String = "projection",
                     salt: String = "rp:",
                     scale: Option[Double] = None): DataFrame = {
-    val planes = Dedup.md5Planes(1, outDim, vecDim(df, vecCol), salt).head
+    val planes = Dedup.md5Planes(1, outDim,
+      vecDim(df, vecCol, "randomProject"), salt).head
     val s = scale.getOrElse(1.0 / math.sqrt(outDim.toDouble))
     df.withColumn(projCol,
       graft.plans.VectorExpressions.vectorProject(col(vecCol), planes, s))
   }
 
-  /** Vector length read from the first row — projection needs the input
-    * dim to size the constant matrix. */
-  private def vecDim(df: DataFrame, vecCol: String): Int =
-    df.select(size(col(vecCol))).head().getInt(0)
+  /** Vector length read from the first row — projection and PQ need the
+    * input dim to size their constants, and an empty input has none. */
+  private def vecDim(df: DataFrame, vecCol: String, op: String): Int =
+    firstRow(df.select(size(col(vecCol))),
+      s"$op: empty input, no row to read the `$vecCol` dimension from")
+      .getInt(0)
+
+  /** The first row of `df` (the one job `head()` would run), or an
+    * [[AnalysisError]] naming the empty input. */
+  private def firstRow(df: DataFrame, emptyMsg: => String): Row =
+    df.head(1).headOption.getOrElse(throw AnalysisError(emptyMsg))
 
   /** Deterministic synthetic clustered embedding corpus — the scale rig
     * for demonstrating the LSH-vs-brute crossover the [[lshTopK]] cost

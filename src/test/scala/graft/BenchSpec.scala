@@ -374,8 +374,8 @@ class BenchSpec extends AnyFunSuite {
       "q1_agg must share the q family's child JVM, not its own")
     // claim-operand atoms pack before claim-free ones INSIDE each
     // family (r17): in the bench_* family this keeps the layout/encode
-    // entries behind every claim operand, so a budget truncation can
-    // only strand claim-free entries. Property: across the family's
+    // entries behind every claim operand, and chunk membership is each
+    // entry's JVM-lifetime context. Property: across the family's
     // chunk sequence, once a chunk carries no claim operand, no later
     // chunk carries one (one boundary chunk may mix both bands).
     val claimOps = Bench.claimSpecs.flatMap(c => Seq(c._2, c._3)).toSet
@@ -395,94 +395,6 @@ class BenchSpec extends AnyFunSuite {
         "bench_lsh50k_q8"), maxPer = 2)
     assert(tiny.size == 1 && tiny.head._2.size == 4,
       "a cohort must never be split even when it exceeds maxPer")
-  }
-
-  test("orderChunks: contract families fork first, bench_* rigs last, " +
-      "relative order preserved, nothing lost (r16 — the r15 driver " +
-      "run was killed with ONLY heavy rig chunks timed)") {
-    val chunks = Bench.forkChunks(Bench.allBenchQueries.keys.toSeq.sorted)
-    val ordered = Bench.orderChunks(chunks)
-    // a permutation: same chunks, same contents
-    assert(ordered.sortBy(_._1) == chunks.sortBy(_._1))
-    // the all-sub-second x_* chunk forks FIRST (r17: on a degraded
-    // host the truncation point should land after the cheapest third
-    // of the contract, not before it)
-    assert(ordered.head._1.startsWith("x"),
-      s"x chunk must fork first, got ${ordered.head._1}")
-    // every bench_* chunk comes after every contract chunk
-    val isRig = ordered.map(_._2.head.startsWith("bench_"))
-    assert(isRig.nonEmpty && isRig.contains(true) && isRig.contains(false))
-    val firstRig = isRig.indexOf(true)
-    assert(isRig.drop(firstRig).forall(identity),
-      "bench_* chunks must form the TAIL of the fork plan")
-    // within the rig tail, every chunk carrying a claim operand forks
-    // before every claim-free one (r17: the claim-free layout/encode
-    // rigs used to sit between the contract and the claim operands —
-    // exactly where a degraded host's truncation landed in r15/r16)
-    val claimOps = Bench.claimSpecs.flatMap(c => Seq(c._2, c._3)).toSet
-    val rigTail = ordered.drop(firstRig)
-    val hasClaim = rigTail.map(_._2.exists(claimOps))
-    assert(hasClaim.head, "first rig chunk must carry a claim operand")
-    val firstFree = hasClaim.indexOf(false)
-    assert(firstFree > 0 && hasClaim.drop(firstFree).forall(!_),
-      "claim-free rig chunks must form the TAIL of the rig band")
-    // relative order within each band is untouched (chunk names key
-    // logs/telemetry; reshuffling within a family would break the
-    // family-clustering warmup assumption)
-    assert(rigTail.filter(_._2.exists(claimOps)) ==
-      chunks.filter(c => c._2.head.startsWith("bench_") &&
-        c._2.exists(claimOps)))
-    assert(rigTail.filterNot(_._2.exists(claimOps)) ==
-      chunks.filter(c => c._2.head.startsWith("bench_") &&
-        !c._2.exists(claimOps)))
-    assert(ordered.filterNot(_._2.head.startsWith("bench_"))
-      .filterNot(_._1.startsWith("x")) ==
-      chunks.filterNot(_._2.head.startsWith("bench_"))
-        .filterNot(_._1.startsWith("x")))
-  }
-
-  test("skipped_budget: named in the full artifact with the budget, " +
-      "counted on the compact line, absent entirely on a full run") {
-    val r = Seq(Bench.QTime("q_ok", 1.0, 1.2, None))
-    val skipped = Set("bench_cc600k_skew", "bench_cc600k_dist")
-    val full = mapper.readTree(Bench.renderFull(r, "sf", "32", 3,
-      skippedBudget = skipped))
-    val names = full.get("skipped_budget")
-    assert(names != null && names.size == 2 &&
-      names.get(0).asText() == "bench_cc600k_dist",
-      "full artifact must NAME every budget-skipped entry, sorted")
-    assert(full.get("budget_s") != null)
-    val compact = mapper.readTree(Bench.renderCompact(r, "sf", "32", 3,
-      skippedBudget = skipped))
-    assert(compact.get("n_skipped_budget").asInt() == 2)
-    // a complete run carries neither field — artifact shape unchanged
-    val clean = mapper.readTree(Bench.renderFull(r, "sf", "32", 3))
-    assert(clean.get("skipped_budget") == null &&
-      clean.get("budget_s") == null)
-    assert(mapper.readTree(Bench.renderCompact(r, "sf", "32", 3))
-      .get("n_skipped_budget") == null)
-  }
-
-  test("failed_skipped: crash-then-skipped entries carry their own " +
-      "field, distinct from skipped_budget (r16 advice)") {
-    val r = Seq(Bench.QTime("q_ok", 1.0, 1.2, None))
-    val full = mapper.readTree(Bench.renderFull(r, "sf", "32", 3,
-      skippedBudget = Set("q_never_started"),
-      failedSkipped = Set("q_crashed_b", "q_crashed_a")))
-    val fs = full.get("failed_skipped")
-    assert(fs != null && fs.size == 2 &&
-      fs.get(0).asText() == "q_crashed_a",
-      "crash-then-skipped entries must be NAMED, sorted")
-    assert(full.get("skipped_budget").size == 1,
-      "the two causes must not merge")
-    val compact = mapper.readTree(Bench.renderCompact(r, "sf", "32", 3,
-      failedSkipped = Set("q_crashed_a")))
-    assert(compact.get("n_failed_skipped").asInt() == 1)
-    // a clean run carries neither
-    assert(mapper.readTree(Bench.renderFull(r, "sf", "32", 3))
-      .get("failed_skipped") == null)
-    assert(mapper.readTree(Bench.renderCompact(r, "sf", "32", 3))
-      .get("n_failed_skipped") == null)
   }
 
   test("claims_unevaluated: a claim whose operands were skipped is " +
@@ -535,29 +447,6 @@ class BenchSpec extends AnyFunSuite {
       Seq(Bench.QTime("q_ok", 1.0, 1.2, None)), "sf", "32", 3))
     assert(full.get("gc_retry_fraction").asDouble() ==
       Bench.GcRetryFraction)
-  }
-
-  test("contract trend: history file round-trips and renders as one " +
-      "generated line (r16 verdict #6)") {
-    val entries = Seq(("r14 sealed", 81.7, -1), ("r15 sealed", 135.0, 149),
-      ("r16 sealed", 139.826, 151))
-    val tmp = java.nio.file.Files.createTempFile("trend", ".json")
-    java.nio.file.Files.writeString(tmp,
-      Bench.renderContractHistory(entries))
-    assert(Bench.readContractHistory(tmp) == entries)
-    val line = Bench.renderContractTrend(entries)
-    assert(line.contains("81.700 s (r14 sealed)") &&
-      line.contains("135.000 s/149 entries (r15 sealed)") &&
-      line.contains(" → "))
-    // the committed history file parses and starts with the
-    // back-filled r14 entry
-    val committed = Bench.readContractHistory(
-      java.nio.file.Paths.get(Bench.ContractHistoryPath))
-    assert(committed.nonEmpty && committed.head._1 == "r14 sealed")
-    // absent/malformed history degrades to a placeholder, never throws
-    assert(Bench.readContractHistory(
-      java.nio.file.Paths.get("no_such_history.json")).isEmpty)
-    assert(Bench.renderContractTrend(Nil).contains("no sealed-run"))
   }
 
   test("fork telemetry: renders as a TSV comment, round-trips, never breaks data") {
@@ -685,98 +574,6 @@ class BenchSpec extends AnyFunSuite {
     val goneFull = mapper.readTree(Bench.renderFull(errd, "sf", "4", 3))
     assert(goneFull.get("claims") == null &&
       goneFull.get("n_claims_failed") == null)
-  }
-
-  test("doc sync: marker blocks are replaced from results, idempotently") {
-    // runSecs carries the per-run samples newest docs ratios need: the
-    // slot-1 (same-interleave-block) sample is s + 0.5, the min is s —
-    // so same-block ratios divide the +0.5 samples, min/min the minima
-    def qt(n: String, s: Double) =
-      Bench.QTime(n, s, s + 0.5, None, runSecs = Seq(s + 0.5, s))
-    val results = Seq(
-      qt("bench_lsh50k_brute", 1.5), qt("bench_lsh50k_lsh", 0.8),
-      qt("bench_lsh50k_ivf", 1.1), qt("bench_lsh50k_q8", 1.6),
-      qt("bench_cc450k_driver", 2.1), qt("bench_cc450k_dist", 9.0),
-      qt("bench_cc600k_dist", 23.0), qt("bench_cc600k_skew", 31.0),
-      qt("bench_dd50k_ngram", 21.0), qt("bench_dd50k_ngram_pruned", 11.0),
-      qt("bench_dd50k_minhash", 8.8), qt("bench_dd12k_ngram", 3.9),
-      qt("bench_dd12k_minhash", 3.6),
-      qt("bench_km50k_full", 9.5), qt("bench_km50k_sampled", 2.5),
-      qt("bench_ddinc_inline", 1.9), qt("bench_ddinc_probe", 1.6),
-      qt("sim_topk", 0.8), qt("sim_topk_q8", 0.8), qt("sim_topk_lsh", 0.9),
-      qt("dd_embed_pairs", 0.9), qt("dd_embed_lsh", 0.5),
-      qt("ds_curate", 3.4), qt("q1_agg", 0.3))
-    val tables = Bench.docTables(results, "/root/testdata/sf0.1", 3,
-      "fork_per_chunk")
-    // every block the docs reference exists
-    for (k <- Seq("ann50k", "cc", "dd50k", "ddinc", "kmrig", "simtwins",
-        "contract"))
-      assert(tables.contains(k), s"missing doc table $k")
-    // numbers come from the results, ratios computed
-    assert(tables("ann50k").contains("1.500"))
-    assert(tables("ann50k").contains("brute/LSH ratio 1.88x"))
-    // single-run-control ratios pair slot-1 samples: 21.5 / 11.5
-    assert(tables("dd50k").contains(
-      "naive/pruned same-block ratio 1.87x"))
-    // multi-run pairs still publish min/min: 21.0 / 3.9
-    assert(tables("dd50k").contains("naive x5.38"))
-    assert(tables("kmrig").contains(
-      "full/sampled same-block training ratio 3.33x"))
-    // cold absorption moves a contender's slot-1 sample into coldSecs;
-    // the same-block ratio must still divide by that TRUE slot-1 value
-    // (here 40.0), not by the post-absorption runSecs head
-    val coldTables = Bench.docTables(results.map {
-      case r if r.name == "bench_dd50k_ngram_pruned" =>
-        r.copy(runSecs = Seq(11.5, 11.0), coldSecs = Seq(40.0))
-      case r => r
-    }, "/root/testdata/sf0.1", 3, "fork_per_chunk")
-    assert(coldTables("dd50k").contains(
-      "naive/pruned same-block ratio 0.54x"), // 21.5 / 40.0
-      "same-block ratio must use the cold-reclassified slot-1 sample")
-    // contract table only counts contract queries, not bench extras
-    // (sim_topk*, dd_embed*, ds_curate, q1_agg = 7 contract entries here)
-    assert(tables("contract").contains("7 entries"))
-    assert(tables("contract").contains("`ds_curate`"))
-    assert(!tables("contract").contains("`bench_lsh50k_brute` | 1.500"))
-    // claims render with status
-    assert(tables("contract").contains("| `lsh_brute_near_parity_50k` | holds |"))
-
-    val doc =
-      """pre
-        |<!-- bench:ann50k -->
-        |OLD STALE NUMBERS
-        |<!-- /bench:ann50k -->
-        |mid
-        |<!-- bench:unknown -->keep<!-- /bench:unknown -->
-        |post""".stripMargin
-    val synced = Bench.syncDocText(doc, tables)
-    assert(!synced.contains("OLD STALE NUMBERS"))
-    assert(synced.contains("1.500"))
-    assert(synced.contains("pre") && synced.contains("mid") &&
-      synced.contains("post"))
-    // unknown markers and text outside markers pass through
-    assert(synced.contains("<!-- bench:unknown -->keep"))
-    // idempotent: syncing the synced text again is a no-op
-    assert(Bench.syncDocText(synced, tables) == synced)
-    // a doc with no markers is untouched
-    assert(Bench.syncDocText("no markers here", tables) == "no markers here")
-  }
-
-  test("README and SCALING carry the marker pairs the doc sync fills") {
-    for (p <- Seq("README.md", "SCALING.md")) {
-      val text = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p)))
-      val keys = "<!-- bench:([a-z0-9]+) -->".r
-        .findAllMatchIn(text).map(_.group(1)).toSeq
-      assert(keys.nonEmpty, s"$p lost its generated-number markers")
-      for (k <- keys) {
-        assert(text.contains(s"<!-- /bench:$k -->"),
-          s"$p: marker $k has no end tag")
-        assert(Bench.docTables(Seq(Bench.QTime("q1_agg", 1.0, 1.0, None)),
-          "sf", 3, "m").contains(k),
-          s"$p references unknown doc table '$k' — sync would skip it")
-      }
-    }
   }
 
   test("bench-only extras exist and are disjoint from the driver contract") {
@@ -1051,37 +848,6 @@ class BenchSpec extends AnyFunSuite {
     assert(math.abs(compact.get("cert_secs").asDouble() - 16.0) < 1e-9)
   }
 
-  test("claim-rescue artifact facts (r18, r17 verdict #1): degraded " +
-      "operands are named, the claims they feed are flagged, and " +
-      "bench_compare-style readers can exclude them") {
-    // dd_embed_lsh/dd_embed_pairs are a real claim pair
-    // (embed_lsh_beats_brute) — evaluate it from one degraded operand
-    val r = Seq(
-      Bench.QTime("dd_embed_lsh", 1.0, 1.0, None),
-      Bench.QTime("dd_embed_pairs", 2.0, 2.0, None),
-      Bench.QTime("q1_agg", 1.0, 1.0, None))
-    val degraded = Set("dd_embed_lsh")
-    val full = mapper.readTree(Bench.renderFull(r, "sf", "32", 3,
-      degradedSingleRun = degraded))
-    val d = full.get("degraded_single_run")
-    assert(d != null && d.size() == 1 &&
-      d.get(0).asText() == "dd_embed_lsh")
-    // the claim still EVALUATES (that is the whole point)...
-    assert(full.get("claims").get("embed_lsh_beats_brute").asBoolean())
-    // ...but is flagged as resting on a single-run sample
-    val sr = full.get("claims_single_run")
-    assert(sr != null && sr.size() == 1 &&
-      sr.get(0).asText() == "embed_lsh_beats_brute")
-    val compact = mapper.readTree(Bench.renderCompact(r, "sf", "32", 3,
-      degradedSingleRun = degraded))
-    assert(compact.get("n_degraded_single_run").asInt() == 1)
-    assert(compact.get("n_claims_single_run").asInt() == 1)
-    // a clean run carries neither field
-    val clean = mapper.readTree(Bench.renderFull(r, "sf", "32", 3))
-    assert(clean.get("degraded_single_run") == null &&
-      clean.get("claims_single_run") == null)
-  }
-
   test("failed chunks carry exit code + log tail in the artifact " +
       "(r18, r17 verdict #3)") {
     val r = Seq(Bench.QTime("q1_agg", 1.0, 1.0, None))
@@ -1127,40 +893,6 @@ class BenchSpec extends AnyFunSuite {
       s"cap 1 must isolate every entry: $capped")
   }
 
-  test("rescue reserve: zero without pending operands, lean and " +
-      "env-overridable with them") {
-    assert(Bench.rescueReserveSeconds(0) == 0.0)
-    val r5 = Bench.rescueReserveSeconds(5)
-    assert(r5 > 0 && r5 < 600,
-      s"reserve for 5 operands should be lean, got $r5")
-    assert(Bench.rescueReserveSeconds(1) < Bench.rescueReserveSeconds(10))
-  }
-
-  test("claim operands are exactly the names claimSpecs reads") {
-    assert(Bench.claimOperandNames ==
-      Bench.claimSpecs.flatMap(c => Seq(c._2, c._3)).toSet)
-    assert(Bench.claimOperandNames.contains("bench_cc600k_skew"))
-    assert(Bench.claimOperandNames.contains("dd_embed_pairs"))
-  }
-
-  test("corrupt contract history is detected (r18, r17 advice: never " +
-      "overwrite a committed trend a truncated write garbled)") {
-    val dir = java.nio.file.Files.createTempDirectory("hist")
-    val missing = dir.resolve("missing.json")
-    assert(!Bench.contractHistoryCorrupt(missing))
-    val empty = dir.resolve("empty.json")
-    java.nio.file.Files.writeString(empty, "[]\n")
-    assert(!Bench.contractHistoryCorrupt(empty)) // legitimately empty
-    val good = dir.resolve("good.json")
-    java.nio.file.Files.writeString(good, Bench.renderContractHistory(
-      Seq(("r17 sealed", 113.8, 152))))
-    assert(!Bench.contractHistoryCorrupt(good))
-    val truncated = dir.resolve("trunc.json")
-    java.nio.file.Files.writeString(truncated,
-      """[{"label": "r17 sealed", "total_s": 113.""") // mid-write kill
-    assert(Bench.contractHistoryCorrupt(truncated))
-  }
-
   test("rig cache keys: whitelisted rigs key deterministically, " +
       "unknown keys don't, and the key moves with cores") {
     val a = Bench.rigKey("ann_corpus", 32)
@@ -1171,44 +903,6 @@ class BenchSpec extends AnyFunSuite {
     // every whitelisted rig resolves from inside the repo
     Bench.rigSpecs.keys.foreach(k =>
       assert(Bench.rigKey(k, 32).isDefined, s"rig $k has no key"))
-  }
-
-  test("rescue plan: per-atom chunks (cohorts whole), rig-cache-ready " +
-      "atoms first, every pending operand present exactly once (r19, " +
-      "r18 verdict #2: the monolithic rescue chunk timed out and " +
-      "stranded all 18 operands)") {
-    val pending = Seq(
-      "bench_km200k_full_train", "bench_km200k_sampled_train", // cohort
-      "bench_dd50k_minhash",                                   // singleton
-      "dd_embed_lsh", "dd_embed_pairs")                        // cohort
-    // readiness: the dd50k rig and the contract entries (no rig) are
-    // ready; the km200k corpus would need generation
-    val ready = Set("bench_dd50k_minhash", "dd_embed_lsh",
-      "dd_embed_pairs")
-    val plan = Bench.rescuePlan(pending, ready)
-    // one atom per chunk: cohorts stay whole, nothing merges across
-    assert(plan.map(_._2.toSet).toSet == Set(
-      Set("bench_km200k_full_train", "bench_km200k_sampled_train"),
-      Set("bench_dd50k_minhash"),
-      Set("dd_embed_lsh", "dd_embed_pairs")))
-    // cache-ready atoms fork first; the cold km200k cohort forks last
-    assert(plan.last._2.toSet ==
-      Set("bench_km200k_full_train", "bench_km200k_sampled_train"))
-    // chunk names stay unique (they key the stats map and log files)
-    assert(plan.map(_._1).distinct.size == plan.size)
-  }
-
-  test("rescue rig keys name only real whitelisted rigs, for every " +
-      "claim operand") {
-    val claimOps = Bench.claimSpecs.flatMap(c => Seq(c._2, c._3)).distinct
-    claimOps.flatMap(Bench.rescueRigKeys).foreach(k =>
-      assert(Bench.rigSpecs.contains(k), s"$k is not a whitelisted rig"))
-    // the expensive synthetic families resolve to their rigs
-    assert(Bench.rescueRigKeys("bench_km200k_full_train") ==
-      Seq("km200k_corpus"))
-    assert(Bench.rescueRigKeys("bench_cc600k_skew_nopre") == Seq("ccskew"))
-    // contract queries carry no rig and always count as ready
-    assert(Bench.rescueRigKeys("dd_embed_lsh").isEmpty)
   }
 
   test("restoreRigLayout puts a scattered cached rig back in generation " +
@@ -1234,5 +928,26 @@ class BenchSpec extends AnyFunSuite {
       .map(_._2.map(_._2).toSeq)
     byPid.foreach(p => assert(p == p.sorted, "partition not in gen order"))
     assert(byPid.flatten == (0L until 1000L), "global order lost")
+  }
+
+  test("the env knobs Bench reads are exactly the pinned set") {
+    // every knob doubles the configurations a bench run can be in:
+    // adding one must be a visible edit here, and the Bench header
+    // documents the same set
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/Bench.scala")))
+    val read = """sys\.env\.(?:get|getOrElse)\(\s*"(SPARK_GRAFT_[A-Z0-9_]+)"""".r
+      .findAllMatchIn(src).map(_.group(1)).toSet
+    val pinned = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_BENCH_ONLY",
+      "SPARK_GRAFT_BENCH_FORK", "SPARK_GRAFT_BENCH_OUT",
+      "SPARK_GRAFT_BENCH_EXTRAS", "SPARK_GRAFT_BENCH_CHUNK",
+      "SPARK_GRAFT_BENCH_WARMUP", "SPARK_GRAFT_BENCH_CHILD_TIMEOUT_S",
+      "SPARK_GRAFT_BENCH_CERT_CACHE", "SPARK_GRAFT_RIG_CACHE",
+      "SPARK_GRAFT_BENCH_RESULT_TSV")
+    assert(read == pinned,
+      s"added: ${read -- pinned}; removed: ${pinned -- read}")
+    val header = src.take(src.indexOf("object Bench"))
+    for (k <- pinned) assert(header.contains(k), s"header omits $k")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.EngineError.AnalysisError
 import graft.operators.{ArtifactMaintenance, Dedup, Similarity, TextAnalysis}
 
 /** Product-quantization ANN: codebook shape, encode/ADC semantics, the
@@ -24,6 +25,22 @@ class PqSpec extends SparkTestBase {
     (6L, Array(1.0f, 0.0f, 0.0f, 1.0f)),
     (7L, Array(0.0f, 1.0f, 1.0f, 0.0f)))
     .toDF("vec_id", "embedding")
+
+  test("empty corpus or codebooks: a named AnalysisError, not " +
+      "NoSuchElementException from head()") {
+    val empty = corpus.filter(lit(false))
+    val train = intercept[AnalysisError](
+      Similarity.pqTrain(empty, "vec_id", "embedding", m = 2, ksub = 2))
+    assert(train.getMessage.contains("pqTrain: empty input"))
+    val proj = intercept[AnalysisError](
+      Similarity.randomProject(empty, "embedding", outDim = 2))
+    assert(proj.getMessage.contains("randomProject: empty input"))
+    val noBooks = Seq.empty[(Int, Int, Seq[Double], Double)]
+      .toDF("sub", "cid", "centroid", "c_nsq")
+    val enc = intercept[AnalysisError](
+      Similarity.pqEncode(corpus, "vec_id", "embedding", noBooks))
+    assert(enc.getMessage.contains("pqEncode: empty codebooks"))
+  }
 
   test("pqTrain: dense per-subspace cids, centroid length dim/m, c_nsq") {
     val books = Similarity.pqTrain(corpus, "vec_id", "embedding",
