@@ -27,8 +27,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // A query that fails to run must be RECORDED, not just absent: the
     // round-8 loader break left 9 queries silently missing from the
-    // correctness artifact (only the bench's n_err caught it). Failures go
-    // to stderr for the log AND to errors.json for auditors/check.py.
+    // correctness artifact (only a timing run's error count caught it).
+    // Failures go to stderr for the log AND to errors.json for
+    // auditors/check.py.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -116,7 +116,7 @@ object AsOfJoin {
     * This is the dense-history regime where the naive
     * join-then-argmax expansion materializes O(|left| x |right per
     * key|) pair rows while the union+window form shuffles each row
-    * once — the crossover `bench_asof_*` measures. */
+    * once — the crossover JoinRigSpec counts. */
   def syntheticTimeline(spark: org.apache.spark.sql.SparkSession,
                         users: Int, viewsPerUser: Int,
                         purchasesPerUser: Int): (DataFrame, DataFrame) = {

@@ -54,7 +54,7 @@ object Bpe {
       .select(symbolize(col("word")).as("ws"), col("cnt"))
 
   /** Deterministic synthetic word-frequency dict — the scale rig behind
-    * the [[autoDictGate]] measurement (`bench_bpe_train5m_guard`).
+    * the [[autoDictGate]] measurement (BpeRigSpec's heap check).
     * Words are 3-4 syllables drawn from a hash-derived consonant-vowel
     * pool, so character pairs share structure the way a natural-language
     * dict's do (heavy-tailed pair counts — the regime that stresses the
@@ -666,8 +666,8 @@ object Bpe {
     * is legitimate for (the [[MediaCodec]] precedent): still
     * vocabulary-sized, one stage, no expression tree at all. An
     * equality spec pins kernel == batched at 512 merges; the
-    * `bench_bpe_enc8k` entry measures it at 8k merges (~one vocab
-    * pass). The 1024 default keeps every contract/oracle query on the
+    * kernel's executed passes are counted at 1k vs 8k merges in
+    * BpeRigSpec. The 1024 default keeps every contract/oracle query on the
     * expression path (bit-exact DuckDB replay needs the SQL form). */
   def encodeTokenCounts(df: DataFrame, idCol: String, textCol: String,
                         merges: Seq[(String, String)],
@@ -699,8 +699,8 @@ object Bpe {
     * applying the merges in training order as batched [[applyMerge]]
     * projections with checkpoint truncation between batches (see the
     * cost model in [[encodeTokenCounts]]'s scaladoc). Exposed at
-    * private[graft] so the bench guard can pin kernel == batched on the
-    * same words frame at production merge counts. */
+    * private[graft] so BpeRigSpec can pin kernel == batched on the same
+    * words frame at production merge counts. */
   private[graft] def batchedVocab(words: DataFrame,
                                   merges: Seq[(String, String)],
                                   mergesPerStage: Int = 16): DataFrame = {
@@ -748,10 +748,9 @@ object Bpe {
         while (!done) {
           // one PASS = one lowest-rank scan over the word's symbols;
           // per word, passes <= applied merges + 1 <= word length — the
-          // counted metric behind bench_bpe_enc_guard's table-size-
-          // flatness certification (task-retry overcount is the usual
-          // accumulator caveat; the guard runs one deterministic local
-          // job)
+          // counted metric behind BpeRigSpec's table-size-flatness
+          // check (task-retry overcount is the usual accumulator
+          // caveat; the spec runs one deterministic local job)
           passCounter.foreach(_.add(1L))
           // lowest-rank adjacent pair present
           var best = Int.MaxValue

@@ -185,7 +185,7 @@ object Dedup {
     // one signature computation feeds both the bucket join and the
     // estimate — signatures are cached because the plan fans out into
     // three scans (bucket left/right + both pair sides). Callers that run
-    // many queries in one session should clearCache() afterwards (Bench
+    // many queries in one session should clearCache() afterwards (Verify
     // does); the cache is scoped to this plan's lifetime by convention.
     val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleSize,
       seed, mode).cache()
@@ -663,7 +663,7 @@ object Dedup {
     * lifetime (it feeds both join sides plus the set-size aggregate) —
     * callers running many queries per session should
     * `spark.catalog.clearCache()` between them, the same convention as
-    * [[repeatedSpans]] and [[LanguageModel.selfScore]] (Bench/Verify do).
+    * [[repeatedSpans]] and [[LanguageModel.selfScore]] (Verify does).
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.8, n: Int = 3,
@@ -927,7 +927,7 @@ object Dedup {
     * CACHE LIFECYCLE: the intermediate gram frame is `cache()`d for the
     * plan's lifetime (same convention as [[minhashPairs]]) — callers
     * running many such queries in one session should
-    * `spark.catalog.clearCache()` between them (Bench/Verify do). */
+    * `spark.catalog.clearCache()` between them (Verify does). */
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 8, minDocs: Int = 2): DataFrame = {
     // the gram frame fans out into two consumers (the doc-frequency
@@ -936,7 +936,7 @@ object Dedup {
     // cached (id, pos, 16-byte hash) projection is a fraction of the
     // corpus and spills to disk; the recompute is a second full
     // tokenization pass. Same plan-lifetime cache convention as
-    // minhashPairs/ngramJaccardPairs (Bench clearCache()s between
+    // minhashPairs/ngramJaccardPairs (Verify clearCache()s between
     // queries). The single-scan property is pinned in PlanAuditSpec.
     val grams = df
       .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
@@ -1409,8 +1409,8 @@ object Dedup {
   /** [[connectedComponents]] plus the number of rounds it took — the
     * round count is what the convergence specs pin. `preContract=false`
     * skips the partition-local union-find pre-pass (see
-    * [[localContract]]) — the bench's control contender for measuring
-    * what the pre-pass is worth. */
+    * [[localContract]]) — the control contender CcRigSpec measures the
+    * pre-pass against. */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
       maxIter: Int = 50, preContract: Boolean = true): (DataFrame, Int) =
@@ -1461,7 +1461,7 @@ object Dedup {
     * pure overhead (+14% on the uniform 2M-edge rig), so one bounded
     * single-partition probe measures the local contraction ratio first
     * and skips the pass when it would buy nothing. `preContract=false`
-    * skips probe and pass both (the bench's control contender). */
+    * skips probe and pass both (CcRigSpec's control contender). */
   private def connectedComponentsFromEdges(
       edges0: DataFrame, maxIter: Int,
       preContract: Boolean = true): (DataFrame, Int) = {

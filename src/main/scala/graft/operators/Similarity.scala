@@ -628,11 +628,15 @@ object Similarity {
     * shortlist. Output: (idCol, codes, r_nsq). */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebooks: DataFrame): DataFrame = {
-    val dsub = firstRow(codebooks.select(size(col("centroid"))),
+    // one job reads both geometry scalars; an empty book aggregates to
+    // a single row of nulls
+    val geo = codebooks.agg(max(size(col("centroid"))), max(col("sub")))
+      .head()
+    if (geo.isNullAt(0)) throw AnalysisError(
       "pqEncode: empty codebooks, no centroid to read the subspace " +
-        "dimension from").getInt(0)
-    // non-empty codebooks (checked above) give a non-null max
-    val m = codebooks.agg(max(col("sub"))).head().getInt(0) + 1
+        "dimension from")
+    val dsub = geo.getInt(0)
+    val m = geo.getInt(1) + 1
     val subs = pqSubVectors(df, idCol, vecCol, m, dsub)
     val withN = pqAssign(subs, codebooks)
       .join(broadcast(codebooks.select(col("sub"), col("cid"),

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * everything the first column's row-group stanzas admit; interleaving
   * the bits of two keys gives every parquet row group a tight min/max
   * box in BOTH dimensions, and a 2-predicate selective scan prunes on
-  * each (the `bench_layout2d_*` rig measures it in decoded rows).
+  * each (LayoutRigSpec counts it in decoded rows).
   *
   * The z value is pure codegen'd integer arithmetic (magic-mask bit
   * spreading — shift/and/or only, no UDF), and the identical mask chain

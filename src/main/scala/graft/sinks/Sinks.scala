@@ -31,7 +31,7 @@ object Sinks {
     * range, so a selective scan opens few footers and reads fewer groups).
     * `options` passes writer options through — e.g. `parquet.block.size`
     * to control row-group granularity (smaller groups = finer skipping at
-    * more footer overhead; the bench layout rig measures the trade). */
+    * more footer overhead; LayoutRigSpec measures the trade). */
   def writeClustered(df: DataFrame, path: String,
                      sortCols: Seq[String],
                      options: Map[String, String] = Map.empty): Unit =

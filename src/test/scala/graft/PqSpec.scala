@@ -42,6 +42,18 @@ class PqSpec extends SparkTestBase {
     assert(enc.getMessage.contains("pqEncode: empty codebooks"))
   }
 
+  test("pqEncode reads its codebook geometry in one aggregate: its eager " +
+      "work launches the jobs of a single codebook aggregate") {
+    val books = Similarity.pqTrain(corpus, "vec_id", "embedding",
+      m = 2, ksub = 2, iters = 2).localCheckpoint()
+    val (_, one) = PlanCounters.measured(spark)(
+      books.agg(max(col("sub"))).head())
+    val (_, enc) = PlanCounters.measured(spark)(
+      Similarity.pqEncode(corpus, "vec_id", "embedding", books))
+    assert(enc.jobs == one.jobs, s"pqEncode launched ${enc.jobs} jobs " +
+      s"at construction; one aggregate launches ${one.jobs}")
+  }
+
   test("pqTrain: dense per-subspace cids, centroid length dim/m, c_nsq") {
     val books = Similarity.pqTrain(corpus, "vec_id", "embedding",
       m = 2, ksub = 2, iters = 2).collect()

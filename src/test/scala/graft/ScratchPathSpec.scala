@@ -9,6 +9,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScratchPathSpec extends AnyFunSuite {
   private val sp = graft.queries.Pipeline.scratchPath _
 
+  /** Classpath for a child JVM: file URLs off the classloader chain
+    * (covers sbt's layered loaders) unioned with java.class.path (covers
+    * plain `java -cp`). Empty when nothing file-based is visible. */
+  private def forkClasspath(): String = {
+    def urlsOf(cl: ClassLoader): Seq[String] = cl match {
+      case u: java.net.URLClassLoader =>
+        u.getURLs.toSeq.filter(_.getProtocol == "file")
+          .flatMap(x => scala.util.Try(
+            java.nio.file.Paths.get(x.toURI).toString).toOption)
+      case _ => Nil
+    }
+    val chain = Iterator.iterate(getClass.getClassLoader)(_.getParent)
+      .takeWhile(_ != null).flatMap(urlsOf).toSeq
+    val sysCp = System.getProperty("java.class.path", "")
+      .split(java.io.File.pathSeparator).toSeq
+    (chain ++ sysCp).filter(_.nonEmpty).distinct
+      .mkString(java.io.File.pathSeparator)
+  }
+
   test("distinct data dirs can never share a scratch path") {
     // the full sanitized path is the key — not a 32-bit hash that can
     // collide; these two differ in one character
@@ -42,10 +61,10 @@ class ScratchPathSpec extends AnyFunSuite {
     // just the path function) computes its scratch path for the SAME
     // prefix and dir, and it must differ from this process's. This is
     // the exact overlap that could interleave writes and reads in
-    // round 9 (a Verify run concurrent with a bench fork).
+    // round 9 (a Verify run concurrent with a benchmark process).
     val dir = "/root/testdata/sf0.1"
     val mine = graft.queries.Pipeline.scratchPath("graft_mh_steady", dir)
-    val cp = Bench.forkClasspath()
+    val cp = forkClasspath()
     assert(cp.nonEmpty, "need a reconstructible classpath to fork")
     val javaBin = java.nio.file.Paths.get(
       System.getProperty("java.home"), "bin", "java").toString

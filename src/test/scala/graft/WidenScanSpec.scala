@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,37 +14,10 @@ import graft.operators.Similarity
   * still green, so only a spec catches a regression. */
 class WidenScanSpec extends SparkTestBase {
 
-  /** Runs `body`, returns (result, jobs started by body). A marker job
-    * after `body` flushes the listener bus: events are FIFO, so once
-    * the marker's start lands, everything `body` launched has too. The
-    * marker is an RDD count tagged by job description — a Dataset
-    * action here would launch a VARIABLE number of jobs under AQE
-    * (one per materialized stage) and skew the subtraction. */
+  /** Runs `body`, returns (result, jobs started by body). */
   private def countingJobs[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val marker = "widen-scan-spec-marker"
-    val others = new AtomicInteger(0)
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-        if (desc.contains(marker)) markerSeen = true
-        else others.incrementAndGet()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() // exactly one job, no AQE
-      finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!markerSeen && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(markerSeen, "marker job never observed")
-      (r, others.get())
-    } finally sc.removeSparkListener(listener)
+    val (r, work) = PlanCounters.measured(spark)(body)
+    (r, work.jobs)
   }
 
   private def narrowScanFrame(): DataFrame = {
