@@ -79,26 +79,35 @@ object Dedup {
   /** Word n-gram shingles per document: (id, shingle) exploded — the
     * narrow, distributed representation every method below builds on. */
   def shingles(df: DataFrame, idCol: String, textCol: String,
-               n: Int = 3): DataFrame = {
-    // materialize the token array as a COLUMN before the lambda touches
-    // it: higher-order functions interpret their lambda, and an outer
-    // EXPRESSION referenced inside one is re-evaluated per element — as
-    // `split(trim(text))` that meant one regex split of the full doc per
-    // n-gram (~50x per doc, measured 3.3s -> 0.35s on the sf0.1 corpus
-    // shingle scan). An attribute reference is a per-row slot lookup.
-    val toks = col("__toks")
-    // sliding n-grams via transform over index range; drop tail stubs
-    val grams = filter(
-      transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")),
-      g => length(g) > 0)
+               n: Int = 3): DataFrame =
+    withTokens(df, idCol, textCol)
+      .select(col(idCol), explode(shingleSet(n)).as("shingle"))
+
+  /** `df` repartitioned by id with its whitespace tokens as `__toks`. */
+  private def withTokens(df: DataFrame, idCol: String,
+                         textCol: String): DataFrame =
     // repartition by id first: decouples explode parallelism from the
     // input file layout (a single parquet file otherwise serializes the
     // whole tokenization on one core) and pre-positions the per-id
-    // aggregations downstream (sizes, signatures) to reuse the exchange
+    // aggregations downstream (sizes, signatures) to reuse the exchange.
+    // The token array is materialized as a COLUMN before the lambda
+    // touches it: higher-order functions interpret their lambda, and an
+    // outer EXPRESSION referenced inside one is re-evaluated per element
+    // — as `split(trim(text))` that meant one regex split of the full
+    // doc per n-gram (~50x per doc, measured 3.3s -> 0.35s on the sf0.1
+    // corpus shingle scan). An attribute reference is a per-row slot
+    // lookup.
     df.repartition(col(idCol))
       .withColumn("__toks", split(trim(col(textCol)), "\\s+"))
-      .select(col(idCol), explode(array_distinct(grams)).as("shingle"))
+
+  /** The distinct word n-grams of the `__toks` column: sliding n-grams
+    * via transform over the index range, tail stubs dropped. */
+  private def shingleSet(n: Int): Column = {
+    val toks = col("__toks")
+    array_distinct(filter(
+      transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
+        i => array_join(slice(toks, i + 1, lit(n)), " ")),
+      g => length(g) > 0))
   }
 
   /** Deterministic (a,b) coefficient pairs for k universal hash fns,
@@ -124,16 +133,24 @@ object Dedup {
                         numHashes: Int = 64, shingleSize: Int = 3,
                         seed: Long = 42L,
                         mode: HashMode = HashMode.Xx): DataFrame = {
-    val sh = shingles(df, idCol, textCol, shingleSize)
-      .withColumn("h", hash31(col("shingle"), mode))
-    val minCols = hashCoeffs(numHashes, seed).zipWithIndex.map {
-      case ((a, b), i) =>
-        min(pmod(col("h") * lit(a) + lit(b), lit(Prime31))).as(s"m$i")
-    }
-    sh.groupBy(col(idCol)).agg(minCols.head, minCols.tail: _*)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"m$i")): _*)
-        .as("signature"))
+    val minCols = signatureMins(numHashes, seed, mode)
+    shingles(df, idCol, textCol, shingleSize)
+      .groupBy(col(idCol)).agg(minCols.head, minCols.tail: _*)
+      .select(col(idCol), signatureOf(numHashes))
   }
+
+  /** The per-id signature aggregates `m0` … `m<numHashes-1>`: the min of
+    * each universal hash over the id's `shingle` rows. */
+  private def signatureMins(numHashes: Int, seed: Long,
+                            mode: HashMode): Seq[Column] = {
+    val h = hash31(col("shingle"), mode)
+    hashCoeffs(numHashes, seed).zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(h * lit(a) + lit(b), lit(Prime31))).as(s"m$i")
+    }
+  }
+
+  private def signatureOf(numHashes: Int): Column =
+    array((0 until numHashes).map(i => col(s"m$i")): _*).as("signature")
 
   /** LSH band buckets: (id, band, bucket_hash). bands * rowsPerBand must
     * equal the signature length. Md5 mode buckets are the md5 hex of the
@@ -350,21 +367,45 @@ object Dedup {
       _ => Seq("content_hash")), BucketsDir, SignaturesDir),
     idx => Seq(idx.hashes, idx.buckets, idx.signatures))
 
-  /** Build the index frames in one corpus pass (signatures are cached —
-    * they feed both the bucket derivation and the verify join; same
-    * plan-lifetime cache convention as [[minhashPairs]]). */
+  /** Build the index frames from ONE corpus pass: a per-id aggregate
+    * carries the signature and the content hash of each of the id's
+    * corpus rows (cached — it feeds the hashes, the bucket derivation
+    * and the verify join; same plan-lifetime cache convention as
+    * [[minhashPairs]]). A row whose text has no shingles keeps its hash
+    * and, as in [[minhashSignatures]], gets no signature. */
   def buildMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, bands: Int = 16,
                         shingleSize: Int = 3, seed: Long = 42L,
-                        mode: HashMode = HashMode.Xx): MinhashIndex = {
+                        mode: HashMode = HashMode.Xx): MinhashIndex =
+    buildCachedIndex(corpus, idCol, textCol, numHashes, bands, shingleSize,
+      seed, mode)._1
+
+  /** [[buildMinhashIndex]] plus the cached per-id frame, for a caller
+    * that releases it. */
+  private def buildCachedIndex(corpus: DataFrame, idCol: String,
+                               textCol: String, numHashes: Int, bands: Int,
+                               shingleSize: Int, seed: Long,
+                               mode: HashMode): (MinhashIndex, DataFrame) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val hashes = corpus.select(col(idCol),
-      md5(col(textCol).cast("binary")).as("content_hash"))
-    val sigs = minhashSignatures(corpus, idCol, textCol, numHashes,
-      shingleSize, seed, mode).cache()
-    MinhashIndex(hashes, sigs,
+    val minCols = signatureMins(numHashes, seed, mode)
+    // posexplode_OUTER keeps shingle-less rows; each row's hash is
+    // collected once, from its first (or only, null) shingle row
+    val perId = withTokens(corpus, idCol, textCol)
+      .select(col(idCol), md5(col(textCol).cast("binary")).as("__hash"),
+        posexplode_outer(shingleSet(shingleSize)).as(Seq("__pos", "shingle")))
+      .groupBy(col(idCol))
+      .agg(collect_list(when(coalesce(col("__pos"), lit(0)) === 0,
+          struct(col("__hash").as("content_hash")))).as("__hashes"),
+        (count(col("shingle")).as("__n") +: minCols): _*)
+      .cache()
+    val hashes = perId
+      .select(col(idCol), explode(col("__hashes")).as("__h"))
+      .select(col(idCol), col("__h.content_hash").as("content_hash"))
+    val sigs = perId.filter(col("__n") > 0)
+      .select(col(idCol), signatureOf(numHashes))
+    (MinhashIndex(hashes, sigs,
       minhashBuckets(sigs, idCol, bands, numHashes / bands, mode),
-      numHashes, bands, shingleSize, seed, mode)
+      numHashes, bands, shingleSize, seed, mode), perId)
   }
 
   /** Write the corpus index as three parquet dirs (`hashes/`,
@@ -382,8 +423,8 @@ object Dedup {
                         shingleSize: Int = 3, seed: Long = 42L,
                         mode: HashMode = HashMode.Xx,
                         sourceTag: String = ""): Unit = {
-    val idx = buildMinhashIndex(corpus, idCol, textCol, numHashes, bands,
-      shingleSize, seed, mode)
+    val (idx, cached) = buildCachedIndex(corpus, idCol, textCol, numHashes,
+      bands, shingleSize, seed, mode)
     // appends copy this stamp verbatim onto their files, so parquet
     // schema resolution can read ANY file's footer and find the contract
     val b = new org.apache.spark.sql.types.MetadataBuilder()
@@ -402,7 +443,7 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$path/signatures")
       idx.buckets.write.mode("overwrite").parquet(s"$path/buckets")
     }
-    idx.signatures.unpersist()
+    cached.unpersist()
   }
 
   /** Read a [[writeMinhashIndex]] artifact back as probe-ready frames.

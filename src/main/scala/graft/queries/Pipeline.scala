@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Curate, Dedup, LanguageModel, Multimodal, Prep, Search, Similarity, Sketches, TextAnalysis}
@@ -27,13 +27,12 @@ object Pipeline {
   /** Corpus-side split for compute-dense ANN scans: local test parquet is
     * one unsplittable file, so without this the n x |q| cosine work runs
     * in a single task. Explicit numPartitions ⇒ AQE does not coalesce.
-    * Width follows the session (`graft.ann.corpusParts` conf, else
-    * `defaultParallelism`) so a 1,000-core cluster is not capped at the
-    * local rig's 32 tasks; local[32] still resolves to 32. */
-  private[graft] def lshCorpusParts(s: SparkSession): Int = {
-    val conf = s.conf.getOption("graft.ann.corpusParts").map(_.toInt)
-    conf.getOrElse(s.sparkContext.defaultParallelism)
-  }
+    * Width follows the session's `defaultParallelism` (Spark's own
+    * `spark.default.parallelism` sets it) so a 1,000-core cluster is not
+    * capped at the local rig's 32 tasks; local[32] still resolves to
+    * 32. */
+  private[graft] def lshCorpusParts(s: SparkSession): Int =
+    s.sparkContext.defaultParallelism
   private def corpusPar(e: DataFrame): DataFrame =
     e.repartition(lshCorpusParts(e.sparkSession), col("vec_id"))
 
@@ -54,7 +53,7 @@ object Pipeline {
     *  - the pid suffix makes the path per-PROCESS unique, so a Verify
     *    run and a benchmark process (or two of them) on the same sfDir
     *    can never interleave one's writes with the other's reads.
-    * Within one JVM the per-path memos below still serialize
+    * Within one JVM the [[once]] memo below still serializes
     * write-once/read-many. `pid` is injectable for the spec that pins
     * the uniqueness properties. */
   private[graft] def scratchPath(prefix: String, dir: String,
@@ -64,35 +63,44 @@ object Pipeline {
       s"${prefix}_${tag}_p$pid").toString
   }
 
-  /** Write-once-per-JVM memo for the STEADY-STATE corpus minhash index
-    * `dd_incremental` probes: the first execution in a process
-    * materializes the index (overwrite — a stale on-disk artifact from an
-    * earlier process or testdata generation is never trusted), every
-    * later execution probes the files. A repeated timing therefore sees
-    * the daily-ingest probe, with the one-time write absorbed by the
-    * first run; `dd_incremental_idx` stays the full write+read+probe
-    * round-trip certification. Md5 mode so the DuckDB oracle replays the
-    * signatures bit-for-bit. The probe demands the source-dir provenance
-    * tag stamped at write time — even if a path were somehow shared, an
-    * index built from different data refuses to serve. */
-  private val steadyIdxWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Write-once-per-JVM memo: the first call for `key` in this process
+    * runs `body` and keeps its value, every later call returns that
+    * value. One lock serializes the bodies (each runs once; a body that
+    * throws is retried by the next call). Two uses:
+    *  - materialized artifacts, keyed by their [[scratchPath]]: the
+    *    first execution writes (overwrite — a stale on-disk artifact
+    *    from an earlier process or testdata generation is never
+    *    trusted), every execution reads the files back. A repeated
+    *    timing therefore sees the steady-state read, with the one-time
+    *    write absorbed by the first run;
+    *  - small trained models kept on the driver per corpus dir (the BPE
+    *    merge table, the PQ codebooks): trained once, the way a
+    *    deployment trains when the corpus lands and every later job
+    *    ships the result. */
+  private val memo = scala.collection.mutable.HashMap.empty[String, Any]
+  private def once[T](key: String)(body: => T): T =
+    memo.synchronized(memo.getOrElseUpdate(key, body).asInstanceOf[T])
 
-  /** Once-per-JVM memo of the collected BPE merge table per corpus dir
-    * — the production shape (a tokenizer is trained once; every
-    * downstream job ships its merge list), and the same
-    * setup-vs-steady-state split the steady minhash index uses: the
+  /** A trained frame collected once per JVM under `key` ([[once]]; a few
+    * KB) and rebuilt on the CALLING session — session-independent, so
+    * the layout-invariance spec's sibling session trains nothing and
+    * mixes no cross-session plans. */
+  private def collectedOnce(s: SparkSession, key: String)
+                           (train: => DataFrame): DataFrame = {
+    val (rows, schema) = once(key) { val b = train; (b.collect(), b.schema) }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The 8-step BPE merge table of a corpus dir, trained once: the
     * encode-side contract queries measure ENCODING, with training
     * absorbed by the first (untimed-warmup) execution. txt_bpe itself
     * always trains live — the trajectory computation IS that query's
     * subject. Demands exactly 8 merges so a regenerated corpus too
     * small to train on fails LOUDLY (n_err) instead of silently
     * red-hashing against the oracle's unconditional 8-CTE unroll. */
-  private val bpeMergesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
   private def trainedMerges(s: SparkSession, dir: String)
       : Seq[(String, String)] =
-    bpeMergesMemo.computeIfAbsent(dir, _ => {
+    once(s"bpe_merges $dir") {
       val m = Bpe.train(docs(s, dir), "text", nMerges = 8)
         .orderBy("step").collect()
         .map(r => (r.getAs[String]("lft"), r.getAs[String]("rgt")))
@@ -101,111 +109,77 @@ object Pipeline {
         s"bpe training exhausted after ${m.size} of 8 merges on $dir — " +
           "the encode oracles unroll 8 iterations unconditionally")
       m
-    })
+    }
 
-  /** Once-per-JVM memo of the trained PQ codebooks per corpus dir — the
-    * train-once/probe-often split every PQ deployment runs (codebooks
-    * are trained when the corpus lands; every query batch probes them),
-    * and the same setup-vs-steady-state accounting as [[trainedMerges]]:
-    * the `sim_*_pq` rows measure the ENCODE+ADC query path, with the
-    * m per-subspace k-means absorbed by the first (untimed-warmup)
-    * execution. Stored as collected rows (m x ksub, a few KB) and
-    * rebuilt as a frame on the CALLING session — session-independent,
-    * so the layout-invariance spec's sibling session trains nothing
-    * and mixes no cross-session plans. */
-  private val pqBooksMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
-  private def pqBooks(s: SparkSession, dir: String): DataFrame = {
-    val (rows, schema) = pqBooksMemo.computeIfAbsent(dir, _ => {
-      val b = Similarity.pqTrain(embs(s, dir), "vec_id", "embedding",
-        m = PqM, ksub = PqKsub, iters = PqIters)
-      (b.collect(), b.schema)
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+  /** The trained PQ codebooks of a corpus dir: the `sim_*_pq` rows
+    * measure the ENCODE+ADC query path, with the m per-subspace k-means
+    * absorbed by the first (untimed-warmup) execution. */
+  private def pqBooks(s: SparkSession, dir: String): DataFrame =
+    collectedOnce(s, s"pq_books $dir")(Similarity.pqTrain(embs(s, dir),
+      "vec_id", "embedding", m = PqM, ksub = PqKsub, iters = PqIters))
 
   /** RESIDUAL PQ codebooks ([[pqBooks]]'s discipline, FAISS-IVFPQ
     * geometry): trained on each vector's 6dp-rounded offset from its
     * assigned coarse centroid — the part of the position the inverted
     * list hasn't already explained. */
-  private val resBooksMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
-  private def resBooks(s: SparkSession, dir: String): DataFrame = {
-    val (rows, schema) = resBooksMemo.computeIfAbsent(dir, _ => {
+  private def resBooks(s: SparkSession, dir: String): DataFrame =
+    collectedOnce(s, s"res_books $dir") {
       val e = embs(s, dir)
-      val b = Similarity.pqTrain(
-        Similarity.ivfResiduals(e, "vec_id", "embedding",
-          ivfCentroids(e)),
+      Similarity.pqTrain(
+        Similarity.ivfResiduals(e, "vec_id", "embedding", ivfCentroids(e)),
         "vec_id", "rvec", m = PqM, ksub = PqKsub, iters = PqIters)
-      (b.collect(), b.schema)
-    })
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+    }
 
-  /** Write-once-per-JVM marker for the merge ARTIFACT
-    * (`txt_bpe_artifact`) — cf. [[steadyIdxWritten]]. */
-  private val bpeArtifactWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The STEADY-STATE corpus minhash index `dd_incremental` probes,
+    * written once per JVM ([[once]]); `dd_incremental_idx` stays the
+    * full write+read+probe round-trip certification. Md5 mode so the
+    * DuckDB oracle replays the signatures bit-for-bit. The probe demands
+    * the source-dir provenance tag stamped at write time — even if a
+    * path were somehow shared, an index built from different data
+    * refuses to serve. */
   private def steadyMinhashIndex(s: SparkSession, dir: String,
                                  corpus: DataFrame): Dedup.MinhashIndex = {
     val path = scratchPath("graft_mh_steady", dir)
-    steadyIdxWritten.synchronized {
-      if (steadyIdxWritten.add(path))
-        Dedup.writeMinhashIndex(corpus, "doc_id", "text", path,
-          mode = HashMode.Md5, sourceTag = dir)
-    }
+    once(path)(Dedup.writeMinhashIndex(corpus, "doc_id", "text", path,
+      mode = HashMode.Md5, sourceTag = dir))
     Dedup.readMinhashIndex(s, path, expectedSource = Some(dir))
   }
 
-  /** Write-once-per-JVM memo for the JSONL twin of the documents table:
-    * the first execution materializes the corpus as line-delimited JSON
-    * through [[graft.sinks.Sinks.writeJsonl]] (overwrite — stale
-    * artifacts never trusted; same lifecycle as the steady minhash
-    * index), later executions scan the files. `ds_jsonl` then reads it
-    * back with the EXPLICIT parquet-derived schema and aggregates —
-    * matching the oracle computed from the parquet table certifies the
-    * whole JSONL round trip (escaping, types, line splitting). */
-  private val jsonlWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The JSONL twin of the documents table, written once per JVM
+    * ([[once]]) through [[graft.sinks.Sinks.writeJsonl]]; `ds_jsonl`
+    * reads it back with the EXPLICIT parquet-derived schema and
+    * aggregates — matching the oracle computed from the parquet table
+    * certifies the whole JSONL round trip (escaping, types, line
+    * splitting). */
   private def jsonlDocs(s: SparkSession, dir: String): DataFrame = {
     val path = scratchPath("graft_jsonl", dir)
     val d = docs(s, dir)
-    jsonlWritten.synchronized {
-      if (jsonlWritten.add(path)) graft.sinks.Sinks.writeJsonl(d, path)
-    }
+    once(path)(graft.sinks.Sinks.writeJsonl(d, path))
     Tables.jsonl(s, path, d.schema)
   }
 
-  /** Write-once-per-JVM memo for the schema-evolution twin of the
-    * documents table: the even-id half is written in a "v1" schema
-    * (doc_id, text, lang — the columns an early crawl generation had),
-    * the odd-id half in today's full "v2" schema, as two parquet
-    * generations under one scratch root (overwrite — stale artifacts
-    * never trusted; same lifecycle as the steady minhash index). A
-    * single `mergeSchema` read then reconciles both generations in one
-    * scan — the shape a years-old 100 TB corpus actually has, where
-    * rewriting earlier generations to the newest schema would cost a
-    * full-corpus pass. v1 rows must surface NULL for the columns their
-    * files never carried; `ds_evolve` aggregates over exactly that
-    * boundary and its oracle rebuilds the merged view from the parquet
-    * table, so a match certifies Spark's on-disk schema reconciliation
-    * (by-name column alignment + null back-fill), not just the
-    * arithmetic. */
-  private val evolveWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** The schema-evolution twin of the documents table, written once per
+    * JVM ([[once]]): the even-id half in a "v1" schema (doc_id, text,
+    * lang — the columns an early crawl generation had), the odd-id half
+    * in today's full "v2" schema, as two parquet generations under one
+    * scratch root. A single `mergeSchema` read then reconciles both
+    * generations in one scan — the shape a years-old 100 TB corpus
+    * actually has, where rewriting earlier generations to the newest
+    * schema would cost a full-corpus pass. v1 rows must surface NULL for
+    * the columns their files never carried; `ds_evolve` aggregates over
+    * exactly that boundary and its oracle rebuilds the merged view from
+    * the parquet table, so a match certifies Spark's on-disk schema
+    * reconciliation (by-name column alignment + null back-fill), not
+    * just the arithmetic. */
   private def evolveDocs(s: SparkSession, dir: String): DataFrame = {
     val path = scratchPath("graft_evolve", dir)
     val d = docs(s, dir)
-    evolveWritten.synchronized {
-      if (evolveWritten.add(path)) {
-        d.filter(col("doc_id") % 2 === 0).select("doc_id", "text", "lang")
-          .write.mode("overwrite").parquet(s"$path/v1")
-        d.filter(col("doc_id") % 2 === 1)
-          .select("doc_id", "text", "lang", "source", "n_chars")
-          .write.mode("overwrite").parquet(s"$path/v2")
-      }
+    once(path) {
+      d.filter(col("doc_id") % 2 === 0).select("doc_id", "text", "lang")
+        .write.mode("overwrite").parquet(s"$path/v1")
+      d.filter(col("doc_id") % 2 === 1)
+        .select("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$path/v2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$path/v1", s"$path/v2")
   }
@@ -242,6 +216,177 @@ object Pipeline {
         round(col("n_hit").cast("double") / col("k"), 4).as("recall"))
       .orderBy("n_probe")
 
+  /** Recall@k of `found` against the exact top-k `brute`, both
+    * (query_id, neighbor_id, ...) frames, grouped by `key` and reported
+    * as `keyName` — the same grouping the oracle's [[recallSql]] uses. */
+  private def recallBy(brute: DataFrame, found: DataFrame, key: Column,
+                       keyName: String): DataFrame =
+    brute.select(col("query_id"), col("neighbor_id"))
+      .join(found.select(col("query_id"), col("neighbor_id"),
+          lit(1L).as("hit")),
+        Seq("query_id", "neighbor_id"), "left")
+      .groupBy(key.as(keyName))
+      .agg(count(lit(1)).as("k"),
+        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+      .withColumn("recall",
+        round(col("n_hit").cast("double") / col("k"), 4))
+      .orderBy(keyName)
+
+  /** The residual IVF-PQ artifact at `path` read back (stamps and the
+    * `dir` provenance demanded) and probed by the 8 probe queries of
+    * `e` — what the append and delete rows certify. */
+  private def probeResidualIndex(s: SparkSession, dir: String,
+                                 e: DataFrame, path: String): DataFrame = {
+    val idx = Similarity.readIvfPqResidualIndex(s, path,
+      expectedSource = Some(dir))
+    Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < 8),
+        "vec_id", "embedding", idx.centroids, idx.books, k = 5,
+        nProbe = 3, prebuiltCodes = Some(idx.codes))
+      .orderBy("query_id", "neighbor_id")
+  }
+
+  /** k-means report: each centroid's first two components (6dp) and its
+    * member count under one full-corpus assignment. */
+  private def kmeansReport(e: DataFrame, cents: DataFrame): DataFrame = {
+    val counts = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
+      .groupBy("cid").agg(count(lit(1)).as("n_members"))
+    cents.join(counts, Seq("cid"), "left")
+      .select(col("cid"),
+        round(element_at(col("centroid"), 1), 6).as("c1"),
+        round(element_at(col("centroid"), 2), 6).as("c2"),
+        coalesce(col("n_members"), lit(0L)).as("n_members"))
+      .orderBy("cid")
+  }
+
+  /** The as-of rigs' sides over the events table with µs timestamps:
+    * purchases (user_id, event_id, us), and views made unique per
+    * (user_id, us) — the right-side contract of the as-of joins. */
+  private def asofSides(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+    val e = Tables.load(s, dir, "events")
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        col("value"), unix_micros(col("ts")).as("us"))
+    (e.filter(col("event_type") === "purchase")
+       .select("user_id", "event_id", "us"),
+     e.filter(col("event_type") === "view")
+       .groupBy("user_id", "us").agg(max("value").as("view_value")))
+  }
+
+  /** HLL report over two keyed sets of `d`, so BOTH estimator branches
+    * are oracled: the small synthetic vocabulary lands in linear
+    * counting (v_zero large), the doc-id set (n >> 2.5m/alpha) in the
+    * raw harmonic estimator. `sketch(keyed, keyCol)` builds the register
+    * table. A set with no keys reports no row, as the oracle's grouped
+    * estimate does (its relative error would divide by zero). */
+  private def hllReport(d: DataFrame,
+                        sketch: (DataFrame, String) => DataFrame)
+      : DataFrame = {
+    def row(what: String, keyed: DataFrame, keyCol: String) =
+      Sketches.hllEstimate(sketch(keyed, keyCol))
+        .crossJoin(keyed.agg(countDistinct(col(keyCol)).cast("long")
+          .as("exact_distinct")))
+        .filter(col("exact_distinct") > 0)
+        .select(lit(what).as("what"),
+          col("m").cast("long").as("m"),
+          col("v_zero").cast("long").as("v_zero"),
+          round(col("sum_inv"), 6).as("sum_inv"),
+          round(col("est"), 2).as("est_hll"),
+          col("exact_distinct"),
+          round(abs(col("est") - col("exact_distinct")) /
+            col("exact_distinct") * 100, 2).as("err_pct"))
+    row("vocab",
+        d.select(explode(TextAnalysis.tokens(col("text"))).as("term")),
+        "term")
+      .unionByName(row("doc_ids", d.select(col("doc_id")), "doc_id"))
+      .orderBy("what")
+  }
+
+  /** The documents table plus a synthetic media `payload` per doc, made
+    * by `gen(doc_id, n_chars)`, and the `media_meta` struct (media type,
+    * byte length, md5) the featurizers read. */
+  private def withMedia(s: SparkSession, dir: String, mediaType: String,
+                        gen: (Long, Long) => Array[Byte]): DataFrame =
+    docs(s, dir)
+      .withColumn("payload", udf(gen).apply(col("doc_id"), col("n_chars")))
+      .withColumn("media_meta", struct(
+        lit(mediaType).as("media_type"),
+        octet_length(col("payload")).cast("long").as("byte_len"),
+        md5(col("payload")).as("checksum")))
+
+  /** A perceptual-dedup rig: (doc_id, payload) for every doc below
+    * `below`, the payload made by `gen(doc_id)`. */
+  private def rigPayloads(s: SparkSession, dir: String, below: Long,
+                          gen: Long => Array[Byte]): DataFrame =
+    docs(s, dir).filter(col("doc_id") < below).select(col("doc_id"))
+      .withColumn("payload", udf(gen).apply(col("doc_id")))
+
+  /** One survivor (the min doc_id) per transitive component of a rig's
+    * near-dup `pairs` — the keepFirstExact curation policy. */
+  private def rigSurvivors(rig: DataFrame, pairs: DataFrame): DataFrame =
+    Dedup.keepFirstExact(rig.select("doc_id"), "doc_id", pairs)
+      .select("doc_id").orderBy("doc_id")
+
+  /** An 18x16 grayscale PNG of 2x2 boxes over a 9x8 luma grid: row cy
+    * starts at 100 + (seed*13 + cy*7) % 40 and walks +5 / -5 per
+    * gradient bit j, set when (seed*131 + j*37) % 97 < 41, with bit
+    * `flip` inverted (-1: none). Its dHash is exactly those 63 bits —
+    * the frame every perceptual image and video rig is made of. */
+  private[graft] def gradientPng(seed: Int, flip: Int = -1): Array[Byte] = {
+    val grid = Array.ofDim[Int](8, 9)
+    for (cy <- 0 until 8) {
+      grid(cy)(0) = 100 + ((seed * 13 + cy * 7) % 40)
+      for (cx <- 0 until 8) {
+        val j = cy * 8 + cx
+        val bit = j < 63 && ((((seed * 131 + j * 37) % 97) < 41) ^ (j == flip))
+        grid(cy)(cx + 1) = grid(cy)(cx) + (if (bit) 5 else -5)
+      }
+    }
+    val px = new Array[Byte](18 * 16)
+    for (py <- 0 until 16; pxx <- 0 until 18)
+      px(py * 18 + pxx) = grid(py / 2)(pxx / 2).toByte
+    graft.operators.MediaCodec.pngEncodeGray(18, 16, px)
+  }
+
+  /** The image rig's payload: the gradient frame of group doc_id % 16,
+    * every third doc (doc_id % 3 == 0) with bit doc_id % 63 flipped. */
+  private def dedupPng(id: Long): Array[Byte] =
+    gradientPng((id % 16).toInt, if (id % 3 == 0) (id % 63).toInt else -1)
+
+  /** The audio rig's payload: a mono PCM16 WAV of 65 constant-amplitude
+    * segments of 50 frames. Group g = doc_id % 16 starts the amplitude
+    * at 12000 + (g*37) % 2000 and walks +-150 per envelope bit j, set
+    * when (g*113 + j*41) % 89 < 37, bit doc_id % 63 flipped when
+    * doc_id % 3 == 1. The walk stays in [2400, 23600] — strictly
+    * positive (|sample| == amplitude, so the closed form holds) and well
+    * inside Short range. */
+  private def envelopeWav(id: Long): Array[Byte] = {
+    val g = (id % 16).toInt
+    val amps = new Array[Int](65)
+    amps(0) = 12000 + ((g * 37) % 2000)
+    for (j <- 0 until 64) {
+      val bit = j < 63 && {
+        (((g * 113 + j * 41) % 89) < 37) ^
+          (id % 3 == 1 && j == (id % 63).toInt)
+      }
+      amps(j + 1) = amps(j) + (if (bit) 150 else -150)
+    }
+    val samples = new Array[Short](65 * 50)
+    for (j <- 0 until 65; k <- 0 until 50)
+      samples(j * 50 + k) = amps(j).toShort
+    graft.operators.MediaCodec.wavEncodePcm16(8000, 1, samples)
+  }
+
+  /** The video rig's payload: a 5-frame Motion-PNG AVI of the gradient
+    * frames of group g = doc_id % 8 (seeds g*8 + k), with frame 2 of
+    * every third doc (doc_id % 3 == 0) replaced by the doc-unique seed
+    * 2000 + doc_id (an edit). */
+  private def frameAvi(id: Long): Array[Byte] = {
+    val g = (id % 8).toInt
+    val frames = Array.tabulate(5) { k =>
+      gradientPng(if (id % 3 == 0 && k == 2) (2000 + id).toInt else g * 8 + k)
+    }
+    graft.operators.MediaCodec.aviEncodeMpng(18, 16, 25, frames)
+  }
   val queries: Map[String, Q] = Map(
     // exact content dedup: survivors + multiplicity per content hash
     "dd_exact" -> ((s, dir) => {
@@ -537,7 +682,7 @@ object Pipeline {
     // dedup/diversity primitive — which is also where indexing pays:
     // per-row brute cost is n dots, the LSH twin's is tables x bits
     // signature dots plus its candidate share. The corpus is explicitly
-    // split LSH_CORPUS_PARTS ways (single-file local input would
+    // split [[lshCorpusParts]] ways (single-file local input would
     // otherwise serialize the whole n^2 cosine scan in one task;
     // explicit numPartitions exempts the exchange from AQE size-based
     // coalescing, which cannot see compute density).
@@ -567,19 +712,12 @@ object Pipeline {
     "sim_recall_q8" -> ((s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
-      val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val q8all = Similarity.quantizeInt8(e, "vec_id", "embedding")
-      val q8 = Similarity.bruteForceTopK(corpusPar(q8all), q8all,
-          "vec_id", "qvec", k = 5)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      brute.join(q8, Seq("query_id", "neighbor_id"), "left")
-        .groupBy((col("query_id") % 32).as("band"))
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("k"), 4))
-        .orderBy("band")
+      val q8 = Similarity.quantizeInt8(e, "vec_id", "embedding")
+      recallBy(
+        Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5),
+        Similarity.bruteForceTopK(corpusPar(q8), q8, "vec_id", "qvec",
+          k = 5),
+        col("query_id") % 32, "band")
     }),
 
     // product-quantization ANN: corpus encoded to m=4 one-byte codes per
@@ -603,19 +741,11 @@ object Pipeline {
     "sim_recall_pq" -> ((s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
-      val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding",
-          k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val pq = Similarity.pqTopK(ep, e, "vec_id", "embedding",
-          pqBooks(s, dir), k = 5)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      brute.join(pq, Seq("query_id", "neighbor_id"), "left")
-        .groupBy((col("query_id") % 32).as("band"))
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("k"), 4))
-        .orderBy("band")
+      recallBy(
+        Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5),
+        Similarity.pqTopK(ep, e, "vec_id", "embedding", pqBooks(s, dir),
+          k = 5),
+        col("query_id") % 32, "band")
     }),
 
     // the recall lever, measured: same coarse codes, but pqTopK's
@@ -627,19 +757,11 @@ object Pipeline {
     "sim_recall_pq_rerank" -> ((s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
-      val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding",
-          k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val pq = Similarity.pqTopK(ep, e, "vec_id", "embedding",
-          pqBooks(s, dir), k = 5, shortlist = PqShortlist)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      brute.join(pq, Seq("query_id", "neighbor_id"), "left")
-        .groupBy((col("query_id") % 32).as("band"))
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("k"), 4))
-        .orderBy("band")
+      recallBy(
+        Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5),
+        Similarity.pqTopK(ep, e, "vec_id", "embedding", pqBooks(s, dir),
+          k = 5, shortlist = PqShortlist),
+        col("query_id") % 32, "band")
     }),
 
     // IVF-PQ: the composed billion-scale index (FAISS's default layout)
@@ -690,12 +812,7 @@ object Pipeline {
       Similarity.appendIvfPqResidualIndex(
         e.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", path,
         expectedSource = Some(dir))
-      val idx = Similarity.readIvfPqResidualIndex(s, path,
-        expectedSource = Some(dir))
-      Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < 8),
-          "vec_id", "embedding", idx.centroids, idx.books, k = 5,
-          nProbe = 3, prebuiltCodes = Some(idx.codes))
-        .orderBy("query_id", "neighbor_id")
+      probeResidualIndex(s, dir, e, path)
     }),
 
     // deletion from the residual IVF-PQ artifact (r15): the index is
@@ -720,12 +837,7 @@ object Pipeline {
       require(removed > 0,
         s"res_del rig deleted $removed rows — the rig corpus must " +
           "contain odd ids")
-      val idx = Similarity.readIvfPqResidualIndex(s, path,
-        expectedSource = Some(dir))
-      Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < 8),
-          "vec_id", "embedding", idx.centroids, idx.books, k = 5,
-          nProbe = 3, prebuiltCodes = Some(idx.codes))
-        .orderBy("query_id", "neighbor_id")
+      probeResidualIndex(s, dir, e, path)
     }),
 
     // the recall lever on the residual index (r14): ADC shortlist of 50
@@ -737,20 +849,12 @@ object Pipeline {
     "sim_recall_ivfpq_res_rerank" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
-      val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding",
-          k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val ipq = Similarity.ivfPqResidualTopK(e, q, "vec_id", "embedding",
+      recallBy(
+        Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5),
+        Similarity.ivfPqResidualTopK(e, q, "vec_id", "embedding",
           ivfCentroids(e), resBooks(s, dir), k = 5, nProbe = 3,
-          shortlist = PqShortlist)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      brute.join(ipq, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id").as("band"))
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("k"), 4))
-        .orderBy("band")
+          shortlist = PqShortlist),
+        col("query_id"), "band")
     }),
 
     // the same ADC search through the MATERIALIZED index path: books +
@@ -816,30 +920,8 @@ object Pipeline {
     // term a dyadic rational, total < 53 significand bits); est/err
     // round at 2dp to absorb the one nondeterminism left (ln differing
     // by an ulp between libm and the JVM).
-    "sk_hll" -> ((s, dir) => {
-      // two keyed sets so BOTH estimator branches are oracled: the
-      // small synthetic vocabulary lands in linear counting (v_zero
-      // large), the doc-id set (n >> 2.5m/alpha) in the raw harmonic
-      // estimator
-      def row(what: String, keyed: DataFrame, keyCol: String) =
-        Sketches.hllEstimate(Sketches.hllSketch(keyed, keyCol, m = 512))
-          .crossJoin(keyed.agg(countDistinct(col(keyCol)).cast("long")
-            .as("exact_distinct")))
-          .select(lit(what).as("what"),
-            col("m").cast("long").as("m"),
-            col("v_zero").cast("long").as("v_zero"),
-            round(col("sum_inv"), 6).as("sum_inv"),
-            round(col("est"), 2).as("est_hll"),
-            col("exact_distinct"),
-            round(abs(col("est") - col("exact_distinct")) /
-              col("exact_distinct") * 100, 2).as("err_pct"))
-      val d = docs(s, dir)
-      row("vocab",
-          d.select(explode(TextAnalysis.tokens(col("text"))).as("term")),
-          "term")
-        .unionByName(row("doc_ids", d.select(col("doc_id")), "doc_id"))
-        .orderBy("what")
-    }),
+    "sk_hll" -> ((s, dir) =>
+      hllReport(docs(s, dir), Sketches.hllSketch(_, _, m = 512))),
 
     // 64-bit HyperLogLog (r18, r17 verdict #5): the production-range
     // twin (hllSketch64, ~10^18 ceiling) oracled with the same sk_hll
@@ -849,26 +931,8 @@ object Pipeline {
     // moved to a scaled-integer form whose int->double conversion is
     // correctly rounded in both engines (Sketches.scala scaladoc).
     // Same two keyed sets so BOTH estimator branches are oracled.
-    "sk_hll64" -> ((s, dir) => {
-      def row(what: String, keyed: DataFrame, keyCol: String) =
-        Sketches.hllEstimate(Sketches.hllSketch64(keyed, keyCol, m = 512))
-          .crossJoin(keyed.agg(countDistinct(col(keyCol)).cast("long")
-            .as("exact_distinct")))
-          .select(lit(what).as("what"),
-            col("m").cast("long").as("m"),
-            col("v_zero").cast("long").as("v_zero"),
-            round(col("sum_inv"), 6).as("sum_inv"),
-            round(col("est"), 2).as("est_hll"),
-            col("exact_distinct"),
-            round(abs(col("est") - col("exact_distinct")) /
-              col("exact_distinct") * 100, 2).as("err_pct"))
-      val d = docs(s, dir)
-      row("vocab",
-          d.select(explode(TextAnalysis.tokens(col("text"))).as("term")),
-          "term")
-        .unionByName(row("doc_ids", d.select(col("doc_id")), "doc_id"))
-        .orderBy("what")
-    }),
+    "sk_hll64" -> ((s, dir) =>
+      hllReport(docs(s, dir), Sketches.hllSketch64(_, _, m = 512))),
 
     // JL random projection 64d -> 16d with a deterministic md5-derived
     // matrix — the pre-ANN dimensionality squeeze (oracled bit-for-bit:
@@ -992,14 +1056,7 @@ object Pipeline {
     // view value at-or-before it (union+window implementation, oracled
     // against DuckDB's native ASOF JOIN)
     "ev_asof" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("us"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("user_id", "event_id", "us")
-      // right side unique per (user, ts): the asofBackward contract
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "us").agg(max("value").as("view_value"))
+      val (purchases, views) = asofSides(s, dir)
       graft.operators.AsOfJoin.asofBackward(purchases, views,
           Seq("user_id"), "us", Seq("view_value"))
         .orderBy("event_id")
@@ -1008,13 +1065,7 @@ object Pipeline {
     // forward as-of: each purchase picks up the user's NEXT view value
     // at-or-after it (oracled against DuckDB ASOF with <=)
     "ev_asof_fwd" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("us"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("user_id", "event_id", "us")
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "us").agg(max("value").as("view_value"))
+      val (purchases, views) = asofSides(s, dir)
       graft.operators.AsOfJoin.asof(purchases, views,
           Seq("user_id"), "us", Seq("view_value"), direction = "forward")
         .orderBy("event_id")
@@ -1025,13 +1076,7 @@ object Pipeline {
     // combining DuckDB's backward + forward ASOF joins with the same
     // arbitration)
     "ev_asof_near" -> ((s, dir) => {
-      val e = Tables.load(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          col("value"), unix_micros(col("ts")).as("us"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select("user_id", "event_id", "us")
-      val views = e.filter(col("event_type") === "view")
-        .groupBy("user_id", "us").agg(max("value").as("view_value"))
+      val (purchases, views) = asofSides(s, dir)
       graft.operators.AsOfJoin.asof(purchases, views,
           Seq("user_id"), "us", Seq("view_value"), direction = "nearest",
           tolerance = Some(3600L * 1000000L))
@@ -1099,10 +1144,6 @@ object Pipeline {
         .orderBy("query_id", "neighbor_id")
     }),
 
-    // LSH recall measurement: fraction of the exact top-5 the LSH probe
-    // recovers, per query — the evidence behind "recall tunable via
-    // tables x bits" (deterministic given md5-mode planes -> oracled)
-    // recall is summarized per query-id band (32 bands) rather than per
     // MMR diversified top-k: exact top-12 candidates per query, then 4
     // greedy picks trading relevance against redundancy — the RAG-stage
     // rerank. The whole greedy TRAJECTORY is the result (step + score
@@ -1129,23 +1170,20 @@ object Pipeline {
         .orderBy("query_id", "step")
     }),
 
-    // query — per-query rows would make the artifact needlessly wide;
-    // the banded means still localize a recall regression
+    // LSH recall measurement: fraction of the exact top-5 the LSH probe
+    // recovers — the evidence behind "recall tunable via tables x bits"
+    // (deterministic given md5-mode planes -> oracled). Recall is
+    // summarized per query-id band (32 bands) rather than per query —
+    // per-query rows would make the artifact needlessly wide; the banded
+    // means still localize a recall regression
     "sim_recall" -> ((s, dir) => {
       val e = embs(s, dir)
       val ep = corpusPar(e)
-      val brute = Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val lsh = Similarity.lshTopK(ep, e, "vec_id", "embedding", k = 5,
-          tables = 8, mode = HashMode.Md5)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      brute.join(lsh, Seq("query_id", "neighbor_id"), "left")
-        .groupBy((col("query_id") % 32).as("band"))
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("k"), 4))
-        .orderBy("band")
+      recallBy(
+        Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5),
+        Similarity.lshTopK(ep, e, "vec_id", "embedding", k = 5,
+          tables = 8, mode = HashMode.Md5),
+        col("query_id") % 32, "band")
     }),
 
     // IVF ANN: label-centroid coarse quantizer (rounded 6dp so both
@@ -1165,16 +1203,8 @@ object Pipeline {
     // against a DuckDB unrolling of the same iterations
     "sim_kmeans" -> ((s, dir) => {
       val e = embs(s, dir)
-      val cents = Similarity.kmeans(e, "vec_id", "embedding", k = 4,
-        iters = 2)
-      val counts = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
-        .groupBy("cid").agg(count(lit(1)).as("n_members"))
-      cents.join(counts, Seq("cid"), "left")
-        .select(col("cid"),
-          round(element_at(col("centroid"), 1), 6).as("c1"),
-          round(element_at(col("centroid"), 2), 6).as("c2"),
-          coalesce(col("n_members"), lit(0L)).as("n_members"))
-        .orderBy("cid")
+      kmeansReport(e,
+        Similarity.kmeans(e, "vec_id", "embedding", k = 4, iters = 2))
     }),
 
     // sampled coarse-quantizer training (r14): the kmeans iterations
@@ -1186,34 +1216,19 @@ object Pipeline {
     // and assigns the full corpus at the end
     "sim_kmeans_sampled" -> ((s, dir) => {
       val e = embs(s, dir)
-      val cents = Similarity.kmeansSampled(e, "vec_id", "embedding",
-        k = 4, sampleN = 32, iters = 2)
-      val counts = Similarity.ivfAssign(e, "vec_id", "embedding", cents)
-        .groupBy("cid").agg(count(lit(1)).as("n_members"))
-      cents.join(counts, Seq("cid"), "left")
-        .select(col("cid"),
-          round(element_at(col("centroid"), 1), 6).as("c1"),
-          round(element_at(col("centroid"), 2), 6).as("c2"),
-          coalesce(col("n_members"), lit(0L)).as("n_members"))
-        .orderBy("cid")
+      kmeansReport(e, Similarity.kmeansSampled(e, "vec_id", "embedding",
+        k = 4, sampleN = 32, iters = 2))
     }),
 
     // IVF recall vs the exact top-5 (the probes/k tradeoff, measured)
     "sim_recall_ivf" -> ((s, dir) => {
       val e = embs(s, dir)
       val q = e.filter(col("vec_id") < 8)
-      val brute = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
-        .select(col("query_id"), col("neighbor_id"))
-      val ivf = Similarity.ivfTopK(e, q, "vec_id", "embedding",
-          ivfCentroids(e), k = 5, nProbe = 3)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall",
-          round(col("n_hit").cast("double") / col("k"), 4))
-        .orderBy("query_id")
+      recallBy(
+        Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5),
+        Similarity.ivfTopK(e, q, "vec_id", "embedding", ivfCentroids(e),
+          k = 5, nProbe = 3),
+        col("query_id"), "query_id")
     }),
 
     // IVF recall sweep: the knob a 100 TB user actually turns — mean
@@ -1433,11 +1448,8 @@ object Pipeline {
       // write is setup (landing in the first run); every
       // execution still READS the artifact, validates its stamped
       // contract, and demands the provenance tag — the certified path
-      bpeArtifactWritten.synchronized {
-        if (bpeArtifactWritten.add(path))
-          Bpe.writeMerges(Bpe.train(docs(s, dir), "text", nMerges = 8),
-            path, sourceTag = dir)
-      }
+      once(path)(Bpe.writeMerges(Bpe.train(docs(s, dir), "text",
+        nMerges = 8), path, sourceTag = dir))
       val merges = Bpe.readMerges(s, path, expectedSource = Some(dir))
       Bpe.encodeTokenCounts(docs(s, dir), "doc_id", "text", merges)
         .orderBy("doc_id")
@@ -1600,17 +1612,11 @@ object Pipeline {
     // the same dims/channel values directly from the doc columns — green
     // only if decode(encode(x)) == x for every row
     "mm_features" -> ((s, dir) => {
-      val pngUdf = udf((id: Long, nChars: Long) =>
+      val withPayload = withMedia(s, dir, "image/png", (id, nChars) =>
         graft.operators.MediaCodec.pngEncodeSolid(
           w = (8 + id % 32).toInt, h = (8 + nChars % 32).toInt,
           r = (id % 256).toInt, g = (id * 7 % 256).toInt,
           b = ((id * 13 + 5) % 256).toInt))
-      val withPayload = docs(s, dir)
-        .withColumn("payload", pngUdf(col("doc_id"), col("n_chars")))
-        .withColumn("media_meta", struct(
-          lit("image/png").as("media_type"),
-          octet_length(col("payload")).cast("long").as("byte_len"),
-          md5(col("payload")).as("checksum")))
       Multimodal.featurize(withPayload, "doc_id").toDF()
         .select(col("doc_id"), col("width"), col("height"), col("n_frames"),
           element_at(col("feature"), 1).cast("int").as("mean_r"),
@@ -1629,24 +1635,14 @@ object Pipeline {
     // amplitudes compare as exact ints (x32768), no rounding policy
     // needed. Green only if decode(encode(x)) == x for every row.
     "mm_audio" -> ((s, dir) => {
-      val wavUdf = udf((id: Long, nChars: Long) => {
+      val withPayload = withMedia(s, dir, "audio/wav", (id, nChars) => {
         val channels = 1 + (id % 2).toInt
         val frames = (64 + nChars % 128).toInt
-        val samples = new Array[Short](frames * channels)
-        var i = 0
-        while (i < samples.length) {
-          val c = i % channels
-          samples(i) = ((id * 31 + c * 17) % 20000 + 1000).toShort
-          i += 1
+        val samples = Array.tabulate[Short](frames * channels) { i =>
+          ((id * 31 + (i % channels) * 17) % 20000 + 1000).toShort
         }
         graft.operators.MediaCodec.wavEncodePcm16(8000, channels, samples)
       })
-      val withPayload = docs(s, dir)
-        .withColumn("payload", wavUdf(col("doc_id"), col("n_chars")))
-        .withColumn("media_meta", struct(
-          lit("audio/wav").as("media_type"),
-          octet_length(col("payload")).cast("long").as("byte_len"),
-          md5(col("payload")).as("checksum")))
       Multimodal.featurizeAudio(withPayload, "doc_id").toDF()
         .select(col("doc_id"), col("sample_rate"), col("channels"),
           col("n_frames"), col("duration_ms"),
@@ -1669,10 +1665,9 @@ object Pipeline {
     // compare in exact integers. Green only if demux+decode inverts the
     // container encoding for every row.
     "mm_video" -> ((s, dir) => {
-      val aviUdf = udf((id: Long, nChars: Long) => {
+      val withPayload = withMedia(s, dir, "video/avi", (id, nChars) => {
         val w = (4 + id % 8).toInt; val h = (4 + nChars % 8).toInt
-        val n = (3 + nChars % 6).toInt
-        val frames = Array.tabulate(n) { i =>
+        val frames = Array.tabulate((3 + nChars % 6).toInt) { i =>
           graft.operators.MediaCodec.pngEncodeSolid(w, h,
             r = ((id * 7 + i * 13) % 256).toInt,
             g = ((id * 11 + i * 29) % 256).toInt,
@@ -1680,12 +1675,6 @@ object Pipeline {
         }
         graft.operators.MediaCodec.aviEncodeMpng(w, h, 25, frames)
       })
-      val withPayload = docs(s, dir)
-        .withColumn("payload", aviUdf(col("doc_id"), col("n_chars")))
-        .withColumn("media_meta", struct(
-          lit("video/avi").as("media_type"),
-          octet_length(col("payload")).cast("long").as("byte_len"),
-          md5(col("payload")).as("checksum")))
       def chanSum(i: Int) =
         round(element_at(col("feature"), i).cast("double") *
           col("n_sampled")).cast("int")
@@ -1699,43 +1688,21 @@ object Pipeline {
     }),
 
     // perceptual-hash IMAGE dedup (r15): each doc gets a REAL grayscale
-    // PNG (18x16, 2x2-constant boxes) whose 9x8 luma grid walks +-5 per
-    // planted gradient bit — group = doc_id % 16 decides the pattern,
-    // docs with doc_id % 3 == 0 flip one bit (doc_id % 63), so
-    // same-group pairs sit at hamming <= 2 (near-dups) and cross-group
-    // pairs far above the band. The Spark side runs the full production
-    // chain: pngEncodeGray -> pngDecodePixels -> integer luma ->
-    // 9x8 box resample -> aHash/dHash -> hammingPairs chunk pigeonhole.
-    // The oracle rebuilds both fingerprints CLOSED-FORM from doc_id
-    // (prefix-sum of the planted bits) and brute-forces the pair join —
-    // the row is green only if decode(encode(x)), the integer resample,
-    // both hash derivations, and the banded recall are ALL bit-exact.
-    // Sliced to doc_id < 1000 so the oracle's n^2 pair space stays
-    // bounded at every sf (the Spark side never materializes n^2).
+    // PNG ([[dedupPng]]) whose dHash is 63 planted gradient bits — group
+    // = doc_id % 16 decides the pattern, docs with doc_id % 3 == 0 flip
+    // one bit, so same-group pairs sit at hamming <= 2 (near-dups) and
+    // cross-group pairs far above the band. The Spark side runs the full
+    // production chain: pngEncodeGray -> pngDecodePixels -> integer luma
+    // -> 9x8 box resample -> aHash/dHash -> hammingPairs chunk
+    // pigeonhole. The oracle rebuilds both fingerprints CLOSED-FORM from
+    // doc_id (prefix-sum of the planted bits) and brute-forces the pair
+    // join — the row is green only if decode(encode(x)), the integer
+    // resample, both hash derivations, and the banded recall are ALL
+    // bit-exact. Sliced to doc_id < 1000 so the oracle's n^2 pair space
+    // stays bounded at every sf (the Spark side never materializes n^2).
     "mm_dedup" -> ((s, dir) => {
-      val pngUdf = udf((id: Long) => {
-        val g = (id % 16).toInt
-        val grid = Array.ofDim[Int](8, 9)
-        for (cy <- 0 until 8) {
-          grid(cy)(0) = 100 + ((g * 13 + cy * 7) % 40)
-          for (cx <- 0 until 8) {
-            val j = cy * 8 + cx
-            val bit = j < 63 && {
-              (((g * 131 + j * 37) % 97) < 41) ^
-                (id % 3 == 0 && j == (id % 63).toInt)
-            }
-            grid(cy)(cx + 1) = grid(cy)(cx) + (if (bit) 5 else -5)
-          }
-        }
-        val px = new Array[Byte](18 * 16)
-        for (py <- 0 until 16; pxx <- 0 until 18)
-          px(py * 18 + pxx) = grid(py / 2)(pxx / 2).toByte
-        graft.operators.MediaCodec.pngEncodeGray(18, 16, px)
-      })
-      val withPayload = docs(s, dir).filter(col("doc_id") < 1000)
-        .select(col("doc_id"))
-        .withColumn("payload", pngUdf(col("doc_id")))
-      val fp = Multimodal.imageHashes(withPayload, "doc_id", "payload")
+      val fp = Multimodal.imageHashes(rigPayloads(s, dir, 1000, dedupPng),
+          "doc_id", "payload")
         .cache()
       graft.operators.Dedup.hammingPairs(fp, "doc_id", "dhash",
           maxHamming = 3)
@@ -1751,92 +1718,43 @@ object Pipeline {
     }),
 
     // perceptual AUDIO dedup (r15): mm_dedup's construction applied to
-    // waveforms — each doc gets a REAL PCM16 WAV of 65 constant-
-    // amplitude segments (50 frames each) whose amplitude walks +-300
+    // waveforms ([[envelopeWav]]) — amplitude envelopes walking +-150
     // per planted gradient bit; group = doc_id % 16 decides the
-    // envelope, docs with doc_id % 3 == 1 flip one bit (doc_id % 63),
-    // so same-group pairs sit within the band and cross-group pairs
-    // far above it. Spark runs the production chain (wavEncodePcm16 ->
+    // envelope, docs with doc_id % 3 == 1 flip one bit, so same-group
+    // pairs sit within the band and cross-group pairs far above it.
+    // Spark runs the production chain (wavEncodePcm16 ->
     // wavDecodeSamples -> integer mono magnitude -> 65-window floor
     // means -> gradient hash -> hammingPairs); the oracle rebuilds the
     // fingerprints closed-form from doc_id and brute-forces the pair
     // join. Sliced to doc_id < 1000 to bound the oracle's n^2 space.
     "mm_audio_dedup" -> ((s, dir) => {
-      val wavUdf = udf((id: Long) => {
-        val g = (id % 16).toInt
-        // start 12000, step +-150: the walk stays in [2400, 23600] —
-        // strictly positive (|sample| == amplitude, so the closed form
-        // holds) and well inside Short range
-        val amps = new Array[Int](65)
-        amps(0) = 12000 + ((g * 37) % 2000)
-        for (j <- 0 until 64) {
-          val bit = j < 63 && {
-            (((g * 113 + j * 41) % 89) < 37) ^
-              (id % 3 == 1 && j == (id % 63).toInt)
-          }
-          amps(j + 1) = amps(j) + (if (bit) 150 else -150)
-        }
-        val samples = new Array[Short](65 * 50)
-        for (j <- 0 until 65; k <- 0 until 50)
-          samples(j * 50 + k) = amps(j).toShort
-        graft.operators.MediaCodec.wavEncodePcm16(8000, 1, samples)
-      })
-      val withPayload = docs(s, dir).filter(col("doc_id") < 1000)
-        .select(col("doc_id"))
-        .withColumn("payload", wavUdf(col("doc_id")))
-      Multimodal.audioDedupPairs(withPayload, "doc_id", "payload",
-          maxHamming = 3)
+      Multimodal.audioDedupPairs(rigPayloads(s, dir, 1000, envelopeWav),
+          "doc_id", "payload", maxHamming = 3)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
     }),
 
     // perceptual VIDEO dedup (r15): near-dup videos by FRAME-SET
-    // overlap — each doc gets a REAL 5-frame Motion-PNG AVI whose
-    // frames are the mm_dedup gradient images; group = doc_id % 8
-    // decides the frame seeds, and docs with doc_id % 3 == 0 replace
-    // frame 2 with a doc-unique frame (an edit), so same-group pairs
-    // sit at jaccard 1.0 / 0.6667 and cross-group pairs share nothing.
-    // Spark runs the production chain (aviEncodeMpng -> aviFrames
-    // demux -> per-frame pngDecodePixels -> dHash -> inverted-index
-    // join on the frame fingerprint); the oracle rebuilds every
-    // frame's dhash closed-form from (doc_id, frame) and replays the
-    // set-jaccard join. Sliced to doc_id < 400 to bound the rig.
+    // overlap — each doc gets a REAL 5-frame Motion-PNG AVI
+    // ([[frameAvi]]) whose frames are the mm_dedup gradient images;
+    // group = doc_id % 8 decides the frame seeds, and docs with
+    // doc_id % 3 == 0 replace frame 2 with a doc-unique frame (an
+    // edit), so same-group pairs sit at jaccard 1.0 / 0.6667 and
+    // cross-group pairs share nothing. Spark runs the production chain
+    // (aviEncodeMpng -> aviFrames demux -> per-frame pngDecodePixels ->
+    // dHash -> inverted-index join on the frame fingerprint); the oracle
+    // rebuilds every frame's dhash closed-form from (doc_id, frame) and
+    // replays the set-jaccard join. Sliced to doc_id < 400 to bound the
+    // rig.
     "mm_video_dedup" -> ((s, dir) => {
-      val aviUdf = udf((id: Long) => {
-        val g = (id % 8).toInt
-        def frame(seed: Int): Array[Byte] = {
-          val grid = Array.ofDim[Int](8, 9)
-          for (cy <- 0 until 8) {
-            grid(cy)(0) = 100 + ((seed * 13 + cy * 7) % 40)
-            for (cx <- 0 until 8) {
-              val j = cy * 8 + cx
-              val bit = j < 63 && (((seed * 131 + j * 37) % 97) < 41)
-              grid(cy)(cx + 1) = grid(cy)(cx) + (if (bit) 5 else -5)
-            }
-          }
-          val px = new Array[Byte](18 * 16)
-          for (py <- 0 until 16; pxx <- 0 until 18)
-            px(py * 18 + pxx) = grid(py / 2)(pxx / 2).toByte
-          graft.operators.MediaCodec.pngEncodeGray(18, 16, px)
-        }
-        val frames = Array.tabulate(5) { k =>
-          val seed = if (id % 3 == 0 && k == 2) (2000 + id).toInt
-            else g * 8 + k
-          frame(seed)
-        }
-        graft.operators.MediaCodec.aviEncodeMpng(18, 16, 25, frames)
-      })
-      val withPayload = docs(s, dir).filter(col("doc_id") < 400)
-        .select(col("doc_id"))
-        .withColumn("payload", aviUdf(col("doc_id")))
       // maxDocFreq = 60 puts the stop-frame prune IN the oracled path
       // (r16 verdict #2): the rig's max frame doc-freq is 50 (one group
       // = 50 docs), so no frame is pruned and the values still replay
       // closed-form — the oracle carries the SAME df > 60 filter on the
       // join sides, so a prune that ever fired wrong would hash-mismatch
-      Multimodal.videoDedupPairs(withPayload, "doc_id", "payload",
-          threshold = 0.5, maxDocFreq = Some(60))
+      Multimodal.videoDedupPairs(rigPayloads(s, dir, 400, frameAvi),
+          "doc_id", "payload", threshold = 0.5, maxDocFreq = Some(60))
         .select(col("id_a"), col("id_b"),
           col("n_shared").cast("bigint").as("n_shared"), col("jaccard"))
         .orderBy("id_a", "id_b")
@@ -1853,33 +1771,9 @@ object Pipeline {
     // the banded pair set, and replays the min-label transitive closure
     // as a recursive CTE.
     "mm_survivors" -> ((s, dir) => {
-      val pngUdf = udf((id: Long) => {
-        val g = (id % 16).toInt
-        val grid = Array.ofDim[Int](8, 9)
-        for (cy <- 0 until 8) {
-          grid(cy)(0) = 100 + ((g * 13 + cy * 7) % 40)
-          for (cx <- 0 until 8) {
-            val j = cy * 8 + cx
-            val bit = j < 63 && {
-              (((g * 131 + j * 37) % 97) < 41) ^
-                (id % 3 == 0 && j == (id % 63).toInt)
-            }
-            grid(cy)(cx + 1) = grid(cy)(cx) + (if (bit) 5 else -5)
-          }
-        }
-        val px = new Array[Byte](18 * 16)
-        for (py <- 0 until 16; pxx <- 0 until 18)
-          px(py * 18 + pxx) = grid(py / 2)(pxx / 2).toByte
-        graft.operators.MediaCodec.pngEncodeGray(18, 16, px)
-      })
-      val withPayload = docs(s, dir).filter(col("doc_id") < 1000)
-        .select(col("doc_id"))
-        .withColumn("payload", pngUdf(col("doc_id")))
-      val pairs = Multimodal.imageDedupPairs(withPayload, "doc_id",
-        "payload", maxHamming = 3)
-      graft.operators.Dedup.keepFirstExact(
-          withPayload.select("doc_id"), "doc_id", pairs)
-        .select("doc_id").orderBy("doc_id")
+      val rig = rigPayloads(s, dir, 1000, dedupPng)
+      rigSurvivors(rig,
+        Multimodal.imageDedupPairs(rig, "doc_id", "payload", maxHamming = 3))
     }),
 
     // AUDIO survivors (r18, r17 verdict #6): the mm_audio_dedup wav rig's
@@ -1891,30 +1785,9 @@ object Pipeline {
     // rebuilds the envelope hashes closed-form, brute-forces the banded
     // pair set, and replays the min-label transitive closure.
     "mm_audio_survivors" -> ((s, dir) => {
-      val wavUdf = udf((id: Long) => {
-        val g = (id % 16).toInt
-        val amps = new Array[Int](65)
-        amps(0) = 12000 + ((g * 37) % 2000)
-        for (j <- 0 until 64) {
-          val bit = j < 63 && {
-            (((g * 113 + j * 41) % 89) < 37) ^
-              (id % 3 == 1 && j == (id % 63).toInt)
-          }
-          amps(j + 1) = amps(j) + (if (bit) 150 else -150)
-        }
-        val samples = new Array[Short](65 * 50)
-        for (j <- 0 until 65; k <- 0 until 50)
-          samples(j * 50 + k) = amps(j).toShort
-        graft.operators.MediaCodec.wavEncodePcm16(8000, 1, samples)
-      })
-      val withPayload = docs(s, dir).filter(col("doc_id") < 1000)
-        .select(col("doc_id"))
-        .withColumn("payload", wavUdf(col("doc_id")))
-      val pairs = Multimodal.audioDedupPairs(withPayload, "doc_id",
-        "payload", maxHamming = 3)
-      graft.operators.Dedup.keepFirstExact(
-          withPayload.select("doc_id"), "doc_id", pairs)
-        .select("doc_id").orderBy("doc_id")
+      val rig = rigPayloads(s, dir, 1000, envelopeWav)
+      rigSurvivors(rig,
+        Multimodal.audioDedupPairs(rig, "doc_id", "payload", maxHamming = 3))
     }),
 
     // VIDEO survivors (r18, r17 verdict #6): the mm_video_dedup avi rig's
@@ -1927,38 +1800,9 @@ object Pipeline {
     // oracle replays the jaccard join closed-form and the min-label
     // transitive closure.
     "mm_video_survivors" -> ((s, dir) => {
-      val aviUdf = udf((id: Long) => {
-        val g = (id % 8).toInt
-        def frame(seed: Int): Array[Byte] = {
-          val grid = Array.ofDim[Int](8, 9)
-          for (cy <- 0 until 8) {
-            grid(cy)(0) = 100 + ((seed * 13 + cy * 7) % 40)
-            for (cx <- 0 until 8) {
-              val j = cy * 8 + cx
-              val bit = j < 63 && (((seed * 131 + j * 37) % 97) < 41)
-              grid(cy)(cx + 1) = grid(cy)(cx) + (if (bit) 5 else -5)
-            }
-          }
-          val px = new Array[Byte](18 * 16)
-          for (py <- 0 until 16; pxx <- 0 until 18)
-            px(py * 18 + pxx) = grid(py / 2)(pxx / 2).toByte
-          graft.operators.MediaCodec.pngEncodeGray(18, 16, px)
-        }
-        val frames = Array.tabulate(5) { k =>
-          val seed = if (id % 3 == 0 && k == 2) (2000 + id).toInt
-            else g * 8 + k
-          frame(seed)
-        }
-        graft.operators.MediaCodec.aviEncodeMpng(18, 16, 25, frames)
-      })
-      val withPayload = docs(s, dir).filter(col("doc_id") < 400)
-        .select(col("doc_id"))
-        .withColumn("payload", aviUdf(col("doc_id")))
-      val pairs = Multimodal.videoDedupPairs(withPayload, "doc_id",
-        "payload", threshold = 0.5, maxDocFreq = Some(60))
-      graft.operators.Dedup.keepFirstExact(
-          withPayload.select("doc_id"), "doc_id", pairs)
-        .select("doc_id").orderBy("doc_id")
+      val rig = rigPayloads(s, dir, 400, frameAvi)
+      rigSurvivors(rig, Multimodal.videoDedupPairs(rig, "doc_id", "payload",
+        threshold = 0.5, maxDocFreq = Some(60)))
     }),
   )
 
@@ -1978,13 +1822,63 @@ object Pipeline {
                 END AS qv
               FROM sc)"""
 
+  /** Per-subspace k-means over `src(vec_id, e)`, unrolled like
+    * [[kmeansCtes]]: `${p}sube` holds each vector's m dsub-wide slices,
+    * `${p}cent0` … `${p}cent$iters` walk the trajectory (lowest-id init,
+    * `round(c·c - 2·sv·c, 6)` argmin with cid tie-break, 6dp-rounded
+    * means), `${p}book` is the densely renumbered codebook and
+    * `${p}asg_f(vec_id, sub, cid)` each vector's final code — the
+    * Similarity.pqTrain / pqEncode twin both PQ chains share. */
+  private def subspaceKmeansCtes(p: String, src: String, m: Int, ksub: Int,
+                                 iters: Int): String = {
+    val dsub = 64 / m
+    def asg(name: String, centName: String) =
+      s"""$name AS (SELECT vec_id, sub, cid FROM (
+           SELECT s.vec_id, s.sub, c.cid,
+             row_number() OVER (PARTITION BY s.vec_id, s.sub
+               ORDER BY round(list_dot_product(c.c, c.c)
+                 - 2 * list_dot_product(s.sv, c.c), 6) ASC, c.cid ASC)
+               AS rn
+           FROM ${p}sube s JOIN $centName c ON c.sub = s.sub) WHERE rn = 1)"""
+    val sb = new StringBuilder
+    sb ++= s"""${p}sube AS (SELECT vec_id, s.sub::INT AS sub,
+                  list_slice(e, s.sub::INT * $dsub + 1,
+                    (s.sub::INT + 1) * $dsub) AS sv
+                FROM $src CROSS JOIN unnest(range(0, $m)) AS s(sub)),
+       ${p}cent0 AS (SELECT sub, (rn - 1)::INT AS cid,
+                    list_transform(sv, x -> round(x, 6)) AS c
+                  FROM (SELECT sub, sv, row_number() OVER (
+                          PARTITION BY sub ORDER BY vec_id) AS rn
+                        FROM ${p}sube)
+                  WHERE rn <= $ksub)"""
+    for (i <- 1 to iters) {
+      sb ++= s""",
+       ${asg(s"${p}asg$i", s"${p}cent${i - 1}")},
+       ${p}sums$i AS (SELECT a.sub, a.cid, d.d AS pos,
+                     sum(s.sv[d.d::INT + 1]) AS sm, count(*) AS n
+                   FROM ${p}asg$i a JOIN ${p}sube s
+                     ON s.vec_id = a.vec_id AND s.sub = a.sub
+                   CROSS JOIN unnest(range(0, $dsub)) AS d(d)
+                   GROUP BY a.sub, a.cid, d.d),
+       ${p}cent$i AS (SELECT sub, cid, list(round(sm / n, 6) ORDER BY pos)
+                     AS c
+                   FROM ${p}sums$i GROUP BY sub, cid)"""
+    }
+    sb ++= s""",
+       ${p}book AS (SELECT sub,
+                   (row_number() OVER (PARTITION BY sub ORDER BY cid)
+                     - 1)::INT AS cid, c
+                 FROM ${p}cent$iters),
+       ${asg(s"${p}asg_f", s"${p}book")}"""
+    sb.toString
+  }
+
   /** DuckDB twin of the full PQ chain (Similarity.pqTrain / pqEncode /
-    * pqTopK): per-subspace k-means unrolled like [[kmeansCtes]] (lowest-id
-    * init, `round(c·c - 2·sv·c, 6)` argmin with cid tie-break, 6dp-rounded
-    * means, dense renumber), then ADC scoring by JOINs — mathematically
-    * identical to the Spark side's flat-LUT lookups; the LUT is a Spark
-    * performance structure, not a semantic one. Sums that Spark performs
-    * as ordered folds (`r_nsq`, the m-term ADC dot) are sub-ordered
+    * pqTopK): [[subspaceKmeansCtes]] over the embeddings (prefix `p`),
+    * then ADC scoring by JOINs — mathematically identical to the Spark
+    * side's flat-LUT lookups; the LUT is a Spark performance structure,
+    * not a semantic one. Sums that Spark performs as ordered folds
+    * (`r_nsq`, the m-term ADC dot) are sub-ordered
     * `list_sum(list(... ORDER BY sub))` here; the final cut ranks the
     * floor-4dp cosine with id tie-break on both sides. Ends at `pranked`
     * (query_id, neighbor_id, cosine, rn).
@@ -1997,49 +1891,12 @@ object Pipeline {
   private def pqCtes(m: Int, ksub: Int, iters: Int,
                      emitEmb: Boolean = true,
                      candCte: Option[String] = None): String = {
-    val dsub = 64 / m
-    def asg(name: String, centName: String) =
-      s"""$name AS (SELECT vec_id, sub, cid FROM (
-           SELECT s.vec_id, s.sub, p.cid,
-             row_number() OVER (PARTITION BY s.vec_id, s.sub
-               ORDER BY round(list_dot_product(p.c, p.c)
-                 - 2 * list_dot_product(s.sv, p.c), 6) ASC, p.cid ASC)
-               AS rn
-           FROM sube s JOIN $centName p ON p.sub = s.sub) WHERE rn = 1)"""
     val sb = new StringBuilder
     if (emitEmb)
       sb ++= s"""emb AS (SELECT vec_id, embedding::DOUBLE[] AS e
          FROM embeddings),
        """
-    sb ++= s"""sube AS (SELECT vec_id, s.sub::INT AS sub,
-                  list_slice(e, s.sub::INT * $dsub + 1,
-                    (s.sub::INT + 1) * $dsub) AS sv
-                FROM emb CROSS JOIN unnest(range(0, $m)) AS s(sub)),
-       pcent0 AS (SELECT sub, (rn - 1)::INT AS cid,
-                    list_transform(sv, x -> round(x, 6)) AS c
-                  FROM (SELECT sub, sv, row_number() OVER (
-                          PARTITION BY sub ORDER BY vec_id) AS rn
-                        FROM sube)
-                  WHERE rn <= $ksub)"""
-    for (i <- 1 to iters) {
-      sb ++= s""",
-       ${asg(s"pasg$i", s"pcent${i - 1}")},
-       psums$i AS (SELECT a.sub, a.cid, d.d AS pos,
-                     sum(s.sv[d.d::INT + 1]) AS sm, count(*) AS n
-                   FROM pasg$i a JOIN sube s
-                     ON s.vec_id = a.vec_id AND s.sub = a.sub
-                   CROSS JOIN unnest(range(0, $dsub)) AS d(d)
-                   GROUP BY a.sub, a.cid, d.d),
-       pcent$i AS (SELECT sub, cid, list(round(sm / n, 6) ORDER BY pos)
-                     AS c
-                   FROM psums$i GROUP BY sub, cid)"""
-    }
-    sb ++= s""",
-       pbook AS (SELECT sub,
-                   (row_number() OVER (PARTITION BY sub ORDER BY cid)
-                     - 1)::INT AS cid, c
-                 FROM pcent$iters),
-       ${asg("pasg_f", "pbook")},
+    sb ++= s"""${subspaceKmeansCtes("p", "emb", m, ksub, iters)},
        prn AS (SELECT a.vec_id,
                  list_sum(list(list_dot_product(b.c, b.c)
                    ORDER BY a.sub)) AS r_nsq
@@ -2059,7 +1916,7 @@ object Pipeline {
                     a.sub, list_dot_product(qs.sv, b.c) AS pv
                   FROM pasg_f a
                   JOIN pbook b ON b.sub = a.sub AND b.cid = a.cid
-                  JOIN sube qs ON qs.sub = a.sub
+                  JOIN psube qs ON qs.sub = a.sub
                   $candJoin),
        padc AS (SELECT query_id, neighbor_id,
                   list_sum(list(pv ORDER BY sub)) AS adcdot
@@ -2087,8 +1944,8 @@ object Pipeline {
 
   /** DuckDB twin of the RESIDUAL IVF-PQ chain (Similarity.ivfResiduals /
     * pqTrain-on-residuals / ivfPqResidualEncode / ivfPqResidualTopK):
-    * 6dp residuals to the coarse centroids, the [[pqCtes]] per-subspace
-    * k-means trajectory replayed over the residual frame, per-subspace
+    * 6dp residuals to the coarse centroids, [[subspaceKmeansCtes]]
+    * replayed over the residual frame (prefix `r`), per-subspace
     * exact reconstruction norms `||cent_sub + r̂_sub||²` summed in sub
     * order, and the composed floor-4dp cut over
     * `(q·cent + q·r̂) / (sqrt(q_nsq)·sqrt(x_nsq))`. Expects
@@ -2099,51 +1956,14 @@ object Pipeline {
   private def residualIvfPqCtes(m: Int, ksub: Int, iters: Int,
                                 nProbe: Int): String = {
     val dsub = 64 / m
-    def asg(name: String, centName: String) =
-      s"""$name AS (SELECT vec_id, sub, cid FROM (
-           SELECT s.vec_id, s.sub, p.cid,
-             row_number() OVER (PARTITION BY s.vec_id, s.sub
-               ORDER BY round(list_dot_product(p.c, p.c)
-                 - 2 * list_dot_product(s.sv, p.c), 6) ASC, p.cid ASC)
-               AS rn
-           FROM rsube s JOIN $centName p ON p.sub = s.sub) WHERE rn = 1)"""
-    val sb = new StringBuilder
-    sb ++= s"""probes AS (SELECT query_id, cid FROM probes_ranked
+    s"""probes AS (SELECT query_id, cid FROM probes_ranked
                   WHERE rn <= $nProbe),
        remb AS (SELECT e.vec_id, a.cid,
                   list_transform(range(1, 65),
                     i -> round(e.e[i] - c.c[i], 6)) AS e
                 FROM emb e JOIN assign a USING (vec_id)
                 JOIN cent c ON c.cid = a.cid),
-       rsube AS (SELECT vec_id, s.sub::INT AS sub,
-                   list_slice(e, s.sub::INT * $dsub + 1,
-                     (s.sub::INT + 1) * $dsub) AS sv
-                 FROM remb CROSS JOIN unnest(range(0, $m)) AS s(sub)),
-       rcent0 AS (SELECT sub, (rn - 1)::INT AS cid,
-                    list_transform(sv, x -> round(x, 6)) AS c
-                  FROM (SELECT sub, sv, row_number() OVER (
-                          PARTITION BY sub ORDER BY vec_id) AS rn
-                        FROM rsube)
-                  WHERE rn <= $ksub)"""
-    for (i <- 1 to iters) {
-      sb ++= s""",
-       ${asg(s"rasg$i", s"rcent${i - 1}")},
-       rsums$i AS (SELECT a.sub, a.cid, d.d AS pos,
-                     sum(s.sv[d.d::INT + 1]) AS sm, count(*) AS n
-                   FROM rasg$i a JOIN rsube s
-                     ON s.vec_id = a.vec_id AND s.sub = a.sub
-                   CROSS JOIN unnest(range(0, $dsub)) AS d(d)
-                   GROUP BY a.sub, a.cid, d.d),
-       rcent$i AS (SELECT sub, cid, list(round(sm / n, 6) ORDER BY pos)
-                     AS c
-                   FROM rsums$i GROUP BY sub, cid)"""
-    }
-    sb ++= s""",
-       rbook AS (SELECT sub,
-                   (row_number() OVER (PARTITION BY sub ORDER BY cid)
-                     - 1)::INT AS cid, c
-                 FROM rcent$iters),
-       ${asg("rasg_f", "rbook")},
+       ${subspaceKmeansCtes("r", "remb", m, ksub, iters)},
        xnp AS (SELECT a.vec_id, a.sub,
                  list_dot_product(
                    list_transform(range(1, $dsub + 1),
@@ -2196,7 +2016,6 @@ object Pipeline {
                      row_number() OVER (PARTITION BY query_id
                        ORDER BY cosine DESC, neighbor_id ASC) AS rn
                    FROM rscored)"""
-    sb.toString
   }
 
   // word-3-gram shingle fragment over an arbitrary (doc_id, text)
@@ -2219,32 +2038,186 @@ object Pipeline {
   private def hash31Sql(c: String): String =
     s"(('0x' || substr(md5($c),1,8))::BIGINT % 2147483647)"
 
-  /** CTE chain: exact n-gram jaccard pairs >= 0.8 (the dd_ngram_pairs
-    * computation) + symmetric edge list + min-label components via
-    * recursive transitive closure — the oracle twin of
-    * Dedup.connectedComponents (which iterates label propagation; both
-    * converge to the component-minimum labeling). */
-  private val CcCtes =
-    s"""sh AS ($ShingleSql),
+  /** Exact word-3-gram jaccard over `rel(doc_id, text)`, the
+    * dd_ngram_pairs computation every text near-dup oracle builds on:
+    * shingle sets `sh`, their `sizes`, pairwise shared counts `inter`,
+    * and `jpairs(id_a, id_b, jaccard)`, the pairs (id_a < id_b) at
+    * jaccard >= 0.8. */
+  private def jaccardCtes(rel: String): String =
+    s"""sh AS (${shingleSqlFrom(rel)}),
        sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
        inter AS (
          SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
          FROM sh a JOIN sh b
            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
          GROUP BY 1, 2),
-       pairs AS (
-         SELECT id_a, id_b FROM inter
+       jpairs AS (
+         SELECT id_a, id_b,
+           i::DOUBLE / (sa.set_size + sb.set_size - i) AS jaccard
+         FROM inter
          JOIN sizes sa ON sa.doc_id = id_a
          JOIN sizes sb ON sb.doc_id = id_b
-         WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8),
-       edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-                 UNION SELECT id_b, id_a FROM pairs),
+         WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8)"""
+
+  /** Min-label components of the undirected pair relation
+    * `pairs(id_a, id_b)` via recursive transitive closure:
+    * `labels(doc_id, cluster)` for every paired doc — the oracle twin of
+    * Dedup.connectedComponents (which iterates label propagation; both
+    * converge to the component-minimum labeling). Needs WITH RECURSIVE. */
+  private def minLabelCtes(pairs: String): String =
+    s"""edges AS (SELECT id_a AS a, id_b AS b FROM $pairs
+                 UNION SELECT id_b, id_a FROM $pairs),
        reach(a, b) AS (
          SELECT a, a FROM (SELECT DISTINCT a FROM edges)
          UNION
          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
        labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
                   GROUP BY a)"""
+
+  /** Keep-first-exact survivors of `rel(doc_id)` under [[minLabelCtes]]:
+    * every doc that is its component's minimum or has no pair. */
+  private def componentMinSql(rel: String): String =
+    s"""SELECT doc_id FROM $rel
+       WHERE doc_id NOT IN
+         (SELECT doc_id FROM labels WHERE doc_id != cluster)
+       ORDER BY doc_id"""
+
+  /** Jaccard pairs of the documents table and their components. */
+  private val CcCtes =
+    s"""${jaccardCtes("documents")},
+       ${minLabelCtes("jpairs")}"""
+
+  /** The image dedup rig's dhashes rebuilt CLOSED-FORM from doc_id (the
+    * [[dedupPng]] construction): `d(doc_id, g)` for doc_id < 1000, the
+    * 63 planted gradient `bits` (rule (g*131 + j*37) % 97 < 41, bit
+    * doc_id % 63 flipped when doc_id % 3 = 0), and `dh(doc_id, dhash)`. */
+  private val ImageFpCtes =
+    """d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
+               FROM documents WHERE doc_id < 1000),
+         bits AS (SELECT d.doc_id, j.j,
+             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
+                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
+                            THEN 1 ELSE 0 END)
+                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
+                        THEN 1 ELSE 0 END)
+             END::BIGINT AS bit
+           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
+                FROM bits GROUP BY doc_id)"""
+
+  /** The audio rig's envelope hashes rebuilt closed-form (the
+    * [[envelopeWav]] construction): the +-150 steps are strictly
+    * monotone and the walk stays positive (|sample| == amplitude), so
+    * the hash IS the planted bits — rule (g*113 + j*41) % 89 < 37, bit
+    * doc_id % 63 flipped when doc_id % 3 = 1 — as `fp(doc_id, ehash)`. */
+  private val AudioFpCtes =
+    """d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
+               FROM documents WHERE doc_id < 1000),
+         bits AS (SELECT d.doc_id, j.j,
+             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
+                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
+                            THEN 1 ELSE 0 END)
+                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
+                        THEN 1 ELSE 0 END)
+             END::BIGINT AS bit
+           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
+                FROM bits GROUP BY doc_id)"""
+
+  /** The video rig's frame fingerprints rebuilt closed-form per
+    * (doc_id, frame seed) (the [[frameAvi]] construction), then the
+    * set-jaccard join replayed as `vpairs(id_a, id_b, n_shared,
+    * jaccard)` at jaccard >= 0.5. The stop-frame prune
+    * (maxDocFreq = 60) is replayed too: join sides exclude frames with
+    * doc-freq > 60, set sizes stay unpruned — the exact semantics
+    * videoDedupPairs implements. */
+  private val VideoFpCtes =
+    """d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
+               FROM documents WHERE doc_id < 400),
+         fr AS (SELECT d.doc_id,
+                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
+                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
+                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
+         fb AS (SELECT doc_id, s, j.j,
+                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
+                   THEN 1 ELSE 0 END)::BIGINT AS bit
+                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
+         fh AS (SELECT DISTINCT doc_id, dhash FROM (
+                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
+                  FROM fb GROUP BY doc_id, s)),
+         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
+         stopf AS (SELECT dhash FROM fh GROUP BY dhash
+                   HAVING count(*) > 60),
+         fhp AS (SELECT doc_id, dhash FROM fh
+                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
+         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                  count(*)::BIGINT AS n_shared
+                FROM fhp a JOIN fhp b
+                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
+                GROUP BY a.doc_id, b.doc_id),
+         vpairs AS (SELECT p.id_a, p.id_b, p.n_shared,
+                      round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared),
+                        4) AS jaccard
+                    FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
+                    JOIN sz sb ON sb.doc_id = p.id_b
+                    WHERE round(p.n_shared::DOUBLE
+                        / (sa.n + sb.n - p.n_shared), 4) >= 0.5)"""
+
+  /** The sk_hll oracles' two keyed sets, one `what` each: the corpus
+    * vocabulary (linear-counting branch) and the doc-id set (raw
+    * harmonic branch). */
+  private val HllKeyedCte =
+    """keyed AS (
+           SELECT 'vocab' AS what,
+             unnest(string_split_regex(trim(text), '\s+')) AS k
+           FROM documents
+           UNION ALL
+           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
+           FROM documents)"""
+
+  /** The HLL estimate tail of the sk_hll oracles (m = 512) over
+    * `agg(what, present, sp)`: linear counting or the raw harmonic
+    * estimate, joined to the exact distinct count of each keyed set. A
+    * set with no rows has no `agg` row, so it reports nothing. */
+  private val HllEstimateSql =
+    """est AS (
+           SELECT what, (512 - present) AS v_zero,
+             sp + (512 - present) AS sum_inv,
+             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
+                         / (sp + (512 - present)) <= 2.5 * 512
+                       AND present < 512
+                  THEN 512 * ln(512.0 / (512 - present))
+                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
+                         / (sp + (512 - present)) END AS e
+           FROM agg),
+         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
+               FROM keyed GROUP BY what)
+         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
+           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
+           exact_distinct::BIGINT AS exact_distinct,
+           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
+             AS err_pct
+         FROM est JOIN x USING (what) ORDER BY what"""
+
+  /** The as-of oracles' sides: events with µs timestamps `e`, purchases
+    * `p`, and views `v` made unique per (user, us) — [[asofSides]]. */
+  private val AsofCtes =
+    """e AS (SELECT event_id, user_id, event_type, value,
+             epoch_ns(ts) // 1000 AS us
+           FROM events),
+         p AS (SELECT user_id, event_id, us FROM e
+               WHERE event_type = 'purchase'),
+         v AS (SELECT user_id, us, max(value) AS view_value FROM e
+               WHERE event_type = 'view' GROUP BY 1, 2)"""
+
+  /** DuckDB's native ASOF join of purchases to views, `cmp` being `>=`
+    * (backward: latest view at or before) or `<=` (forward). */
+  private def asofOracleSql(cmp: String): String =
+    s"""WITH $AsofCtes
+       SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
+       FROM p ASOF LEFT JOIN v
+         ON p.user_id = v.user_id AND p.us $cmp v.us
+       ORDER BY p.event_id"""
 
   /** Shared IVF CTE base: label centroids (rounded 6dp), nearest-centroid
     * assignment, and the RANKED probe list (rn kept so callers can slice
@@ -2288,16 +2261,110 @@ object Pipeline {
                           ORDER BY cos DESC, neighbor_id ASC) AS rn
                       FROM ivf_scored)"""
 
-  /** Minhash oracle: same universal-hash coefficients (embedded as SQL
-    * literals from Dedup.hashCoeffs), same band bucketing, same signature-
-    * agreement estimate. */
-  private def minhashOracleSql(numHashes: Int, bands: Int, seed: Long,
-                               threshold: Double): String = {
+  /** Recall oracles' shared tail over `emb` (the caller's chain defines
+    * it): `brute`, the exact cosine top-5 of every query vector
+    * (`queryFilter` restricts the query side, as a `WHERE` on `q`), then
+    * recall@5 of `found(query_id, neighbor_id)` grouped by `key` and
+    * reported as `keyName`. `rows` and `on` widen the brute rows before
+    * the join — how [[sweepRecallSql]] adds its probe level. */
+  private def recallSql(found: String, key: String, keyName: String,
+                        queryFilter: String = "", rows: String = "brute b",
+                        on: String = ""): String =
+    s"""${cosineRankCtes("b", "emb", "e", queryFilter)},
+       brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
+       SELECT $key AS $keyName, count(*)::BIGINT AS k,
+         sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
+           AS n_hit,
+         round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
+           END)::DOUBLE / count(*), 4) AS recall
+       FROM $rows LEFT JOIN $found l
+         ON ${on}l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+       GROUP BY $key ORDER BY $keyName"""
+
+  /** `${name}_ranked(query_id, neighbor_id, cos, rn)`: every vector of
+    * `rel` ranked by exact cosine of its `v` column to each query vector
+    * (`queryFilter` restricts the query side), id tie-break — the
+    * bruteForceTopK twin. */
+  private def cosineRankCtes(name: String, rel: String, v: String,
+                             queryFilter: String = ""): String =
+    s"""${name}_scored AS (SELECT q.vec_id AS query_id,
+                        c.vec_id AS neighbor_id,
+                        list_cosine_similarity(q.$v, c.$v) AS cos
+                      FROM $rel q JOIN $rel c ON c.vec_id != q.vec_id
+                      $queryFilter),
+       ${name}_ranked AS (SELECT query_id, neighbor_id, cos,
+                        row_number() OVER (PARTITION BY query_id
+                          ORDER BY cos DESC, neighbor_id ASC) AS rn
+                      FROM ${name}_scored)"""
+
+  /** The query side of every probed-index oracle: vec_id < 8, as the
+    * Spark queries' `e.filter(col("vec_id") < 8)`. */
+  private val ProbeQueries = "WHERE q.vec_id < 8"
+
+  /** The recall sweep's probe levels ([[SweepLevels]]) as `sweep`, and
+    * `sweep_cand(n_probe, query_id, neighbor_id)`: every level's IVF
+    * candidates from the ranked probe list ([[ivfBaseCtes]]). */
+  private val SweepCtes =
+    s"""sweep AS (SELECT unnest(${SweepLevels.mkString("[", ", ", "]")})
+                   AS n_probe),
+       sweep_cand AS (SELECT DISTINCT s.n_probe, p.query_id,
+                        a.vec_id AS neighbor_id
+                      FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
+                      JOIN assign a ON a.cid = p.cid
+                      WHERE a.vec_id != p.query_id)"""
+
+  /** Recall@5 per probe level: `scored(n_probe, query_id, neighbor_id,
+    * <score>)` is cut to each level's top 5 by `score` (id tie-break)
+    * and checked against the exact top-5 of the 8 probe queries. */
+  private def sweepRecallSql(scored: String, score: String): String =
+    s"""lvl_ranked AS (SELECT n_probe, query_id, neighbor_id,
+                       row_number() OVER (PARTITION BY n_probe, query_id
+                         ORDER BY $score DESC, neighbor_id ASC) AS rn
+                     FROM $scored),
+       lvl_top AS (SELECT n_probe, query_id, neighbor_id FROM lvl_ranked
+                   WHERE rn <= 5),
+       ${recallSql("lvl_top", "s.n_probe::BIGINT", "n_probe", ProbeQueries,
+         rows = "sweep s CROSS JOIN brute b", on = "l.n_probe = s.n_probe AND ")}"""
+
+  /** The shortlist re-rank: the top [[PqShortlist]] rows of an ADC
+    * ranking `ranked(query_id, neighbor_id, rn)` re-scored by exact
+    * cosine, cut to `reranked(query_id, neighbor_id)`, the top 5. */
+  private def rerankCtes(ranked: String): String =
+    s"""rr_cand AS (SELECT query_id, neighbor_id FROM $ranked
+                   WHERE rn <= $PqShortlist),
+       rr_scored AS (SELECT r.query_id, r.neighbor_id,
+                       list_cosine_similarity(qe.e, ce.e) AS cos
+                     FROM rr_cand r JOIN emb qe ON qe.vec_id = r.query_id
+                     JOIN emb ce ON ce.vec_id = r.neighbor_id),
+       rr_ranked AS (SELECT query_id, neighbor_id,
+                       row_number() OVER (PARTITION BY query_id
+                         ORDER BY cos DESC, neighbor_id ASC) AS rn
+                     FROM rr_scored),
+       reranked AS (SELECT query_id, neighbor_id FROM rr_ranked
+                    WHERE rn <= 5)"""
+
+  private val PqTop5Sql =
+    s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
+       SELECT query_id, neighbor_id, cosine
+       FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""
+
+  private val ResidualTop5Sql =
+    s"""WITH $ivfBaseCtes,
+       ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
+       SELECT query_id, neighbor_id, cosine
+       FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id"""
+
+  /** Minhash signature CTEs over the documents table: same
+    * universal-hash coefficients (embedded as SQL literals from
+    * Dedup.hashCoeffs) and band bucketing as the Spark side, ending at
+    * `sig(doc_id, sig)` and `bands(doc_id, band, bucket)`. */
+  private def minhashSigCtes(numHashes: Int, bands: Int,
+                             seed: Long): String = {
     val coeffs = Dedup.hashCoeffs(numHashes, seed)
     val aList = coeffs.map(_._1).mkString("[", ",", "]")
     val bList = coeffs.map(_._2).mkString("[", ",", "]")
     val rpb = numHashes / bands
-    s"""WITH sh AS ($ShingleSql),
+    s"""sh AS ($ShingleSql),
        hs AS (SELECT doc_id, ${hash31Sql("shingle")} AS h FROM sh),
        m AS (SELECT doc_id, i.i AS i,
                min(($aList[i.i+1] * h + $bList[i.i+1]) % 2147483647) AS mv
@@ -2308,48 +2375,42 @@ object Pipeline {
        bands AS (SELECT doc_id, b.b AS band,
                    md5(array_to_string(sig[b.b*$rpb+1 : b.b*$rpb+$rpb], ','))
                      AS bucket
-                 FROM sig CROSS JOIN unnest(range(0,$bands)) AS b(b)),
+                 FROM sig CROSS JOIN unnest(range(0,$bands)) AS b(b))"""
+  }
+
+  /** Signature-agreement estimate of the pair (sa.sig, sb.sig). */
+  private def sigAgreeSql(numHashes: Int): String =
+    s"""len(list_filter(range(0,$numHashes),
+           i -> sa.sig[i+1] = sb.sig[i+1]))::DOUBLE / $numHashes"""
+
+  /** Minhash oracle: [[minhashSigCtes]], bucket-collision candidates,
+    * and the signature-agreement estimate. */
+  private def minhashOracleSql(numHashes: Int, bands: Int, seed: Long,
+                               threshold: Double): String =
+    s"""WITH ${minhashSigCtes(numHashes, bands, seed)},
        cand AS (SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
                 FROM bands l JOIN bands r
                   ON l.band = r.band AND l.bucket = r.bucket
                      AND l.doc_id < r.doc_id),
-       est AS (SELECT id_a, id_b,
-                 len(list_filter(range(0,$numHashes),
-                   i -> sa.sig[i+1] = sb.sig[i+1]))::DOUBLE / $numHashes AS ej
+       est AS (SELECT id_a, id_b, ${sigAgreeSql(numHashes)} AS ej
                FROM cand
                JOIN sig sa ON sa.doc_id = cand.id_a
                JOIN sig sb ON sb.doc_id = cand.id_b)
        SELECT id_a, id_b, round(ej, 4) AS est_jaccard
        FROM est WHERE ej >= $threshold ORDER BY id_a, id_b"""
-  }
 
   /** Incremental-dedup oracle: the batch (top 1/5 of doc_ids) against the
     * corpus (bottom 4/5). The split point is PROPORTIONAL —
     * (max(doc_id)+1)*4/5 — so the daily-ingest shape (small batch, large
     * landed corpus) holds at every scale factor; a fixed id cut would
-    * invert it at sf0.1 (batch 4600 vs corpus 400). Same signature/band
-    * CTEs as [[minhashOracleSql]]; exact stage by content md5, near stage
-    * by bucket-collision candidates vs corpus (any) and vs smaller-id
-    * exact-surviving batch docs (greedy keep-first). */
+    * invert it at sf0.1 (batch 4600 vs corpus 400). [[minhashSigCtes]];
+    * exact stage by content md5, near stage by bucket-collision
+    * candidates vs corpus (any) and vs smaller-id exact-surviving batch
+    * docs (greedy keep-first). */
   private def incrementalOracleSql(numHashes: Int, bands: Int, seed: Long,
                                    threshold: Double): String = {
     val splitId = "(SELECT (max(doc_id)+1)*4//5 FROM documents)"
-    val coeffs = Dedup.hashCoeffs(numHashes, seed)
-    val aList = coeffs.map(_._1).mkString("[", ",", "]")
-    val bList = coeffs.map(_._2).mkString("[", ",", "]")
-    val rpb = numHashes / bands
-    s"""WITH sh AS ($ShingleSql),
-       hs AS (SELECT doc_id, ${hash31Sql("shingle")} AS h FROM sh),
-       m AS (SELECT doc_id, i.i AS i,
-               min(($aList[i.i+1] * h + $bList[i.i+1]) % 2147483647) AS mv
-             FROM hs CROSS JOIN unnest(range(0,$numHashes)) AS i(i)
-             GROUP BY doc_id, i.i),
-       sig AS (SELECT doc_id, list(mv ORDER BY i) AS sig FROM m
-               GROUP BY doc_id),
-       bands AS (SELECT doc_id, b.b AS band,
-                   md5(array_to_string(sig[b.b*$rpb+1 : b.b*$rpb+$rpb], ','))
-                     AS bucket
-                 FROM sig CROSS JOIN unnest(range(0,$bands)) AS b(b)),
+    s"""WITH ${minhashSigCtes(numHashes, bands, seed)},
        bexact AS (
          SELECT d.doc_id FROM documents d
          WHERE d.doc_id >= $splitId
@@ -2368,9 +2429,7 @@ object Pipeline {
          SELECT DISTINCT id_b AS doc_id FROM candc
          JOIN sig sa ON sa.doc_id = candc.id_b
          JOIN sig sb ON sb.doc_id = candc.id_c
-         WHERE len(list_filter(range(0,$numHashes),
-           i -> sa.sig[i+1] = sb.sig[i+1]))::DOUBLE / $numHashes
-             >= $threshold),
+         WHERE ${sigAgreeSql(numHashes)} >= $threshold),
        candb AS (
          SELECT DISTINCT l.doc_id AS id_b, r.doc_id AS id_a
          FROM bands l
@@ -2382,9 +2441,7 @@ object Pipeline {
          SELECT DISTINCT id_b AS doc_id FROM candb
          JOIN sig sa ON sa.doc_id = candb.id_b
          JOIN sig sb ON sb.doc_id = candb.id_a
-         WHERE len(list_filter(range(0,$numHashes),
-           i -> sa.sig[i+1] = sb.sig[i+1]))::DOUBLE / $numHashes
-             >= $threshold)
+         WHERE ${sigAgreeSql(numHashes)} >= $threshold)
        SELECT doc_id FROM bexact
        WHERE doc_id NOT IN (SELECT doc_id FROM dropc)
          AND doc_id NOT IN (SELECT doc_id FROM dropb)
@@ -2716,16 +2773,17 @@ object Pipeline {
        FROM cs LEFT JOIN dropped d ON d.vec_id = cs.vec_id
        ORDER BY cs.vec_id"""
 
-  /** DuckDB unrolling of [[TextAnalysis.qualityMetrics]]/score — shared
-    * by the `txt_quality` oracle and every oracle that ranks or gates on
-    * the quality score (`ds_cap_source`), so "quality" can never mean
-    * two different formulas in two oracles. */
-  private val QualityBaseCtes =
-    """m AS (
+  /** DuckDB unrolling of [[TextAnalysis.qualityMetrics]]/score over
+    * `rel(doc_id, text)`: `m` tokenizes, `base` holds the metrics and
+    * `qual(doc_id, quality)` the score. Every oracle that reports, ranks
+    * or gates on quality reads these, so "quality" can never mean two
+    * different formulas in two oracles. */
+  private def qualityCtes(rel: String): String =
+    raw"""m AS (
            SELECT doc_id, text,
              string_split_regex(trim(text), '\s+') AS toks,
              length(text) AS len
-           FROM documents),
+           FROM $rel),
          base AS (
            SELECT doc_id,
              len(toks)::BIGINT AS n_tokens,
@@ -2739,11 +2797,92 @@ object Pipeline {
                greatest(len, 1), 4) AS alpha_ratio,
              (CASE WHEN len(toks) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.3 END)
                AS length_ok
-           FROM m)"""
+           FROM m),
+         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base)"""
 
   private val QualityExprSql =
     """floor((length_ok * 0.4 + least(stopword_ratio * 5.0, 1.0) * 0.3
              + alpha_ratio * 0.3) * 10000 + 0.5) / 10000"""
+
+  /** DuckDB twin of [[TextAnalysis.langId]] over `rel(doc_id, text)`:
+    * per-language stop-word shares `ls`, then the argmax (ties to the
+    * earlier language, 'und' when no stop word hits) as
+    * `lang(doc_id, lang_pred)`. */
+  private def langIdCtes(rel: String): String =
+    raw"""lt AS (SELECT doc_id,
+                  string_split_regex(trim(lower(text)), '\s+') AS ltoks
+                FROM $rel),
+         ls AS (
+           SELECT doc_id,
+             len(list_filter(ltoks, x -> list_contains(
+               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_de,
+             len(list_filter(ltoks, x -> list_contains(
+               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_en,
+             len(list_filter(ltoks, x -> list_contains(
+               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_es,
+             len(list_filter(ltoks, x -> list_contains(
+               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_fr,
+             len(list_filter(ltoks, x -> list_contains(
+               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
+               / greatest(len(ltoks), 1) AS s_zh
+           FROM lt),
+         lang AS (
+           SELECT doc_id,
+             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
+                  WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
+                  WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
+                  WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
+                  WHEN s_fr >= s_zh THEN 'fr'
+                  ELSE 'zh' END AS lang_pred
+           FROM ls)"""
+
+  /** DuckDB twin of [[Dedup.repeatedSpans]] (n = 8, minDocs = 2): token
+    * arrays `toks`, hashed 8-grams `grams`, the grams seen in >= 2 docs
+    * `rep`, their positions `hits`, gaps-and-islands groups `isl`, and
+    * the merged spans `sp(doc_id, span_start, span_end)`. */
+  private val SpanCtes =
+    """toks AS (
+           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
+           FROM documents),
+         grams AS (
+           SELECT doc_id, i.i AS pos,
+             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
+           FROM toks
+           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
+         rep AS (
+           SELECT g FROM grams GROUP BY g
+           HAVING count(DISTINCT doc_id) >= 2),
+         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
+         isl AS (
+           SELECT doc_id, pos,
+             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+               AS grp
+           FROM hits),
+         sp AS (
+           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
+           FROM isl GROUP BY doc_id, grp)"""
+
+  /** DuckDB twin of [[Dedup.cutSpans]]: every doc rebuilt from the tokens
+    * outside the spans of `cut(doc_id, span_start, span_end)`, canonical
+    * single-space joins, an empty string for a fully covered doc. */
+  private def spanCutSql(cut: String): String =
+    s"""kept AS (
+           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
+           FROM toks t
+           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
+           WHERE NOT EXISTS (SELECT 1 FROM $cut
+             WHERE $cut.doc_id = t.doc_id
+               AND i.i BETWEEN $cut.span_start AND $cut.span_end)),
+         rebuilt AS (
+           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
+           FROM kept GROUP BY doc_id)
+         SELECT d.doc_id, coalesce(r.text, '') AS text
+         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
+         ORDER BY d.doc_id"""
 
   private def embedLshOracleSql(tables: Int, bits: Int,
                                 threshold: Double): String =
@@ -2790,35 +2929,13 @@ object Pipeline {
            count(*) AS dup_count
          FROM documents GROUP BY 1 ORDER BY doc_id""",
     "dd_ngram_pairs" ->
-      s"""WITH sh AS ($ShingleSql),
-         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2)
-         SELECT id_a, id_b,
-           round(i::DOUBLE / (sa.set_size + sb.set_size - i), 4) AS jaccard
-         FROM inter
-         JOIN sizes sa ON sa.doc_id = id_a
-         JOIN sizes sb ON sb.doc_id = id_b
-         WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8
+      s"""WITH ${jaccardCtes("documents")}
+         SELECT id_a, id_b, round(jaccard, 4) AS jaccard FROM jpairs
          ORDER BY id_a, id_b""",
     "dd_survivors" ->
-      s"""WITH sh AS ($ShingleSql),
-         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         dups AS (
-           SELECT DISTINCT id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8)
+      s"""WITH ${jaccardCtes("documents")}
          SELECT doc_id FROM documents
-         WHERE doc_id NOT IN (SELECT id_b FROM dups)
+         WHERE doc_id NOT IN (SELECT id_b FROM jpairs)
          ORDER BY doc_id""",
     "dd_clusters" ->
       s"""WITH RECURSIVE $CcCtes
@@ -2827,10 +2944,7 @@ object Pipeline {
          ORDER BY d.doc_id""",
     "dd_survivors_exact" ->
       s"""WITH RECURSIVE $CcCtes
-         SELECT doc_id FROM documents
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
+         ${componentMinSql("documents")}""",
     "dd_survivors_best" ->
       s"""WITH RECURSIVE $CcCtes
          SELECT doc_id FROM (
@@ -2909,83 +3023,15 @@ object Pipeline {
          SELECT query_id, neighbor_id, round(cos, 4) AS cosine
          FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id""",
     "dd_spans" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         grams AS (
-           SELECT doc_id, i.i AS pos,
-             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
-           FROM toks
-           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
-         rep AS (
-           SELECT g FROM grams GROUP BY g
-           HAVING count(DISTINCT doc_id) >= 2),
-         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
-         isl AS (
-           SELECT doc_id, pos,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-           FROM hits)
+      s"""WITH $SpanCtes
          SELECT doc_id, min(pos)::BIGINT AS span_start,
            (max(pos) + 8 - 1)::BIGINT AS span_end,
            count(*)::BIGINT AS n_grams
          FROM isl GROUP BY doc_id, grp
          ORDER BY doc_id, span_start""",
-    "dd_spans_cut" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         grams AS (
-           SELECT doc_id, i.i AS pos,
-             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
-           FROM toks
-           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
-         rep AS (
-           SELECT g FROM grams GROUP BY g
-           HAVING count(DISTINCT doc_id) >= 2),
-         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
-         isl AS (
-           SELECT doc_id, pos,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-           FROM hits),
-         sp AS (
-           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
-           FROM isl GROUP BY doc_id, grp),
-         kept AS (
-           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
-           FROM toks t
-           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
-           WHERE NOT EXISTS (SELECT 1 FROM sp
-             WHERE sp.doc_id = t.doc_id
-               AND i.i BETWEEN sp.span_start AND sp.span_end)),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-           FROM kept GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(r.text, '') AS text
-         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
-         ORDER BY d.doc_id""",
+    "dd_spans_cut" -> s"WITH $SpanCtes, ${spanCutSql("sp")}",
     "dd_spans_keep1" ->
-      """WITH toks AS (
-           SELECT doc_id, string_split_regex(trim(text), '\s+') AS tk
-           FROM documents),
-         grams AS (
-           SELECT doc_id, i.i AS pos,
-             md5(array_to_string(tk[(i.i + 1):(i.i + 8)], ' ')) AS g
-           FROM toks
-           CROSS JOIN unnest(range(0, greatest(0, len(tk) - 8 + 1))) AS i(i)),
-         rep AS (
-           SELECT g FROM grams GROUP BY g
-           HAVING count(DISTINCT doc_id) >= 2),
-         hits AS (SELECT doc_id, pos FROM grams JOIN rep USING (g)),
-         isl AS (
-           SELECT doc_id, pos,
-             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-               AS grp
-           FROM hits),
-         sp AS (
-           SELECT doc_id, min(pos) AS span_start, max(pos) + 8 - 1 AS span_end
-           FROM isl GROUP BY doc_id, grp),
+      s"""WITH $SpanCtes,
          spt AS (
            SELECT sp.doc_id, sp.span_start, sp.span_end,
              array_to_string(t.tk[(sp.span_start + 1):(sp.span_end + 1)], ' ')
@@ -2998,19 +3044,7 @@ object Pipeline {
                  ORDER BY doc_id, span_start) AS rn
              FROM spt)
            WHERE rn > 1),
-         kept AS (
-           SELECT t.doc_id, i.i AS pos, t.tk[i.i + 1] AS tok
-           FROM toks t
-           CROSS JOIN unnest(range(0, len(t.tk))) AS i(i)
-           WHERE NOT EXISTS (SELECT 1 FROM cut
-             WHERE cut.doc_id = t.doc_id
-               AND i.i BETWEEN cut.span_start AND cut.span_end)),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS text
-           FROM kept GROUP BY doc_id)
-         SELECT d.doc_id, coalesce(r.text, '') AS text
-         FROM documents d LEFT JOIN rebuilt r USING (doc_id)
-         ORDER BY d.doc_id""",
+         ${spanCutSql("cut")}""",
     "ds_mix" ->
       """SELECT doc_id, lang FROM documents
          WHERE (('0x' || substr(md5('mix:' || doc_id::VARCHAR),1,8))
@@ -3050,8 +3084,7 @@ object Pipeline {
            CAST(sum(length(text)) AS BIGINT) AS sum_text_len
          FROM merged GROUP BY lang ORDER BY lang""",
     "ds_cap_source" ->
-      s"""WITH $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+      s"""WITH ${qualityCtes("documents")},
          ranked AS (SELECT d.doc_id, d.source, q.quality,
              row_number() OVER (PARTITION BY d.source
                ORDER BY q.quality DESC, d.doc_id ASC) AS rn
@@ -3059,8 +3092,7 @@ object Pipeline {
          SELECT doc_id, source, quality FROM ranked
          WHERE rn <= 15 ORDER BY doc_id""",
     "ds_gate_quantile" ->
-      s"""WITH $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+      s"""WITH ${qualityCtes("documents")},
          ranked AS (SELECT d.doc_id, d.lang,
              percent_rank() OVER (PARTITION BY d.lang
                ORDER BY q.quality ASC, d.doc_id ASC) AS pr
@@ -3068,8 +3100,7 @@ object Pipeline {
          SELECT doc_id, lang FROM ranked
          WHERE pr >= 0.25 ORDER BY doc_id""",
     "ds_token_budget" ->
-      s"""WITH $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+      s"""WITH ${qualityCtes("documents")},
          ranked AS (SELECT d.doc_id, d.lang, d.n_chars,
              coalesce(sum(d.n_chars) OVER (PARTITION BY d.lang
                ORDER BY q.quality DESC, d.doc_id ASC
@@ -3092,59 +3123,15 @@ object Pipeline {
     "sim_recall_ivf" ->
       s"""WITH ${ivfCtes(nProbe = 3)},
          ivf AS (SELECT query_id, neighbor_id FROM ivf_ranked WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT b.query_id, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN ivf l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id ORDER BY b.query_id""",
+         ${recallSql("ivf", "b.query_id", "query_id", ProbeQueries)}""",
     "sim_recall_sweep" ->
       s"""WITH $ivfBaseCtes,
-         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
-         cand AS (SELECT DISTINCT s.n_probe, p.query_id,
-                    a.vec_id AS neighbor_id
-                  FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
-                  JOIN assign a ON a.cid = p.cid
-                  WHERE a.vec_id != p.query_id),
+         $SweepCtes,
          sc AS (SELECT n_probe, query_id, neighbor_id,
                   list_cosine_similarity(eq.e, ec.e) AS cos
-                FROM cand JOIN emb eq ON eq.vec_id = cand.query_id
-                          JOIN emb ec ON ec.vec_id = cand.neighbor_id),
-         rk AS (SELECT n_probe, query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY n_probe, query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM sc),
-         ivf AS (SELECT n_probe, query_id, neighbor_id FROM rk
-                 WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM sweep s CROSS JOIN brute b
-         LEFT JOIN ivf l ON l.n_probe = s.n_probe
-           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY s.n_probe ORDER BY n_probe""",
+                FROM sweep_cand c JOIN emb eq ON eq.vec_id = c.query_id
+                                  JOIN emb ec ON ec.vec_id = c.neighbor_id),
+         ${sweepRecallSql("sc", "cos")}""",
     // the IVF-PQ sweep reuses the full-pair PQ replay (pscored — the
     // sim_topk_pq oracle's scoring CTE, no injected cand) and slices it
     // per probe level: candidates from probes_ranked at rn <= n_probe,
@@ -3153,40 +3140,12 @@ object Pipeline {
     "sim_recall_sweep_ivfpq" ->
       s"""WITH $ivfBaseCtes,
          ${pqCtes(PqM, PqKsub, PqIters, emitEmb = false)},
-         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
-         pcand AS (SELECT DISTINCT s.n_probe, p.query_id,
-                     a.vec_id AS neighbor_id
-                   FROM sweep s JOIN probes_ranked p ON p.rn <= s.n_probe
-                   JOIN assign a ON a.cid = p.cid
-                   WHERE a.vec_id != p.query_id),
+         $SweepCtes,
          psel AS (SELECT c.n_probe, sc.query_id, sc.neighbor_id, sc.cosine
-                  FROM pcand c JOIN pscored sc
+                  FROM sweep_cand c JOIN pscored sc
                     ON sc.query_id = c.query_id
                     AND sc.neighbor_id = c.neighbor_id),
-         prk AS (SELECT n_probe, query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY n_probe, query_id
-                     ORDER BY cosine DESC, neighbor_id ASC) AS rn
-                 FROM psel),
-         ipq AS (SELECT n_probe, query_id, neighbor_id FROM prk
-                 WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM sweep s CROSS JOIN brute b
-         LEFT JOIN ipq l ON l.n_probe = s.n_probe
-           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY s.n_probe ORDER BY n_probe""",
+         ${sweepRecallSql("psel", "cosine")}""",
     "dd_minhash_pairs" ->
       minhashOracleSql(numHashes = 64, bands = 16, seed = 42L,
         threshold = 0.7),
@@ -3207,22 +3166,7 @@ object Pipeline {
     "sim_recall" ->
       s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)},
          lsh AS (SELECT query_id, neighbor_id FROM lsh_ranked WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN lsh l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
+         ${recallSql("lsh", "b.query_id % 32", "band")}""",
     "txt_chunks" ->
       """WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\s+')
              AS tk FROM documents WHERE doc_id < 20),
@@ -3317,59 +3261,17 @@ object Pipeline {
     // the batch collapse of streaming ingest: quality+lang gates over
     // the non-landed docs, keep-first (lowest doc_id — arrival order is
     // doc_id-derived) per content hash, anti-probe against the landed
-    // hashes, token accounting. Quality/lang expressions are the
-    // curateDecisionCtes twins over the drop relation.
+    // hashes, token accounting. The gates are curateDecisionCtes'
+    // quality and language CTEs over the drop relation.
     "ds_ingest" ->
-      """WITH landed AS (SELECT DISTINCT md5(text) AS content_hash
+      raw"""WITH landed AS (SELECT DISTINCT md5(text) AS content_hash
              FROM documents WHERE doc_id % 5 = 0),
-         dm AS (SELECT doc_id, text,
-                  string_split_regex(trim(text), '\s+') AS toks,
-                  length(text) AS len
-                FROM documents WHERE doc_id % 5 != 0),
-         qual AS (
-           SELECT doc_id,
-             floor(((CASE WHEN len(toks) BETWEEN 10 AND 10000
-                 THEN 1.0 ELSE 0.3 END) * 0.4
-               + least(round(len(list_filter(toks, x -> list_contains(
-                   ['the','a','an','and','or','of','to','in','is','it','that',
-                    'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
-                 greatest(len(toks), 1), 4) * 5.0, 1.0) * 0.3
-               + round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
-                 greatest(len, 1), 4) * 0.3) * 10000 + 0.5) / 10000 AS quality
-           FROM dm),
-         lt AS (SELECT doc_id,
-                  string_split_regex(trim(lower(text)), '\s+') AS ltoks
-                FROM dm),
-         ls AS (
-           SELECT doc_id,
-             len(list_filter(ltoks, x -> list_contains(
-               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_de,
-             len(list_filter(ltoks, x -> list_contains(
-               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_en,
-             len(list_filter(ltoks, x -> list_contains(
-               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_es,
-             len(list_filter(ltoks, x -> list_contains(
-               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_fr,
-             len(list_filter(ltoks, x -> list_contains(
-               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_zh
-           FROM lt),
-         lang AS (
-           SELECT doc_id,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                  WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-                  WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-                  WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-                  WHEN s_fr >= s_zh THEN 'fr'
-                  ELSE 'zh' END AS lang_pred
-           FROM ls),
+         dm AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 != 0),
+         ${qualityCtes("dm")},
+         ${langIdCtes("dm")},
          gated AS (
-           SELECT m.doc_id, m.text, md5(m.text) AS content_hash
-           FROM dm m JOIN qual q USING (doc_id) JOIN lang l USING (doc_id)
+           SELECT x.doc_id, x.text, md5(x.text) AS content_hash
+           FROM dm x JOIN qual q USING (doc_id) JOIN lang l USING (doc_id)
            WHERE q.quality >= 0.5 AND l.lang_pred = 'en'),
          kept AS (
            SELECT doc_id, text, content_hash FROM (
@@ -3431,101 +3333,26 @@ object Pipeline {
          ORDER BY id_a, id_b""",
     "sim_topk_q8" ->
       s"""WITH $Q8Ctes,
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             list_cosine_similarity(q.qv, c.qv) AS cos
-           FROM qv q JOIN qv c ON c.vec_id != q.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, neighbor_id ASC) AS rn
-           FROM scored)
+         ${cosineRankCtes("q8", "qv", "qv")}
          SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
+         FROM q8_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
     "sim_recall_q8" ->
       s"""WITH $Q8Ctes,
-         q8s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   list_cosine_similarity(q.qv, c.qv) AS cos
-                 FROM qv q JOIN qv c ON c.vec_id != q.vec_id),
-         q8r AS (SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                     ORDER BY cos DESC, neighbor_id ASC) AS rn
-                 FROM q8s),
-         q8 AS (SELECT query_id, neighbor_id FROM q8r WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN q8 l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
-    "sim_topk_pq" ->
-      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
-         SELECT query_id, neighbor_id, cosine
-         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
+         ${cosineRankCtes("q8", "qv", "qv")},
+         q8 AS (SELECT query_id, neighbor_id FROM q8_ranked WHERE rn <= 5),
+         ${recallSql("q8", "b.query_id % 32", "band")}""",
+    "sim_topk_pq" -> PqTop5Sql,
     // identical oracle to sim_topk_pq on purpose: the Spark side's
     // parquet round trip must be value-invisible
-    "sim_topk_pq_idx" ->
-      s"""WITH ${pqCtes(PqM, PqKsub, PqIters)}
-         SELECT query_id, neighbor_id, cosine
-         FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
+    "sim_topk_pq_idx" -> PqTop5Sql,
     "sim_recall_pq" ->
       s"""WITH ${pqCtes(PqM, PqKsub, PqIters)},
          pq5 AS (SELECT query_id, neighbor_id FROM pranked WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN pq5 l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
+         ${recallSql("pq5", "b.query_id % 32", "band")}""",
     "sim_recall_pq_rerank" ->
       s"""WITH ${pqCtes(PqM, PqKsub, PqIters)},
-         rcand AS (SELECT query_id, neighbor_id FROM pranked
-                   WHERE rn <= $PqShortlist),
-         rex AS (SELECT r.query_id, r.neighbor_id,
-                   list_cosine_similarity(qe.e, ce.e) AS cos
-                 FROM rcand r JOIN emb qe ON qe.vec_id = r.query_id
-                 JOIN emb ce ON ce.vec_id = r.neighbor_id),
-         rrank AS (SELECT query_id, neighbor_id,
-                     row_number() OVER (PARTITION BY query_id
-                       ORDER BY cos DESC, neighbor_id ASC) AS rn
-                   FROM rex),
-         pqr AS (SELECT query_id, neighbor_id FROM rrank WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id % 32 AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN pqr l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id % 32 ORDER BY band""",
+         ${rerankCtes("pranked")},
+         ${recallSql("reranked", "b.query_id % 32", "band")}""",
     "sim_topk_ivfpq" ->
       s"""WITH $ivfBaseCtes,
          probes AS (SELECT query_id, cid FROM probes_ranked
@@ -3536,19 +3363,11 @@ object Pipeline {
               WHERE a.vec_id != p.query_id)"""))}
          SELECT query_id, neighbor_id, cosine
          FROM pranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
-    "sim_topk_ivfpq_res" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
-         SELECT query_id, neighbor_id, cosine
-         FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
+    "sim_topk_ivfpq_res" -> ResidualTop5Sql,
     // the incremental-append row's oracle IS the from-scratch residual
     // chain on the full corpus: base+appended codes matching it is the
     // property the row certifies
-    "sim_topk_ivfpq_res_inc" ->
-      s"""WITH $ivfBaseCtes,
-         ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)}
-         SELECT query_id, neighbor_id, cosine
-         FROM rranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
+    "sim_topk_ivfpq_res_inc" -> ResidualTop5Sql,
     // the deletion row's oracle IS the from-scratch residual chain on
     // the full corpus with the candidate space restricted to the
     // SURVIVING (even-id) neighbors before the top-5 cut: cents/books
@@ -3566,34 +3385,8 @@ object Pipeline {
     "sim_recall_ivfpq_res_rerank" ->
       s"""WITH $ivfBaseCtes,
          ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 3)},
-         rcand AS (SELECT query_id, neighbor_id FROM rranked
-                   WHERE rn <= $PqShortlist),
-         rex AS (SELECT r.query_id, r.neighbor_id,
-                   list_cosine_similarity(qe.e, ce.e) AS cos
-                 FROM rcand r JOIN emb qe ON qe.vec_id = r.query_id
-                 JOIN emb ce ON ce.vec_id = r.neighbor_id),
-         rrank2 AS (SELECT query_id, neighbor_id,
-                      row_number() OVER (PARTITION BY query_id
-                        ORDER BY cos DESC, neighbor_id ASC) AS rn
-                    FROM rex),
-         ipqr AS (SELECT query_id, neighbor_id FROM rrank2 WHERE rn <= 5),
-         bs AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                  list_cosine_similarity(q.e, c.e) AS cos
-                FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                WHERE q.vec_id < 8),
-         br AS (SELECT query_id, neighbor_id,
-                  row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos DESC, neighbor_id ASC) AS rn
-                FROM bs),
-         brute AS (SELECT query_id, neighbor_id FROM br WHERE rn <= 5)
-         SELECT b.query_id AS band, count(*) AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM brute b LEFT JOIN ipqr l
-           ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY b.query_id ORDER BY band""",
+         ${rerankCtes("rranked")},
+         ${recallSql("reranked", "b.query_id", "band", ProbeQueries)}""",
     // the sweep runs the residual chain once at the MAX probe level (4
     // — rscored is then a superset of every level's candidates, since
     // a neighbor qualifies at level np iff its coarse cid ranks
@@ -3602,7 +3395,7 @@ object Pipeline {
     "sim_recall_sweep_ivfpq_res" ->
       s"""WITH $ivfBaseCtes,
          ${residualIvfPqCtes(PqM, PqKsub, PqIters, nProbe = 4)},
-         sweep AS (SELECT unnest([1, 2, 4]) AS n_probe),
+         $SweepCtes,
          rsel AS (SELECT s.n_probe, sc.query_id, sc.neighbor_id,
                     sc.cosine
                   FROM rscored sc
@@ -3610,43 +3403,12 @@ object Pipeline {
                   JOIN probes_ranked pr ON pr.query_id = sc.query_id
                     AND pr.cid = rm.cid
                   JOIN sweep s ON pr.rn <= s.n_probe),
-         rk2 AS (SELECT n_probe, query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY n_probe, query_id
-                     ORDER BY cosine DESC, neighbor_id ASC) AS rn
-                 FROM rsel),
-         ipqres AS (SELECT n_probe, query_id, neighbor_id FROM rk2
-                    WHERE rn <= 5),
-         b_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                        list_cosine_similarity(q.e, c.e) AS cos
-                      FROM emb q JOIN emb c ON c.vec_id != q.vec_id
-                      WHERE q.vec_id < 8),
-         b_ranked AS (SELECT query_id, neighbor_id,
-                        row_number() OVER (PARTITION BY query_id
-                          ORDER BY cos DESC, neighbor_id ASC) AS rn
-                      FROM b_scored),
-         brute AS (SELECT query_id, neighbor_id FROM b_ranked WHERE rn <= 5)
-         SELECT s.n_probe::BIGINT AS n_probe, count(*)::BIGINT AS k,
-           sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-             AS n_hit,
-           round(sum(CASE WHEN l.neighbor_id IS NOT NULL THEN 1 ELSE 0
-             END)::DOUBLE / count(*), 4) AS recall
-         FROM sweep s CROSS JOIN brute b
-         LEFT JOIN ipqres l ON l.n_probe = s.n_probe
-           AND l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         GROUP BY s.n_probe ORDER BY n_probe""",
+         ${sweepRecallSql("rsel", "cosine")}""",
     "sim_topk" ->
-      """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         scored AS (
-           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             list_cosine_similarity(q.e, c.e) AS cos
-           FROM v q JOIN v c ON c.vec_id != q.vec_id),
-         ranked AS (
-           SELECT query_id, neighbor_id, cos,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY cos DESC, neighbor_id ASC) AS rn
-           FROM scored)
+      s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         ${cosineRankCtes("c", "v", "e")}
          SELECT query_id, neighbor_id, round(cos, 4) AS cosine
-         FROM ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
+         FROM c_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
     "sim_centroids" ->
       """SELECT label, count(*) AS n,
            round(sum(embedding[1]::DOUBLE) / count(*), 6) AS c1,
@@ -3701,13 +3463,7 @@ object Pipeline {
            doc_id < 100 AS in_set
          FROM hits GROUP BY doc_id ORDER BY doc_id""",
     "sk_hll" ->
-      """WITH keyed AS (
-           SELECT 'vocab' AS what,
-             unnest(string_split_regex(trim(text), '\s+')) AS k
-           FROM documents
-           UNION ALL
-           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
-           FROM documents),
+      s"""WITH $HllKeyedCte,
          h AS (
            SELECT what,
              ('0x' || substr(md5('hl:r:' || k),1,8))::BIGINT % 512
@@ -3723,24 +3479,7 @@ object Pipeline {
            SELECT what, count(*) AS present,
              coalesce(sum(1.0 / (1::BIGINT << maxrho)), 0.0) AS sp
            FROM r GROUP BY what),
-         est AS (
-           SELECT what, (512 - present) AS v_zero,
-             sp + (512 - present) AS sum_inv,
-             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) <= 2.5 * 512
-                       AND present < 512
-                  THEN 512 * ln(512.0 / (512 - present))
-                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) END AS e
-           FROM agg),
-         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
-               FROM keyed GROUP BY what)
-         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
-           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
-           exact_distinct::BIGINT AS exact_distinct,
-           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
-             AS err_pct
-         FROM est JOIN x USING (what) ORDER BY what""",
+         $HllEstimateSql""",
     // the 64-bit twin replayed from the md5 two-slice: hi/lo are the
     // first/second 8 hex digits of md5('hl64:'||k); register = low 9
     // bits of the 64-bit value (= lo % 512), rho = 65 - bitlength(h)
@@ -3750,13 +3489,7 @@ object Pipeline {
     // mirroring hllEstimate's decimal-sum -> double -> /2^56 chain, so
     // sum_inv is the same double bit pattern in both engines
     "sk_hll64" ->
-      """WITH keyed AS (
-           SELECT 'vocab' AS what,
-             unnest(string_split_regex(trim(text), '\s+')) AS k
-           FROM documents
-           UNION ALL
-           SELECT 'doc_ids' AS what, doc_id::VARCHAR AS k
-           FROM documents),
+      s"""WITH $HllKeyedCte,
          h AS (
            SELECT what,
              ('0x' || substr(md5('hl64:' || k),1,8))::BIGINT AS hi,
@@ -3777,24 +3510,7 @@ object Pipeline {
              sum(1::BIGINT << (56 - maxrho))::DOUBLE
                / 72057594037927936.0 AS sp
            FROM r GROUP BY what),
-         est AS (
-           SELECT what, (512 - present) AS v_zero,
-             sp + (512 - present) AS sum_inv,
-             CASE WHEN (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) <= 2.5 * 512
-                       AND present < 512
-                  THEN 512 * ln(512.0 / (512 - present))
-                  ELSE (0.7213 / (1 + 1.079/512)) * 512 * 512
-                         / (sp + (512 - present)) END AS e
-           FROM agg),
-         x AS (SELECT what, count(DISTINCT k) AS exact_distinct
-               FROM keyed GROUP BY what)
-         SELECT est.what, 512::BIGINT AS m, v_zero::BIGINT AS v_zero,
-           round(sum_inv, 6) AS sum_inv, round(e, 2) AS est_hll,
-           exact_distinct::BIGINT AS exact_distinct,
-           round(abs(e - exact_distinct) / exact_distinct * 100, 2)
-             AS err_pct
-         FROM est JOIN x USING (what) ORDER BY what""",
+         $HllEstimateSql""",
     "sim_project" ->
       """WITH pl AS (
            SELECT jd.j AS j, list(jd.pv ORDER BY jd.d) AS plane
@@ -3828,28 +3544,7 @@ object Pipeline {
              ceil(length(text) / 4)::INT)::BIGINT AS token_estimate
          FROM documents ORDER BY doc_id""",
     "txt_filter" ->
-      """WITH m AS (
-           SELECT doc_id, text,
-             string_split_regex(trim(text), '\s+') AS toks,
-             length(text) AS len
-           FROM documents),
-         base AS (
-           SELECT doc_id,
-             len(toks)::BIGINT AS n_tokens,
-             round(len(list_filter(toks, x -> list_contains(
-                 ['the','a','an','and','or','of','to','in','is','it','that',
-                  'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
-               greatest(len(toks), 1), 4) AS stopword_ratio,
-             round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
-               greatest(len, 1), 4) AS alpha_ratio,
-             (CASE WHEN len(toks) BETWEEN 10 AND 10000 THEN 1.0 ELSE 0.3 END)
-               AS length_ok
-           FROM m),
-         q AS (
-           SELECT doc_id, n_tokens,
-             floor((length_ok * 0.4 + least(stopword_ratio * 5.0, 1.0) * 0.3
-               + alpha_ratio * 0.3) * 10000 + 0.5) / 10000 AS quality
-           FROM base),
+      s"""WITH ${qualityCtes("documents")},
          g3 AS (SELECT doc_id, list_filter(list_transform(
                   range(1, greatest(len(toks)-2, 1)+1),
                   i -> array_to_string(toks[i:i+2], ' ')),
@@ -3860,13 +3555,14 @@ object Pipeline {
                     ELSE 1.0 - len(list_distinct(g))::DOUBLE / len(g) END)
                     * 10000 + 0.5) / 10000 AS dup3_frac
                 FROM g3)
-         SELECT q.doc_id, q.n_tokens, q.quality, d3.dup3_frac,
-           q.n_tokens < 20 AS too_short,
+         SELECT b.doc_id, b.n_tokens, q.quality, d3.dup3_frac,
+           b.n_tokens < 20 AS too_short,
            q.quality < 0.5 AS low_quality,
            d3.dup3_frac > 0.05 AS too_repetitive,
-           NOT (q.n_tokens < 20 OR q.quality < 0.5 OR d3.dup3_frac > 0.05)
+           NOT (b.n_tokens < 20 OR q.quality < 0.5 OR d3.dup3_frac > 0.05)
              AS keep
-         FROM q JOIN d3 USING (doc_id) ORDER BY q.doc_id""",
+         FROM base b JOIN qual q USING (doc_id) JOIN d3 USING (doc_id)
+         ORDER BY b.doc_id""",
     "txt_redact" ->
       """WITH d AS (
            SELECT doc_id,
@@ -3924,7 +3620,7 @@ object Pipeline {
            floor(score * 10000 + 0.5) / 10000 AS score
          FROM scored ORDER BY score DESC, doc_id LIMIT 10""",
     "txt_quality" ->
-      s"""WITH $QualityBaseCtes
+      s"""WITH ${qualityCtes("documents")}
          SELECT doc_id, n_tokens, mean_token_len, stopword_ratio, alpha_ratio,
            $QualityExprSql AS quality
          FROM base ORDER BY doc_id""",
@@ -3980,36 +3676,9 @@ object Pipeline {
          FROM documents d LEFT JOIN sc USING (doc_id)
          ORDER BY d.doc_id""",
     "txt_langid" ->
-      """WITH t AS (
-           SELECT doc_id, lang,
-             string_split_regex(trim(lower(text)), '\s+') AS toks
-           FROM documents),
-         s AS (
-           SELECT doc_id, lang,
-             len(list_filter(toks, x -> list_contains(
-               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_de,
-             len(list_filter(toks, x -> list_contains(
-               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_en,
-             len(list_filter(toks, x -> list_contains(
-               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_es,
-             len(list_filter(toks, x -> list_contains(
-               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_fr,
-             len(list_filter(toks, x -> list_contains(
-               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
-               / greatest(len(toks), 1) AS s_zh
-           FROM t)
-         SELECT doc_id, lang,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-                WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-                WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-                WHEN s_fr >= s_zh THEN 'fr'
-                ELSE 'zh' END AS lang_pred
-         FROM s ORDER BY doc_id""",
+      s"""WITH ${langIdCtes("documents")}
+         SELECT doc_id, d.lang, l.lang_pred
+         FROM documents d JOIN lang l USING (doc_id) ORDER BY doc_id""",
     "txt_fingerprint" ->
       """SELECT doc_id,
            md5(array_to_string(list_sort(list_distinct(
@@ -4071,38 +3740,10 @@ object Pipeline {
            count(*) AS n_events, round(sum(value), 2) AS total
          FROM s GROUP BY user_id, s.session_id
          ORDER BY user_id, session_id""",
-    "ev_asof" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT user_id, event_id, us FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT user_id, us, max(value) AS view_value FROM e
-               WHERE event_type = 'view' GROUP BY 1, 2)
-         SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
-         FROM p ASOF LEFT JOIN v
-           ON p.user_id = v.user_id AND p.us >= v.us
-         ORDER BY p.event_id""",
-    "ev_asof_fwd" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT user_id, event_id, us FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT user_id, us, max(value) AS view_value FROM e
-               WHERE event_type = 'view' GROUP BY 1, 2)
-         SELECT p.user_id, p.event_id, p.us, v.view_value AS asof_view_value
-         FROM p ASOF LEFT JOIN v
-           ON p.user_id = v.user_id AND p.us <= v.us
-         ORDER BY p.event_id""",
+    "ev_asof" -> asofOracleSql(">="),
+    "ev_asof_fwd" -> asofOracleSql("<="),
     "ev_asof_near" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS us
-           FROM events),
-         p AS (SELECT user_id, event_id, us FROM e
-               WHERE event_type = 'purchase'),
-         v AS (SELECT user_id, us, max(value) AS view_value FROM e
-               WHERE event_type = 'view' GROUP BY 1, 2),
+      s"""WITH $AsofCtes,
          b AS (SELECT p.event_id, v.us AS rts, v.view_value AS bv
                FROM p ASOF LEFT JOIN v
                  ON p.user_id = v.user_id AND p.us >= v.us),
@@ -4187,8 +3828,7 @@ object Pipeline {
     "ds_token_budget_bpe" ->
       s"""${bpeCtes(8)},
          ${bpeEncodeCtes(8)},
-         $QualityBaseCtes,
-         qual AS (SELECT doc_id, $QualityExprSql AS quality FROM base),
+         ${qualityCtes("documents")},
          ranked AS (SELECT d.doc_id, d.lang, t.n_tokens,
              coalesce(sum(t.n_tokens) OVER (PARTITION BY d.lang
                ORDER BY q.quality DESC, d.doc_id ASC
@@ -4216,25 +3856,14 @@ object Pipeline {
       """SELECT doc_id, octet_length(text::BLOB)::BIGINT AS byte_len,
            md5(text) AS checksum
          FROM documents ORDER BY doc_id""",
-    // the perceptual-hash rig's fingerprints, rebuilt CLOSED-FORM from
-    // doc_id (planted gradient bits + their prefix sums — see the
-    // mm_dedup query comment), then a brute-force pair join: matches
-    // Spark's decode->resample->hash->banded chain only if every stage
-    // is bit-exact. Bit 63 is never set on either hash, so BIGINT
+    // the perceptual-hash rig's dhashes rebuilt CLOSED-FORM from doc_id
+    // ([[ImageFpCtes]]), its ahashes from prefix sums of the planted
+    // bits, then a brute-force pair join: matches Spark's
+    // decode->resample->hash->banded chain only if every stage is
+    // bit-exact. Bit 63 is never set on either hash, so BIGINT
     // shifts/xor agree across engines.
     "mm_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
-                FROM bits GROUP BY doc_id),
+      s"""WITH $ImageFpCtes,
          gridc AS (SELECT cy.cy, cx.cx
                    FROM unnest(range(0, 8)) AS cy(cy)
                    CROSS JOIN unnest(range(0, 8)) AS cx(cx)),
@@ -4264,233 +3893,63 @@ object Pipeline {
          FROM fp a JOIN fp b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
          ORDER BY id_a, id_b""",
-    // the audio rig's envelope hash collapses closed-form to the
-    // planted bits themselves (+-150 steps are strictly monotone, the
-    // walk stays positive so |sample| == amplitude): rebuild each
-    // doc's fingerprint from doc_id and brute-force the pair join —
-    // matches Spark's wav-decode -> window -> gradient chain only if
-    // every integer stage is bit-exact
+    // the audio rig's envelope hashes rebuilt closed-form
+    // ([[AudioFpCtes]]) and the pair join brute-forced — matches Spark's
+    // wav-decode -> window -> gradient chain only if every integer stage
+    // is bit-exact
     "mm_audio_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
-                FROM bits GROUP BY doc_id)
+      s"""WITH $AudioFpCtes
          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.ehash, b.ehash))::INT AS hamming
          FROM fp a JOIN fp b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.ehash, b.ehash)) <= 3
          ORDER BY id_a, id_b""",
-    // the video rig's frame fingerprints rebuilt closed-form per
-    // (doc_id, frame seed), then the set-jaccard join replayed —
-    // matches Spark's demux -> per-frame decode -> dHash ->
-    // inverted-index chain only if every frame hashes bit-exact. The
-    // stop-frame prune (maxDocFreq = 60) is replayed too: join sides
-    // exclude frames with doc-freq > 60, set sizes stay unpruned —
-    // the exact semantics videoDedupPairs implements
+    // the video rig's frame-set-jaccard pairs replayed closed-form
+    // ([[VideoFpCtes]], stop-frame prune included)
     "mm_video_dedup" ->
-      """WITH d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
-               FROM documents WHERE doc_id < 400),
-         fr AS (SELECT d.doc_id,
-                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
-                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
-                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
-         fb AS (SELECT doc_id, s, j.j,
-                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
-                   THEN 1 ELSE 0 END)::BIGINT AS bit
-                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fh AS (SELECT DISTINCT doc_id, dhash FROM (
-                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
-                  FROM fb GROUP BY doc_id, s)),
-         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
-         stopf AS (SELECT dhash FROM fh GROUP BY dhash
-                   HAVING count(*) > 60),
-         fhp AS (SELECT doc_id, dhash FROM fh
-                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
-         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  count(*)::BIGINT AS n_shared
-                FROM fhp a JOIN fhp b
-                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id)
-         SELECT p.id_a, p.id_b, p.n_shared,
-           round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared), 4)
-             AS jaccard
-         FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
-         JOIN sz sb ON sb.doc_id = p.id_b
-         WHERE round(p.n_shared::DOUBLE / (sa.n + sb.n - p.n_shared), 4)
-           >= 0.5
+      s"""WITH $VideoFpCtes
+         SELECT id_a, id_b, n_shared, jaccard FROM vpairs
          ORDER BY id_a, id_b""",
-    // perceptual CURATION: the mm_dedup dhash construction rebuilt
-    // closed-form, the banded pair set brute-forced (recall is exact
-    // at hamming <= 3, so brute force IS the banded answer), then
-    // min-label transitive closure (the dd_survivors_exact recursion)
-    // and one survivor per component — keepFirstExact on pixels
+    // perceptual CURATION: the mm_dedup dhashes rebuilt closed-form, the
+    // banded pair set brute-forced (recall is exact at hamming <= 3, so
+    // brute force IS the banded answer), then the min-label transitive
+    // closure (the dd_survivors_exact recursion) and one survivor per
+    // component — keepFirstExact on pixels
     "mm_survivors" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 0 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*131 + j.j*37) % 97) < 41
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         dh AS (SELECT doc_id, sum(bit << j)::BIGINT AS dhash
-                FROM bits GROUP BY doc_id),
+      s"""WITH RECURSIVE $ImageFpCtes,
          prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
                  FROM dh a JOIN dh b ON a.doc_id < b.doc_id
                  WHERE bit_count(xor(a.dhash, b.dhash)) <= 3),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(a, b) AS (
-           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
-                    GROUP BY a)
-         SELECT doc_id FROM d
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
-    // AUDIO curation: the mm_audio_dedup envelope-hash construction
-    // rebuilt closed-form, the banded pair set brute-forced, then the
-    // same min-label transitive closure and one survivor per component
-    // — keepFirstExact on waveforms
+         ${minLabelCtes("prs")}
+         ${componentMinSql("d")}""",
+    // AUDIO curation: the same shape over the envelope hashes —
+    // keepFirstExact on waveforms
     "mm_audio_survivors" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 16)::BIGINT AS g
-               FROM documents WHERE doc_id < 1000),
-         bits AS (SELECT d.doc_id, j.j,
-             CASE WHEN (d.doc_id % 3 = 1 AND j.j = d.doc_id % 63)
-                  THEN 1 - (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                            THEN 1 ELSE 0 END)
-                  ELSE (CASE WHEN ((d.g*113 + j.j*41) % 89) < 37
-                        THEN 1 ELSE 0 END)
-             END::BIGINT AS bit
-           FROM d CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fp AS (SELECT doc_id, sum(bit << j)::BIGINT AS ehash
-                FROM bits GROUP BY doc_id),
+      s"""WITH RECURSIVE $AudioFpCtes,
          prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
                  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
                  WHERE bit_count(xor(a.ehash, b.ehash)) <= 3),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(a, b) AS (
-           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
-                    GROUP BY a)
-         SELECT doc_id FROM d
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
-    // VIDEO curation: the mm_video_dedup frame-set-jaccard join
-    // replayed closed-form (including the inert maxDocFreq = 60
-    // stop-frame prune), then the min-label transitive closure over
-    // the threshold-passing pairs — keepFirstExact on videos
+         ${minLabelCtes("prs")}
+         ${componentMinSql("d")}""",
+    // VIDEO curation: the mm_video_dedup pairs (inert maxDocFreq = 60
+    // prune included) through the same closure — keepFirstExact on
+    // videos
     "mm_video_survivors" ->
-      """WITH RECURSIVE d AS (SELECT doc_id, (doc_id % 8)::BIGINT AS g
-               FROM documents WHERE doc_id < 400),
-         fr AS (SELECT d.doc_id,
-                  CASE WHEN d.doc_id % 3 = 0 AND k.k = 2
-                       THEN 2000 + d.doc_id ELSE d.g*8 + k.k END AS s
-                FROM d CROSS JOIN unnest(range(0, 5)) AS k(k)),
-         fb AS (SELECT doc_id, s, j.j,
-                  (CASE WHEN ((s*131 + j.j*37) % 97) < 41
-                   THEN 1 ELSE 0 END)::BIGINT AS bit
-                FROM fr CROSS JOIN unnest(range(0, 63)) AS j(j)),
-         fh AS (SELECT DISTINCT doc_id, dhash FROM (
-                  SELECT doc_id, s, sum(bit << j)::BIGINT AS dhash
-                  FROM fb GROUP BY doc_id, s)),
-         sz AS (SELECT doc_id, count(*) AS n FROM fh GROUP BY doc_id),
-         stopf AS (SELECT dhash FROM fh GROUP BY dhash
-                   HAVING count(*) > 60),
-         fhp AS (SELECT doc_id, dhash FROM fh
-                 WHERE dhash NOT IN (SELECT dhash FROM stopf)),
-         pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                  count(*)::BIGINT AS n_shared
-                FROM fhp a JOIN fhp b
-                  ON a.dhash = b.dhash AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id),
-         prs AS (SELECT p.id_a, p.id_b
-                 FROM pr p JOIN sz sa ON sa.doc_id = p.id_a
-                 JOIN sz sb ON sb.doc_id = p.id_b
-                 WHERE round(p.n_shared::DOUBLE
-                     / (sa.n + sb.n - p.n_shared), 4) >= 0.5),
-         edges AS (SELECT id_a AS a, id_b AS b FROM prs
-                   UNION SELECT id_b, id_a FROM prs),
-         reach(a, b) AS (
-           SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-           UNION
-           SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         labels AS (SELECT a AS doc_id, min(b) AS cluster FROM reach
-                    GROUP BY a)
-         SELECT doc_id FROM d
-         WHERE doc_id NOT IN
-           (SELECT doc_id FROM labels WHERE doc_id != cluster)
-         ORDER BY doc_id""",
+      s"""WITH RECURSIVE $VideoFpCtes,
+         ${minLabelCtes("vpairs")}
+         ${componentMinSql("d")}""",
   )
 
   /** Shared CTE chain (corpus → … → dec2) for the ds_curate and
-    * ds_curate_staged oracles — each stage's formula byte-identical to
-    * its standalone oracle, re-scoped to the docs that survived the
-    * previous gate. Callers append their final SELECT. */
+    * ds_curate_staged oracles — each stage's formula is the one its
+    * standalone oracle uses ([[qualityCtes]], [[langIdCtes]],
+    * [[jaccardCtes]]), re-scoped to the docs that survived the previous
+    * gate. Callers append their final SELECT. */
   private def curateDecisionCtes: String =
-    ("""WITH corpus AS (SELECT doc_id, text FROM documents
+    s"""WITH corpus AS (SELECT doc_id, text FROM documents
            WHERE doc_id >= 50),
-         m AS (SELECT doc_id, text,
-                 string_split_regex(trim(text), '\s+') AS toks,
-                 length(text) AS len
-               FROM corpus),
-         qual AS (
-           SELECT doc_id,
-             floor(((CASE WHEN len(toks) BETWEEN 10 AND 10000
-                 THEN 1.0 ELSE 0.3 END) * 0.4
-               + least(round(len(list_filter(toks, x -> list_contains(
-                   ['the','a','an','and','or','of','to','in','is','it','that',
-                    'for','on','with','as','at','by','this'], lower(x))))::DOUBLE /
-                 greatest(len(toks), 1), 4) * 5.0, 1.0) * 0.3
-               + round(len(regexp_extract_all(text, '[A-Za-z]'))::DOUBLE /
-                 greatest(len, 1), 4) * 0.3) * 10000 + 0.5) / 10000 AS quality
-           FROM m),
-         lt AS (SELECT doc_id,
-                  string_split_regex(trim(lower(text)), '\s+') AS ltoks
-                FROM corpus),
-         ls AS (
-           SELECT doc_id,
-             len(list_filter(ltoks, x -> list_contains(
-               ['der','die','das','und','ist','nicht','mit','ein'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_de,
-             len(list_filter(ltoks, x -> list_contains(
-               ['the','and','of','to','in','is','that','with'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_en,
-             len(list_filter(ltoks, x -> list_contains(
-               ['el','la','los','y','es','no','con','una'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_es,
-             len(list_filter(ltoks, x -> list_contains(
-               ['le','la','les','et','est','pas','avec','une'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_fr,
-             len(list_filter(ltoks, x -> list_contains(
-               ['的','是','不','了','在','和','有','我'], x)))::DOUBLE
-               / greatest(len(ltoks), 1) AS s_zh
-           FROM lt),
-         lang AS (
-           SELECT doc_id,
-             CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                  WHEN s_de >= greatest(s_en, s_es, s_fr, s_zh) THEN 'de'
-                  WHEN s_en >= greatest(s_es, s_fr, s_zh) THEN 'en'
-                  WHEN s_es >= greatest(s_fr, s_zh) THEN 'es'
-                  WHEN s_fr >= s_zh THEN 'fr'
-                  ELSE 'zh' END AS lang_pred
-           FROM ls),
+         ${qualityCtes("corpus")},
+         ${langIdCtes("corpus")},
          scored AS (
            SELECT c.doc_id, q.quality, l.lang_pred,
              CASE WHEN q.quality >= 0.5 THEN 1 ELSE 0 END AS q_ok,
@@ -4507,29 +3966,16 @@ object Pipeline {
                  FROM g1),
          ex AS (SELECT g1.doc_id, g1.text FROM g1
                 JOIN exf USING (doc_id) WHERE exact_dup = 0),
-         sh AS (""" + shingleSqlFrom("ex") + """),
-         sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY 1),
-         inter AS (
-           SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
-           FROM sh a JOIN sh b
-             ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-           GROUP BY 1, 2),
-         dups AS (
-           SELECT DISTINCT id_b FROM inter
-           JOIN sizes sa ON sa.doc_id = id_a
-           JOIN sizes sb ON sb.doc_id = id_b
-           WHERE i::DOUBLE / (sa.set_size + sb.set_size - i) >= 0.8),
+         ${jaccardCtes("ex")},
          ndf AS (SELECT doc_id,
-                   CASE WHEN doc_id IN (SELECT id_b FROM dups)
+                   CASE WHEN doc_id IN (SELECT id_b FROM jpairs)
                      THEN 1 ELSE 0 END AS near_dup
                  FROM ex),
          nd AS (SELECT ex.doc_id, ex.text FROM ex
                 JOIN ndf USING (doc_id) WHERE near_dup = 0),
-         nsh AS (""" + shingleSqlFrom("nd") + """),
-         bsh AS (""" +
-           shingleSqlFrom(
-             "(SELECT doc_id, text FROM documents WHERE doc_id < 50) b") +
-         """),
+         nsh AS (${shingleSqlFrom("nd")}),
+         bsh AS (${shingleSqlFrom(
+           "(SELECT doc_id, text FROM documents WHERE doc_id < 50) b")}),
          bsz AS (SELECT doc_id AS bench_id, count(*) AS bench_size
                  FROM bsh GROUP BY 1),
          cinter AS (SELECT n.doc_id, b.doc_id AS bench_id,
@@ -4561,5 +4007,5 @@ object Pipeline {
              CASE WHEN kept = 1 THEN
                (('0x' || substr(md5('split:' || doc_id::VARCHAR),1,8))
                  ::BIGINT % 100) END AS bucket
-           FROM dec)""")
+           FROM dec)"""
 }

@@ -246,21 +246,8 @@ class PartitionInvarianceSpec extends SparkTestBase {
     // layout (the frame-hash doc-freq aggregate, the broadcast stop
     // set, and the inverted-index join all shuffle)
     import graft.operators.{MediaCodec, Multimodal}
-    def frame(seed: Int): Array[Byte] = {
-      val grid = Array.ofDim[Int](8, 9)
-      for (cy <- 0 until 8) {
-        grid(cy)(0) = 100 + ((seed * 13 + cy * 7) % 40)
-        for (cx <- 0 until 8) {
-          val j = cy * 8 + cx
-          val bit = j < 63 && (((seed * 131 + j * 37) % 97) < 41)
-          grid(cy)(cx + 1) = grid(cy)(cx) + (if (bit) 5 else -5)
-        }
-      }
-      val px = new Array[Byte](18 * 16)
-      for (py <- 0 until 16; pxx <- 0 until 18)
-        px(py * 18 + pxx) = grid(py / 2)(pxx / 2).toByte
-      MediaCodec.pngEncodeGray(18, 16, px)
-    }
+    // the contract video rig's frame generator
+    def frame(seed: Int): Array[Byte] = graft.queries.Pipeline.gradientPng(seed)
     val videos = (0 until 36).map { i =>
       val id = (i * 55L + 7L) % 997L
       val g = i % 6

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BaseJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -31,6 +32,20 @@ object PlanCounters {
     p +: (nested ++ p.children.flatMap(nodes))
   }
 
+  /** `ns` plus the nodes of every plan that built a cached relation
+    * read among them, recursively, each build once. */
+  private def withCacheBuilds(ns: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    def expand(ns: Seq[SparkPlan]): Seq[SparkPlan] = ns ++ ns.flatMap {
+      case m: InMemoryTableScanExec
+          if !seen.exists(_ eq m.relation.cachedPlan) =>
+        seen += m.relation.cachedPlan
+        expand(nodes(m.relation.cachedPlan))
+      case _ => Nil
+    }
+    expand(ns)
+  }
+
   private def metric(p: SparkPlan, name: String): Long =
     p.metrics.get(name).map(_.value).getOrElse(0L)
 
@@ -47,10 +62,12 @@ object PlanCounters {
     }.sum
 
   /** Rows the parquet scans produced — rows that survived row-group
-    * skipping and were decoded (the post-scan Filter's input). With
-    * `under`, only scans of files below that directory count. */
+    * skipping and were decoded (the post-scan Filter's input). The scans
+    * that built a cached relation the plan reads count too, once per
+    * relation: its rows were decoded when it was built. With `under`,
+    * only scans of files below that directory count. */
   def scanOutputRowsOf(df: DataFrame, under: String = ""): Long =
-    executed(df).collect {
+    withCacheBuilds(executed(df)).collect {
       case f: FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toString.contains(under)) =>
         metric(f, "numOutputRows")

@@ -249,4 +249,21 @@ class SketchesSpec extends SparkTestBase {
     assert(merged == direct,
       "register-wise max must equal the union's sketch")
   }
+
+  test("sk_hll and sk_hll64 on a zero-row documents table return no " +
+      "rows, as their oracles do") {
+    val dir = java.nio.file.Files.createTempDirectory("empty_hll")
+    try {
+      spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .limit(0).write.parquet(s"$dir/documents.parquet")
+      for (q <- Seq("sk_hll", "sk_hll64")) {
+        val out = SparkEntry.queries(q)(spark, dir.toString)
+        assert(out.columns.toSeq == Seq("what", "m", "v_zero", "sum_inv",
+          "est_hll", "exact_distinct", "err_pct"), q)
+        assert(out.collect().isEmpty, q)
+      }
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }
