@@ -92,8 +92,8 @@ object ArtifactMaintenance {
   /** Append a batch: `encode` turns the opened artifact into one frame
     * per data dir (same order), each carrying the batch id as `idCol`
     * plus the dir's payload columns. Rows land in the dir's on-disk
-    * column order, id type and stamps; encoded frames are unpersisted
-    * after the write (a family may cache its encode). */
+    * column order, id type and stamps. A family that caches its encode
+    * releases that cache itself, after this returns. */
   private[operators] def append[I](art: Artifact[I], path: String,
       batch: DataFrame, idCol: String, requireNewIds: Boolean,
       opName: String)(read: => I)(encode: I => Seq[DataFrame]): Unit = {
@@ -112,7 +112,6 @@ object ArtifactMaintenance {
     for (((dir, cur), add) <- art.dirs.zip(frames).zip(rows))
       onDisk(add, cur, dir.idCol(cur), idCol)
         .write.mode("append").parquet(s"$path/${dir.name}")
-    rows.foreach(_.unpersist())
   }
 
   /** Delete rows by id from every data dir (ids absent are a no-op) and

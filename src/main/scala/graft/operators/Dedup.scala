@@ -5,6 +5,7 @@ import scala.util.Random
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions
 
@@ -380,24 +381,28 @@ object Dedup {
     buildCachedIndex(corpus, idCol, textCol, numHashes, bands, shingleSize,
       seed, mode)._1
 
-  /** [[buildMinhashIndex]] plus the cached per-id frame, for a caller
-    * that releases it. */
+  /** [[buildMinhashIndex]] plus the per-id cache it CREATED, for a caller
+    * that releases it — `None` when an equal plan was already cached
+    * (an inline [[incrementalSurvivors]] over the same corpus): that
+    * cache belongs to the plan that made it, and releasing it here would
+    * send that plan back to the corpus. */
   private def buildCachedIndex(corpus: DataFrame, idCol: String,
                                textCol: String, numHashes: Int, bands: Int,
-                               shingleSize: Int, seed: Long,
-                               mode: HashMode): (MinhashIndex, DataFrame) = {
+                               shingleSize: Int, seed: Long, mode: HashMode)
+      : (MinhashIndex, Option[DataFrame]) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val minCols = signatureMins(numHashes, seed, mode)
     // posexplode_OUTER keeps shingle-less rows; each row's hash is
     // collected once, from its first (or only, null) shingle row
-    val perId = withTokens(corpus, idCol, textCol)
+    val agg = withTokens(corpus, idCol, textCol)
       .select(col(idCol), md5(col(textCol).cast("binary")).as("__hash"),
         posexplode_outer(shingleSet(shingleSize)).as(Seq("__pos", "shingle")))
       .groupBy(col(idCol))
       .agg(collect_list(when(coalesce(col("__pos"), lit(0)) === 0,
           struct(col("__hash").as("content_hash")))).as("__hashes"),
         (count(col("shingle")).as("__n") +: minCols): _*)
-      .cache()
+    val created = agg.storageLevel == StorageLevel.NONE
+    val perId = agg.cache()
     val hashes = perId
       .select(col(idCol), explode(col("__hashes")).as("__h"))
       .select(col(idCol), col("__h.content_hash").as("content_hash"))
@@ -405,7 +410,8 @@ object Dedup {
       .select(col(idCol), signatureOf(numHashes))
     (MinhashIndex(hashes, sigs,
       minhashBuckets(sigs, idCol, bands, numHashes / bands, mode),
-      numHashes, bands, shingleSize, seed, mode), perId)
+      numHashes, bands, shingleSize, seed, mode),
+      if (created) Some(perId) else None)
   }
 
   /** Write the corpus index as three parquet dirs (`hashes/`,
@@ -423,7 +429,7 @@ object Dedup {
                         shingleSize: Int = 3, seed: Long = 42L,
                         mode: HashMode = HashMode.Xx,
                         sourceTag: String = ""): Unit = {
-    val (idx, cached) = buildCachedIndex(corpus, idCol, textCol, numHashes,
+    val (idx, created) = buildCachedIndex(corpus, idCol, textCol, numHashes,
       bands, shingleSize, seed, mode)
     // appends copy this stamp verbatim onto their files, so parquet
     // schema resolution can read ANY file's footer and find the contract
@@ -443,7 +449,7 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$path/signatures")
       idx.buckets.write.mode("overwrite").parquet(s"$path/buckets")
     }
-    cached.unpersist()
+    created.foreach(_.unpersist())
   }
 
   /** Read a [[writeMinhashIndex]] artifact back as probe-ready frames.
@@ -499,14 +505,20 @@ object Dedup {
     * guard vacuously. */
   def appendToMinhashIndex(survivors: DataFrame, idCol: String,
                            textCol: String, path: String,
-                           requireNewIds: Boolean = true): Unit =
-    ArtifactMaintenance.append(MinhashArtifact, path, survivors, idCol,
+                           requireNewIds: Boolean = true): Unit = {
+    // the per-id cache the encode creates is released once the write
+    // returns: a stream appends every micro-batch
+    var created: Option[DataFrame] = None
+    try ArtifactMaintenance.append(MinhashArtifact, path, survivors, idCol,
         requireNewIds, "appendToMinhashIndex")(
         readMinhashIndex(survivors.sparkSession, path)) { idx =>
-      val add = buildMinhashIndex(survivors, idCol, textCol, idx.numHashes,
-        idx.bands, idx.shingleSize, idx.seed, idx.mode)
+      val (add, c) = buildCachedIndex(survivors, idCol, textCol,
+        idx.numHashes, idx.bands, idx.shingleSize, idx.seed, idx.mode)
+      created = c
       Seq(add.hashes, add.buckets, add.signatures)
     }
+    finally created.foreach(_.unpersist())
+  }
 
   /** Delete documents from a [[writeMinhashIndex]] artifact by id —
     * the minhash twin of

@@ -80,9 +80,6 @@ class DedupRigSpec extends RigSpec {
     val (c, b) = (spark.read.parquet(cDir), spark.read.parquet(bDir))
     val inline = Dedup.incrementalSurvivors(b, c, "doc_id", "text",
       threshold = 0.8, mode = Dedup.HashMode.Md5)
-    // counted before the index write: building the same index frames
-    // there releases the cache the inline plan shares with it
-    val ri = scanOutputRowsOf(inline, cDir)
     Dedup.writeMinhashIndex(c, "doc_id", "text", iDir,
       mode = Dedup.HashMode.Md5)
     val probe = Dedup.incrementalSurvivors(b,
@@ -96,7 +93,10 @@ class DedupRigSpec extends RigSpec {
     // copy
     assert((790L until 800L).forall(id => !ids(probe).contains(id)),
       "a batch doc of the split family survived its corpus near-dups")
-    val rp = scanOutputRowsOf(probe, cDir)
+    // counted after the index write: the write builds the same per-id
+    // frame, and leaves the cache the inline plan made in place
+    val (ri, rp) = (scanOutputRowsOf(inline, cDir),
+      scanOutputRowsOf(probe, cDir))
     info(s"corpus rows scanned: inline=$ri probe=$rp")
     // the hashes, signatures and buckets come from ONE corpus pass
     assert(rp == 0 && ri == 790)

@@ -530,6 +530,22 @@ class DedupSpec extends SparkTestBase {
     assert(b2.select("doc_id").as[Long].collect().toSeq == Seq(21L))
   }
 
+  test("minhash index write and append release the per-id cache they " +
+      "create") {
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val path = java.nio.file.Files.createTempDirectory("graft-mh-cache")
+      .resolve("index").toString
+    Dedup.writeMinhashIndex(Seq((1L, base), (2L, "one two three four five"))
+      .toDF("doc_id", "text"), "doc_id", "text", path)
+    assert(cm.isEmpty, "the index write left a cached frame behind")
+    // a stream appends once per micro-batch: a cache left per append
+    // grows without bound
+    Dedup.appendToMinhashIndex(Seq((3L, "six seven eight nine ten"))
+      .toDF("doc_id", "text"), "doc_id", "text", path)
+    assert(cm.isEmpty, "the append left a cached frame behind")
+  }
+
   test("appendToMinhashIndex: a re-delivered drop is REFUSED (duplicate " +
       "ids), bloom-gated so a clean drop never scans signatures/") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-mh-guard")
