@@ -69,11 +69,15 @@ object Similarity {
     * midpoint ambiguity anywhere in the trajectory.
     *
     * Scale shape: the corpus is touched exactly once (the candidate
-    * top-N); the k−1 greedy stages run over candidate-sized frames
-    * (|queries| × topN rows, cached) — joins keyed on query_id, window
-    * argmax per stage, no corpus re-scan, no driver loop over rows. k
-    * and topN are small constants, so the unrolled plan depth is
-    * bounded. Output: (query_id, cand_id, step 1..k, mmr).
+    * top-N). Every (candidate, other) similarity of a query is scored
+    * once, by one self-join of its ≤ topN candidates (topN² rows per
+    * query), and the k greedy picks then run per query over those rows
+    * in ONE grouped pass — each step reuses the pair scores instead of
+    * re-scoring the remaining candidates against the selection (the
+    * incremental top-k idea: compute each similarity once). The plan
+    * does not grow with k and building it launches no Spark job.
+    * Output: (query_id, cand_id, step 1..k, mmr); a query with fewer
+    * than k candidates gets one step per candidate.
     *
     * @param lambda relevance/diversity trade-off in [0,1]; MUST carry at
     *               most 4 decimal digits (0.7, 0.25, 0.3333 — not 1.0/3):
@@ -89,69 +93,57 @@ object Similarity {
       s"lambda must have at most 4 decimal digits for the exact-integer " +
         s"MMR combine: $lambda")
     val r4 = TextAnalysis.round4 _
-    // exact-integer MMR score (see the scaladoc): inputs are 1e-4
-    // multiples, so round() recovers their exact integer form; the
-    // combine and the final half-up 4dp rounding are then pure integer
-    // arithmetic evaluated identically by any engine.
-    // floor((i + 5000)/10000) == floor(i/10000 + 0.5) for integer i —
-    // the same half-up semantics as round4, midpoints decided exactly.
-    def mmrScore(rel: Column, maxSim: Column): Column =
-      floor((lit(lamI) * round(rel * 10000) -
-        lit(10000 - lamI) * round(maxSim * 10000) + 5000) / 10000.0) /
-        10000.0
     val cand = bruteForceTopK(corpus, queries, idCol, vecCol, k = topN)
       .select(col("query_id"), col("neighbor_id").as("cand_id"),
         r4(col("cosine")).as("rel"))
       .join(corpus.select(col(idCol).as("cand_id"),
         col(vecCol).as("c_vec"), normSq(col(vecCol)).as("c_nsq")),
         "cand_id")
-      .cache()
-    // per-query argmax as a HASH aggregate, not a window: min over the
-    // struct (-score, cand_id) is lexicographically "max score, tie ->
-    // min cand_id" — identical semantics to the row_number()==1 window
-    // (the [[ivfAssign]] convention) with map-side partials
-    // and no per-step sort+exchange. No -0.0 ambiguity: rel/mmr are
-    // half-up-rounded 1e-4 multiples whose zero is always +0.0, and
-    // cand_id is unique per query so ties cannot occur.
-    def argmax(df: DataFrame, scoreCol: String, step: Int): DataFrame =
-      df.groupBy("query_id")
-        .agg(min_by(struct(col("cand_id"), col(scoreCol)),
-          struct(negate(col(scoreCol)), col("cand_id"))).as("p"))
-        .select(col("query_id"), col("p.cand_id").as("cand_id"),
-          lit(step).as("step"), col(s"p.$scoreCol").as("mmr"))
-    var selected = argmax(cand, "rel", 1)
-    val selVecs = cand.select(col("query_id"),
-      col("cand_id").as("sel_id"), col("c_vec").as("s_vec"),
-      col("c_nsq").as("s_nsq"))
-    for (step <- 2 to k) {
-      val chosen = selected.select("query_id", "cand_id")
-      val scored = cand
-        .join(chosen, Seq("query_id", "cand_id"), "left_anti")
-        .join(selVecs.join(chosen.withColumnRenamed("cand_id", "sel_id"),
-          Seq("query_id", "sel_id")), "query_id")
-        .select(col("query_id"), col("cand_id"), col("rel"),
-          r4(cosineFromParts(dot(col("c_vec"), col("s_vec")),
-            col("c_nsq"), col("s_nsq"))).as("sim"))
-        .groupBy("query_id", "cand_id", "rel")
-        .agg(max(col("sim")).as("max_sim"))
-        .withColumn("mmr", mmrScore(col("rel"), col("max_sim")))
-      selected = selected.unionByName(argmax(scored, "mmr", step))
-      // `selected` feeds BOTH the next step's anti-join and the final
-      // union, so each greedy stage's plan re-embeds every earlier
-      // stage ~3x — O(3^tail) re-execution past the last checkpoint.
-      // Truncate the accumulated union EVERY step
-      // ([[graft.plans.Checkpoints]], the CC/k-means loop convention):
-      // the selection frame is tiny (<= |queries| x k rows), so each
-      // materialize is one ~free job while the re-execution tail stays
-      // zero stages. Measured at sf0.1 (r12): the r11 2-step period
-      // left sim_mmr at 4.9 s / sim_mmr8 at 3.9 s; every-step
-      // truncation cut them to 2.1 s / 2.9 s — the tail, not the
-      // checkpoint jobs, was the cost (and r11's own 4-step-period
-      // measurement, 14.5 s, was the same curve further out).
-      if (step < k)
-        selected = graft.plans.Checkpoints.truncated(selected)
+    val other = cand.select(col("query_id"), col("cand_id").as("o_id"),
+      col("c_vec").as("o_vec"), col("c_nsq").as("o_nsq"))
+    // rel and sim are 1e-4 multiples, so round(x * 10000) recovers their
+    // exact integer ten-thousandths; the self pair is kept, so every
+    // candidate (a lone one too) has its n rows
+    val pairs = cand.join(other, "query_id")
+      .select(col("query_id"), struct(col("cand_id"), col("o_id"),
+        round(col("rel") * 10000).cast("long").as("rel"),
+        round(r4(cosineFromParts(dot(col("c_vec"), col("o_vec")),
+          col("c_nsq"), col("o_nsq"))) * 10000).cast("long").as("sim"))
+        .as("pair"))
+    // the greedy over one query's n x n pairs, sorted by (cand_id, o_id)
+    // so row i*n + j pairs candidate i with candidate j, and a lower
+    // index is a lower cand_id. Step 1 takes the highest rel; each next
+    // step the highest exact-integer MMR score (see the scaladoc):
+    // floor((i + 5000) / 10000) == floor(i / 10000 + 0.5) for integer
+    // i — round4's half-up, midpoints decided exactly. Ties go to the
+    // lower index. Returns (row index of the pick, mmr) per step; mmr
+    // is the pick's rel at step 1 and its score / 10000 after that.
+    val greedy = udf { (rows: Seq[Row]) =>
+      val n = math.sqrt(rows.size.toDouble).round.toInt
+      val rel = Array.tabulate(n)(i => rows(i * n).getLong(2))
+      val maxSim = Array.fill(n)(Long.MinValue)
+      val left = scala.collection.mutable.BitSet(0 until n: _*)
+      (1 to math.min(k, n)).map { step =>
+        def score(i: Int): Long =
+          if (step == 1) rel(i)
+          else Math.floorDiv(lamI * rel(i) - (10000L - lamI) * maxSim(i) +
+            5000, 10000L)
+        val best = left.maxBy(i => (score(i), -i))
+        val pick = (best * n, score(best) / 10000.0)
+        left -= best
+        for (i <- left)
+          maxSim(i) = math.max(maxSim(i), rows(i * n + best).getLong(3))
+        pick
+      }
     }
-    selected
+    pairs.groupBy("query_id")
+      .agg(array_sort(collect_list(col("pair"))).as("pairs"))
+      .select(col("query_id"), col("pairs"),
+        posexplode(greedy(col("pairs"))))
+      .select(col("query_id"),
+        element_at(col("pairs"), col("col._1") + 1)
+          .getField("cand_id").as("cand_id"),
+        (col("pos") + 1).as("step"), col("col._2").as("mmr"))
   }
 
   /** Bucket width that keeps per-bucket candidate counts roughly constant
@@ -459,19 +451,25 @@ object Similarity {
     var cents = graft.plans.Checkpoints.truncated(cents0)
     for (_ <- 1 to iters) {
       val assigned = ivfAssign(df, idCol, vecCol, cents)
-      val members = df.join(assigned, idCol)
-      val sums = members
-        .select(col("cid"), posexplode(toDouble(col(vecCol))))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
-      cents = graft.plans.Checkpoints.truncated(
-        sums.groupBy(col("cid")).agg(
-          transform(array_sort(collect_list(struct(col("pos"),
-              round(col("s") / col("n"), 6).as("m")))),
-            x => x.getField("m")).as("centroid")))
+      cents = graft.plans.Checkpoints.truncated(centroidMeans(
+        df.join(assigned, idCol), Seq("cid"), toDouble(col(vecCol))))
     }
     cents
   }
+
+  /** One Lloyd update, shared by [[kmeans]] and [[pqTrain]]: per `keys`
+    * group of `members`, the coordinate-wise mean of `vec`, each
+    * component rounded to 6dp (the engine-portable trajectory rule), as
+    * `centroid` in coordinate order. */
+  private def centroidMeans(members: DataFrame, keys: Seq[String],
+                            vec: Column): DataFrame =
+    members.select(keys.map(col) :+ posexplode(vec): _*)
+      .groupBy((keys :+ "pos").map(col): _*)
+      .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
+      .groupBy(keys.map(col): _*).agg(
+        transform(array_sort(collect_list(struct(col("pos"),
+            round(col("s") / col("n"), 6).as("m")))),
+          x => x.getField("m")).as("centroid"))
 
   /** [[kmeans]] trained on a deterministic md5-rank sample of `sampleN`
     * vectors — the 100 TB coarse-quantizer discipline: every [[kmeans]]
@@ -571,16 +569,9 @@ object Similarity {
         .select(col("sub"), (col("rn") - 1).cast("int").as("cid"),
           transform(col("sv"), x => round(x, 6)).as("centroid")))
     for (_ <- 1 to iters) {
-      val asg = pqAssign(subs, cents)
-      val sums = subs.join(asg, Seq("pq_id", "sub"))
-        .select(col("sub"), col("cid"), posexplode(col("sv")))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
-      cents = graft.plans.Checkpoints.truncated(
-        sums.groupBy(col("sub"), col("cid")).agg(
-          transform(array_sort(collect_list(struct(col("pos"),
-              round(col("s") / col("n"), 6).as("mv")))),
-            x => x.getField("mv")).as("centroid")))
+      cents = graft.plans.Checkpoints.truncated(centroidMeans(
+        subs.join(pqAssign(subs, cents), Seq("pq_id", "sub")),
+        Seq("sub", "cid"), col("sv")))
     }
     // dense per-subspace renumber in original cid order: gaps from
     // dropped-empty clusters would otherwise break the flat-LUT indexing

@@ -26,6 +26,13 @@ object Pipeline {
   private def docs(s: SparkSession, dir: String) = Tables.load(s, dir, "documents")
   private def embs(s: SparkSession, dir: String) = Tables.load(s, dir, "embeddings")
 
+  /** The doc_id split point `(max(doc_id) + 1) * num / den`, one
+    * parquet-footer max() scalar. A zero-row table has no max: its cut
+    * is 0, and both sides of the split are empty. */
+  private def docIdCut(d: DataFrame, num: Int, den: Int): Long =
+    d.agg(coalesce(max(col("doc_id")) + 1, lit(0L))).head().getLong(0) *
+      num / den
+
   /** Corpus-side split for compute-dense ANN scans: local test parquet is
     * one unsplittable file, so without this the n x |q| cosine work runs
     * in a single task. Explicit numPartitions ⇒ AQE does not coalesce.
@@ -499,7 +506,7 @@ object Pipeline {
     // answer is always "use the index".
     "dd_incremental" -> ((s, dir) => {
       val d = docs(s, dir)
-      val cut = (d.agg(max(col("doc_id"))).head().getLong(0) + 1) * 4 / 5
+      val cut = docIdCut(d, 4, 5)
       Dedup.incrementalSurvivors(d.filter(col("doc_id") >= cut),
           steadyMinhashIndex(s, dir, d.filter(col("doc_id") < cut)),
           "doc_id", "text", threshold = 0.8)
@@ -514,7 +521,7 @@ object Pipeline {
     // probe plan that never re-reads the corpus text.
     "dd_incremental_idx" -> ((s, dir) => {
       val d = docs(s, dir)
-      val cut = (d.agg(max(col("doc_id"))).head().getLong(0) + 1) * 4 / 5
+      val cut = docIdCut(d, 4, 5)
       // per-process, full-path-keyed temp location: overwrite-on-write,
       // so repeated runs (bench min-of-N) neither accumulate dirs nor
       // reuse a stale artifact from another scale factor or process
@@ -999,7 +1006,7 @@ object Pipeline {
     // the batch-vs-reference distribution monitor (oracled)
     "txt_divergence" -> ((s, dir) => {
       val d = docs(s, dir)
-      val cut = (d.agg(max(col("doc_id"))).head().getLong(0) + 1) / 2
+      val cut = docIdCut(d, 1, 2)
       LanguageModel.unigramDivergence(
         d.filter(col("doc_id") < cut), d.filter(col("doc_id") >= cut),
         "text")
@@ -1168,11 +1175,11 @@ object Pipeline {
     }),
 
     // the k=8 twin keeps the LONG greedy trajectory under the
-    // cross-engine gate (r12: mmrTopK checkpoints after every step at
-    // any k, so both rows now exercise the truncated path; this one
-    // walks 4 more greedy stages): a truncation that changed values —
-    // not just plans — would turn this row red;
-    // 8 unrolled oracle stages replay the longer trajectory exactly
+    // cross-engine gate: mmrTopK runs every greedy step inside one
+    // grouped pass over the candidate pairs, so this row walks 4 more
+    // steps of the same pass, and a later step that drifted from the
+    // oracle would turn it red; 8 unrolled oracle stages replay the
+    // longer trajectory exactly
     "sim_mmr8" -> ((s, dir) => {
       val e = embs(s, dir)
       Similarity.mmrTopK(corpusPar(e), e.filter(col("vec_id") < 4),
@@ -2604,13 +2611,13 @@ object Pipeline {
     * cosine compared thereafter is floor-rounded to 4dp with id
     * tie-breaks, and the MMR combine runs in exact integer
     * ten-thousandths with an integer lambda — the twin of
-    * `Similarity.mmrTopK`'s `mmrScore`, so decimal .00005 midpoints
+    * `Similarity.mmrTopK`'s greedy score, so decimal .00005 midpoints
     * (exactly reachable from 4dp-quantized inputs) are decided by
     * identical integer arithmetic instead of 1-ulp double luck. */
   private def mmrOracleSql(k: Int, topN: Int, lambda: Double,
                            nQueries: Int = 8): String = {
     def r4(x: String) = s"floor(($x) * 10000 + 0.5) / 10000"
-    // exact-integer MMR combine, twin of Similarity.mmrTopK's mmrScore:
+    // exact-integer MMR combine, twin of Similarity.mmrTopK's greedy score:
     // rel/max_sim are 1e-4 multiples, so the decimal-midpoint cases the
     // double form left to 1-ulp engine luck are decided in integer
     // arithmetic both engines evaluate identically

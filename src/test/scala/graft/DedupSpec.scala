@@ -1048,4 +1048,27 @@ class DedupSpec extends SparkTestBase {
     assert(flat.forall(v => v >= -1.0 && v <= 1.0))
     assert(flat.distinct.size > 50) // not degenerate
   }
+
+  test("dd_incremental, dd_incremental_idx and txt_divergence on a zero-row " +
+      "documents table return their oracles' answers") {
+    val dir = java.nio.file.Files.createTempDirectory("empty_docs")
+    try {
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+          org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, " +
+            "text STRING, lang STRING, source STRING, n_chars BIGINT"))
+        .write.parquet(s"$dir/documents.parquet")
+      // the doc_id cut of an empty table is 0: both batches are empty
+      for (q <- Seq("dd_incremental", "dd_incremental_idx")) {
+        val out = SparkEntry.queries(q)(spark, dir.toString)
+        assert(out.columns.toSeq == Seq("doc_id"), q)
+        assert(out.collect().isEmpty, q)
+      }
+      // DuckDB's aggregate over no word pairs: one all-NULL row
+      val div = SparkEntry.queries("txt_divergence")(spark, dir.toString)
+      assert(div.columns.toSeq == Seq("vocab", "kl_pq", "kl_qp", "js"))
+      assert(div.collect().map(_.toSeq).toSeq == Seq(Seq(null, null, null, null)))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

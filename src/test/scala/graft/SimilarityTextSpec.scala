@@ -69,8 +69,8 @@ class SimilarityTextSpec extends SparkTestBase {
       s"expected greedy order a, c, b — got $mmr")
   }
 
-  test("mmrTopK at k=16: plan stays bounded via periodic truncation, " +
-      "and the greedy trajectory is prefix-stable vs k=4") {
+  test("mmrTopK at k=16: the plan has as many nodes as at k=4, and the " +
+      "greedy trajectory is prefix-stable vs k=4") {
     // 24 corpus vectors spread on a circle-ish fan so every greedy step
     // has a well-separated argmax; one query
     val corpus = (1 to 24).map { i =>
@@ -80,28 +80,87 @@ class SimilarityTextSpec extends SparkTestBase {
     }.toDF("vec_id", "embedding")
     val queries = Seq((0L, Array(1.0f, 0.1f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val k16 = Similarity.mmrTopK(corpus, queries, "vec_id", "embedding",
-      k = 16, topN = 20, lambda = 0.7)
-    // the per-step checkpoint keeps the accumulated-union plan
-    // from re-embedding all previous stages: each step references the
-    // running union ~3x (anti-join + selVecs join +
-    // union), so an UNtruncated k=16 plan is ~3^15 stage references —
-    // millions of nodes, analyzer death. With the zero-length tail the
-    // final plan is a few thousand nodes CONSTANT in k (measured ~2.7k;
-    // k=32 would be the same, only more truncated leaves behind it).
-    val planNodes = k16.queryExecution.logical.collect { case n => n }.size
-    assert(planNodes < 4000, s"k=16 MMR plan has $planNodes nodes — " +
-      "the periodic truncation is not bounding the union growth")
-    val got16 = k16.orderBy("step")
+    def mmr(k: Int) = Similarity.mmrTopK(corpus, queries, "vec_id",
+      "embedding", k = k, topN = 20, lambda = 0.7)
+    // the greedy steps run inside one grouped pass, so k is not a plan
+    // dimension at all
+    def planNodes(k: Int) = mmr(k).queryExecution.logical
+      .collect { case n => n }.size
+    assert(planNodes(16) == planNodes(4))
+    val got16 = mmr(16).orderBy("step")
       .select("cand_id", "step").as[(Long, Int)].collect().toSeq
     assert(got16.map(_._2) == (1 to 16), "one pick per step")
     assert(got16.map(_._1).distinct.size == 16, "no candidate re-picked")
     // greedy is prefix-stable: the first 4 picks of k=16 are exactly
-    // the k=4 run (which takes the untruncated path)
-    val got4 = Similarity.mmrTopK(corpus, queries, "vec_id", "embedding",
-        k = 4, topN = 20, lambda = 0.7)
-      .orderBy("step").select("cand_id").as[Long].collect().toSeq
+    // the k=4 run
+    val got4 = mmr(4).orderBy("step").select("cand_id").as[Long]
+      .collect().toSeq
     assert(got16.map(_._1).take(4) == got4)
+  }
+
+  // eight vectors on a 45-degree-step ring around the x axis, each at 45
+  // degrees from it, ring order unlike id order, plus exact duplicates
+  // of two of them: every candidate has the same relevance to a query
+  // on the axis (+-0.7071), pairwise sims take four values (0.8536,
+  // 0.5, 0.1464, 0), and a duplicate pair has sim 1
+  private def tieCorpus = {
+    val ring = Seq(5L, 2L, 7L, 4L, 1L, 8L, 3L, 6L).zipWithIndex.map {
+      case (id, i) =>
+        val a = i * math.Pi / 4
+        (id, Array(1.0f, math.cos(a).toFloat, math.sin(a).toFloat))
+    }
+    (ring ++ Seq((9L, ring(0)._2), (10L, ring(3)._2)))
+      .toDF("vec_id", "embedding")
+  }
+  private def axisQueries = Seq((100L, Array(1.0f, 0.0f, 0.0f)),
+    (101L, Array(-1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
+
+  test("mmrTopK on a tie-heavy corpus: ties go to the lowest cand_id and " +
+      ".00005 midpoints round half up") {
+    // lambda .5 puts every score past step 1 on a midpoint: 0.5 * 7071
+    // minus 0.5 * an even sim. The expected trajectory is the output of
+    // an independent implementation that ran each greedy step as its
+    // own Spark stage (anti-join, max-sim aggregate, argmax)
+    val got = Similarity.mmrTopK(tieCorpus, axisQueries, "vec_id",
+        "embedding", k = 10, topN = 10, lambda = 0.5)
+      .orderBy("query_id", "step")
+      .as[(Long, Long, Int, Double)].collect().toSeq
+    val picks = Seq(1L, 5L, 3L, 7L, 2L, 4L, 6L, 8L, 9L, 10L)
+    val up = Seq(0.7071, 0.3536, 0.1036, 0.1036, -0.0732, -0.0732,
+      -0.0732, -0.0732, -0.1464, -0.1464)
+    val down = Seq(-0.7071, -0.3535, -0.6035, -0.6035, -0.7803, -0.7803,
+      -0.7803, -0.7803, -0.8535, -0.8535)
+    def trajectory(q: Long, mmr: Seq[Double]) =
+      picks.zip(mmr).zipWithIndex.map { case ((c, m), i) => (q, c, i + 1, m) }
+    assert(got == trajectory(100L, up) ++ trajectory(101L, down))
+  }
+
+  test("building mmrTopK launches no Spark job") {
+    val (_, work) = PlanCounters.measured(spark) {
+      Similarity.mmrTopK(tieCorpus, axisQueries, "vec_id", "embedding",
+        k = 8, topN = 10, lambda = 0.5)
+    }
+    assert(work.jobs == 0)
+  }
+
+  test("mmrTopK over a zero-row corpus or query set is empty, with the " +
+      "four output columns") {
+    for ((corpus, queries) <- Seq((tieCorpus.limit(0), axisQueries),
+        (tieCorpus, axisQueries.limit(0)))) {
+      val out = Similarity.mmrTopK(corpus, queries, "vec_id", "embedding",
+        k = 4, topN = 8)
+      assert(out.columns.toSeq == Seq("query_id", "cand_id", "step", "mmr"))
+      assert(out.collect().isEmpty)
+    }
+  }
+
+  test("mmrTopK with fewer candidates than k takes one step per candidate") {
+    val got = Similarity.mmrTopK(tieCorpus.filter($"vec_id" <= 3L),
+        axisQueries.limit(1), "vec_id", "embedding", k = 5, topN = 8)
+      .orderBy("step").select("cand_id", "step").as[(Long, Int)]
+      .collect().toSeq
+    assert(got.map(_._2) == Seq(1, 2, 3))
+    assert(got.map(_._1).sorted == Seq(1L, 2L, 3L))
   }
 
   test("lshTopK finds the strong neighbor (high-recall regime)") {
