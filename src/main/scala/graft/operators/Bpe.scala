@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.EngineError.AnalysisError
+
 /** Byte-pair-encoding tokenizer TRAINING as a distributed pipeline — the
   * canonical tokenizer-fitting job a training-data platform runs before
   * any token budget, packing, or dedup-by-token stage can exist
@@ -113,16 +115,14 @@ object Bpe {
     * (step, lft, rgt, merged, pair_count) — the artifact a tokenizer
     * ships. Stops early (fewer rows) if the dict runs out of pairs.
     *
-    * ADAPTIVE GATE (the connectedComponents precedent,
-    * Dedup.scala:1019): after the one corpus pass, the dict is
-    * VOCABULARY-sized — for any real corpus a few million rows at most,
-    * and usually far less. Below the gate (`smallDictThreshold`, or
-    * with the default -1 the heap-derived [[autoDictGate]]) the dict
-    * is collected ONCE and the merge loop runs driver-side
-    * (one Spark job total instead of one job + checkpoint per merge —
-    * a 32k-merge production vocabulary would otherwise be 32k
-    * sequential Spark jobs). Above the gate the distributed loop runs
-    * unchanged. Both paths compute the IDENTICAL trajectory (same
+    * ADAPTIVE GATE (the [[Dedup.connectedComponents]] precedent): after
+    * the one corpus pass, the dict is VOCABULARY-sized — for any real
+    * corpus a few million rows at most, and usually far less. Below the
+    * heap-derived [[autoDictGate]] the dict is collected ONCE and the
+    * merge loop runs driver-side (one Spark job total instead of one
+    * job + checkpoint per merge — a 32k-merge production vocabulary
+    * would otherwise be 32k sequential Spark jobs). Above the gate the
+    * distributed loop runs unchanged. Both paths compute the IDENTICAL trajectory (same
     * argmax total order, same greedy merge semantics — spec-pinned),
     * so the gate is a cost decision, never a semantics decision.
     *
@@ -133,19 +133,25 @@ object Bpe {
     * the pair), and the dict needs no re-aggregation afterwards
     * because two distinct words stay distinct under any merge (spacing
     * changes, the character sequence doesn't) — so an iteration is
-    * exactly one shuffle. */
-  def train(df: DataFrame, textCol: String, nMerges: Int,
-            smallDictThreshold: Long = -1L): DataFrame = {
+    * exactly one shuffle.
+    *
+    * A corpus with no word of two or more letters (a zero-row one
+    * included) has nothing to merge: both paths raise the same named
+    * `AnalysisError`. */
+  def train(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
     require(nMerges >= 1, s"nMerges must be positive: $nMerges")
-    val gate =
-      if (smallDictThreshold >= 0L) smallDictThreshold
-      else autoDictGate(Runtime.getRuntime.maxMemory())
     val (words0, dictSize) = graft.plans.Checkpoints.truncatedWithCount(
       wordFrequencies(df, textCol))
-    if (dictSize <= gate)
-      return trainDriver(df.sparkSession, words0, nMerges)
-    trainDistributed(words0, nMerges)
+    if (dictSize <= autoDictGate(Runtime.getRuntime.maxMemory()))
+      trainDriver(df.sparkSession, words0, nMerges)
+    else trainDistributed(words0, nMerges)
   }
+
+  /** The error both trainers raise when the dict has no adjacent symbol
+    * pair to merge. */
+  private def noPairs: AnalysisError =
+    AnalysisError("bpe: nothing to train on (the corpus needs at " +
+      "least one word of two or more letters)")
 
   /** Auto-derived driver-trainer gate: how many dict words fit the
     * driver comfortably. Measured (r12, `bench_bpe_train5m_guard`): a
@@ -194,9 +200,7 @@ object Bpe {
         step += 1
       }
     }
-    if (traj.isEmpty)
-      throw new IllegalStateException(
-        "bpe: corpus has no adjacent symbol pairs (all words single-char?)")
+    if (traj.isEmpty) throw noPairs
     traj.reduce(_ unionByName _)
       .withColumn("merged", concat(col("lft"), col("rgt")))
       .select("step", "lft", "rgt", "merged", "pair_count")
@@ -439,9 +443,7 @@ object Bpe {
       }
     }
     val rows = traj.result()
-    if (rows.isEmpty)
-      throw new IllegalStateException(
-        "bpe: corpus has no adjacent symbol pairs (all words single-char?)")
+    if (rows.isEmpty) throw noPairs
     import spark.implicits._
     rows.toDF("step", "lft", "rgt", "merged", "pair_count")
   }
@@ -634,21 +636,21 @@ object Bpe {
     * ~200k-node expression tree that Catalyst's analyzer recursion and
     * codegen's 64 KB JVM method ceiling cannot survive (the same
     * huge-method threshold [[graft.plans.VectorExpressions]] respects).
-    * The chain therefore applies in BATCHES of `mergesPerStage` per
+    * The chain therefore applies in BATCHES of [[MergesPerStage]] per
     * projection with a stats-truncating checkpoint between batches
     * ([[graft.plans.Checkpoints]]): expression depth is bounded by the
     * batch size, total cost scales linearly with vocab × batches, and
     * the checkpointed frame is VOCABULARY-sized, never corpus-sized.
     * A merge list that fits one batch (the contract queries' 8) keeps
     * the original single-projection lazy plan — no checkpoint, oracle
-    * plans unchanged. The default of 16 is measured, not guessed: each
+    * plans unchanged. The batch of 16 is measured, not guessed: each
     * applyMerge nests ~8 Column levels, and Spark 4's recursive
     * ColumnNode->Expression conversion blew a default 1 MB thread
     * stack at 64 merges/projection (~500 nested levels) — 16 keeps the
     * tree ~130 deep, an order of magnitude under that ceiling on any
     * JVM stack size.
     *
-    * PRODUCTION PATH past `kernelThreshold` merges (r12): a 32k-merge
+    * PRODUCTION PATH past [[KernelThreshold]] merges (r12): a 32k-merge
     * vocabulary through 16-merge batches is ~2,000 checkpointed
     * vocab-stages — linear and safe but job-heavy. Above the threshold
     * the per-word merge runs as ONE mapPartitions kernel over the
@@ -667,14 +669,11 @@ object Bpe {
     * vocabulary-sized, one stage, no expression tree at all. An
     * equality spec pins kernel == batched at 512 merges; the
     * kernel's executed passes are counted at 1k vs 8k merges in
-    * BpeRigSpec. The 1024 default keeps every contract/oracle query on the
-    * expression path (bit-exact DuckDB replay needs the SQL form). */
+    * BpeRigSpec. The threshold of 1024 keeps every contract/oracle query
+    * on the expression path (bit-exact DuckDB replay needs the SQL
+    * form). */
   def encodeTokenCounts(df: DataFrame, idCol: String, textCol: String,
-                        merges: Seq[(String, String)],
-                        mergesPerStage: Int = 16,
-                        kernelThreshold: Int = 1024): DataFrame = {
-    require(mergesPerStage >= 1,
-      s"mergesPerStage must be positive: $mergesPerStage")
+                        merges: Seq[(String, String)]): DataFrame = {
     // occ feeds BOTH the final join and the vocab derivation — cache,
     // or the corpus is tokenized twice (the dd_spans lesson; pinned in
     // PlanAuditSpec). Plan-lifetime cache convention: lives until the
@@ -686,13 +685,19 @@ object Bpe {
       .cache()
     val words = occ.select("word").distinct()
     val vocab =
-      if (merges.size > kernelThreshold) kernelVocab(words, merges)
-      else batchedVocab(words, merges, mergesPerStage)
+      if (merges.size > KernelThreshold) kernelVocab(words, merges)
+      else batchedVocab(words, merges)
     occ.join(vocab, "word")
       .groupBy(col(idCol))
       .agg(sum(col("k") * col("n_tok")).as("n_tokens"),
         sum(col("k")).as("n_words"))
   }
+
+  /** Merges per projection on the expression path. */
+  private val MergesPerStage = 16
+
+  /** Merge count above which the encode runs [[kernelVocab]]. */
+  private val KernelThreshold = 1024
 
   /** The expression-path vocabulary derivation behind
     * [[encodeTokenCounts]]'s default path: (word) -> (word, n_tok) by
@@ -703,7 +708,8 @@ object Bpe {
     * words frame at production merge counts. */
   private[graft] def batchedVocab(words: DataFrame,
                                   merges: Seq[(String, String)],
-                                  mergesPerStage: Int = 16): DataFrame = {
+                                  mergesPerStage: Int = MergesPerStage)
+      : DataFrame = {
     val batches = merges.grouped(mergesPerStage).toVector
     var syms = words.withColumn("ws", symbolize(col("word")))
     for ((batch, i) <- batches.zipWithIndex) {

@@ -174,22 +174,27 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
-  /** Candidate pairs (idA < idB) sharing at least one LSH bucket — a
-    * self-equi-join on (band, bucket), deduped. This is the scale path:
-    * the pair space is only materialized inside colliding buckets. */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        numHashes: Int = 64, bands: Int = 16,
-                        shingleSize: Int = 3, seed: Long = 42L,
-                        mode: HashMode = HashMode.Xx): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleSize,
-      seed, mode)
-    val b = minhashBuckets(sigs, idCol, bands, numHashes / bands, mode)
-    val l = b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-    val r = b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-    l.join(r, Seq("band", "bucket"))
+  /** Near-dup pairs (id_a < id_b, est_jaccard >= threshold) within one
+    * side: candidates are the pairs sharing at least one LSH bucket of
+    * `buckets` (a self-equi-join on (band, bucket), deduped — the pair
+    * space only materializes inside colliding buckets), verified by
+    * signature agreement through the codegen'd VectorEqCount kernel (the
+    * HOF form, aggregate over zip_with, interprets its lambda per lane
+    * per candidate pair — the same tax VectorDot removes for cosine). */
+  private def bucketPairs(buckets: DataFrame, sigs: DataFrame, idCol: String,
+                          numHashes: Int, threshold: Double): DataFrame = {
+    def side(s: String) =
+      buckets.select(col("band"), col("bucket"), col(idCol).as(s"id_$s"))
+    def sig(s: String) =
+      sigs.select(col(idCol).as(s"id_$s"), col("signature").as(s"sig_$s"))
+    side("a").join(side("b"), Seq("band", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
+      .join(sig("a"), "id_a").join(sig("b"), "id_b")
+      .withColumn("est_jaccard", graft.plans.VectorExpressions.vectorEqCount(
+        col("sig_a"), col("sig_b")).cast("double") / numHashes)
+      .filter(col("est_jaccard") >= threshold)
+      .select("id_a", "id_b", "est_jaccard")
   }
 
   /** MinHash near-dedup: estimate jaccard from signature agreement for
@@ -207,23 +212,8 @@ object Dedup {
     // does); the cache is scoped to this plan's lifetime by convention.
     val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleSize,
       seed, mode).cache()
-    val b = minhashBuckets(sigs, idCol, bands, numHashes / bands, mode)
-    val l = b.select(col("band"), col("bucket"), col(idCol).as("id_a"))
-    val r = b.select(col("band"), col("bucket"), col(idCol).as("id_b"))
-    val cand = l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val sa = sigs.select(col(idCol).as("id_a"), col("signature").as("sig_a"))
-    val sb = sigs.select(col(idCol).as("id_b"), col("signature").as("sig_b"))
-    // signature agreement via the codegen'd VectorEqCount kernel — the
-    // HOF form (aggregate over zip_with) interprets its lambda per lane
-    // per candidate pair, the same tax VectorDot removes for cosine
-    cand.join(sa, "id_a").join(sb, "id_b")
-      .withColumn("est_jaccard",
-        graft.plans.VectorExpressions.vectorEqCount(
-          col("sig_a"), col("sig_b")).cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
+    bucketPairs(minhashBuckets(sigs, idCol, bands, numHashes / bands, mode),
+      sigs, idCol, numHashes, threshold)
   }
 
   // --------------------------------------------------------- incremental
@@ -318,17 +308,7 @@ object Dedup {
         col("signature").as("sig_c")), "__c")
       .filter(est(col("sig_b"), col("sig_c")) >= threshold)
       .select(col("__b").as(idCol))
-    val dropVsBatch = bb
-      .select(col("band"), col("bucket"), col(idCol).as("id_a"))
-      .join(bb.select(col("band"), col("bucket"), col(idCol).as("id_b")),
-        Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .join(sigB.select(col(idCol).as("id_a"), col("signature").as("sig_a")),
-        "id_a")
-      .join(sigB.select(col(idCol).as("id_b"), col("signature").as("sig_b")),
-        "id_b")
-      .filter(est(col("sig_a"), col("sig_b")) >= threshold)
+    val dropVsBatch = bucketPairs(bb, sigB, idCol, numHashes, threshold)
       .select(col("id_b").as(idCol))
     exactKept.join(dropVsCorpus.union(dropVsBatch).distinct(),
       Seq(idCol), "left_anti")
@@ -1131,7 +1111,7 @@ object Dedup {
     * (a pair only exists where two documents already collide in an LSH
     * bucket and pass the similarity threshold), so even a 100 TB corpus
     * typically yields an edge set in the millions, not the billions. When
-    * the pair count is at or below `smallGraphThreshold` (default 500k
+    * the pair count is at or below [[DefaultSmallGraphThreshold]] (500k
     * pairs, collected as specialized long tuples ≈ ~20 MB transient on
     * the driver — NOT boxed Rows), the component labels are computed with
     * a single-pass path-compressed union-find on the driver: ONE action
@@ -1143,11 +1123,11 @@ object Dedup {
     * pass over the pair stream) — that path has no driver materialization
     * and is the 1000-executor design. Both paths compute the same
     * fixpoint (min id per component); the property spec pins their
-    * equality on random graphs. */
+    * equality on random graphs, reaching the distributed path through
+    * [[connectedComponentsWithRounds]]. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b",
-                          maxIter: Int = 50,
-                          smallGraphThreshold: Int = DefaultSmallGraphThreshold): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     // bounded probe: ask for threshold+1 pairs. On the small (common)
     // path this single action IS the union-find input — no edge
     // symmetrization, no checkpoint, no separate count. On the big path
@@ -1159,10 +1139,10 @@ object Dedup {
     import pairs.sparkSession.implicits._
     val probe = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-      .limit(math.min(smallGraphThreshold.toLong + 1, Int.MaxValue).toInt)
+      .limit(DefaultSmallGraphThreshold + 1)
       .as[(Long, Long)]
       .collect()
-    if (probe.length <= smallGraphThreshold)
+    if (probe.length <= DefaultSmallGraphThreshold)
       driverUnionFind(pairs.sparkSession, probe)
     else connectedComponentsFromEdges(canonicalEdges(pairs, aCol, bCol), maxIter)._1
   }
@@ -1266,94 +1246,6 @@ object Dedup {
       .toDF("u", "v")
   }
 
-  /** Per-partition contraction-probe sample for the [[localContract]]
-    * gate: how many edges went in, how many star edges would come out,
-    * and the node count of the largest LOCAL component formed. */
-  private[graft] final case class ProbeStat(edgesIn: Long, starsOut: Long,
-                                            maxComponentNodes: Int)
-
-  /** Bounded sampled probe for the [[localContract]] gate (r12 verdict
-    * #4: the pre-pass cost +14% on the uniform rig where it cannot
-    * win). Runs the SAME union-find table over a bounded prefix of up
-    * to three partitions (first/middle/last — `sc.runJob` on just those
-    * partition ids, never a full-RDD job) of an already-checkpointed
-    * edge frame, and reports per-partition [[ProbeStat]]s for
-    * [[preContractWorthwhile]] to judge.
-    *
-    * The pre-pass wins three distinct ways, and the probe's two
-    * signals cover all of them:
-    *  - EDGE CONTRACTION (starsOut << edgesIn): clique-shaped streams —
-    *    an LSH bucket's O(family²) pair rows collapse to O(family)
-    *    stars, shrinking the first shuffle's bytes;
-    *  - LOCAL STRUCTURE (a local component of ≥ 3 nodes): any such
-    *    component has diameter ≥ 2, so flattening it to a depth-1 star
-    *    saves global contraction rounds (measured r13, uniform
-    *    41-node-chain rig, same chunk same JVM: 17.6 s with the pass
-    *    vs 25.1 s without — the r12 "+14% uniform tax" read was
-    *    cross-round regime noise, the same class the dd50k bisect
-    *    exposed); the extreme case is a hub component spanning the
-    *    partition, where re-pointing every node at the local min also
-    *    splits the hub's downstream groupBy key (the 1.8x
-    *    `precontract_tames_skew_cc2m` win).
-    * The only stream with NEITHER signal is disjoint pairs (every
-    * local component exactly one edge): stars(E) = E there, so the
-    * pass rewrites the input to itself and is pure scan tax — that is
-    * the shape the probe skips. */
-  private[graft] def contractionProbe(edges: DataFrame): Seq[ProbeStat] = {
-    import edges.sparkSession.implicits._
-    val rdd = edges.select(col("u").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)].rdd
-    val n = rdd.getNumPartitions
-    if (n == 0) return Nil
-    val parts = Seq(0, n / 2, n - 1).distinct
-    edges.sparkSession.sparkContext.runJob(rdd,
-      (it: Iterator[(Long, Long)]) => {
-        val t = new CcLocalTable(64)
-        var in = 0L
-        while (it.hasNext && in < ProbeEdgeCap) {
-          val e = it.next(); t.union(e._1, e._2); in += 1
-        }
-        var stars = 0L
-        val se = t.starEdges()
-        while (se.hasNext) { se.next(); stars += 1 }
-        ProbeStat(in, stars, t.maxComponentNodes())
-      }, parts).toSeq
-  }
-
-  /** The gate decision over [[contractionProbe]] samples: engage the
-    * pre-pass when ANY probed partition shows either win signal, or
-    * when the probe is inconclusive (too few sampled edges everywhere —
-    * skew immunity is the scale-safe default, and on that little data
-    * the pass costs nothing). */
-  private[graft] def preContractWorthwhile(stats: Seq[ProbeStat]): Boolean =
-    if (stats.forall(_.edgesIn < ProbeMinEdges)) true
-    else stats.exists(s =>
-      s.edgesIn >= ProbeMinEdges &&
-        (s.starsOut.toDouble <= PreContractRatioGate * s.edgesIn ||
-          s.maxComponentNodes >= ProbeComponentGate))
-
-  /** Probe reads at most this many edges per sampled partition — enough
-    * for the signals to be meaningful, bounded so the probe never
-    * becomes the cost it exists to avoid. */
-  private[graft] val ProbeEdgeCap: Long = 100 * 1000
-
-  /** Below this many sampled edges (in every probed partition) the
-    * probe is inconclusive and the pre-pass defaults ON. */
-  private[graft] val ProbeMinEdges: Long = 1024
-
-  /** Edge-contraction gate: engage when starsOut <= gate x edgesIn.
-    * Modest near-dup families already clear it (a 5-doc family's 10
-    * clique edges contract to 4 stars, 0.4x); disjoint-pair and chain
-    * streams sit at ~1.0. */
-  private[graft] val PreContractRatioGate: Double = 0.75
-
-  /** Local-structure gate: engage when any probed local component has
-    * at least this many nodes — 3 is the smallest component with
-    * diameter 2, i.e. the smallest whose flattening can save global
-    * rounds. Only a pure disjoint-pair stream (every component one
-    * edge, stars(E) = E) sits below it. */
-  private[graft] val ProbeComponentGate: Int = 3
-
   /** Open-addressing long→long union-find for [[localContract]]: keys
     * are node ids, values are parent KEYS (growth-safe — slot indices
     * move on rehash, keys do not). Union keeps the SMALLER root, so a
@@ -1437,26 +1329,6 @@ object Dedup {
         .map { i => val k = ks(i); (k, find(k)) }
         .filter(e => e._1 != e._2)
     }
-
-    /** Node count of the largest component currently in the table —
-      * [[contractionProbe]]'s degree-concentration signal. Probe-only
-      * (a boxed per-root map over at most ProbeEdgeCap-edge tables),
-      * never on the contraction hot path. */
-    def maxComponentNodes(): Int = {
-      val counts = scala.collection.mutable.HashMap.empty[Long, Int]
-      var i = 0
-      var mx = 0
-      while (i < cap) {
-        if (keys(i) != Empty) {
-          val r = find(keys(i))
-          val c = counts.getOrElse(r, 0) + 1
-          counts(r) = c
-          if (c > mx) mx = c
-        }
-        i += 1
-      }
-      mx
-    }
   }
 
   /** [[connectedComponents]] plus the number of rounds it took — the
@@ -1498,7 +1370,7 @@ object Dedup {
     * the groupBy side is safe (map-side partial min). Frames are
     * checkpointed with [[graft.plans.Checkpoints]] (lineage AND stats).
     *
-    * `preContract` (default on) ALLOWS [[localContract]] — a NARROW
+    * `preContract` (default on) runs [[localContract]] — a NARROW
     * partition-local union-find pass — before the first global shuffle,
     * replacing each partition's edge rows with an equivalent local star
     * forest. Near-dup pair producers emit pairs bucket-by-bucket (an
@@ -1509,12 +1381,13 @@ object Dedup {
     * anything shuffles, leaving the rounds to start from near-fixpoint
     * stars. Semantically transparent (a partition's star forest has
     * exactly its edges' connectivity — the equality spec pins it).
-    * Whether the pass actually RUNS is decided by [[contractionProbe]]
-    * (r13, r12 verdict #4): on a stream with no locality the pass is
-    * pure overhead (+14% on the uniform 2M-edge rig), so one bounded
-    * single-partition probe measures the local contraction ratio first
-    * and skips the pass when it would buy nothing. `preContract=false`
-    * skips probe and pass both (CcRigSpec's control contender). */
+    * It always runs: on chains flattening each local component saves
+    * global rounds (r13, same JVM: 17.6 s with the pass vs 25.1 s
+    * without), on a hub it splits the hub's groupBy key, and on the one
+    * stream it cannot shrink — disjoint pairs, where stars(E) = E — it
+    * is a narrow pass that forwards its input unchanged (CcRigSpec pins
+    * equal first-round shuffle records there). `preContract=false` is
+    * CcRigSpec's control contender. */
   private def connectedComponentsFromEdges(
       edges0: DataFrame, maxIter: Int,
       preContract: Boolean = true): (DataFrame, Int) = {
@@ -1534,8 +1407,7 @@ object Dedup {
     // per partition, and leaves the rounds starting from near-fixpoint
     // stars wherever the pair stream arrived clustered.
     val init =
-      if (preContract && preContractWorthwhile(contractionProbe(edges)))
-        localContract(edges)
+      if (preContract) localContract(edges)
       else edges.filter(col("u") =!= col("v"))
     // Shuffle width inside the rounds: MEASURED and left at session
     // parallelism (r19, closing r18 verdict #3). The verdict's

@@ -361,24 +361,14 @@ object Similarity {
     * lists degenerates to exact search restricted by quantization).
     * Corpus-side cost at scale: one broadcast-join pass to build lists
     * (no shuffle of the corpus), then each query touches only its probed
-    * lists.
-    *
-    * `prebuiltLists` separates INDEX BUILD from QUERY TIME: a production
-    * deployment assigns the corpus to lists once when the corpus lands
-    * (a materialized (cid, id) frame — [[ivfAssign]] output) and every
-    * query batch probes that artifact; passing it here skips the
-    * per-call assignment pass so what's timed is the query-time cost,
-    * the same build/probe split the minhash scaladoc describes for
-    * corpus signatures. Default None keeps the self-contained inline
-    * build. */
+    * lists. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, centroids: DataFrame, k: Int = 10,
               nProbe: Int = 3, cidCol: String = "cid",
               centCol: String = "centroid",
-              excludeSelf: Boolean = true,
-              prebuiltLists: Option[DataFrame] = None): DataFrame =
+              excludeSelf: Boolean = true): DataFrame =
     ivfTopKSweep(corpus, queries, idCol, vecCol, centroids, Seq(nProbe),
-      k, cidCol, centCol, excludeSelf, prebuiltLists).drop("n_probe")
+      k, cidCol, centCol, excludeSelf).drop("n_probe")
 
   /** [[ivfTopK]] at several nProbe levels in one pass — the recall curve
     * a user sweeps. Lists are ranked once per query up to the deepest
@@ -392,11 +382,9 @@ object Similarity {
                    vecCol: String, centroids: DataFrame, nProbes: Seq[Int],
                    k: Int = 10, cidCol: String = "cid",
                    centCol: String = "centroid",
-                   excludeSelf: Boolean = true,
-                   prebuiltLists: Option[DataFrame] = None): DataFrame = {
+                   excludeSelf: Boolean = true): DataFrame = {
     requireLevels(nProbes)
-    val lists = prebuiltLists
-      .getOrElse(ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol))
+    val lists = ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol)
       .withColumnRenamed(idCol, "neighbor_id")
     val cand = ivfCandidates(ivfProbeRanks(queries, idCol, vecCol,
       centroids, cidCol, centCol, nProbes.max), lists, cidCol, excludeSelf)
@@ -643,6 +631,51 @@ object Similarity {
       .select(col("pq_id").as(idCol), col("codes"), col("r_nsq"))
   }
 
+  /** Widen a PROBE-side artifact scan to the session's parallelism.
+    * A locally-written index artifact is one or two parquet files, and
+    * a compute-dense pass whose partitioning is the scan's (the ADC
+    * crossJoin — no exchange between scan and scoring) then runs in
+    * one task: measured 7.0 s for the sim_topk_pq_idx probe vs 1.1 s
+    * for the same ADC math on in-memory codes (which arrive through a
+    * shuffle that AQE keeps at session parallelism). At 100 TB the
+    * artifact arrives in thousands of splits and this is a no-op —
+    * the guard keys on the actual scan partition count, not a local
+    * constant. Probe paths only: append/delete/compact rewrite the
+    * artifact and must not inherit a cosmetic round-robin exchange.
+    *
+    * Shuffle-bearing (adaptive) frames are returned UNTOUCHED, and the
+    * width probe never calls `Dataset.rdd`: on an AQE plan `.rdd`
+    * materializes every intermediate query stage EAGERLY at
+    * query-construction time — the first cut did exactly that, and the
+    * recall sweeps (which then passed in-memory pqEncode frames as
+    * `prebuiltCodes`) re-executed their encode subtrees once per nProbe
+    * variant, doubling sim_recall_sweep_ivfpq(_res) (1.5 -> 2.9 s
+    * measured). Those frames arrive through an exchange whose width
+    * AQE's parallelism-first coalescing already keeps at session width
+    * — the single-task hazard is exclusive to exchange-free scan-rooted
+    * plans, which are non-adaptive and safe to probe lazily. */
+  private[graft] def widenScan(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    df.queryExecution.executedPlan match {
+      case _: AdaptiveSparkPlanExec => df
+      // the width probe below calls plan.execute(), whose prepare()
+      // EAGERLY launches broadcast/subquery jobs if the tree carries
+      // any (r18 advice — with AQE off or unsupported, an exchange- or
+      // subquery-bearing caller frame reaches this branch): probe only
+      // exchange-free, subquery-free trees — the scan-rooted shape the
+      // single-task hazard is exclusive to. Anything else already
+      // arrives through an exchange at session width; return it
+      // untouched.
+      case plan if plan.exists(p => p.isInstanceOf[Exchange] ||
+          p.subqueries.nonEmpty) => df
+      case plan =>
+        val want = df.sparkSession.sparkContext.defaultParallelism
+        if (plan.execute().getNumPartitions < want) df.repartition(want)
+        else df
+    }
+  }
+
   /** ADC (asymmetric distance computation) cosine top-k over a
     * PQ-encoded corpus: each query precomputes ONE flat lookup table —
     * `lut[offset(sub) + cid] = dot(q_sub, centroid)` — and every corpus
@@ -667,52 +700,6 @@ object Similarity {
     * `prebuiltCodes` is the materialized [[pqEncode]] artifact (build
     * once when the corpus lands, probe per query batch — the minhash
     * index split). */
-  /** Widen a PROBE-side artifact scan to the session's parallelism.
-    * A locally-written index artifact is one or two parquet files, and
-    * a compute-dense pass whose partitioning is the scan's (the ADC
-    * crossJoin — no exchange between scan and scoring) then runs in
-    * one task: measured 7.0 s for the sim_topk_pq_idx probe vs 1.1 s
-    * for the same ADC math on in-memory codes (which arrive through a
-    * shuffle that AQE keeps at session parallelism). At 100 TB the
-    * artifact arrives in thousands of splits and this is a no-op —
-    * the guard keys on the actual scan partition count, not a local
-    * constant. Probe paths only: append/delete/compact rewrite the
-    * artifact and must not inherit a cosmetic round-robin exchange.
-    *
-    * Shuffle-bearing (adaptive) frames are returned UNTOUCHED, and the
-    * width probe never calls `Dataset.rdd`: on an AQE plan `.rdd`
-    * materializes every intermediate query stage EAGERLY at
-    * query-construction time — the first cut did exactly that, and the
-    * recall sweeps (which then passed in-memory pqEncode/ivfAssign
-    * frames as `prebuiltCodes`/`prebuiltLists`) re-executed their
-    * encode subtrees once per nProbe variant, doubling
-    * sim_recall_sweep_ivfpq(_res) (1.5 -> 2.9 s measured). Those
-    * frames arrive through an exchange whose width AQE's
-    * parallelism-first coalescing already keeps at session width — the
-    * single-task hazard is exclusive to exchange-free scan-rooted
-    * plans, which are non-adaptive and safe to probe lazily. */
-  private[graft] def widenScan(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
-    df.queryExecution.executedPlan match {
-      case _: AdaptiveSparkPlanExec => df
-      // the width probe below calls plan.execute(), whose prepare()
-      // EAGERLY launches broadcast/subquery jobs if the tree carries
-      // any (r18 advice — with AQE off or unsupported, an exchange- or
-      // subquery-bearing caller frame reaches this branch): probe only
-      // exchange-free, subquery-free trees — the scan-rooted shape the
-      // single-task hazard is exclusive to. Anything else already
-      // arrives through an exchange at session width; return it
-      // untouched.
-      case plan if plan.exists(p => p.isInstanceOf[Exchange] ||
-          p.subqueries.nonEmpty) => df
-      case plan =>
-        val want = df.sparkSession.sparkContext.defaultParallelism
-        if (plan.execute().getNumPartitions < want) df.repartition(want)
-        else df
-    }
-  }
-
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, codebooks: DataFrame, k: Int = 10,
              excludeSelf: Boolean = true, shortlist: Int = 0,
@@ -738,11 +725,11 @@ object Similarity {
     * probes `nProbe` inverted lists and ADC-scans only those candidates
     * (m LUT reads each, [[graft.plans.PqAdc]]) — at 100 TB the scan is
     * `nProbe/lists` of the corpus in `m`-byte rows, where brute is all
-    * of it in float32. Both index artifacts are build-once inputs
-    * (`prebuiltLists` from [[ivfAssign]], `prebuiltCodes` from
-    * [[pqEncode]]); queries, probes, and LUTs broadcast — the corpus
-    * side never shuffles. The ADC cut ranks the floor-4dp estimate with
-    * id tie-breaks (engine-portable, the [[pqTopK]] discipline);
+    * of it in float32. The lists come from [[ivfAssign]]; the codes are
+    * a build-once input (`prebuiltCodes` from [[pqEncode]]); queries,
+    * probes, and LUTs broadcast — the corpus side never shuffles. The
+    * ADC cut ranks the floor-4dp estimate with id tie-breaks
+    * (engine-portable, the [[pqTopK]] discipline);
     * `shortlist > 0` re-ranks the ADC top-`shortlist` with true vectors
     * for exact cosines. The one-level case of [[ivfPqTopKSweep]]. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
@@ -750,11 +737,10 @@ object Similarity {
                 codebooks: DataFrame, k: Int = 10, nProbe: Int = 3,
                 excludeSelf: Boolean = true, shortlist: Int = 0,
                 cidCol: String = "cid", centCol: String = "centroid",
-                prebuiltLists: Option[DataFrame] = None,
                 prebuiltCodes: Option[DataFrame] = None): DataFrame =
     ivfPqTopKSweep(corpus, queries, idCol, vecCol, centroids, codebooks,
       Seq(nProbe), k, excludeSelf, shortlist, cidCol, centCol,
-      prebuiltLists, prebuiltCodes).drop("n_probe")
+      prebuiltCodes).drop("n_probe")
 
   /** [[ivfPqTopK]] at several nProbe levels in one pass: candidates of
     * the deepest level are ADC-scored once, carrying their list's
@@ -768,13 +754,10 @@ object Similarity {
                      codebooks: DataFrame, nProbes: Seq[Int], k: Int = 10,
                      excludeSelf: Boolean = true, shortlist: Int = 0,
                      cidCol: String = "cid", centCol: String = "centroid",
-                     prebuiltLists: Option[DataFrame] = None,
                      prebuiltCodes: Option[DataFrame] = None): DataFrame = {
     requireLevels(nProbes)
     val (m, dsub, offsets) = pqMeta(codebooks)
-    val lists = prebuiltLists.map(widenScan)
-      .getOrElse(ivfAssign(corpus, idCol, vecCol, centroids, cidCol,
-        centCol))
+    val lists = ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol)
       .withColumnRenamed(idCol, "neighbor_id")
     val cand = ivfCandidates(ivfProbeRanks(queries, idCol, vecCol,
       centroids, cidCol, centCol, nProbes.max), lists, cidCol, excludeSelf)
@@ -803,18 +786,14 @@ object Similarity {
     * (idCol, cid, rvec). */
   def ivfResiduals(corpus: DataFrame, idCol: String, vecCol: String,
                    centroids: DataFrame, cidCol: String = "cid",
-                   centCol: String = "centroid",
-                   prebuiltLists: Option[DataFrame] = None): DataFrame = {
-    val lists = prebuiltLists
-      .getOrElse(ivfAssign(corpus, idCol, vecCol, centroids, cidCol,
-        centCol))
-    corpus.join(lists, idCol)
+                   centCol: String = "centroid"): DataFrame =
+    corpus.join(ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol),
+        idCol)
       .join(broadcast(centroids.select(col(cidCol),
         col(centCol).as("__res_cent"))), cidCol)
       .select(col(idCol), col(cidCol),
         zip_with(toDouble(col(vecCol)), col("__res_cent"),
           (x, c) => round(x - c, 6)).as("rvec"))
-  }
 
   /** Residual-PQ encode: per vector, the m nearest-residual-codebook
     * codes plus `x_nsq` — the EXACT squared norm of the full
@@ -860,8 +839,8 @@ object Similarity {
             col("xn").as("nn")))), x => x.getField("nn")),
           lit(0.0), (a, x) => a + x).as("x_nsq"))
       // exactly m collected codes per id, enforced in the same job — a
-      // residuals frame with >1 row per id (e.g. prebuiltLists listing a
-      // vector under several centroids) fans the pq_id join out,
+      // residuals frame with >1 row per id (e.g. built over a corpus
+      // that lists a vector twice) fans the pq_id join out,
       // collects duplicate subspace entries, and double-counts x_nsq
       // (r13 advice); the when-guard costs nothing on the green path and
       // fails loudly instead of mis-encoding
@@ -903,12 +882,11 @@ object Similarity {
                         excludeSelf: Boolean = true, shortlist: Int = 0,
                         cidCol: String = "cid",
                         centCol: String = "centroid",
-                        prebuiltLists: Option[DataFrame] = None,
                         prebuiltCodes: Option[DataFrame] = None)
       : DataFrame =
     ivfPqResidualTopKSweep(corpus, queries, idCol, vecCol, centroids,
       codebooks, Seq(nProbe), k, excludeSelf, shortlist, cidCol, centCol,
-      prebuiltLists, prebuiltCodes).drop("n_probe")
+      prebuiltCodes).drop("n_probe")
 
   /** [[ivfPqResidualTopK]] at several nProbe levels in one pass: the
     * (query, probed cid) frame is built once at the deepest level with
@@ -923,7 +901,6 @@ object Similarity {
                              excludeSelf: Boolean = true,
                              shortlist: Int = 0, cidCol: String = "cid",
                              centCol: String = "centroid",
-                             prebuiltLists: Option[DataFrame] = None,
                              prebuiltCodes: Option[DataFrame] = None)
       : DataFrame = {
     requireLevels(nProbes)
@@ -934,15 +911,9 @@ object Similarity {
     // trivial compute and the extra exchange only costs (measured:
     // sim_topk_ivfpq_res_inc 7.74 -> 9.69 s in-chunk with the widen).
     val codes = prebuiltCodes
-      .getOrElse {
-        val lists = prebuiltLists
-          .getOrElse(ivfAssign(corpus, idCol, vecCol, centroids, cidCol,
-            centCol))
-        ivfPqResidualEncode(
-          ivfResiduals(corpus, idCol, vecCol, centroids, cidCol, centCol,
-            Some(lists)),
-          idCol, centroids, codebooks, cidCol, centCol)
-      }
+      .getOrElse(ivfPqResidualEncode(
+        ivfResiduals(corpus, idCol, vecCol, centroids, cidCol, centCol),
+        idCol, centroids, codebooks, cidCol, centCol))
       .select(col(idCol).as("neighbor_id"), col(cidCol), col("codes"),
         col("x_nsq"))
     val qc = ivfProbeRanks(queries, idCol, vecCol, centroids, cidCol,

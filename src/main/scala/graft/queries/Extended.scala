@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,25 @@ object Extended {
   private type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
+
+  /** `orders` grouped by the non-empty grouping `sets` of
+    * (o_orderstatus, o_orderpriority) — one Expand + one aggregate —
+    * plus the empty set `()` as a global aggregate, ordered with the
+    * grouping-null keys first. The SQL standard gives `()` one
+    * grand-total row even over zero input rows (DuckDB does: `cnt` 0,
+    * `total` NULL), while Spark's Expand emits nothing for an empty
+    * input; a global aggregate always returns its one row. */
+  private def withGrandTotal(o: DataFrame, sets: Seq[Seq[String]],
+                             aggs: Column*): DataFrame = {
+    val keys = Seq("o_orderstatus", "o_orderpriority")
+    val grouped = o.groupingSets(sets.map(_.map(col)), keys.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val total = o.agg(aggs.head, aggs.tail: _*).select(
+      keys.map(k => lit(null).cast(o.schema(k).dataType).as(k)) ++
+        grouped.columns.drop(keys.size).map(col): _*)
+    grouped.unionByName(total).orderBy(
+      keys.map(k => col(k).asc_nulls_first): _*)
+  }
 
   val queries: Map[String, Q] = Map(
     // left outer join with aggregated right side
@@ -78,39 +97,22 @@ object Extended {
     }),
 
     // ROLLUP with grouping-null keys pinned NULLS FIRST
-    "x_rollup" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .rollup(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum("o_totalprice"), 2).as("total"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)
-    }),
+    "x_rollup" -> ((s, dir) => withGrandTotal(t(s, dir, "orders"),
+      Seq(Seq("o_orderstatus", "o_orderpriority"), Seq("o_orderstatus")),
+      count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("total"))),
 
     // CUBE
-    "x_cube" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)
-    }),
+    "x_cube" -> ((s, dir) => withGrandTotal(t(s, dir, "orders"),
+      Seq(Seq("o_orderstatus", "o_orderpriority"), Seq("o_orderstatus"),
+        Seq("o_orderpriority")),
+      count(lit(1)).as("cnt"))),
 
     // GROUPING SETS — the explicit-set form between ROLLUP and CUBE
     // (per-status x per-priority margins plus the grand total, no
-    // (status, priority) cross cells); one Expand + one aggregate, the
-    // same single-shuffle plan shape as cube/rollup
-    "x_grouping_sets" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")),
-            Seq.empty),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"),
-          round(sum("o_totalprice"), 2).as("total"))
-        .orderBy(col("o_orderstatus").asc_nulls_first,
-          col("o_orderpriority").asc_nulls_first)
-    }),
+    // (status, priority) cross cells)
+    "x_grouping_sets" -> ((s, dir) => withGrandTotal(t(s, dir, "orders"),
+      Seq(Seq("o_orderstatus"), Seq("o_orderpriority")),
+      count(lit(1)).as("cnt"), round(sum("o_totalprice"), 2).as("total"))),
 
     // ranking windows with deterministic tie-break
     "x_rank_window" -> ((s, dir) => {
@@ -436,6 +438,10 @@ object Extended {
          EXCEPT
          SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
          ORDER BY o_custkey""",
+    // x_rollup, x_cube and x_grouping_sets: on a zero-row `orders` the
+    // empty grouping set still yields its grand-total row (`cnt` 0,
+    // `total` NULL); the Spark side computes `()` as a global aggregate
+    // so it does too (see [[withGrandTotal]])
     "x_rollup" ->
       """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
            round(sum(o_totalprice), 2) AS total

@@ -24,9 +24,6 @@ class AnnRigSpec extends RigSpec {
       corpus.withColumn("label", col("vec_id") % Clusters),
       "label", "embedding")
     .select(col("label").as("cid"), col("centroid")).localCheckpoint()
-  private lazy val lists =
-    Similarity.ivfAssign(corpus, "vec_id", "embedding", cents)
-      .localCheckpoint()
   private lazy val q8 = Similarity.quantizeInt8(corpus, "vec_id",
     "embedding").select("vec_id", "qvec").localCheckpoint()
   private lazy val pqBooks = Similarity.pqTrain(corpus, "vec_id",
@@ -39,13 +36,12 @@ class AnnRigSpec extends RigSpec {
   private def lsh = Similarity.lshTopK(corpus, queries, "vec_id",
     "embedding", k = 10)
   private def ivf = Similarity.ivfTopK(corpus, queries, "vec_id",
-    "embedding", cents, k = 10, nProbe = Probes,
-    prebuiltLists = Some(lists))
+    "embedding", cents, k = 10, nProbe = Probes)
 
   test("recall@10 >= 0.8 against brute force for lsh, ivf, q8, pq, " +
       "ivfpq and residual ivfpq") {
     val residuals = Similarity.ivfResiduals(corpus, "vec_id", "embedding",
-      cents, prebuiltLists = Some(lists)).localCheckpoint()
+      cents).localCheckpoint()
     val resBooks = Similarity.pqTrain(residuals, "vec_id", "rvec", m = 8,
       ksub = 64, iters = 2).localCheckpoint()
     val resCodes = Similarity.ivfPqResidualEncode(residuals, "vec_id",
@@ -60,8 +56,7 @@ class AnnRigSpec extends RigSpec {
         pqBooks, k = 10, shortlist = 100, prebuiltCodes = Some(pqCodes)),
       "ivfpq" -> Similarity.ivfPqTopK(corpus, queries, "vec_id",
         "embedding", cents, pqBooks, k = 10, nProbe = Probes,
-        shortlist = 100, prebuiltLists = Some(lists),
-        prebuiltCodes = Some(pqCodes)),
+        shortlist = 100, prebuiltCodes = Some(pqCodes)),
       "ivfpq_res" -> Similarity.ivfPqResidualTopK(corpus, queries,
         "vec_id", "embedding", cents, resBooks, k = 10, nProbe = Probes,
         shortlist = 100, prebuiltCodes = Some(resCodes)))
@@ -92,10 +87,13 @@ class AnnRigSpec extends RigSpec {
 
   test("lsh and ivf score a small fraction of the corpus per query; " +
       "brute force scores all of it") {
-    // pairs scored = the widest join's output: the (query, candidate)
-    // rows that reach the cosine kernel
+    // pairs scored = the widest query-side join's output: the (query,
+    // candidate) rows that reach the cosine kernel; ivf's corpus-side
+    // list assignment (a corpus x centroids join) is index build, not
+    // query scoring
     def fraction(df: DataFrame): Double =
-      joinOutputRowsOf(df).head.toDouble / (queries.count() * N)
+      joinOutputRowsOf(df, carrying = "query_id").head.toDouble /
+        (queries.count() * N)
     val (b, l, i) = (fraction(brute), fraction(lsh), fraction(ivf))
     info(f"fraction scored per query: brute=$b%.4f lsh=$l%.4f ivf=$i%.4f")
     assert(b > 0.99)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.EngineError.AnalysisError
 import graft.operators.Bpe
 
 /** BPE trainer/encoder tests with hand-computed merge trajectories —
@@ -14,6 +15,17 @@ class BpeSpec extends SparkTestBase {
   private def corpus(texts: String*) =
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
+
+  /** The above-gate trainer over the same checkpointed dict `train`
+    * builds — the distributed path whatever the heap-derived gate. */
+  private def trainDistributed(df: org.apache.spark.sql.DataFrame,
+                               nMerges: Int) =
+    Bpe.trainDistributed(graft.plans.Checkpoints.truncated(
+      Bpe.wordFrequencies(df, "text")), nMerges)
+
+  /** A (word, n_tok) vocabulary frame as a map. */
+  private def vocab(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getInt(1))).toMap
 
   test("wordFrequencies: ASCII-first normalization, counts, symbolizing") {
     val wf = Bpe.wordFrequencies(corpus("Ab ab! cd", "AB 123 c-d"), "text")
@@ -78,16 +90,15 @@ class BpeSpec extends SparkTestBase {
 
   test("train: driver gate and distributed path compute the identical " +
       "trajectory") {
-    // the adaptive gate (dict <= smallDictThreshold -> driver merge
-    // loop) must be a COST decision only: force both paths over the
-    // same corpus and demand the same trajectory, row for row
+    // the adaptive gate (dict <= autoDictGate -> driver merge loop)
+    // must be a COST decision only: run both paths over the same corpus
+    // and demand the same trajectory, row for row
     val c = corpus("abab abab cdcd", "abab cdcd xyz", "xyz xyz abab")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("step").collect().map(r => (r.getInt(0), r.getString(1),
         r.getString(2), r.getString(3), r.getLong(4))).toSeq
     val driver = rows(Bpe.train(c, "text", nMerges = 6))       // gate on
-    val dist = rows(Bpe.train(c, "text", nMerges = 6,
-      smallDictThreshold = 0L))                                 // gate off
+    val dist = rows(trainDistributed(c, nMerges = 6))           // gate off
     assert(driver == dist)
     assert(driver.length == 6)
   }
@@ -109,8 +120,7 @@ class BpeSpec extends SparkTestBase {
       df.orderBy("step").collect().map(r => (r.getInt(0), r.getString(1),
         r.getString(2), r.getString(3), r.getLong(4))).toSeq
     val driver = rows(Bpe.train(docs, "text", nMerges = 24))
-    val dist = rows(Bpe.train(docs, "text", nMerges = 24,
-      smallDictThreshold = 0L))
+    val dist = rows(trainDistributed(docs, nMerges = 24))
     assert(driver == dist)
     assert(driver.length == 24)
   }
@@ -132,7 +142,7 @@ class BpeSpec extends SparkTestBase {
       Bpe.train(c, "text", nMerges = 6).collect()
     }
     val dist = jobsOf("bpe-gate-dist") {
-      Bpe.train(c, "text", nMerges = 6, smallDictThreshold = 0L).collect()
+      trainDistributed(c, nMerges = 6).collect()
     }
     assert(drv <= 6,
       s"driver-gated train launched $drv jobs — the O(1)-jobs claim broke")
@@ -184,14 +194,13 @@ class BpeSpec extends SparkTestBase {
     }.toSeq
     assert(got == expect)
     // the r12 production path: the mapPartitions rank-loop kernel must
-    // compute the IDENTICAL counts as sequential-order application
-    // (the `tokens` twin above IS sequential order, so this pins the
-    // lowest-rank-first equivalence proof on a real trained table)
-    val gotKernel = Bpe.encodeTokenCounts(docs, "doc_id", "text", merges,
-        kernelThreshold = 0)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(gotKernel == expect,
+    // compute the IDENTICAL per-word counts as sequential-order
+    // application (the `tokens` twin above IS sequential order, so this
+    // pins the lowest-rank-first equivalence proof on a real trained
+    // table)
+    val gotKernel = Bpe.kernelVocab(words.distinct.toDF("word"), merges)
+      .collect().map(r => (r.getString(0), r.getInt(1).toLong)).toMap
+    assert(gotKernel == words.distinct.map(w => (w, tokens(w))).toMap,
       "kernel encode diverged from sequential-order merge application")
   }
 
@@ -202,18 +211,21 @@ class BpeSpec extends SparkTestBase {
     // and words untouched by any merge
     val docs = corpus("aaa aaaa abab", "abc abc xyz", "b a")
     val merges = Seq(("a", "a"), ("a", "b"), ("ab", "c"))
-    def rows(k: Int) =
-      Bpe.encodeTokenCounts(docs, "doc_id", "text", merges,
-          kernelThreshold = k)
-        .orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val expr = rows(Int.MaxValue) // expression path
-    val kern = rows(0)            // kernel path
+    val words = Seq("aaa", "aaaa", "abab", "abc", "xyz", "b", "a")
+      .toDF("word")
+    val expr = vocab(Bpe.batchedVocab(words, merges)) // expression path
+    val kern = vocab(Bpe.kernelVocab(words, merges))  // kernel path
     assert(expr == kern)
     // paper check: "aaa"->aa,a=2; "aaaa"->aa,aa=2; "abab"->ab,ab=2;
-    // doc0 = 6 tokens / 3 words. "abc"->abc=1 (x2); "xyz"=3 -> doc1 =
-    // 5 / 3. "b"=1, "a"=1 -> doc2 = 2 / 2.
-    assert(kern == Seq((0L, 6L, 3L), (1L, 5L, 3L), (2L, 2L, 2L)))
+    // "abc"->abc=1; "xyz"=3; "b"=1, "a"=1
+    assert(kern == Map("aaa" -> 2, "aaaa" -> 2, "abab" -> 2, "abc" -> 1,
+      "xyz" -> 3, "b" -> 1, "a" -> 1))
+    // and the encode sums them per doc: doc0 = 6 tokens / 3 words,
+    // doc1 = 1 + 1 + 3 = 5 / 3, doc2 = 2 / 2
+    val enc = Bpe.encodeTokenCounts(docs, "doc_id", "text", merges)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(enc == Seq((0L, 6L, 3L), (1L, 5L, 3L), (2L, 2L, 2L)))
   }
 
   test("kernelVocab pass counter: one count per lowest-rank scan, " +
@@ -253,12 +265,12 @@ class BpeSpec extends SparkTestBase {
     assert(batched.queryExecution.optimizedPlan.toString
       .contains("LogicalRDD"),
       "a 40-merge encode must truncate between its batches")
-    // and the batched plan still computes the same counts as one batch
-    val wide = Bpe.encodeTokenCounts(c, "doc_id", "text", merges40,
-        mergesPerStage = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // and the batched chain computes the same counts as one batch
+    val words = Seq("ab", "cd").toDF("word")
+    val wide = vocab(Bpe.batchedVocab(words, merges40, mergesPerStage = 64))
+    assert(vocab(Bpe.batchedVocab(words, merges40)) == wide)
     val got = batched.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == wide)
+    assert(got == Seq((0L, 2L * wide("ab") + wide("cd"))))
   }
 
   test("docs with no alphabetic words produce no row (both engines agree)") {
@@ -268,8 +280,16 @@ class BpeSpec extends SparkTestBase {
   }
 
   test("train throws on a corpus with no pairs at all") {
-    intercept[IllegalStateException] {
-      Bpe.train(corpus("a b c"), "text", nMerges = 1)
+    // the named precondition error, through both trainers, for a
+    // single-letter corpus and a zero-row one
+    val zero = corpus("ab cd").filter(lit(false))
+    val single = corpus("a b c", "x 1 y!")
+    for ((name, c) <- Seq("zero-row" -> zero, "single-letter" -> single);
+         (path, run) <- Seq[(String, () => Any)](
+           "train" -> (() => Bpe.train(c, "text", nMerges = 3)),
+           "trainDistributed" -> (() => trainDistributed(c, nMerges = 3)))) {
+      val ex = intercept[AnalysisError](run())
+      assert(ex.getMessage.contains("two or more letters"), s"$name/$path")
     }
   }
 

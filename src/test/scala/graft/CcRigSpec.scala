@@ -7,9 +7,10 @@ import graft.PlanCounters._
 import graft.operators.Dedup
 
 /** Connected components on the planted worst-case rigs at test scale:
-  * 8,200 nodes as 200 permuted-id chains of 41 (diameter 40), and the
+  * 8,200 nodes as 200 permuted-id chains of 41 (diameter 40), the
   * skew twin of the same node count whose 80% star is one hub-and-spoke
-  * component. The driver/distributed crossover, the log-round bound,
+  * component, and 4,100 disjoint pairs — the one stream the pre-pass
+  * cannot shrink. The driver/distributed crossover, the log-round bound,
   * the skew containment and the pre-pass are all asserted on counts:
   * labels, rounds, jobs and shuffle records. */
 class CcRigSpec extends RigSpec {
@@ -23,6 +24,9 @@ class CcRigSpec extends RigSpec {
   private lazy val skew =
     Dedup.syntheticSkewedEdges(spark, Nodes, StarFrac, Size)
       .localCheckpoint()
+  private lazy val pairs = spark.range(Nodes / 2)
+    .select((col("id") * 2 + 1).as("id_a"), (col("id") * 2).as("id_b"))
+    .localCheckpoint()
 
   private def labelsOf(cc: DataFrame): Map[Long, Long] =
     cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -47,7 +51,7 @@ class CcRigSpec extends RigSpec {
     val ((labels, _), distWork) = chainsPre
     assert(drv.size == Nodes && labels == drv)
     info(s"jobs: driver=${drvWork.jobs} distributed=${distWork.jobs}")
-    // measured 3 vs 20; the bound carries a 1.3x margin
+    // measured 3 vs 19; the bound carries a 1.3x margin
     assert(drvWork.jobs * 5 < distWork.jobs)
   }
 
@@ -87,5 +91,20 @@ class CcRigSpec extends RigSpec {
     assert(pre <= raw)
     // measured 2.2x fewer; the bound carries a 1.3x margin
     assert(preAll * 1.67 < rawAll)
+  }
+
+  test("on disjoint pairs the pre-pass runs and changes nothing: equal " +
+      "first-round shuffle records and jobs, driver-equal labels") {
+    def firstShuffle(w: Work) = w.shuffleWrittenByJob.find(_ > 0).get
+    val ((preLabels, _), pre) = dist(pairs)
+    val ((rawLabels, _), raw) = dist(pairs, pre = false)
+    val drv = labelsOf(Dedup.connectedComponents(pairs))
+    info(s"first-round shuffle records: pre=${firstShuffle(pre)} " +
+      s"raw=${firstShuffle(raw)}; jobs: pre=${pre.jobs} raw=${raw.jobs}")
+    // stars(E) = E on disjoint pairs: the narrow pass forwards its input,
+    // and no sampling job runs ahead of it
+    assert(firstShuffle(pre) == firstShuffle(raw))
+    assert(pre.jobs == raw.jobs)
+    assert(drv.size == Nodes && preLabels == drv && rawLabels == drv)
   }
 }

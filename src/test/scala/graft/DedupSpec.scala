@@ -327,64 +327,18 @@ class DedupSpec extends SparkTestBase {
     assert(pre.nonEmpty)
   }
 
-  test("contraction probe: clique engages via edge contraction, hub and " +
-      "chains via local structure, disjoint pairs skip, tiny defaults ON") {
-    // clique (the LSH-bucket shape): 80 nodes -> 3160 edges -> 79 stars,
-    // ratio ~0.025 — the edge-contraction signal
-    val n = 80
-    val clique = (for (i <- 0 until n; j <- i + 1 until n)
-      yield (100L + j, 100L + i)).toDF("u", "v").coalesce(1)
-    val cs = Dedup.contractionProbe(clique)
-    assert(cs.exists(_.edgesIn >= Dedup.ProbeMinEdges))
-    assert(Dedup.preContractWorthwhile(cs), "a clique stream must engage")
-    // hub star (the cc2m_skew shape): edge count barely contracts
-    // (ratio ~1) but ONE local component spans the partition — the
-    // local-structure signal is what must fire
-    val star = (1L to 6000L).map(i => (1000000L + i, 7L))
-      .toDF("u", "v").coalesce(1)
-    val ss = Dedup.contractionProbe(star)
-    assert(ss.exists(s => s.edgesIn >= Dedup.ProbeMinEdges &&
-      s.starsOut.toDouble > Dedup.PreContractRatioGate * s.edgesIn),
-      "the star's ratio must NOT be the engaging signal")
-    assert(ss.exists(_.maxComponentNodes >= Dedup.ProbeComponentGate))
-    assert(Dedup.preContractWorthwhile(ss), "a hub stream must engage")
-    // chains (the cc2m_dist rig shape): ratio ~1 but components of 41
-    // have diameter >> 2, and flattening them saves global rounds —
-    // measured r13 same-JVM: 17.6 s with the pass vs 25.1 s without,
-    // so chains must ENGAGE (the r12 "uniform tax" was regime noise)
-    val chains = (0L until 2050L).filter(i => (i + 1) % 41 != 0)
-      .map(i => (i + 1, i)).toDF("u", "v").coalesce(1)
-    assert(Dedup.preContractWorthwhile(Dedup.contractionProbe(chains)),
-      "a chain stream must engage — flattening saves rounds")
-    // disjoint pairs: every local component is one edge, stars(E) = E,
-    // the pass rewrites the input to itself — the ONLY skip shape
-    val pairs = (0L until 2000L).map(i => (2 * i + 1, 2 * i))
-      .toDF("u", "v").coalesce(1)
-    assert(!Dedup.preContractWorthwhile(Dedup.contractionProbe(pairs)),
-      "a disjoint-pair stream must skip the pre-pass")
-    // inconclusive (every probed partition under ProbeMinEdges):
-    // default ON — skew immunity is the scale-safe side
-    val tiny = Seq((3L, 1L), (5L, 1L)).toDF("u", "v").coalesce(1)
-    assert(Dedup.preContractWorthwhile(Dedup.contractionProbe(tiny)))
-    // decision is pure over the stats — pin the gates directly
-    import Dedup.ProbeStat
-    assert(Dedup.preContractWorthwhile(Seq(ProbeStat(10000, 400, 50))))
-    assert(Dedup.preContractWorthwhile(Seq(ProbeStat(10000, 10000, 8000))))
-    assert(Dedup.preContractWorthwhile(Seq(ProbeStat(10000, 10000, 41))))
-    assert(!Dedup.preContractWorthwhile(Seq(ProbeStat(10000, 10000, 2))))
-    assert(Dedup.preContractWorthwhile(Seq(ProbeStat(10, 10, 2))))
-  }
-
   test("adaptive CC: driver union-find equals distributed star contraction") {
-    // same random graph through both execution paths (threshold gates):
-    // labels must be identical — the gate is a perf decision, not a
-    // semantics one
+    // same random graph through both execution paths: 150 pairs sit
+    // under the size gate, so connectedComponents runs the driver
+    // union-find, and connectedComponentsWithRounds is the distributed
+    // path — labels must be identical, the gate is a perf decision, not
+    // a semantics one
     val rnd = new scala.util.Random(42)
     val edges = Seq.fill(150)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter(e => e._1 != e._2).toDF("id_a", "id_b")
-    val small = Dedup.connectedComponents(edges, smallGraphThreshold = Int.MaxValue)
+    val small = Dedup.connectedComponents(edges)
       .as[(Long, Long)].collect().toMap
-    val big = Dedup.connectedComponents(edges, smallGraphThreshold = 0)
+    val big = Dedup.connectedComponentsWithRounds(edges)._1
       .as[(Long, Long)].collect().toMap
     assert(small == big)
     assert(small.nonEmpty)
@@ -870,7 +824,7 @@ class DedupSpec extends SparkTestBase {
     assert(hub != 0L)
     // both CC paths agree and find {star 80, chain 10, chain 10}
     val drv = Dedup.connectedComponents(g).as[(Long, Long)].collect()
-    val dst = Dedup.connectedComponents(g, smallGraphThreshold = 0)
+    val dst = Dedup.connectedComponentsWithRounds(g)._1
       .as[(Long, Long)].collect()
     assert(drv.toMap == dst.toMap)
     val sizes = drv.groupBy(_._2).map(_._2.length).toSeq.sorted

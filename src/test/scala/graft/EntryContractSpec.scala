@@ -56,4 +56,20 @@ class EntryContractSpec extends SparkTestBase {
       assert(schema.fields.nonEmpty, s"$name produced an empty schema")
     }
   }
+
+  test("x_rollup, x_cube and x_grouping_sets on a zero-row orders table " +
+      "return the one grand-total row, as their oracles do") {
+    val dir = java.nio.file.Files.createTempDirectory("empty_orders")
+    try {
+      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+        .limit(0).write.parquet(s"$dir/orders.parquet")
+      def rows(q: String) = SparkEntry.queries(q)(spark, dir.toString)
+        .collect().map(_.toSeq).toSeq
+      assert(rows("x_rollup") == Seq(Seq(null, null, 0L, null)))
+      assert(rows("x_cube") == Seq(Seq(null, null, 0L)))
+      assert(rows("x_grouping_sets") == Seq(Seq(null, null, 0L, null)))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

@@ -151,8 +151,7 @@ class PartitionInvarianceSpec extends SparkTestBase {
       }
     }.toDF("id_a", "id_b").withColumn("grp", col("id_a") % 3)
     assertInvariant(edges, "connectedComponents")(df =>
-      Dedup.connectedComponents(df.select("id_a", "id_b"),
-        smallGraphThreshold = 0))
+      Dedup.connectedComponentsWithRounds(df.select("id_a", "id_b"))._1)
   }
 
   test("kmeans: centroids and assignments survive any layout") {

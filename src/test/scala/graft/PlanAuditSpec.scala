@@ -363,10 +363,8 @@ class PlanAuditSpec extends SparkTestBase {
       .toDF("vec_id", "embedding")
     val cents = Seq((0, Array.fill(8)(0.25)), (1, Array.fill(8)(0.75)))
       .toDF("cid", "centroid")
-    val lists = Similarity.ivfAssign(corpus, "vec_id", "embedding", cents)
-      .localCheckpoint()
     val resid = Similarity.ivfResiduals(corpus, "vec_id", "embedding",
-      cents, prebuiltLists = Some(lists))
+      cents)
     val books = Similarity.pqTrain(resid, "vec_id", "rvec",
       m = 2, ksub = 4, iters = 1).localCheckpoint()
     val codes = Similarity.ivfPqResidualEncode(resid, "vec_id", cents,

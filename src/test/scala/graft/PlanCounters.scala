@@ -73,10 +73,13 @@ object PlanCounters {
         metric(f, "numOutputRows")
     }.sum
 
-  /** Output rows of every join node in the plan, largest first. */
-  def joinOutputRowsOf(df: DataFrame): Seq[Long] =
+  /** Output rows of every join node in the plan, largest first. With
+    * `carrying`, only joins whose output has a column of that name. */
+  def joinOutputRowsOf(df: DataFrame, carrying: String = ""): Seq[Long] =
     executed(df).collect {
-      case j: BaseJoinExec => metric(j, "numOutputRows")
+      case j: BaseJoinExec
+          if carrying.isEmpty || j.output.exists(_.name == carrying) =>
+        metric(j, "numOutputRows")
     }.sortBy(-_)
 
   /** Whether the physical plan evaluates a join pair by pair. */

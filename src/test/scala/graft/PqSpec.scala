@@ -374,13 +374,12 @@ class PqSpec extends SparkTestBase {
       Similarity.ivfPqResidualEncode(resid, "vec_id", cents, mixed)
     }
     assert(ex2.getMessage.contains("uniform dsub"))
-    // residuals built from lists that file every vector under both
-    // centroids carry 2 rows per id — the encode groupBy would collect
-    // 2m subspace entries and double-count x_nsq; the in-job guard must
-    // raise, not mis-encode
-    val fanned = Similarity.ivfResiduals(corpus, "vec_id", "embedding",
-      cents, prebuiltLists = Some(corpus.select("vec_id")
-        .crossJoin(cents.select("cid"))))
+    // residuals built over a corpus that lists every vector twice carry
+    // 2 rows per id — the encode groupBy would collect 2m subspace
+    // entries and double-count x_nsq; the in-job guard must raise, not
+    // mis-encode
+    val fanned = Similarity.ivfResiduals(corpus.union(corpus), "vec_id",
+      "embedding", cents)
     val ex3 = intercept[Exception] {
       Similarity.ivfPqResidualEncode(fanned, "vec_id", cents, books)
         .collect()
