@@ -2,8 +2,9 @@ package graft.core
 
 /** Error ADT mirroring the reference's `UtilsError` surface
   * (reference `src/error.rs:15-58`). Message texts that the reference's
-  * tests assert on are preserved verbatim (see `graft.cols.ColumnAppend`,
-  * `graft.ops.DataFrameOps.concatDfs`).
+  * tests assert on are preserved verbatim (see
+  * `graft.operators.ColumnAppend`,
+  * `graft.operators.DataFrameOps.concatDfs`).
   */
 sealed abstract class EngineError(message: String, cause: Throwable = null)
     extends RuntimeException(message, cause)

@@ -11,19 +11,16 @@ object ProfileLsh {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val e = Tables.load(spark, dir, "embeddings")
     e.count()
-    for (mode <- Seq(Dedup.HashMode.Xx, Dedup.HashMode.Md5); i <- 1 to 2) {
+    for (i <- 1 to 2) {
       val t0 = System.nanoTime()
       val n = Dedup.embeddingPairs(e, "vec_id", "embedding",
-        threshold = 0.3, tables = 8, bits = 8, mode = mode).count()
-      println(f"pairs $mode run $i: ${(System.nanoTime() - t0) / 1e9}%6.2fs pairs=$n")
+        threshold = 0.3, tables = 8, bits = 8).count()
+      println(f"pairs run $i: ${(System.nanoTime() - t0) / 1e9}%6.2fs pairs=$n")
     }
-    for (mode <- Seq(Dedup.HashMode.Xx, Dedup.HashMode.Md5)) {
-      val t0 = System.nanoTime()
-      Dedup.embeddingBuckets(e, "vec_id", "embedding", 8, 8, 64, 42L, mode).count()
-      println(f"buckets only $mode: ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-    }
-    val b = Dedup.embeddingBuckets(e, "vec_id", "embedding", 8, 8, 64, 42L,
-      Dedup.HashMode.Md5)
+    val b = Dedup.embeddingBuckets(e, "vec_id", "embedding", 8, 8, 64)
+    val tb = System.nanoTime()
+    b.count()
+    println(f"buckets only: ${(System.nanoTime() - tb) / 1e9}%6.2fs")
     import org.apache.spark.sql.functions.col
     val l = b.select(col("table"), col("bucket"), col("vec_id").as("id_a"))
     val r = b.select(col("table"), col("bucket"), col("vec_id").as("id_b"))

@@ -1,7 +1,6 @@
 package graft.examples
 
 import graft.operators.Dedup
-import graft.operators.Dedup.HashMode
 import graft.core.Sessions
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -26,7 +25,7 @@ object ProfileMhIdx {
       val path = s"/tmp/graft_profile_mh_$i"
       t(s"run$i writeMinhashIndex") {
         Dedup.writeMinhashIndex(d.filter(col("doc_id") < cut),
-          "doc_id", "text", path, mode = HashMode.Md5, sourceTag = dir)
+          "doc_id", "text", path, sourceTag = dir)
       }
       val idx = t(s"run$i readMinhashIndex") {
         Dedup.readMinhashIndex(spark, path, expectedSource = Some(dir))

@@ -95,8 +95,8 @@ object ArtifactMaintenance {
     * column order, id type and stamps. A family that caches its encode
     * releases that cache itself, after this returns. */
   private[operators] def append[I](art: Artifact[I], path: String,
-      batch: DataFrame, idCol: String, requireNewIds: Boolean,
-      opName: String)(read: => I)(encode: I => Seq[DataFrame]): Unit = {
+      batch: DataFrame, idCol: String, opName: String)(read: => I)
+      (encode: I => Seq[DataFrame]): Unit = {
     val spark = batch.sparkSession
     val idx = open(spark, path, art)(read)
     val frames = art.frames(idx)
@@ -104,10 +104,8 @@ object ArtifactMaintenance {
     val diskId = art.counted.idCol(counted)
     val batchIds = castIdsLossless(batch, idCol,
       counted.schema(diskId).dataType, diskId, opName)
-    if (requireNewIds)
-      requireDisjointIds(spark, counted, diskId, batchIds, path, opName)
-    mergeIdBloom(spark, batchIds, diskId, path, counted,
-      upgradeLegacy = requireNewIds)
+    requireDisjointIds(spark, counted, diskId, batchIds, path, opName)
+    mergeIdBloom(spark, batchIds, diskId, path, counted)
     val rows = encode(idx)
     for (((dir, cur), add) <- art.dirs.zip(frames).zip(rows))
       onDisk(add, cur, dir.idCol(cur), idCol)
@@ -415,8 +413,7 @@ object ArtifactMaintenance {
       throw new IllegalArgumentException(
         s"$opName: the batch shares ids with the index at $path — a " +
           "re-delivered drop would duplicate neighbors in every probe " +
-          "(set requireNewIds = false only if upstream id discipline " +
-          "guarantees disjointness)")
+          "(drop the ids the index already holds before appending)")
     DupCheckStats(bloom.isDefined, nMaybe, scannedCodes = true)
   }
 
@@ -424,11 +421,10 @@ object ArtifactMaintenance {
     * bitwise OR) — the step [[append]] runs BEFORE the data appends. A
     * legacy artifact without a sidecar is upgraded from the full id
     * column union the batch — the LAST corpus-sized id read it ever
-    * pays (unless `upgradeLegacy` is false: the caller opted out of
-    * scans via requireNewIds = false). */
+    * pays. */
   private def mergeIdBloom(spark: SparkSession, batchIds: DataFrame,
                            diskIdCol: String, path: String,
-                           codes: DataFrame, upgradeLegacy: Boolean): Unit = {
+                           codes: DataFrame): Unit = {
     val bloomDir = idBloomPath(path)
     readIdBloom(spark, bloomDir) match {
       case Some(old) =>
@@ -443,11 +439,9 @@ object ArtifactMaintenance {
         stagedSwap(spark, bloomDir) { staged =>
           merged.write.mode("overwrite").parquet(staged)
         }
-      case None if upgradeLegacy =>
+      case None =>
         writeIdBloom(codes.select(col(diskIdCol))
           .unionByName(batchIds.select(col(diskIdCol))), diskIdCol, bloomDir)
-      case None => // requireNewIds = false on a legacy artifact: the
-        // caller opted out of corpus-sized reads; stay legacy
     }
   }
 
@@ -457,12 +451,12 @@ object ArtifactMaintenance {
     * BIGINT '5') would always miss the bloom and bypass the refusal
     * (r15 advice) — with round-trip fidelity enforced (r16 advice): the
     * bare cast truncated silently — a genuinely-new DOUBLE id 5.5
-    * coerced to BIGINT 5 and was wrongly refused as a duplicate (or,
-    * with requireNewIds = false, appended under a COLLIDING id so two
-    * docs share id 5), and an unparseable string id cast to null and
-    * bypassed the bloom entirely. Any non-null id whose cast is null
-    * or fails to cast BACK equal is named and refused before a byte
-    * is written. A same-type batch skips the check (no filter job). Returns the single-column frame named `diskIdCol`. */
+    * coerced to BIGINT 5 and was wrongly refused as a duplicate, and an
+    * unparseable string id cast to null and bypassed the bloom
+    * entirely. Any non-null id whose cast is null or fails to cast BACK
+    * equal is named and refused before a byte is written. A same-type
+    * batch skips the check (no filter job). Returns the single-column
+    * frame named `diskIdCol`. */
   private def castIdsLossless(batch: DataFrame, idCol: String,
       target: DataType, diskIdCol: String, opName: String): DataFrame = {
     val src = batch.select(col(idCol))

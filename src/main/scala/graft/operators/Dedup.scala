@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.EngineError.AnalysisError
 import graft.functions.VectorFunctions
 
 /** Deduplication suite for large-scale text/embedding corpora.
@@ -24,43 +25,28 @@ import graft.functions.VectorFunctions
   *  - embedding:  random-hyperplane LSH bucket join + exact cosine verify
   *
   * All hashing is deterministic (fixed seeds) so results are reproducible
-  * across runs and cluster layouts. Hashing is pluggable via [[HashMode]]:
-  * the production default is Spark's codegen'd `xxhash64`; [[HashMode.Md5]]
-  * derives the same-width hashes from md5 hex prefixes, which any SQL
-  * engine can replicate bit-for-bit — that mode exists so LSH outputs can
-  * be verified value-level against an external oracle (DuckDB), not just
+  * across runs and cluster layouts. The LSH family has one hash: every
+  * hash, bucket and hyperplane derives from md5 hex prefixes, which any
+  * SQL engine can replicate bit-for-bit, so LSH outputs are verified
+  * value-level against an external oracle (DuckDB), not just
   * row-counted.
   */
 object Dedup {
 
-  /** Hash provider for the LSH family. */
-  sealed trait HashMode
-  object HashMode {
-    /** xxhash64 — fastest (codegen'd, no hex round-trip); production. */
-    case object Xx extends HashMode
-    /** md5-derived bits — bit-replicable in any engine with md5(). */
-    case object Md5 extends HashMode
-  }
+  /** 31-bit non-negative hash of a column: the first 8 md5 hex chars
+    * parsed as an unsigned 32-bit int, reduced mod 2^31-1 — DuckDB twin
+    * is `('0x' || substr(md5(c),1,8))::BIGINT % 2147483647`. */
+  private[graft] def hash31(c: Column): Column =
+    pmod(conv(substring(md5(c.cast("binary")), 1, 8), 16, 10).cast("long"),
+      lit(Prime31))
 
-  /** 31-bit non-negative hash of a column. Md5 mode: first 8 md5 hex chars
-    * parsed as an unsigned 32-bit int, reduced mod 2^31-1 — DuckDB twin is
-    * `('0x' || substr(md5(c),1,8))::BIGINT % 2147483647`. */
-  private[graft] def hash31(c: Column, mode: HashMode): Column = mode match {
-    case HashMode.Xx => pmod(xxhash64(c), lit(Prime31))
-    case HashMode.Md5 =>
-      pmod(conv(substring(md5(c.cast("binary")), 1, 8), 16, 10).cast("long"),
-        lit(Prime31))
-  }
-
-  /** 64-bit hash of a column. Md5 mode composes the first 16 md5 hex chars
-    * from two 32-bit halves (a single conv of 16 chars would overflow the
+  /** 64-bit hash of a column: the first 16 md5 hex chars composed from
+    * two 32-bit halves (a single conv of 16 chars would overflow the
     * signed long cast for half the values). */
-  private[graft] def hash64(c: Column, mode: HashMode): Column = mode match {
-    case HashMode.Xx => xxhash64(c)
-    case HashMode.Md5 =>
-      val hex = md5(c.cast("binary"))
-      shiftleft(conv(substring(hex, 1, 8), 16, 10).cast("long"), 32)
-        .bitwiseOR(conv(substring(hex, 9, 8), 16, 10).cast("long"))
+  private[graft] def hash64(c: Column): Column = {
+    val hex = md5(c.cast("binary"))
+    shiftleft(conv(substring(hex, 1, 8), 16, 10).cast("long"), 32)
+      .bitwiseOR(conv(substring(hex, 9, 8), 16, 10).cast("long"))
   }
 
   // ---------------------------------------------------------------- exact
@@ -125,16 +111,15 @@ object Dedup {
   private val Prime31 = Int.MaxValue.toLong
 
   /** MinHash signatures: (id, sig array<long> of length numHashes).
-    * h_i(s) = (a_i * h(s) + b_i) mod p with h(s) = xxhash64 reduced to
-    * 31 bits, min over the doc's shingles. Computed as one aggregation
-    * over the exploded shingle frame — a single shuffle on id, with
-    * partial map-side mins first.
+    * h_i(s) = (a_i * h(s) + b_i) mod p with h(s) = [[hash31]], min over
+    * the doc's shingles. Computed as one aggregation over the exploded
+    * shingle frame — a single shuffle on id, with partial map-side mins
+    * first.
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, shingleSize: Int = 3,
-                        seed: Long = 42L,
-                        mode: HashMode = HashMode.Xx): DataFrame = {
-    val minCols = signatureMins(numHashes, seed, mode)
+                        seed: Long = 42L): DataFrame = {
+    val minCols = signatureMins(numHashes, seed)
     shingles(df, idCol, textCol, shingleSize)
       .groupBy(col(idCol)).agg(minCols.head, minCols.tail: _*)
       .select(col(idCol), signatureOf(numHashes))
@@ -142,9 +127,8 @@ object Dedup {
 
   /** The per-id signature aggregates `m0` … `m<numHashes-1>`: the min of
     * each universal hash over the id's `shingle` rows. */
-  private def signatureMins(numHashes: Int, seed: Long,
-                            mode: HashMode): Seq[Column] = {
-    val h = hash31(col("shingle"), mode)
+  private def signatureMins(numHashes: Int, seed: Long): Seq[Column] = {
+    val h = hash31(col("shingle"))
     hashCoeffs(numHashes, seed).zipWithIndex.map { case ((a, b), i) =>
       min(pmod(h * lit(a) + lit(b), lit(Prime31))).as(s"m$i")
     }
@@ -154,20 +138,14 @@ object Dedup {
     array((0 until numHashes).map(i => col(s"m$i")): _*).as("signature")
 
   /** LSH band buckets: (id, band, bucket_hash). bands * rowsPerBand must
-    * equal the signature length. Md5 mode buckets are the md5 hex of the
-    * comma-joined band slice (DuckDB: `md5(array_to_string(slice, ','))`);
-    * xx mode hashes the slice array directly. */
+    * equal the signature length. A bucket is the md5 hex of the
+    * comma-joined band slice (DuckDB: `md5(array_to_string(slice, ','))`). */
   def minhashBuckets(sigs: DataFrame, idCol: String, bands: Int,
-                     rowsPerBand: Int,
-                     mode: HashMode = HashMode.Xx): DataFrame = {
+                     rowsPerBand: Int): DataFrame = {
     def bucketOf(b: Int): Column = {
       val sl = slice(col("signature"), b * rowsPerBand + 1, rowsPerBand)
-      mode match {
-        case HashMode.Xx => xxhash64(sl).cast("string")
-        case HashMode.Md5 =>
-          md5(array_join(transform(sl, x => x.cast("string")), ",")
-            .cast("binary"))
-      }
+      md5(array_join(transform(sl, x => x.cast("string")), ",")
+        .cast("binary"))
     }
     sigs.select(col(idCol), posexplode(
         array((0 until bands).map(bucketOf): _*)))
@@ -202,8 +180,7 @@ object Dedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.8, numHashes: Int = 64,
                    bands: Int = 16, shingleSize: Int = 3,
-                   seed: Long = 42L,
-                   mode: HashMode = HashMode.Xx): DataFrame = {
+                   seed: Long = 42L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // one signature computation feeds both the bucket join and the
     // estimate — signatures are cached because the plan fans out into
@@ -211,8 +188,8 @@ object Dedup {
     // many queries in one session should clearCache() afterwards (Verify
     // does); the cache is scoped to this plan's lifetime by convention.
     val sigs = minhashSignatures(df, idCol, textCol, numHashes, shingleSize,
-      seed, mode).cache()
-    bucketPairs(minhashBuckets(sigs, idCol, bands, numHashes / bands, mode),
+      seed).cache()
+    bucketPairs(minhashBuckets(sigs, idCol, bands, numHashes / bands),
       sigs, idCol, numHashes, threshold)
   }
 
@@ -241,11 +218,10 @@ object Dedup {
                            idCol: String, textCol: String,
                            threshold: Double = 0.8, numHashes: Int = 64,
                            bands: Int = 16, shingleSize: Int = 3,
-                           seed: Long = 42L,
-                           mode: HashMode = HashMode.Xx): DataFrame =
+                           seed: Long = 42L): DataFrame =
     incrementalSurvivors(batch,
       buildMinhashIndex(corpus, idCol, textCol, numHashes, bands,
-        shingleSize, seed, mode),
+        shingleSize, seed),
       idCol, textCol, threshold)
 
   /** [[incrementalSurvivors]] probing a PREBUILT corpus index — the
@@ -255,7 +231,7 @@ object Dedup {
     * per-batch cost is O(batch + collisions) and the corpus text is
     * never re-read, let alone re-shingled (pinned by spec: the probe
     * plan scans only the three index frames). Probe hyperparameters
-    * (hash count, banding, shingle width, seed, hash mode) come FROM the
+    * (hash count, banding, shingle width, seed) come FROM the
     * index, so a mismatched probe is impossible by construction — the
     * same params-travel-with-the-artifact convention as
     * [[Sketches]]. `idCol`/`textCol` must name the batch's columns; the
@@ -288,10 +264,10 @@ object Dedup {
     // single-consumer scan of the materialized artifact — no cache, no
     // recompute, candidates only inside colliding buckets
     val sigB = minhashSignatures(exactKept, idCol, textCol,
-      index.numHashes, index.shingleSize, index.seed, index.mode).cache()
+      index.numHashes, index.shingleSize, index.seed).cache()
     val sigC = index.signatures
     val rpb = index.numHashes / index.bands
-    val bb = minhashBuckets(sigB, idCol, index.bands, rpb, index.mode)
+    val bb = minhashBuckets(sigB, idCol, index.bands, rpb)
     val cb = index.buckets
     val numHashes = index.numHashes
     def est(sa: Column, sb: Column): Column =
@@ -327,13 +303,11 @@ object Dedup {
     * convention). */
   final case class MinhashIndex(hashes: DataFrame, signatures: DataFrame,
                                 buckets: DataFrame, numHashes: Int,
-                                bands: Int, shingleSize: Int, seed: Long,
-                                mode: HashMode)
+                                bands: Int, shingleSize: Int, seed: Long)
 
-  /** Each mode's `hashMode` stamp, written by [[writeMinhashIndex]] and
-    * parsed back by [[readMinhashIndex]]. */
-  private val StampedModes: Map[HashMode, String] =
-    Map(HashMode.Xx -> "xx", HashMode.Md5 -> "md5")
+  /** The `hashMode` stamp [[writeMinhashIndex]] writes and
+    * [[readMinhashIndex]] demands back: the md5-derived hashing above. */
+  private val Md5Stamp = "md5"
 
   /** The minhash index's three data dirs for [[ArtifactMaintenance]],
     * each compacted by its PROBE key — hashes by content_hash, buckets
@@ -356,10 +330,9 @@ object Dedup {
     * and, as in [[minhashSignatures]], gets no signature. */
   def buildMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, bands: Int = 16,
-                        shingleSize: Int = 3, seed: Long = 42L,
-                        mode: HashMode = HashMode.Xx): MinhashIndex =
+                        shingleSize: Int = 3, seed: Long = 42L): MinhashIndex =
     buildCachedIndex(corpus, idCol, textCol, numHashes, bands, shingleSize,
-      seed, mode)._1
+      seed)._1
 
   /** [[buildMinhashIndex]] plus the per-id cache it CREATED, for a caller
     * that releases it — `None` when an equal plan was already cached
@@ -368,10 +341,10 @@ object Dedup {
     * send that plan back to the corpus. */
   private def buildCachedIndex(corpus: DataFrame, idCol: String,
                                textCol: String, numHashes: Int, bands: Int,
-                               shingleSize: Int, seed: Long, mode: HashMode)
+                               shingleSize: Int, seed: Long)
       : (MinhashIndex, Option[DataFrame]) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val minCols = signatureMins(numHashes, seed, mode)
+    val minCols = signatureMins(numHashes, seed)
     // posexplode_OUTER keeps shingle-less rows; each row's hash is
     // collected once, from its first (or only, null) shingle row
     val agg = withTokens(corpus, idCol, textCol)
@@ -389,8 +362,8 @@ object Dedup {
     val sigs = perId.filter(col("__n") > 0)
       .select(col(idCol), signatureOf(numHashes))
     (MinhashIndex(hashes, sigs,
-      minhashBuckets(sigs, idCol, bands, numHashes / bands, mode),
-      numHashes, bands, shingleSize, seed, mode),
+      minhashBuckets(sigs, idCol, bands, numHashes / bands),
+      numHashes, bands, shingleSize, seed),
       if (created) Some(perId) else None)
   }
 
@@ -407,16 +380,15 @@ object Dedup {
   def writeMinhashIndex(corpus: DataFrame, idCol: String, textCol: String,
                         path: String, numHashes: Int = 64, bands: Int = 16,
                         shingleSize: Int = 3, seed: Long = 42L,
-                        mode: HashMode = HashMode.Xx,
                         sourceTag: String = ""): Unit = {
     val (idx, created) = buildCachedIndex(corpus, idCol, textCol, numHashes,
-      bands, shingleSize, seed, mode)
+      bands, shingleSize, seed)
     // appends copy this stamp verbatim onto their files, so parquet
     // schema resolution can read ANY file's footer and find the contract
     val b = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong("numHashes", numHashes).putLong("bands", bands)
       .putLong("shingleSize", shingleSize).putLong("seed", seed)
-      .putString("hashMode", StampedModes(mode))
+      .putString("hashMode", Md5Stamp)
     if (sourceTag.nonEmpty) b.putString("source", sourceTag)
     val meta = b.build()
     // the bloom comes from the STILL-CACHED signatures (r19, r18
@@ -434,11 +406,13 @@ object Dedup {
 
   /** Read a [[writeMinhashIndex]] artifact back as probe-ready frames.
     * Hyperparameters come from the stamped signature metadata; a path
-    * that is not a minhash index fails loudly here, not as a silent
-    * recall collapse in the probe. `expectedSource` (optional) demands
-    * the provenance tag stamped at write time: an index at the right
-    * path but built from a DIFFERENT corpus (stale artifact, path
-    * collision, concurrent writer) throws instead of probing. */
+    * that is not a minhash index, or an index hashed with anything but
+    * md5 (the `xx` stamp of older xxhash64 builds), fails loudly here
+    * with an [[AnalysisError]], not as a silent recall collapse in the
+    * probe. `expectedSource` (optional) demands the provenance tag
+    * stamped at write time: an index at the right path but built from a
+    * DIFFERENT corpus (stale artifact, path collision, concurrent
+    * writer) throws instead of probing. */
   def readMinhashIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String,
                        expectedSource: Option[String] = None): MinhashIndex = {
@@ -448,14 +422,16 @@ object Dedup {
       "minhash-index", "writeMinhashIndex")
     ArtifactMaintenance.requireSource(m, expectedSource,
       s"minhash index at $path", "dedup against")
-    val name = m.getString("hashMode")
-    val mode = StampedModes.collectFirst { case (md, `name`) => md }
-      .getOrElse(throw new IllegalArgumentException(
-        s"unknown hashMode '$name' in index metadata at $path"))
+    val stamp = m.getString("hashMode")
+    if (stamp != Md5Stamp) throw AnalysisError(
+      s"minhash index at $path is stamped hashMode = '$stamp', but " +
+        s"graft hashes only with '$Md5Stamp': its signatures and " +
+        "buckets would never match a probe — rebuild it with " +
+        "writeMinhashIndex")
     MinhashIndex(spark.read.parquet(s"$path/hashes"), sigs,
       spark.read.parquet(s"$path/buckets"),
       m.getLong("numHashes").toInt, m.getLong("bands").toInt,
-      m.getLong("shingleSize").toInt, m.getLong("seed"), mode)
+      m.getLong("shingleSize").toInt, m.getLong("seed"))
   }
 
   /** Append a probed batch's SURVIVORS to a written index — the third
@@ -471,29 +447,25 @@ object Dedup {
     * (schema resolution may read any one file's footer), and id
     * columns are renamed to the index's own id column name.
     *
-    * `requireNewIds` (default on, r17 — the r16 verdict's #3): refuse
-    * a batch sharing ids with the index. Without it a RE-DELIVERED
-    * drop (the crash-retry scenario the rest of this artifact family
-    * defends against) silently double-counts signatures and inflates
+    * A batch sharing ids with the index is refused: a RE-DELIVERED drop
+    * (the crash-retry scenario the rest of this artifact family defends
+    * against) would otherwise double-count signatures and inflate
     * bucket collision stats in every later probe. The check is the
     * shared bloom-gated guard ([[ArtifactMaintenance.append]], which
     * also fixes the write order): a clean drop never scans signatures/
-    * at all. Turn it off only when upstream id discipline guarantees
-    * disjointness — [[streamingDedup]]'s probe-then-append cycle keeps
-    * it on: [[incrementalSurvivors]] already drops ids the index holds,
-    * so a replayed micro-batch appends an empty frame and passes the
-    * guard vacuously. */
+    * at all. [[streamingDedup]]'s probe-then-append cycle passes it by
+    * construction: [[incrementalSurvivors]] already drops ids the index
+    * holds, so a replayed micro-batch appends an empty frame. */
   def appendToMinhashIndex(survivors: DataFrame, idCol: String,
-                           textCol: String, path: String,
-                           requireNewIds: Boolean = true): Unit = {
+                           textCol: String, path: String): Unit = {
     // the per-id cache the encode creates is released once the write
     // returns: a stream appends every micro-batch
     var created: Option[DataFrame] = None
     try ArtifactMaintenance.append(MinhashArtifact, path, survivors, idCol,
-        requireNewIds, "appendToMinhashIndex")(
+        "appendToMinhashIndex")(
         readMinhashIndex(survivors.sparkSession, path)) { idx =>
       val (add, c) = buildCachedIndex(survivors, idCol, textCol,
-        idx.numHashes, idx.bands, idx.shingleSize, idx.seed, idx.mode)
+        idx.numHashes, idx.bands, idx.shingleSize, idx.seed)
       created = c
       Seq(add.hashes, add.buckets, add.signatures)
     }
@@ -578,7 +550,7 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash fingerprints from token xxhash64 values: for each bit,
+  /** 64-bit SimHash fingerprints from token [[hash64]] values: for each bit,
     * majority vote over tokens (2*popcount > n ⟺ the classic ±1 sum > 0).
     *
     * SWAR formulation: instead of 64 separate `sum(when(...))` aggregate
@@ -588,11 +560,10 @@ object Dedup {
     * are per-doc distinct (< 65536). Same shuffle shape (groupBy id with
     * map-side partials), 4x less aggregation state.
     */
-  def simhash(df: DataFrame, idCol: String, textCol: String,
-              mode: HashMode = HashMode.Xx): DataFrame = {
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.repartition(col(idCol)).select(col(idCol),
       explode(array_distinct(split(trim(col(textCol)), "\\s+"))).as("tok"))
-      .withColumn("h", hash64(col("tok"), mode))
+      .withColumn("h", hash64(col("tok")))
     // pack: lane i (16-bit, i=0..3) of packed long k holds bit (4k + i)
     val packed = (0 until 16).map { k =>
       (0 until 4).map { i =>
@@ -660,8 +631,7 @@ object Dedup {
     * [[hammingPairs]]' chunk pigeonhole over the [[simhash]]
     * fingerprints. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3,
-                   mode: HashMode = HashMode.Xx): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = {
     // fingerprints feed both join sides — materialize once via
     // localCheckpoint, don't recompute (r16, same stroke as the
     // r15-advised Multimodal pair operators): checkpoint blocks are
@@ -671,7 +641,7 @@ object Dedup {
     // Spark job fires at call time; the blocks are unreplicated and
     // non-recomputable, so cluster deployments needing executor-loss
     // resilience should substitute a reliable checkpoint
-    val fp = simhash(df, idCol, textCol, mode)
+    val fp = simhash(df, idCol, textCol)
       .localCheckpoint(eager = false)
     hammingPairs(fp, idCol, "simhash", maxHamming)
   }
@@ -767,14 +737,8 @@ object Dedup {
 
   // --------------------------------------------- embedding cosine near-dup
 
-  /** Deterministic random hyperplanes: tables x bits x dim. */
-  private[operators] def hyperplanes(tables: Int, bits: Int, dim: Int,
-                                     seed: Long): Seq[Seq[Seq[Double]]] = {
-    val r = new Random(seed)
-    Seq.fill(tables)(Seq.fill(bits)(Seq.fill(dim)(r.nextGaussian())))
-  }
-
-  /** Oracle-replicable hyperplanes: component (t,b,d) is uniform in
+  /** Deterministic random hyperplanes, tables x bits x dim, replicable
+    * in any engine: component (t,b,d) is uniform in
     * [-1, 1], derived from the first 8 md5 hex chars of "p:t:b:d" — the
     * same value any engine computes as
     * `(('0x'||substr(md5('p:'||t||':'||b||':'||d),1,8))::BIGINT
@@ -804,14 +768,9 @@ object Dedup {
     * no shuffle. */
   def embeddingBuckets(df: DataFrame, idCol: String, vecCol: String,
                        tables: Int = 8, bits: Int = 12, dim: Int = 64,
-                       seed: Long = 42L,
-                       mode: HashMode = HashMode.Xx,
                        extraCols: Seq[String] = Nil): DataFrame = {
-    val planes = mode match {
-      case HashMode.Xx => hyperplanes(tables, bits, dim, seed)
-      case HashMode.Md5 => md5Planes(tables, bits, dim)
-    }
-    val flat = planes.flatten  // row-major (table x bit) -> plane vectors
+    // row-major (table x bit) -> plane vectors
+    val flat = md5Planes(tables, bits, dim).flatten
     val buckets = graft.plans.VectorExpressions
       .vectorSignBuckets(col(vecCol), flat, bits)
     val keep = col(idCol) +: extraCols.map(col)
@@ -822,15 +781,12 @@ object Dedup {
     * exact cosine verification — only candidate pairs pay the O(dim) cost. */
   def embeddingPairs(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double = 0.95, tables: Int = 8,
-                     bits: Int = 12, dim: Int = 64,
-                     seed: Long = 42L,
-                     mode: HashMode = HashMode.Xx): DataFrame = {
+                     bits: Int = 12, dim: Int = 64): DataFrame = {
     // the bucket frame feeds both self-join sides: cache the NARROW
     // (id, table, bucket) projection so the corpus is scanned once, not
     // twice — at 100 TB the cache is ~tables x 16B/row, the re-scan is
     // the full corpus (same lifecycle convention as minhashPairs)
-    val b = embeddingBuckets(df, idCol, vecCol, tables, bits, dim, seed,
-      mode).cache()
+    val b = embeddingBuckets(df, idCol, vecCol, tables, bits, dim).cache()
     val l = b.select(col("table"), col("bucket"), col(idCol).as("id_a"))
     val r = b.select(col("table"), col("bucket"), col(idCol).as("id_b"))
     val cand = l.join(r, Seq("table", "bucket"))
@@ -884,9 +840,9 @@ object Dedup {
     * certifying every keep AND drop decision, not just the survivor set.
     */
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
-                    k: Int, iters: Int = 2, threshold: Double = 0.6,
-                    init: String = "lowest-id"): DataFrame = {
-    val cents = Similarity.kmeans(df, idCol, vecCol, k, iters, init)
+                    k: Int, iters: Int = 2,
+                    threshold: Double = 0.6): DataFrame = {
+    val cents = Similarity.kmeans(df, idCol, vecCol, k, iters)
     val assigned = Similarity.ivfAssign(df, idCol, vecCol, cents)
     // per-vector centroid similarity: one broadcast join (k rows), then a
     // narrow cosine — cache the slim (id, cid, cent_cos) frame, it feeds

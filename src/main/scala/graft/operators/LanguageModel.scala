@@ -27,9 +27,10 @@ import org.apache.spark.sql.functions._
   * their keys: hot bigrams ("of the") are harmless because the MODEL
   * side has exactly one row per distinct bigram (hash-join build side
   * stays tiny per key); the probe side is the corpus token stream,
-  * never paired with itself. For small reference corpora the model
-  * frames fit a broadcast and the scoring pass is shuffle-free — pass
-  * `broadcastModel = true`. Everything is deterministic (counts and
+  * never paired with itself. The join strategy is the planner's: a
+  * small reference corpus's model frames fall under the broadcast
+  * threshold (at plan time, or once AQE has measured them) and the
+  * scoring pass runs shuffle-free. Everything is deterministic (counts and
   * ratios of counts), so the DuckDB oracle checks VALUES, not shapes.
   */
 object LanguageModel {
@@ -76,16 +77,13 @@ object LanguageModel {
 
   private def scoreFromStream(bg: DataFrame, docs: DataFrame,
                               idCol: String, model: BigramModel,
-                              k: Double,
-                              broadcastModel: Boolean): DataFrame = {
-    val maybeBc: DataFrame => DataFrame =
-      if (broadcastModel) broadcast else identity
+                              k: Double): DataFrame = {
     val logP: Column =
       log((coalesce(col("c"), lit(0L)) + lit(k)) /
         (coalesce(col("c_ctx"), lit(0L)) + lit(k) * col("v")))
     val scored = bg
-      .join(maybeBc(model.bigrams), Seq("w1", "w2"), "left")
-      .join(maybeBc(model.contexts), Seq("w1"), "left")
+      .join(model.bigrams, Seq("w1", "w2"), "left")
+      .join(model.contexts, Seq("w1"), "left")
       .crossJoin(broadcast(model.vocab))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_bigrams"),
@@ -101,10 +99,9 @@ object LanguageModel {
     * (NULL when the doc has no bigram). An unseen bigram or context
     * falls back to the smoothing mass — never a null probability. */
   def scoreBigram(docs: DataFrame, idCol: String, textCol: String,
-                  model: BigramModel, k: Double = 0.5,
-                  broadcastModel: Boolean = false): DataFrame =
+                  model: BigramModel, k: Double = 0.5): DataFrame =
     scoreFromStream(bigramStream(docs, idCol, textCol), docs, idCol,
-      model, k, broadcastModel)
+      model, k)
 
   /** Corpus drift: add-k smoothed unigram KL and Jensen–Shannon
     * divergence between two corpora's token distributions — the
@@ -161,6 +158,6 @@ object LanguageModel {
                 k: Double = 0.5): DataFrame = {
     val bg = bigramStream(corpus, idCol, textCol).cache()
     scoreFromStream(bg, corpus, idCol,
-      modelFromStream(bg, corpus, textCol), k, broadcastModel = false)
+      modelFromStream(bg, corpus, textCol), k)
   }
 }

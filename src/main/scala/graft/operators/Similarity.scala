@@ -25,8 +25,7 @@ object Similarity {
   /** Exact brute-force cosine top-k for each query vector.
     * Output: (query id, neighbor id, cosine), k rows per query. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-                     vecCol: String, k: Int = 10,
-                     excludeSelf: Boolean = true): DataFrame = {
+                     vecCol: String, k: Int = 10): DataFrame = {
     // norms computed once per vector, not once per pair
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       normSq(col(vecCol)).as("q_nsq"))
@@ -37,7 +36,7 @@ object Similarity {
     // (~550B/row at dim=64 — at all-pairs scale that is the difference
     // between sorting gigabytes and sorting megabytes)
     val scored = c.crossJoin(broadcast(q))
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosineFromParts(dot(col("q_vec"), col("c_vec")),
           col("q_nsq"), col("c_nsq")).as("cosine"))
@@ -146,13 +145,17 @@ object Similarity {
         (col("pos") + 1).as("step"), col("col._2").as("mmr"))
   }
 
+  /** Corpus rows per LSH bucket that [[autoBits]] aims for; the DuckDB
+    * oracle of [[lshTopK]] derives its bucket width from the same value. */
+  private[graft] val LshTargetBucket = 32
+
   /** Bucket width that keeps per-bucket candidate counts roughly constant
-    * as the corpus grows: the smallest `bits` with `n / 2^bits <=
-    * targetBucket` (integer bit-length — exact, engine-portable: the DuckDB
-    * oracle computes the identical value without touching floating log2).
-    * n=500 -> 4, n=2000 -> 6, n=10^9 at targetBucket=1024 -> 20. */
-  def autoBits(n: Long, targetBucket: Int = 32): Int = {
-    val x = math.max(1L, (n - 1) / targetBucket)
+    * as the corpus grows: the smallest `bits` with `n / 2^bits <=`
+    * [[LshTargetBucket]] (integer bit-length — exact, engine-portable: the
+    * DuckDB oracle computes the identical value without touching floating
+    * log2). n=500 -> 4, n=2000 -> 6, n=10^9 -> 25. */
+  def autoBits(n: Long): Int = {
+    val x = math.max(1L, (n - 1) / LshTargetBucket)
     math.max(2, 64 - java.lang.Long.numberOfLeadingZeros(x))
   }
 
@@ -176,31 +179,32 @@ object Similarity {
     *
     * `bits <= 0` (the default) derives the bucket width from the corpus
     * size via [[autoBits]] — one cheap count() (parquet-footer metadata for
-    * file sources) buys a candidate set that stays ~`tables x targetBucket`
-    * per query no matter how large the corpus grows. A fixed `bits` is the
-    * classic LSH scale trap: too few bits and every query's candidate set
-    * approaches the whole corpus; too many and recall collapses.
+    * file sources) buys a candidate set that stays ~`tables x`
+    * [[LshTargetBucket]] per query no matter how large the corpus grows.
+    * A fixed `bits` is the classic LSH scale trap: too few bits and every
+    * query's candidate set approaches the whole corpus; too many and
+    * recall collapses.
     *
     * Plan shape (2 small exchanges, corpus scanned once, never shuffled):
     * the corpus bucket frame carries the vector + its norm, so candidates
     * are scored inside the broadcast probe join's stage; duplicate
     * (query, neighbor) hits across tables collapse via a map-side-partial
     * `max(cosine)` (exact — every hit computes the identical cosine), and
-    * the final per-query top-k is one window over ~tables x targetBucket
-    * rows per query.
+    * the final per-query top-k is one window over ~tables x
+    * [[LshTargetBucket]] rows per query.
     *
     * Recall is MEASURED, not asserted: the `sim_recall` query joins this
     * against [[bruteForceTopK]] — recall@5 = 0.995 (sf0.01, n=500,
     * auto bits=4) and 0.917 (sf0.1, n=2000, auto bits=6) at tables=8.
-    * More tables raises recall (union of probes); `targetBucket` trades
-    * candidate cost for recall at fixed tables; `multiprobe` (on by
-    * default) additionally probes every 1-bit-flip neighbor of each query
-    * bucket — per-table hit probability rises from p^bits to
-    * p^bits + bits*p^(bits-1)*(1-p) at ZERO corpus-side cost, which is
-    * what lets `bits` grow with the corpus without recall collapsing (the
-    * standard multiprobe-LSH result). Probe fan-out is query-side only:
-    * queries x tables x (bits+1) rows, still broadcast-sized for any
-    * bounded query set.
+    * More tables raises recall (union of probes). Each query also probes
+    * every 1-bit-flip neighbor of its bucket — per-table hit probability
+    * rises from p^bits to p^bits + bits*p^(bits-1)*(1-p) at ZERO
+    * corpus-side cost, which is what lets `bits` grow with the corpus
+    * without recall collapsing (the probe sequence of Lv et al. 2007).
+    * Buckets and hyperplanes are md5-derived ([[Dedup.md5Planes]]), so
+    * the DuckDB oracle replays every probe. Probe fan-out is query-side
+    * only: queries x tables x (bits+1) rows, still broadcast-sized for
+    * any bounded query set.
     *
     * Honest cost model vs [[bruteForceTopK]] (per corpus row: brute pays
     * |q| dots, LSH pays tables*bits signature dots plus its share of
@@ -215,26 +219,21 @@ object Similarity {
     * beats the brute pair scan outright). */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int = 10, tables: Int = 8, bits: Int = 0,
-              dim: Int = 64, seed: Long = 42L,
-              excludeSelf: Boolean = true,
-              mode: Dedup.HashMode = Dedup.HashMode.Xx,
-              targetBucket: Int = 32,
-              multiprobe: Boolean = true): DataFrame = {
-    val b = if (bits > 0) bits else autoBits(memoCount(corpus), targetBucket)
+              dim: Int = 64): DataFrame = {
+    val b = if (bits > 0) bits else autoBits(memoCount(corpus))
     val cw = corpus.select(col(idCol), col(vecCol),
       normSq(col(vecCol)).as("c_nsq"))
     val cb = Dedup.embeddingBuckets(cw, idCol, vecCol, tables, b, dim,
-        seed, mode, extraCols = Seq(vecCol, "c_nsq"))
+        extraCols = Seq(vecCol, "c_nsq"))
       .withColumnRenamed(idCol, "neighbor_id")
       .withColumnRenamed(vecCol, "c_vec")
-    val qb0 = Dedup.embeddingBuckets(queries.select(col(idCol), col(vecCol)),
-        idCol, vecCol, tables, b, dim, seed, mode)
-      .withColumnRenamed(idCol, "query_id")
     // flip = -1 keeps the own bucket; flip = i probes the bucket with
     // signature bit i inverted. Probe rows carry ONLY (query_id, table,
     // bucket): the query vectors ride a second |queries|-sized broadcast
     // instead of being duplicated across tables x (bits+1) probe rows.
-    val qb = if (!multiprobe) qb0 else qb0
+    val qb = Dedup.embeddingBuckets(queries.select(col(idCol), col(vecCol)),
+        idCol, vecCol, tables, b, dim)
+      .withColumnRenamed(idCol, "query_id")
       .withColumn("flip", explode(array((-1 until b).map(lit): _*)))
       .withColumn("bucket", when(col("flip") < 0, col("bucket"))
         .otherwise(col("bucket")
@@ -246,7 +245,7 @@ object Similarity {
     // the corpus bucket index never shuffles for the probe join, and score
     // candidates right inside that stage (both vectors are in hand)
     val scored = cb.join(broadcast(qb), Seq("table", "bucket"))
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id") else lit(true))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .join(broadcast(qv), "query_id")
       .select(col("query_id"), col("neighbor_id"),
         cosineFromParts(dot(col("q_vec"), col("c_vec")),
@@ -315,11 +314,9 @@ object Similarity {
     * list. `probes` is queries x nProbe rows — broadcast so the
     * corpus-sized inverted lists never shuffle. */
   private def ivfCandidates(probes: DataFrame, lists: DataFrame,
-                            cidCol: String,
-                            excludeSelf: Boolean): DataFrame =
+                            cidCol: String): DataFrame =
     broadcast(probes).join(lists, cidCol)
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
-              else lit(true))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .groupBy("query_id", "neighbor_id").agg(min("p_rank").as("p_rank"))
 
   /** Cross scored candidates (query_id, neighbor_id, p_rank, cosine) with
@@ -365,10 +362,9 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, centroids: DataFrame, k: Int = 10,
               nProbe: Int = 3, cidCol: String = "cid",
-              centCol: String = "centroid",
-              excludeSelf: Boolean = true): DataFrame =
+              centCol: String = "centroid"): DataFrame =
     ivfTopKSweep(corpus, queries, idCol, vecCol, centroids, Seq(nProbe),
-      k, cidCol, centCol, excludeSelf).drop("n_probe")
+      k, cidCol, centCol).drop("n_probe")
 
   /** [[ivfTopK]] at several nProbe levels in one pass — the recall curve
     * a user sweeps. Lists are ranked once per query up to the deepest
@@ -381,13 +377,12 @@ object Similarity {
   def ivfTopKSweep(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, centroids: DataFrame, nProbes: Seq[Int],
                    k: Int = 10, cidCol: String = "cid",
-                   centCol: String = "centroid",
-                   excludeSelf: Boolean = true): DataFrame = {
+                   centCol: String = "centroid"): DataFrame = {
     requireLevels(nProbes)
     val lists = ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol)
       .withColumnRenamed(idCol, "neighbor_id")
     val cand = ivfCandidates(ivfProbeRanks(queries, idCol, vecCol,
-      centroids, cidCol, centCol, nProbes.max), lists, cidCol, excludeSelf)
+      centroids, cidCol, centCol, nProbes.max), lists, cidCol)
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       normSq(col(vecCol)).as("q_nsq"))
     val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
@@ -402,7 +397,9 @@ object Similarity {
 
   /** Deterministic k-means over an embedding column — the unsupervised
     * coarse-quantizer trainer for [[ivfTopK]]. Init is the k lowest-id
-    * vectors (deterministic and engine-portable, unlike random init);
+    * vectors (deterministic and engine-portable, unlike random init,
+    * but quality-poor when low ids cluster together, e.g. in
+    * time-ordered corpora);
     * each iteration is one broadcast assignment pass ([[ivfAssign]]) plus
     * one posexplode-mean aggregation (the [[labelCentroids]] shape) — a
     * bounded number of shuffles per iteration, never a pair-space blowup,
@@ -415,25 +412,11 @@ object Similarity {
     * the compounding plan-size estimates (the CC-loop lesson). A cluster left empty by an iteration drops out
     * (standard k-means behavior; k shrinks). */
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
-             iters: Int = 5, init: String = "lowest-id"): DataFrame = {
-    // "lowest-id": deterministic and engine-portable, but quality-poor
-    // when low ids cluster together (e.g. time-ordered corpora).
-    // "hash-sample": a seeded pseudo-random draw — md5 rank over ids —
-    // which spreads seeds like a uniform sample (the cheap deterministic
-    // end of the kmeans|| spectrum) while staying replayable across
-    // engines and runs.
-    val ordering: Seq[Column] = init match {
-      case "lowest-id"   => Seq(col(idCol).asc)
-      case "hash-sample" =>
-        Seq(md5(concat(lit("km:"), col(idCol).cast("string"))).asc,
-          col(idCol).asc)
-      case other =>
-        throw new IllegalArgumentException(s"unknown kmeans init '$other'")
-    }
-    val cents0 = df.orderBy(ordering: _*).limit(k)
+             iters: Int = 5): DataFrame = {
+    val cents0 = df.orderBy(col(idCol).asc).limit(k)
       .select(col(idCol), toDouble(col(vecCol)).as("centroid"))
       .withColumn("cid",
-        row_number().over(Window.orderBy(ordering: _*)) - 1)
+        row_number().over(Window.orderBy(col(idCol).asc)) - 1)
       .select(col("cid"),
         transform(col("centroid"), x => round(x, 6)).as("centroid"))
     var cents = graft.plans.Checkpoints.truncated(cents0)
@@ -468,15 +451,13 @@ object Similarity {
     * corpus only for the one final assignment the caller runs anyway
     * ([[ivfAssign]]). The sample is the `sampleN` lowest
     * md5("kms:" ++ id) ranks (id tie-break) — a seeded pseudo-uniform
-    * draw, replayable across runs and ENGINES (the hash-sample-init
-    * rule applied to the training set; the `sim_kmeans_sampled` oracle
-    * replays the whole trajectory in DuckDB). The take-N is a
+    * draw, replayable across runs and ENGINES (the `sim_kmeans_sampled`
+    * oracle replays the whole trajectory in DuckDB). The take-N is a
     * TakeOrdered (per-partition top-N, no global sort) and the sample
     * is checkpoint-materialized once, so the per-iteration cost scales
     * with sampleN, not the corpus. */
   def kmeansSampled(df: DataFrame, idCol: String, vecCol: String, k: Int,
                     sampleN: Int, iters: Int = 5,
-                    init: String = "lowest-id",
                     salt: String = "kms:"): DataFrame = {
     require(sampleN >= k,
       s"sampleN=$sampleN must be >= k=$k (every centroid needs a seed)")
@@ -485,7 +466,7 @@ object Similarity {
         col(idCol).asc)
       .limit(sampleN)
     kmeans(graft.plans.Checkpoints.truncated(sample), idCol, vecCol, k,
-      iters, init)
+      iters)
   }
 
   /** Symmetric per-vector int8 quantization: scale = max|v_i| / 127,
@@ -702,7 +683,7 @@ object Similarity {
     * index split). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, codebooks: DataFrame, k: Int = 10,
-             excludeSelf: Boolean = true, shortlist: Int = 0,
+             shortlist: Int = 0,
              prebuiltCodes: Option[DataFrame] = None): DataFrame = {
     val (m, dsub, offsets) = pqMeta(codebooks)
     val codes = prebuiltCodes.map(widenScan)
@@ -711,8 +692,7 @@ object Similarity {
     val lutFrame = pqQueryLut(queries, idCol, vecCol, codebooks,
       m, dsub, offsets)
     val scored = codes.crossJoin(broadcast(lutFrame))
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
-              else lit(true))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         pqAdcCosine(offsets).as("cosine"))
     pqRank(scored, corpus, queries, idCol, vecCol, k, shortlist,
@@ -735,11 +715,11 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, centroids: DataFrame,
                 codebooks: DataFrame, k: Int = 10, nProbe: Int = 3,
-                excludeSelf: Boolean = true, shortlist: Int = 0,
+                shortlist: Int = 0,
                 cidCol: String = "cid", centCol: String = "centroid",
                 prebuiltCodes: Option[DataFrame] = None): DataFrame =
     ivfPqTopKSweep(corpus, queries, idCol, vecCol, centroids, codebooks,
-      Seq(nProbe), k, excludeSelf, shortlist, cidCol, centCol,
+      Seq(nProbe), k, shortlist, cidCol, centCol,
       prebuiltCodes).drop("n_probe")
 
   /** [[ivfPqTopK]] at several nProbe levels in one pass: candidates of
@@ -752,7 +732,7 @@ object Similarity {
   def ivfPqTopKSweep(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, centroids: DataFrame,
                      codebooks: DataFrame, nProbes: Seq[Int], k: Int = 10,
-                     excludeSelf: Boolean = true, shortlist: Int = 0,
+                     shortlist: Int = 0,
                      cidCol: String = "cid", centCol: String = "centroid",
                      prebuiltCodes: Option[DataFrame] = None): DataFrame = {
     requireLevels(nProbes)
@@ -760,7 +740,7 @@ object Similarity {
     val lists = ivfAssign(corpus, idCol, vecCol, centroids, cidCol, centCol)
       .withColumnRenamed(idCol, "neighbor_id")
     val cand = ivfCandidates(ivfProbeRanks(queries, idCol, vecCol,
-      centroids, cidCol, centCol, nProbes.max), lists, cidCol, excludeSelf)
+      centroids, cidCol, centCol, nProbes.max), lists, cidCol)
     val codes = prebuiltCodes.map(widenScan)
       .getOrElse(pqEncode(corpus, idCol, vecCol, codebooks))
       .select(col(idCol).as("neighbor_id"), col("codes"), col("r_nsq"))
@@ -878,14 +858,13 @@ object Similarity {
   def ivfPqResidualTopK(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String,
                         centroids: DataFrame, codebooks: DataFrame,
-                        k: Int = 10, nProbe: Int = 3,
-                        excludeSelf: Boolean = true, shortlist: Int = 0,
+                        k: Int = 10, nProbe: Int = 3, shortlist: Int = 0,
                         cidCol: String = "cid",
                         centCol: String = "centroid",
                         prebuiltCodes: Option[DataFrame] = None)
       : DataFrame =
     ivfPqResidualTopKSweep(corpus, queries, idCol, vecCol, centroids,
-      codebooks, Seq(nProbe), k, excludeSelf, shortlist, cidCol, centCol,
+      codebooks, Seq(nProbe), k, shortlist, cidCol, centCol,
       prebuiltCodes).drop("n_probe")
 
   /** [[ivfPqResidualTopK]] at several nProbe levels in one pass: the
@@ -898,7 +877,6 @@ object Similarity {
                              idCol: String, vecCol: String,
                              centroids: DataFrame, codebooks: DataFrame,
                              nProbes: Seq[Int], k: Int = 10,
-                             excludeSelf: Boolean = true,
                              shortlist: Int = 0, cidCol: String = "cid",
                              centCol: String = "centroid",
                              prebuiltCodes: Option[DataFrame] = None)
@@ -927,8 +905,7 @@ object Similarity {
     val lutFrame = pqQueryLut(queries, idCol, vecCol, codebooks,
       m, dsub, offsets)
     val scored = broadcast(qc).join(codes, cidCol)
-      .filter(if (excludeSelf) col("neighbor_id") =!= col("query_id")
-              else lit(true))
+      .filter(col("neighbor_id") =!= col("query_id"))
       .join(broadcast(lutFrame), "query_id")
       .select(col("query_id"), col("neighbor_id"), col("p_rank"),
         TextAnalysis.round4(cosineFromParts(
@@ -1041,10 +1018,9 @@ object Similarity {
     * same O(batch) cost shape ([[ArtifactMaintenance.append]]). */
   def appendPqIndex(newDocs: DataFrame, idCol: String, vecCol: String,
                     path: String,
-                    expectedSource: Option[String] = None,
-                    requireNewIds: Boolean = true): Unit =
+                    expectedSource: Option[String] = None): Unit =
     ArtifactMaintenance.append(PqArtifact, path, newDocs, idCol,
-        requireNewIds, "appendPqIndex")(
+        "appendPqIndex")(
         readPqIndex(newDocs.sparkSession, path, expectedSource)) { idx =>
       Seq(pqEncode(newDocs, idCol, vecCol, idx.books))
     }
@@ -1231,19 +1207,17 @@ object Similarity {
     * is O(|newDocs|) encode + a duplicate check that is O(batch) on the
     * bloom fast path, never O(corpus).
     *
-    * `requireNewIds` (default on) refuses on id overlap: a re-delivered
+    * A batch sharing ids with the index is refused: a re-delivered
     * drop would otherwise surface the same neighbor twice in every
     * probe. The check is bloom-gated ([[ArtifactMaintenance.append]]):
     * a clean drop certifies "all new" against the broadcast `idbloom/`
     * sidecar without touching codes/ at all; only maybe-hits fall
-    * through to a pruned id-column scan. Turn it off only when the
-    * caller's id discipline already guarantees disjointness. */
+    * through to a pruned id-column scan. */
   def appendIvfPqResidualIndex(newDocs: DataFrame, idCol: String,
                                vecCol: String, path: String,
-                               expectedSource: Option[String] = None,
-                               requireNewIds: Boolean = true): Unit =
+                               expectedSource: Option[String] = None): Unit =
     ArtifactMaintenance.append(ResidualArtifact, path, newDocs, idCol,
-        requireNewIds, "appendIvfPqResidualIndex")(
+        "appendIvfPqResidualIndex")(
         readIvfPqResidualIndex(newDocs.sparkSession, path,
           expectedSource)) { idx =>
       Seq(ivfPqResidualEncode(

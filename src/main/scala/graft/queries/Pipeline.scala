@@ -6,20 +6,17 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Curate, Dedup, LanguageModel, Multimodal, Prep, Search, Similarity, Sketches, TextAnalysis}
-import graft.operators.Dedup.HashMode
 import graft.sources.Tables
 
 /** Training-data-pipeline operators (dedup / similarity / text analysis /
   * multimodal) as named queries over `documents` and `embeddings`, with
   * DuckDB oracles wherever the semantics are SQL-expressible.
   *
-  * The LSH family (minhash/simhash/hyperplane buckets) runs here in
-  * [[Dedup.HashMode.Md5]]: hashes and hyperplanes derive from md5 hex
-  * prefixes, which DuckDB replicates bit-for-bit, so even the
-  * "approximate" operators get full rows+schema+hash verification (the
-  * oracle SQL below is generated with the same constants). Production
-  * callers keep the default xxhash64 mode — same operator code path,
-  * faster hash — covered by the ScalaTest specs.
+  * The LSH family (minhash/simhash/hyperplane buckets) hashes with md5:
+  * hashes and hyperplanes derive from md5 hex prefixes, which DuckDB
+  * replicates bit-for-bit, so even the "approximate" operators get full
+  * rows+schema+hash verification (the oracle SQL below is generated with
+  * the same constants).
   */
 object Pipeline {
   private type Q = (SparkSession, String) => DataFrame
@@ -149,8 +146,8 @@ object Pipeline {
 
   /** The STEADY-STATE corpus minhash index `dd_incremental` probes,
     * written once per JVM ([[once]]); `dd_incremental_idx` stays the
-    * full write+read+probe round-trip certification. Md5 mode so the
-    * DuckDB oracle replays the signatures bit-for-bit. The probe demands
+    * full write+read+probe round-trip certification; the DuckDB oracle
+    * replays its md5-derived signatures bit-for-bit. The probe demands
     * the source-dir provenance tag stamped at write time — even if a
     * path were somehow shared, an index built from different data
     * refuses to serve. */
@@ -158,7 +155,7 @@ object Pipeline {
                                  corpus: DataFrame): Dedup.MinhashIndex = {
     val path = scratchPath("graft_mh_steady", dir)
     once(written, path)(Dedup.writeMinhashIndex(corpus, "doc_id", "text",
-      path, mode = HashMode.Md5, sourceTag = dir))
+      path, sourceTag = dir))
     Dedup.readMinhashIndex(s, path, expectedSource = Some(dir))
   }
 
@@ -420,19 +417,17 @@ object Pipeline {
         .orderBy("id_a", "id_b")
     }),
 
-    // minhash LSH near-dup pairs (md5 hash mode -> fully oracled)
+    // minhash LSH near-dup pairs (md5-derived hashes -> fully oracled)
     "dd_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashPairs(docs(s, dir), "doc_id", "text", threshold = 0.7,
-          mode = HashMode.Md5)
+      Dedup.minhashPairs(docs(s, dir), "doc_id", "text", threshold = 0.7)
         .select(col("id_a"), col("id_b"),
           round(col("est_jaccard"), 4).as("est_jaccard"))
         .orderBy("id_a", "id_b")
     }),
 
-    // simhash near-dup pairs (md5 hash mode -> fully oracled)
+    // simhash near-dup pairs (md5-derived hashes -> fully oracled)
     "dd_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(docs(s, dir), "doc_id", "text", maxHamming = 3,
-          mode = HashMode.Md5)
+      Dedup.simhashPairs(docs(s, dir), "doc_id", "text", maxHamming = 3)
         .select(col("id_a"), col("id_b"),
           col("hamming").cast("int").as("hamming"))
         .orderBy("id_a", "id_b")
@@ -527,7 +522,7 @@ object Pipeline {
       // reuse a stale artifact from another scale factor or process
       val path = scratchPath("graft_mh_index", dir)
       Dedup.writeMinhashIndex(d.filter(col("doc_id") < cut),
-        "doc_id", "text", path, mode = HashMode.Md5, sourceTag = dir)
+        "doc_id", "text", path, sourceTag = dir)
       Dedup.incrementalSurvivors(d.filter(col("doc_id") >= cut),
           Dedup.readMinhashIndex(s, path, expectedSource = Some(dir)),
           "doc_id", "text", threshold = 0.8)
@@ -680,7 +675,7 @@ object Pipeline {
     // fully oracled; recall<1 vs dd_embed_pairs by design — the scale path)
     "dd_embed_lsh" -> ((s, dir) => {
       Dedup.embeddingPairs(embs(s, dir), "vec_id", "embedding",
-          threshold = 0.3, tables = 8, bits = 8, mode = HashMode.Md5)
+          threshold = 0.3, tables = 8, bits = 8)
         .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
         .orderBy("id_a", "id_b")
     }),
@@ -1150,12 +1145,12 @@ object Pipeline {
     // LSH-probed ANN (md5-derived planes -> fully oracled; the exact
     // counterpart is sim_topk). bits is DERIVED from the corpus size
     // (autoBits: 4 at n=500, 6 at n=2000) so candidates/query stay
-    // ~tables x targetBucket at any sf — the oracle derives the same
+    // ~tables x LshTargetBucket at any sf — the oracle derives the same
     // bits from count(*), so the check is sf-agnostic.
     "sim_topk_lsh" -> ((s, dir) => {
       val e = embs(s, dir)
       Similarity.lshTopK(corpusPar(e), e, "vec_id", "embedding", k = 5,
-          tables = 8, mode = HashMode.Md5)
+          tables = 8)
         .select(col("query_id"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "neighbor_id")
@@ -1189,7 +1184,7 @@ object Pipeline {
 
     // LSH recall measurement: fraction of the exact top-5 the LSH probe
     // recovers — the evidence behind "recall tunable via tables x bits"
-    // (deterministic given md5-mode planes -> oracled). Recall is
+    // (deterministic given md5-derived planes -> oracled). Recall is
     // summarized per query-id band (32 bands) rather than per query —
     // per-query rows would make the artifact needlessly wide; the banded
     // means still localize a recall regression
@@ -1199,7 +1194,7 @@ object Pipeline {
       recallBy(
         Similarity.bruteForceTopK(ep, e, "vec_id", "embedding", k = 5),
         Similarity.lshTopK(ep, e, "vec_id", "embedding", k = 5,
-          tables = 8, mode = HashMode.Md5),
+          tables = 8),
         col("query_id") % 32, "band")
     }),
 
@@ -2047,11 +2042,11 @@ object Pipeline {
   private val ShingleSql = shingleSqlFrom("documents")
 
   // ------------------------------------------------------- oracle builders
-  // DuckDB twins of the Md5 hash mode (Dedup.hash31/hash64/md5Planes):
+  // DuckDB twins of the LSH hashes (Dedup.hash31/hash64/md5Planes):
   // generated with the same constants the Spark operators use, so the
   // "approximate" LSH queries are verified value-for-value.
 
-  /** DuckDB twin of Dedup.hash31(c, Md5). */
+  /** DuckDB twin of Dedup.hash31(c). */
   private def hash31Sql(c: String): String =
     s"(('0x' || substr(md5($c),1,8))::BIGINT % 2147483647)"
 
@@ -2542,15 +2537,15 @@ object Pipeline {
          FROM emb CROSS JOIN planes p
          GROUP BY emb.vec_id, p.t)"""
 
-  /** DuckDB twin of Similarity.autoBits(count(*), targetBucket): smallest
-    * bits with n/2^bits <= targetBucket, floored at 2 — written as an
+  /** DuckDB twin of Similarity.autoBits(count(*)): smallest bits with
+    * n/2^bits <= Similarity.LshTargetBucket, floored at 2 — written as an
     * integer bit-length count (no floating log2, so both engines agree
     * exactly at every n). */
-  private def autoBitsSql(targetBucket: Int): String =
+  private def autoBitsSql: String =
     s"""GREATEST(2, (SELECT count(*) FROM range(0,63) rr(b)
          WHERE (1::BIGINT << rr.b::INT) <=
            GREATEST(1, ((SELECT count(*) FROM embeddings) - 1)
-             // $targetBucket)))"""
+             // ${Similarity.LshTargetBucket})))"""
 
   /** DuckDB twin of Similarity.kmeans: the same iterations unrolled as
     * CTEs — lowest-id init, cosine argmax assignment, 6dp-rounded means
@@ -2929,9 +2924,9 @@ object Pipeline {
   /** LSH top-k CTE chain shared by sim_topk_lsh and sim_recall; bits is
     * corpus-size-derived exactly as in Similarity.lshTopK's default, and
     * each query probes its own bucket (f = -1) plus every 1-bit-flip
-    * neighbor (multiprobe, the Spark default). */
-  private def lshTopKCtes(tables: Int, targetBucket: Int, k: Int): String =
-    s"""${bucketsCteSql(tables, autoBitsSql(targetBucket))},
+    * neighbor, as Similarity.lshTopK does. */
+  private def lshTopKCtes(tables: Int, k: Int): String =
+    s"""${bucketsCteSql(tables, autoBitsSql)},
        qb AS (SELECT vec_id, tbl,
                 CASE WHEN f.f < 0 THEN bucket
                      ELSE xor(bucket, (1::BIGINT << f.f::INT)) END AS bucket
@@ -3188,11 +3183,11 @@ object Pipeline {
     "dd_embed_lsh" ->
       embedLshOracleSql(tables = 8, bits = 8, threshold = 0.3),
     "sim_topk_lsh" ->
-      s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)}
+      s"""WITH ${lshTopKCtes(tables = 8, k = 5)}
          SELECT query_id, neighbor_id, round(cos, 4) AS cosine
          FROM lsh_ranked WHERE rn <= 5 ORDER BY query_id, neighbor_id""",
     "sim_recall" ->
-      s"""WITH ${lshTopKCtes(tables = 8, targetBucket = 32, k = 5)},
+      s"""WITH ${lshTopKCtes(tables = 8, k = 5)},
          lsh AS (SELECT query_id, neighbor_id FROM lsh_ranked WHERE rn <= 5),
          ${recallSql("lsh", "b.query_id % 32", "band")}""",
     "txt_chunks" ->

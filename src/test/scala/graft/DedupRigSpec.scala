@@ -79,9 +79,8 @@ class DedupRigSpec extends RigSpec {
     docs.filter(col("doc_id") >= 790).write.parquet(bDir)
     val (c, b) = (spark.read.parquet(cDir), spark.read.parquet(bDir))
     val inline = Dedup.incrementalSurvivors(b, c, "doc_id", "text",
-      threshold = 0.8, mode = Dedup.HashMode.Md5)
-    Dedup.writeMinhashIndex(c, "doc_id", "text", iDir,
-      mode = Dedup.HashMode.Md5)
+      threshold = 0.8)
+    Dedup.writeMinhashIndex(c, "doc_id", "text", iDir)
     val probe = Dedup.incrementalSurvivors(b,
       Dedup.readMinhashIndex(spark, iDir), "doc_id", "text",
       threshold = 0.8)

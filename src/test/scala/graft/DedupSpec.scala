@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.EngineError.AnalysisError
 import graft.operators.{ArtifactMaintenance, Dedup, Similarity}
 
 class DedupSpec extends SparkTestBase {
@@ -15,6 +16,10 @@ class DedupSpec extends SparkTestBase {
     (3L, "completely different text about cooking pasta with tomato sauce"),
     (4L, "the weather tomorrow looks cloudy with a chance of rain showers"))
     .toDF("doc_id", "text")
+
+  /** The `hashMode` stamp on an index's signature column. */
+  private def hashStamp(idx: Dedup.MinhashIndex): String =
+    idx.signatures.schema("signature").metadata.getString("hashMode")
 
   test("exactByContent keeps min id and counts duplicates") {
     val out = Dedup.exactByContent(corpus, "doc_id", "text")
@@ -152,14 +157,13 @@ class DedupSpec extends SparkTestBase {
     assert(kept == Set(0L, 3L, 4L))
   }
 
-  test("Md5 hash mode: same dup structure as xxhash mode") {
-    import Dedup.HashMode
+  test("md5-derived hashing: minhash and simhash keep the dup structure") {
     val mh = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5,
-        numHashes = 64, bands = 16, mode = HashMode.Md5)
+        numHashes = 64, bands = 16)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(mh.contains((0L, 1L)))
     assert(!mh.exists(p => p._1 == 3L || p._2 == 3L))
-    val fps = Dedup.simhash(corpus, "doc_id", "text", mode = HashMode.Md5)
+    val fps = Dedup.simhash(corpus, "doc_id", "text")
       .orderBy("doc_id").collect().map(_.getLong(1))
     assert(fps(0) == fps(1))
     assert(java.lang.Long.bitCount(fps(0) ^ fps(2)) <
@@ -401,8 +405,8 @@ class DedupSpec extends SparkTestBase {
     Dedup.writeMinhashIndex(corpus, "doc_id", "text", idxPath)
     val idx = Dedup.readMinhashIndex(spark, idxPath)
     // hyperparameters round-trip through the stamped column metadata
-    assert((idx.numHashes, idx.bands, idx.shingleSize, idx.seed, idx.mode)
-      == ((64, 16, 3, 42L, Dedup.HashMode.Xx)))
+    assert((idx.numHashes, idx.bands, idx.shingleSize, idx.seed,
+      hashStamp(idx)) == ((64, 16, 3, 42L, "md5")))
     val batch = Seq((10L, A.replace("mu", "zz")),
       (11L, "solo unique text matching nothing else in this corpus at all"))
       .toDF("doc_id", "text")
@@ -472,8 +476,8 @@ class DedupSpec extends SparkTestBase {
     Dedup.appendToMinhashIndex(b1, "doc_id", "text", path)
     // the grown index still reads back with intact hyperparameters
     val idx2 = Dedup.readMinhashIndex(spark, path)
-    assert((idx2.numHashes, idx2.bands, idx2.mode) ==
-      ((64, 16, Dedup.HashMode.Xx)))
+    assert((idx2.numHashes, idx2.bands, hashStamp(idx2)) ==
+      ((64, 16, "md5")))
     assert(idx2.hashes.count() == 2)
     // batch 2: near-dup of batch-1 survivor C (dropped only because the
     // append landed), plus a fresh doc D
@@ -506,7 +510,6 @@ class DedupSpec extends SparkTestBase {
     val path = tmp.resolve("index").toString
     val A = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val C = "red orange yellow green blue indigo violet cyan magenta teal pink grey"
-    val D = "north south east west up down left right front back over under"
     Dedup.writeMinhashIndex(Seq((1L, A)).toDF("doc_id", "text"),
       "doc_id", "text", path)
     // the fresh write seeded the idbloom sidecar: a DISJOINT batch
@@ -529,10 +532,6 @@ class DedupSpec extends SparkTestBase {
       e.getMessage.contains("shares ids"))
     // nothing was written by the refused attempt
     assert(Dedup.readMinhashIndex(spark, path).signatures.count() == 2)
-    // requireNewIds = false is the caller's explicit opt-out
-    Dedup.appendToMinhashIndex(Seq((11L, D)).toDF("doc_id", "text"),
-      "doc_id", "text", path, requireNewIds = false)
-    assert(Dedup.readMinhashIndex(spark, path).signatures.count() == 3)
     // a LEGACY artifact (no sidecar) still refuses — via the full
     // id-column scan fallback
     val bloomDir = java.nio.file.Paths.get(path, "idbloom")
@@ -636,8 +635,8 @@ class DedupSpec extends SparkTestBase {
     assert(removed == 1L)
     val idx = Dedup.readMinhashIndex(spark, path,
       expectedSource = Some("unit"))
-    assert((idx.numHashes, idx.bands, idx.mode) ==
-      ((64, 16, Dedup.HashMode.Xx)), "stamps must survive the rewrite")
+    assert((idx.numHashes, idx.bands, hashStamp(idx)) ==
+      ((64, 16, "md5")), "stamps must survive the rewrite")
     assert(idx.hashes.count() == 2 && idx.signatures.count() == 2)
     assert(idx.buckets.filter(col(idx.buckets.columns
       .find(c => c != "band" && c != "bucket").get) === 10L).count() == 0,
@@ -772,6 +771,54 @@ class DedupSpec extends SparkTestBase {
         .toDF("doc_id", "text"), "doc_id", "text", path)
     assert(Dedup.readMinhashIndex(spark, path,
       expectedSource = Some("/data/corpusA")).hashes.count() == 2)
+  }
+
+  test("a minhash index stamped hashMode = xx is refused by name: read, " +
+      "append and streaming probe") {
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.types.MetadataBuilder
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mh-xx")
+    val md5Path = tmp.resolve("md5").toString
+    val path = tmp.resolve("xx").toString
+    val A = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    Dedup.writeMinhashIndex(Seq((1L, A)).toDF("doc_id", "text"),
+      "doc_id", "text", md5Path)
+    // the index an xxhash64 build wrote: the same dirs and stamps, but
+    // hashMode = "xx" on the signature column
+    for (dir <- Seq("hashes", "buckets"))
+      spark.read.parquet(s"$md5Path/$dir").write.parquet(s"$path/$dir")
+    val sigs = spark.read.parquet(s"$md5Path/signatures")
+    val xx = new MetadataBuilder()
+      .withMetadata(sigs.schema("signature").metadata)
+      .putString("hashMode", "xx").build()
+    sigs.select(col("doc_id"), col("signature").as("signature", xx))
+      .write.parquet(s"$path/signatures")
+    def refusedByName(e: Throwable): Unit = {
+      val named = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case a: AnalysisError => a }
+      assert(named.isDefined, s"expected an AnalysisError, got $e")
+      val m = named.get.getMessage
+      assert(m.contains("hashMode = 'xx'") && m.contains(path), m)
+    }
+    refusedByName(intercept[AnalysisError](
+      Dedup.readMinhashIndex(spark, path)))
+    refusedByName(intercept[AnalysisError](Dedup.appendToMinhashIndex(
+      Seq((2L, "one two three four five six")).toDF("doc_id", "text"),
+      "doc_id", "text", path)))
+    assert(spark.read.parquet(s"$path/signatures").count() == 1,
+      "the refused append wrote rows")
+    val mem = MemoryStream[(Long, String)]
+    val q = Dedup.streamingDedup(mem.toDF().toDF("doc_id", "text"),
+        "doc_id", "text", path)(_ => ())
+      .option("checkpointLocation", tmp.resolve("ckpt").toString)
+      .start()
+    try {
+      mem.addData((10L, A))
+      refusedByName(intercept[
+        org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable()))
+    } finally q.stop()
   }
 
   test("streamingDedup: micro-batches dedup against everything admitted") {

@@ -722,7 +722,7 @@ class PqSpec extends SparkTestBase {
       .toDF("id", "vec")
     Similarity.appendPqIndex(drop2, "id", "vec", path)
     assert(new java.io.File(s"$path/idbloom").exists(),
-      "a requireNewIds append on a legacy artifact must upgrade it")
+      "an append on a legacy artifact must upgrade it")
     // the upgraded sidecar covers BASE + both drops: re-delivery of any
     // of them refuses, and a genuinely clean drop stays scan-free
     val again = ArtifactMaintenance.requireDisjointIds(spark,
@@ -767,8 +767,8 @@ class PqSpec extends SparkTestBase {
       .createTempDirectory("pq_cast").toString
     Similarity.writePqIndex(corpus, "id", "vec", books, path)
     // DOUBLE 100.5 is genuinely NEW, but the old bare cast truncated it
-    // to BIGINT 100 (r16 advice: with requireNewIds it was then either
-    // wrongly refused against an indexed 100, or appended COLLIDING)
+    // to BIGINT 100 (r16 advice), which was then wrongly refused
+    // against an indexed 100
     val lossy = Seq((100.5, Array.tabulate(4)(d => d / 10.0f)))
       .toDF("id", "vec")
     val ex = intercept[IllegalArgumentException] {

@@ -113,12 +113,6 @@ class SearchSpec extends SparkTestBase {
     val v = model.vocab.as[Long].head().toDouble
     assert(math.abs(out(1)._3.get - TextAnalysis.round4Value(
       -math.log(v))) < 1e-9)
-    // broadcast-model mode is a plan choice, not a semantics choice
-    val bc = LanguageModel
-      .scoreBigram(docs, "doc_id", "text", model, k = 0.5,
-        broadcastModel = true)
-      .orderBy("doc_id").as[(Long, Long, Option[Double])].collect().toSeq
-    assert(bc == out)
   }
 
   test("unigramDivergence: zero on identical corpora, positive and " +
