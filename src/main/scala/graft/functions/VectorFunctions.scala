@@ -26,9 +26,6 @@ object VectorFunctions {
   /** Squared L2 norm. */
   def normSq(a: Column): Column = dot(a, a)
 
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(normSq(a))
-
   /** Cosine similarity; 0 when either vector is all-zero. */
   def cosine(a: Column, b: Column): Column =
     cosineFromParts(dot(a, b), normSq(a), normSq(b))
@@ -40,9 +37,4 @@ object VectorFunctions {
     val denom = sqrt(normSqA) * sqrt(normSqB)
     when(denom === 0.0, lit(0.0)).otherwise(dotAB / denom)
   }
-
-  /** Euclidean (L2) distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{DataType, Metadata}
 
+import graft.core.EngineError.AnalysisError
+
 /** The lifecycle of graft's three id-guarded index artifacts: the flat
   * PQ index ([[Similarity.writePqIndex]]), the residual IVF-PQ index
   * ([[Similarity.writeIvfPqResidualIndex]]) and the minhash dedup index
@@ -56,7 +58,7 @@ object ArtifactMaintenance {
       payload: Seq[String], compactBy: String => Seq[String] = _ => Nil) {
     def idCol(df: DataFrame): String =
       df.columns.find(c => !payload.contains(c)).getOrElse(throw
-        new IllegalArgumentException(s"index $name frame has no id column"))
+        AnalysisError(s"index $name frame has no id column"))
   }
 
   /** An id-guarded artifact: its mutable data dirs, the COUNTED dir
@@ -83,8 +85,8 @@ object ArtifactMaintenance {
   /** Heal every data dir, then run the family's stamp-verifying `read`
     * — the entry of every step that reads an artifact in order to
     * change it. */
-  private[operators] def open[I](spark: SparkSession, path: String,
-                                 art: Artifact[I])(read: => I): I = {
+  private def open[I](spark: SparkSession, path: String,
+                     art: Artifact[I])(read: => I): I = {
     art.dirs.foreach(d => healCrashState(spark, s"$path/${d.name}"))
     read
   }
@@ -410,7 +412,7 @@ object ArtifactMaintenance {
       return DupCheckStats(bloomUsed = true, 0L, scannedCodes = false)
     if (maybe.getOrElse(batch).join(codes.select(col(diskIdCol)),
         Seq(diskIdCol), "left_semi").limit(1).count() > 0)
-      throw new IllegalArgumentException(
+      throw AnalysisError(
         s"$opName: the batch shares ids with the index at $path — a " +
           "re-delivered drop would duplicate neighbors in every probe " +
           "(drop the ids the index already holds before appending)")
@@ -473,7 +475,7 @@ object ArtifactMaintenance {
         (fwd.isNull || !(back <=> col(idCol))))
       val sample = lossy.select(col(idCol).cast("string"))
         .limit(3).collect().map(_.getString(0))
-      if (sample.nonEmpty) throw new IllegalArgumentException(
+      if (sample.nonEmpty) throw AnalysisError(
         s"$opName: batch ids of type ${srcType.simpleString} do not " +
           s"round-trip through the index's on-disk id type " +
           s"${target.simpleString} (e.g. ${sample.mkString(", ")}) — a " +

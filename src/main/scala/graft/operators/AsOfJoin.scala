@@ -106,30 +106,4 @@ object AsOfJoin {
         (valueCols.map(prefix + _) :+ rts).flatMap(c =>
           Seq("__m_" + c, "__b_" + c, "__f_" + c))): _*)
   }
-
-  /** Deterministic synthetic per-key timeline rig for the as-of
-    * crossover bench: `users` keys, each with ~`viewsPerUser`
-    * right-side rows (unique per (user_id, ts) by construction — the
-    * operator's contract) and `purchasesPerUser` left-side rows,
-    * timestamps xxhash64-scattered over a fixed horizon. Returns
-    * (purchases(purchase_id, user_id, ts), views(user_id, ts, v)).
-    * This is the dense-history regime where the naive
-    * join-then-argmax expansion materializes O(|left| x |right per
-    * key|) pair rows while the union+window form shuffles each row
-    * once — the crossover JoinRigSpec counts. */
-  def syntheticTimeline(spark: org.apache.spark.sql.SparkSession,
-                        users: Int, viewsPerUser: Int,
-                        purchasesPerUser: Int): (DataFrame, DataFrame) = {
-    val horizon = 1000000000L
-    val views = spark.range(users.toLong * viewsPerUser)
-      .select((col("id") % users).as("user_id"),
-        pmod(xxhash64(lit("v"), col("id")), lit(horizon)).as("ts"),
-        (col("id") % 997).cast("double").as("v"))
-      .groupBy("user_id", "ts").agg(max("v").as("v"))
-    val purchases = spark.range(users.toLong * purchasesPerUser)
-      .select(col("id").as("purchase_id"),
-        (col("id") % users).as("user_id"),
-        pmod(xxhash64(lit("p"), col("id")), lit(horizon)).as("ts"))
-    (purchases, views)
-  }
 }

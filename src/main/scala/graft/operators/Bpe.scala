@@ -55,43 +55,6 @@ object Bpe {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(symbolize(col("word")).as("ws"), col("cnt"))
 
-  /** Deterministic synthetic word-frequency dict — the scale rig behind
-    * the [[autoDictGate]] measurement (BpeRigSpec's heap check).
-    * Words are 3-4 syllables drawn from a hash-derived consonant-vowel
-    * pool, so character pairs share structure the way a natural-language
-    * dict's do (heavy-tailed pair counts — the regime that stresses the
-    * trainer's occurrence index; independent uniform letters would be
-    * unrealistically merge-free). Entirely narrow generation
-    * (spark.range -> md5 projections) plus ONE groupBy to fold hash
-    * collisions deterministically. Output: (ws symbol string, cnt),
-    * ~0.999 · n distinct rows at the 1024-syllable default. */
-  def syntheticDict(spark: SparkSession, n: Long, syllables: Int = 1024,
-                    salt: String = "bpedict:"): DataFrame = {
-    val cons = "bcdfghjklmnpqrstvwz"
-    val vow = "aeiou"
-    val pool: Seq[String] = (0 until syllables).map { i =>
-      val h = i * 2654435761L
-      "" + cons(((h >>> 3) % cons.length).toInt) +
-        vow(((h >>> 11) % vow.length).toInt) +
-        (if ((h & 1) == 0L) "" + cons(((h >>> 17) % cons.length).toInt)
-         else "")
-    }
-    val poolLit = typedLit(pool)
-    def idx(j: Int): Column =
-      (conv(substring(md5(concat(lit(s"$salt$j:"),
-        col("id").cast("string"))), 1, 8), 16, 10).cast("long")
-        % syllables + 1).cast("int")
-    val parts = col("id") % 2 + 3 // 3..4 syllables
-    val word = concat((0 until 4).map(j =>
-      when(lit(j) < parts, element_at(poolLit, idx(j)))
-        .otherwise(lit(""))): _*)
-    val cnt = conv(substring(md5(concat(lit(s"${salt}c:"),
-      col("id").cast("string"))), 1, 8), 16, 10).cast("long") % 100 + 1
-    spark.range(n).select(word.as("w"), cnt.as("cnt"))
-      .groupBy("w").agg(sum("cnt").as("cnt"))
-      .select(symbolize(col("w")).as("ws"), col("cnt"))
-  }
-
   /** Apply one merge (lft, rgt) -> lft||rgt to a symbol string with
     * greedy left-to-right non-overlapping semantics — the BPE rule —
     * using only plain `replace`:

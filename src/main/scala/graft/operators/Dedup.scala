@@ -453,13 +453,13 @@ object Dedup {
     * bucket collision stats in every later probe. The check is the
     * shared bloom-gated guard ([[ArtifactMaintenance.append]], which
     * also fixes the write order): a clean drop never scans signatures/
-    * at all. [[streamingDedup]]'s probe-then-append cycle passes it by
-    * construction: [[incrementalSurvivors]] already drops ids the index
-    * holds, so a replayed micro-batch appends an empty frame. */
+    * at all. A probe-then-append cycle passes it by construction:
+    * [[incrementalSurvivors]] already drops ids the index holds, so a
+    * replayed drop appends an empty frame. */
   def appendToMinhashIndex(survivors: DataFrame, idCol: String,
                            textCol: String, path: String): Unit = {
     // the per-id cache the encode creates is released once the write
-    // returns: a stream appends every micro-batch
+    // returns: a caller appends every drop
     var created: Option[DataFrame] = None
     try ArtifactMaintenance.append(MinhashArtifact, path, survivors, idCol,
         "appendToMinhashIndex")(
@@ -504,49 +504,6 @@ object Dedup {
                           targetPartitions: Int = 0): Unit =
     ArtifactMaintenance.compact(MinhashArtifact, spark, path,
       targetPartitions)(readMinhashIndex(spark, path))
-
-  /** Continuous-ingest dedup: the probe-then-append cycle as a
-    * Structured Streaming sink. Each micro-batch is probed against the
-    * index AS OF that batch ([[incrementalSurvivors]]), the survivors
-    * are appended to the index ([[appendToMinhashIndex]]) and handed to
-    * `sink` — so every later micro-batch dedups against everything
-    * admitted before it. Call `.start()` (after setting a
-    * checkpointLocation) on the returned writer.
-    *
-    * ORDERING SUBTLETY — the reason this helper exists rather than
-    * three obvious lines in user code: the survivor frame is
-    * MATERIALIZED (`localCheckpoint`) BEFORE the append. A lazy
-    * survivor plan re-executed after the append would re-probe the
-    * GROWN index and drop the batch's own documents as duplicates of
-    * themselves (every batch would come back empty). The checkpoint
-    * pins the probe's answer to the index-as-of-batch-start.
-    *
-    * State lives in the index parquet dirs, not in Spark streaming
-    * state — restart-safe, shared with batch jobs, unbounded-horizon
-    * (contrast `dropDuplicatesWithinWatermark`, whose state is bounded
-    * by the watermark). On a micro-batch REPLAY (failure after append,
-    * before the sink commit) the re-run probes an index that already
-    * contains the batch's survivors, so their content hashes drop them:
-    * the replayed batch yields no new appends (content-level idempotent)
-    * but `sink` then sees an empty frame for that batch — downstream
-    * must tolerate at-least-once delivery, as with any foreachBatch
-    * side effect. */
-  def streamingDedup(stream: DataFrame, idCol: String, textCol: String,
-                     indexPath: String, threshold: Double = 0.8)
-                    (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-       _: Long) =>
-        // opened through the lifecycle: a crashed swap heals before the
-        // probe reads the index, not only at the append
-        val idx = ArtifactMaintenance.open(batch.sparkSession, indexPath,
-          MinhashArtifact)(readMinhashIndex(batch.sparkSession, indexPath))
-        val survivors = incrementalSurvivors(batch.toDF(), idx, idCol,
-          textCol, threshold).localCheckpoint()
-        appendToMinhashIndex(survivors, idCol, textCol, indexPath)
-        sink(survivors)
-    }
 
   // -------------------------------------------------------------- simhash
 
@@ -1465,164 +1422,5 @@ object Dedup {
     labeled.withColumn("__kb_rn", row_number().over(w))
       .filter(col("__kb_rn") === 1)
       .drop("__kb_rn", "__kb_cluster")
-  }
-
-  // ------------------------------------------------- synthetic scale rigs
-
-  /** Deterministic synthetic edge set with planted worst-case components —
-    * the scale rig for measuring the adaptive-CC crossover (driver
-    * union-find below [[DefaultSmallGraphThreshold]] vs distributed
-    * star contraction above it) at edge counts the sf0.1 contract data
-    * can't reach (~500 pairs there).
-    *
-    * Structure: the contiguous id block [c*size, (c+1)*size) forms
-    * component c as a CHAIN — edges link consecutive block members — so
-    * every component is a worst-case path of diameter `componentSize - 1`
-    * (dense dup cliques converge in 1 round; chains are what the
-    * star-contraction log-round bound actually has to earn). Node ids are
-    * scattered through [0, nNodes) by an odd-multiplier bijection
-    * (`i * m % n` with gcd(m, n) = 1) so neither execution path sees
-    * artificially presorted, block-contiguous input. Fully deterministic:
-    * same (nNodes, componentSize) → identical edges, any session.
-    *
-    * Entirely narrow (spark.range → project/filter, no shuffle);
-    * generation is setup, not signal — bench callers `localCheckpoint()`
-    * before timing. nNodes is bounded by m * n < 2^63 (n < ~9·10^12 at
-    * the default multiplier) — far above any bench size.
-    * Output: (id_a long, id_b long), nNodes - ceil(nNodes/size) edges. */
-  /** The odd multiplier of the rigs' id-scattering bijection
-    * `i -> i * m mod n`: first odd candidate >= 1e6 coprime with n — a
-    * fixed, reproducible rule shared by every synthetic rig so their id
-    * layouts stay comparable. Bounded by m * n < 2^63 (n < ~9·10^12). */
-  private def permMultiplier(nNodes: Long): Long = {
-    @annotation.tailrec
-    def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
-    Iterator.iterate(1000003L)(_ + 2).find(c => gcd(c, nNodes) == 1).get
-  }
-
-  def syntheticComponentEdges(spark: org.apache.spark.sql.SparkSession,
-                              nNodes: Long,
-                              componentSize: Int): DataFrame = {
-    require(componentSize >= 2, "componentSize must be at least 2")
-    require(nNodes >= componentSize, "need at least one full component")
-    val m = permMultiplier(nNodes)
-    def perm(c: Column): Column = pmod(c * m, lit(nNodes))
-    spark.range(nNodes - 1)
-      .filter((col("id") + 1) % componentSize =!= 0)
-      .select(perm(col("id")).as("id_a"), perm(col("id") + 1).as("id_b"))
-  }
-
-  /** Deterministic synthetic edge set with ONE giant star-heavy
-    * component — the skew rig for star contraction's documented hot
-    * spot: a huge component's minimum accumulates degree ~ component
-    * size as the rounds re-point edges at it, concentrating one join
-    * key's rows on one reducer (see the AQE note in
-    * [[connectedComponentsFromEdges]]).
-    *
-    * Structure: `starFrac` of the node space forms a single
-    * hub-and-spoke star. The hub is the permuted image of the MIDDLE
-    * star index — not index 0, whose image is always node 0 (the global
-    * minimum): a star already centered on its component min is the
-    * contraction's fixpoint and would exercise nothing. With a
-    * mid-index hub the min is almost surely some spoke, so the rounds
-    * must re-point every spoke edge across the skewed key. The rest of
-    * the node space forms worst-case chains of `componentSize`, exactly
-    * as [[syntheticComponentEdges]] — so a uniform-chain graph of the
-    * same edge count is the natural control.
-    *
-    * Entirely narrow (spark.range → project/filter, no shuffle); bench
-    * callers `localCheckpoint()` before timing. Output: (id_a, id_b),
-    * `nStar - 1` star edges + the chain edges over the remainder. */
-  def syntheticSkewedEdges(spark: org.apache.spark.sql.SparkSession,
-                           nNodes: Long, starFrac: Double = 0.8,
-                           componentSize: Int = 41): DataFrame = {
-    require(starFrac > 0.0 && starFrac < 1.0, "starFrac must be in (0,1)")
-    require(componentSize >= 2, "componentSize must be at least 2")
-    val nStar = (nNodes * starFrac).toLong
-    require(nStar >= 2 && nNodes - nStar >= componentSize,
-      "need a non-trivial star AND at least one full chain")
-    val m = permMultiplier(nNodes)
-    def perm(c: Column): Column = pmod(c * m, lit(nNodes))
-    val hubIdx = nStar / 2
-    val hubId = java.lang.Math.floorMod(hubIdx * m, nNodes)
-    val star = spark.range(nStar).filter(col("id") =!= hubIdx)
-      .select(lit(hubId).as("id_a"), perm(col("id")).as("id_b"))
-    val chains = spark.range(nStar, nNodes - 1)
-      .filter((col("id") - nStar + 1) % componentSize =!= 0)
-      .select(perm(col("id")).as("id_a"), perm(col("id") + 1).as("id_b"))
-    star.union(chains)
-  }
-
-  /** Deterministic synthetic near-duplicate text corpus — the scale rig
-    * for measuring the minhash-banded-LSH vs inverted-index-exact-Jaccard
-    * dedup crossover on a corpus far larger than sf0.1's 500 docs.
-    *
-    * Docs come in families of `familySize` (family f = doc_id /
-    * familySize); every family member is the family's base token sequence
-    * (docLen tokens, token (f, j) an md5-derived 7-hex-char word — ~10^8
-    * vocabulary, so cross-family shingle collisions are negligible) with
-    * each position independently replaced by a doc-unique mutation token
-    * with probability `mutationRate` (an md5 coin on (doc, j) — fully
-    * replayable). With the defaults (docLen 60, rate 0.01) same-family
-    * 3-gram Jaccard lands around 0.85-0.9, the near-dup regime, and the
-    * doc-frequency of every surviving base shingle ≈ familySize.
-    *
-    * `boilerplateFrac` > 0 additionally prepends a SHARED token block
-    * (`boilerplateLen` tokens, identical across the whole corpus) to
-    * that fraction of docs (md5 coin on the doc id) — modelling the
-    * template headers/footers of a web crawl. Boilerplate shingles have
-    * doc-frequency ≈ frac·nDocs while connecting docs that are NOT
-    * near-dups (the block is far too short to push cross-family Jaccard
-    * over any sane threshold): exactly the skew that makes the exact
-    * inverted-index pair join pay O(df²) rows for pairs it will throw
-    * away, the regime where banded minhash (signatures absorb common
-    * shingles; buckets only collide for truly similar docs) and the
-    * stop-shingle `maxDocFreq` prune earn their keep.
-    *
-    * Entirely narrow (spark.range → transform over a sequence, md5
-    * builtins only, no shuffle, no UDF); generation is setup — bench
-    * callers `localCheckpoint()` before timing.
-    * Output: (doc_id long, text string). */
-  def syntheticNearDupCorpus(spark: org.apache.spark.sql.SparkSession,
-                             nDocs: Long, familySize: Int = 20,
-                             docLen: Int = 60,
-                             mutationRate: Double = 0.01,
-                             boilerplateFrac: Double = 0.0,
-                             boilerplateLen: Int = 13,
-                             salt: String = "nd:"): DataFrame = {
-    require(familySize >= 2 && docLen >= 1)
-    val fam = floor(col("id") / familySize).cast("long")
-    // md5-prefix coin in [0,1): same conv-of-8-hex-chars derivation rule
-    // as the LSH planes / clustered-corpus rig — engine-portable
-    def coin(j: Column): Column =
-      conv(substring(md5(concat(lit(salt + "c:"), col("id").cast("string"),
-        lit(":"), j.cast("string")).cast("binary")), 1, 8), 16, 10)
-        .cast("double") / 4294967296.0
-    def baseTok(j: Column): Column =
-      substring(md5(concat(lit(salt + "w:"), fam.cast("string"), lit(":"),
-        j.cast("string")).cast("binary")), 1, 7)
-    def mutTok(j: Column): Column =
-      substring(md5(concat(lit(salt + "m:"), col("id").cast("string"),
-        lit(":"), j.cast("string")).cast("binary")), 1, 7)
-    val body = array_join(transform(sequence(lit(0), lit(docLen - 1)), j =>
-      when(coin(j) < mutationRate, mutTok(j)).otherwise(baseTok(j))), " ")
-    val withBp =
-      if (boilerplateFrac <= 0.0) body
-      else {
-        // the block is corpus-wide constant: derive it driver-side with
-        // the same md5-prefix rule and splice it in as one literal
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val bpText = Seq.tabulate(boilerplateLen) { j =>
-          md.digest(s"${salt}b:$j".getBytes("UTF-8"))
-            .take(4).map(b => f"$b%02x").mkString.take(7)
-        }.mkString(" ")
-        val bpCoin =
-          conv(substring(md5(concat(lit(salt + "bc:"),
-            col("id").cast("string")).cast("binary")), 1, 8), 16, 10)
-            .cast("double") / 4294967296.0
-        when(bpCoin < boilerplateFrac,
-          concat(lit(bpText + " "), body)).otherwise(body)
-      }
-    spark.range(nDocs).select(col("id").as("doc_id"), withBp.as("text"))
   }
 }

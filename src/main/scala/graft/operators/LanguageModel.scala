@@ -4,10 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Corpus-trained n-gram language-model scoring — the CCNet-style
-  * quality filter: train token bigram statistics on a (reference)
-  * corpus, score every document by its mean bigram log-probability, and
-  * filter the tail. Documents full of boilerplate, gibberish, or
-  * vocabulary the reference corpus never uses score low; fluent text
+  * quality filter: train token bigram statistics on the corpus, score
+  * every document by its mean bigram log-probability ([[selfScore]]),
+  * and filter the tail. Documents full of boilerplate, gibberish, or
+  * vocabulary the rest of the corpus never uses score low; fluent text
   * scores high. This is the standard pretraining-data quality dial next
   * to the heuristic scores in [[TextAnalysis]] (which are per-row and
   * corpus-blind; this one is corpus-relative).
@@ -28,17 +28,12 @@ import org.apache.spark.sql.functions._
   * side has exactly one row per distinct bigram (hash-join build side
   * stays tiny per key); the probe side is the corpus token stream,
   * never paired with itself. The join strategy is the planner's: a
-  * small reference corpus's model frames fall under the broadcast
+  * small corpus's model frames fall under the broadcast
   * threshold (at plan time, or once AQE has measured them) and the
   * scoring pass runs shuffle-free. Everything is deterministic (counts and
   * ratios of counts), so the DuckDB oracle checks VALUES, not shapes.
   */
 object LanguageModel {
-
-  /** Trained bigram model frames. `bigrams`: (w1, w2, c); `contexts`:
-    * (w1, c_ctx); `vocab`: one row, (v) = corpus vocabulary size. */
-  final case class BigramModel(bigrams: DataFrame, contexts: DataFrame,
-                               vocab: DataFrame)
 
   /** (id, w1, w2) — one row per bigram OCCURRENCE, in doc order.
     * Repartitioned by id first so explode parallelism never depends on
@@ -56,56 +51,9 @@ object LanguageModel {
       .select(col(idCol), col("col.w1").as("w1"), col("col.w2").as("w2"))
   }
 
-  /** Model frames from a pre-built bigram stream: two keyed count
-    * shuffles plus a distinct-count for the vocabulary. */
-  private def modelFromStream(bg: DataFrame, corpus: DataFrame,
-                              textCol: String): BigramModel = {
-    val bigrams = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-    val contexts = bg.groupBy("w1").agg(count(lit(1)).as("c_ctx"))
-    // vocabulary over ALL tokens (not just contexts): the last token of
-    // a doc is a word too, and so are single-token docs
-    val vocab = corpus
-      .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
-      .agg(countDistinct(col("w")).as("v"))
-    BigramModel(bigrams, contexts, vocab)
-  }
-
-  /** Train the smoothed-bigram model on `corpus`. */
-  def trainBigram(corpus: DataFrame, idCol: String,
-                  textCol: String): BigramModel =
-    modelFromStream(bigramStream(corpus, idCol, textCol), corpus, textCol)
-
-  private def scoreFromStream(bg: DataFrame, docs: DataFrame,
-                              idCol: String, model: BigramModel,
-                              k: Double): DataFrame = {
-    val logP: Column =
-      log((coalesce(col("c"), lit(0L)) + lit(k)) /
-        (coalesce(col("c_ctx"), lit(0L)) + lit(k) * col("v")))
-    val scored = bg
-      .join(model.bigrams, Seq("w1", "w2"), "left")
-      .join(model.contexts, Seq("w1"), "left")
-      .crossJoin(broadcast(model.vocab))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_bigrams"),
-        TextAnalysis.round4(avg(logP)).as("lm_score"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        col("lm_score"))
-  }
-
-  /** Score `docs` against a trained model: (id, n_bigrams, lm_score)
-    * with `lm_score` = mean ln P(w2|w1) over the doc's bigrams
-    * (NULL when the doc has no bigram). An unseen bigram or context
-    * falls back to the smoothing mass — never a null probability. */
-  def scoreBigram(docs: DataFrame, idCol: String, textCol: String,
-                  model: BigramModel, k: Double = 0.5): DataFrame =
-    scoreFromStream(bigramStream(docs, idCol, textCol), docs, idCol,
-      model, k)
-
   /** Corpus drift: add-k smoothed unigram KL and Jensen–Shannon
     * divergence between two corpora's token distributions — the
-    * batch-vs-reference monitor next to per-doc [[scoreBigram]] (a
+    * batch-vs-reference monitor next to per-doc [[selfScore]] (a
     * batch can score fine doc-by-doc while its MIX drifts: topic
     * collapse, language shift, template flooding all move JS before
     * they move per-doc quality).
@@ -145,10 +93,10 @@ object LanguageModel {
           sum(pw * log(pw / mw) + qw * log(qw / mw)) / 2).as("js"))
   }
 
-  /** Self-scoring convenience: train on `corpus` and score its own
-    * documents — the shape the `txt_lm_score` contract query runs
-    * (production trains on a clean reference corpus and scores the
-    * crawl; the frames API above is that split). The bigram stream
+  /** Train on `corpus` and score its own documents: (id, n_bigrams,
+    * lm_score) with `lm_score` = mean ln P(w2|w1) over the doc's
+    * bigrams (NULL when the doc has no bigram) — the shape the
+    * `txt_lm_score` contract query runs. The bigram stream
     * feeds both the model counts and the scoring probe, so it is
     * computed once and `cache()`d (plan-lifetime convention as
     * [[Dedup.minhashPairs]] — callers running many queries per session
@@ -157,7 +105,27 @@ object LanguageModel {
   def selfScore(corpus: DataFrame, idCol: String, textCol: String,
                 k: Double = 0.5): DataFrame = {
     val bg = bigramStream(corpus, idCol, textCol).cache()
-    scoreFromStream(bg, corpus, idCol,
-      modelFromStream(bg, corpus, textCol), k)
+    // the model: two keyed count shuffles plus a distinct-count for
+    // the vocabulary — over ALL tokens (not just contexts): the last
+    // token of a doc is a word too, and so are single-token docs
+    val bigrams = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
+    val contexts = bg.groupBy("w1").agg(count(lit(1)).as("c_ctx"))
+    val vocab = corpus
+      .select(explode(TextAnalysis.tokens(col(textCol))).as("w"))
+      .agg(countDistinct(col("w")).as("v"))
+    val logP: Column =
+      log((coalesce(col("c"), lit(0L)) + lit(k)) /
+        (coalesce(col("c_ctx"), lit(0L)) + lit(k) * col("v")))
+    val scored = bg
+      .join(bigrams, Seq("w1", "w2"), "left")
+      .join(contexts, Seq("w1"), "left")
+      .crossJoin(broadcast(vocab))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_bigrams"),
+        TextAnalysis.round4(avg(logP)).as("lm_score"))
+    corpus.select(col(idCol)).join(scored, Seq(idCol), "left")
+      .select(col(idCol),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        col("lm_score"))
   }
 }

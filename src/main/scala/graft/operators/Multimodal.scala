@@ -457,21 +457,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Deterministic frame sampling plan for video payloads: every k-th
-    * frame index, computed as a lazy column op (no decode needed to plan). */
-  def frameSamplePlan(df: DataFrame, nFramesCol: String, every: Int = 10): DataFrame =
-    df.withColumn("sampled_frames",
-      filter(sequence(lit(0), greatest(col(nFramesCol) - 1, lit(0))),
-        i => i % every === 0))
-
-  /** Resize spec: target box preserving aspect ratio — metadata-only op
-    * that a downstream decode stage consumes. */
-  def resizePlan(df: DataFrame, wCol: String, hCol: String,
-                 maxSide: Int = 256): DataFrame = {
-    val scale = least(lit(maxSide) / col(wCol), lit(maxSide) / col(hCol),
-      lit(1.0))
-    df.withColumn("target_w", ceil(col(wCol) * scale).cast("int"))
-      .withColumn("target_h", ceil(col(hCol) * scale).cast("int"))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Join strategies for the cases AQE can't fully save at 100 TB:
@@ -8,24 +8,34 @@ import org.apache.spark.sql.functions._
   */
 object ScaleJoins {
 
-  /** Skew-salted inner equi-join: the skewed (left) side gets a random
-    * salt in [0, saltFactor), the compact right side is exploded across
-    * every salt value, and the join key becomes (key, salt) — spreading a
-    * hot key over `saltFactor` reducers. Use when one key holds a
-    * disproportionate share of rows and AQE's skew-join splitting isn't
-    * available (e.g. non-AQE paths, or skew beyond its thresholds).
+  /** Skew-salted inner equi-join: the skewed (left) side gets a salt in
+    * [0, saltFactor) ([[salt]]), the compact right side is exploded
+    * across every salt value, and the join key becomes (key, salt) —
+    * spreading a hot key over `saltFactor` reducers. Use when one key
+    * holds a disproportionate share of rows and AQE's skew-join
+    * splitting isn't available (e.g. non-AQE paths, or skew beyond its
+    * thresholds).
     *
     * Right side grows by saltFactor — keep it the smaller input.
     */
   def saltedJoin(left: DataFrame, right: DataFrame, key: String,
                  saltFactor: Int = 16): DataFrame = {
     require(saltFactor > 0, "saltFactor must be positive")
-    val salted = left.withColumn("__salt",
-      (rand() * saltFactor).cast("int"))
+    val salted = left.withColumn("__salt", salt(left, saltFactor))
     val exploded = right.withColumn("__salt",
       explode(array((0 until saltFactor).map(lit): _*)))
     salted.join(exploded, Seq(key, "__salt"), "inner").drop("__salt")
   }
+
+  /** The salt of a left row: xxhash64 over all of its columns, mod
+    * `saltFactor`. Derived from the row's content, not from `rand()`,
+    * so a retried map task routes every row to the same salt — the
+    * join never sees a row under two salts, or under none. Identical
+    * rows share a salt, so a hot key spreads only as far as its rows
+    * differ. */
+  private[graft] def salt(left: DataFrame, saltFactor: Int): Column =
+    pmod(xxhash64(left.columns.toSeq.map(col): _*), lit(saltFactor))
+      .cast("int")
 
   /** Salt factor MEASURED from the data instead of guessed: estimate the
     * hottest key's row share from a seeded sample, then size the salt so
@@ -70,14 +80,4 @@ object ScaleJoins {
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
-
-  /** Join two same-bucketing tables on their bucket key. */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                   key: String, joinType: String = "inner"): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(key), joinType)
-
-  /** True when the physical plan contains a shuffle exchange — the
-    * assertion hook for bucketed-join tests. */
-  def hasShuffleExchange(df: DataFrame): Boolean =
-    df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }

@@ -1,48 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Full-text search over a document corpus: inverted-index construction
-  * and BM25 ranking — the retrieval half of a training-data pipeline
-  * (benchmark decontamination lookups, targeted corpus slicing, RAG-style
-  * eval set construction all reduce to "top-k docs for these terms").
+/** Full-text search over a document corpus: BM25 ranking — the
+  * retrieval half of a training-data pipeline (benchmark
+  * decontamination lookups, targeted corpus slicing, RAG-style eval set
+  * construction all reduce to "top-k docs for these terms").
   *
-  * Scale design: the posting-list build is one explode + groupBy on
-  * (term, doc) — the shuffle key includes the doc id, so a ubiquitous
-  * term does NOT hot-spot a single reducer. Query-time frames (term
-  * document-frequencies, corpus stats) are tiny and broadcast; the only
-  * per-corpus-size work is the posting scan for the queried terms, which
-  * a real deployment serves from the materialized index written by
-  * [[invertedIndex]] (partitioned by term prefix).
+  * Scale design: the postings for the queried terms are one explode +
+  * filter + groupBy on (term, doc) — the shuffle key includes the doc
+  * id, so a ubiquitous term does NOT hot-spot a single reducer.
+  * Query-time frames (term document-frequencies, corpus stats) are tiny
+  * and broadcast; the only per-corpus-size work is the posting scan for
+  * the queried terms.
   */
 object Search {
-
-  /** Posting list (term, doc, tf): explode + count. `minTf` and
-    * `maxDocFreqFrac` mirror the standard index-pruning knobs: `minTf`
-    * drops (term, doc) postings below a per-document frequency floor (a
-    * rare-typo filter — applied to the post-aggregation tf, so it prunes
-    * the posting output without an extra pass), `maxDocFreqFrac` drops terms
-    * appearing in more than that fraction of the corpus (a stopword
-    * ceiling — costs one extra aggregate over the postings). */
-  def invertedIndex(df: DataFrame, idCol: String, textCol: String,
-                    maxDocFreqFrac: Double = 1.0,
-                    minTf: Int = 1): DataFrame = {
-    val post0 = df
-      .select(col(idCol).as("doc"),
-        explode(TextAnalysis.tokens(col(textCol))).as("term"))
-      .groupBy("term", "doc").agg(count(lit(1)).as("tf"))
-    val post = if (minTf <= 1) post0 else post0.filter(col("tf") >= minTf)
-    if (maxDocFreqFrac >= 1.0) post
-    else {
-      val n = df.count().toDouble
-      val dfreq = post.groupBy("term")
-        .agg(countDistinct("doc").as("df"))
-        .filter(col("df") <= maxDocFreqFrac * n)
-        .select("term")
-      post.join(dfreq, "term")
-    }
-  }
 
   /** BM25 score per (doc, matching query term count) for a bag of query
     * terms; docs matching no term are absent (score 0). Standard

@@ -1378,54 +1378,6 @@ object Similarity {
   private def firstRow(df: DataFrame, emptyMsg: => String): Row =
     df.head(1).headOption.getOrElse(throw AnalysisError(emptyMsg))
 
-  /** Deterministic synthetic clustered embedding corpus — the scale rig
-    * for demonstrating the LSH-vs-brute crossover the [[lshTopK]] cost
-    * model predicts (it needs a corpus far larger than the sf0.1
-    * embeddings table, and near neighbors with high per-hyperplane
-    * agreement).
-    *
-    * vec_id i gets `center(i % clusters) + noiseScale * noise(i)`, every
-    * component an md5-derived uniform[-1,1] double — fully replayable
-    * across runs, sessions, and engines (no rand()). With the defaults
-    * (dim 64, noiseScale 0.25) same-cluster cosine lands around 0.94, so
-    * a vector's true top-k are its cluster-mates and hyperplane-LSH
-    * recall is high — the regime planted-near-duplicate corpora live in.
-    *
-    * Entirely narrow (spark.range -> projection, no shuffle); generation
-    * is O(n x dim) md5 calls, a one-time setup cost callers typically
-    * hide behind `localCheckpoint()` before timing anything. Output:
-    * (vec_id long, embedding array<double>). */
-  def syntheticClusteredCorpus(spark: org.apache.spark.sql.SparkSession,
-                               n: Long, dim: Int = 64, clusters: Int = 500,
-                               noiseScale: Double = 0.25,
-                               salt: String = "syn:"): DataFrame = {
-    // md5-prefix -> uniform[-1,1]: same portable derivation rule the LSH
-    // planes and the JL matrix use (conv of the first 8 hex chars)
-    def u(tag: String, key: Column, j: Int): Column =
-      conv(substring(md5(concat(lit(salt + tag + ":"), key.cast("string"),
-        lit(":" + j)).cast("binary")), 1, 8), 16, 10).cast("double") /
-        lit(2147483647.5) - 1.0
-    val cid = col("id") % clusters
-    val comps = (0 until dim).map(j =>
-      u("c", cid, j) + lit(noiseScale) * u("n", col("id"), j))
-    spark.range(n).select(col("id").as("vec_id"),
-      array(comps: _*).as("embedding"))
-  }
-
-  /** Clustering quality: sum over vectors of (1 - cosine to the assigned
-    * centroid). The scalar the kmeans quality specs assert on — lower is
-    * tighter; a correct k-means run never increases it across
-    * iterations. One assignment pass + one aggregate. */
-  def kmeansInertia(df: DataFrame, idCol: String, vecCol: String,
-                    cents: DataFrame): Double = {
-    val assigned = ivfAssign(df, idCol, vecCol, cents)
-    df.join(assigned, idCol).join(broadcast(cents), "cid")
-      .select((lit(1.0) - cosineFromParts(
-        dot(col(vecCol), col("centroid")),
-        normSq(col(vecCol)), normSq(col("centroid")))).as("d"))
-      .agg(sum(col("d"))).head().getDouble(0)
-  }
-
   /** Label centroids: average embedding per label — a representative
     * "analytics over vectors" op (group agg over array columns, no UDF).
     *

@@ -20,9 +20,6 @@ object TextAnalysis {
     */
   def round4(x: Column): Column = floor(x * 10000 + 0.5) / 10000
 
-  /** Driver-side mirror of [[round4]] (spec expectations). */
-  def round4Value(x: Double): Double = math.floor(x * 10000 + 0.5) / 10000
-
   /** Whitespace tokens (the corpus-standard cheap tokenizer). */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
@@ -96,8 +93,8 @@ object TextAnalysis {
     * `dim`-component double vector per document — the classic
     * vocabulary-free text→vector bridge (feeds [[Similarity]] ops
     * directly: text near-dup via cosine, clustering, ANN). Buckets come
-    * from md5 (deterministic AND engine-portable, like [[Dedup]]'s Md5
-    * mode), so the vectors — and anything computed from them — replay
+    * from md5 (deterministic AND engine-portable, like [[Dedup]]'s LSH
+    * hashes), so the vectors — and anything computed from them — replay
     * bit-identically in the DuckDB oracle.
     *
     * Shape: explode tokens → count per (id, bucket) → assemble the dense
@@ -241,15 +238,6 @@ object TextAnalysis {
     md5(array_join(array_sort(array_distinct(tokens(text))), " ")
       .cast("binary"))
 
-  /** Rolling-hash (Rabin-Karp style) document fingerprint over tokens:
-    * polynomial accumulation mod 2^61-1 — order-sensitive complement to
-    * [[fingerprint]]. */
-  def rollingHash(text: Column): Column = {
-    val p = lit((1L << 31) - 1)
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => pmod(acc * 131 + pmod(xxhash64(t), p), p))
-  }
-
   /** Normalization for dedup/fingerprint pipelines: lowercase, strip
     * punctuation (explicit cross-engine char class), collapse whitespace,
     * trim. The standard canonical form fed to exact/minhash dedup. */
@@ -257,21 +245,6 @@ object TextAnalysis {
     trim(regexp_replace(
       regexp_replace(lower(text), """[.,;:!?'"()\[\]{}-]""", ""),
       "\\s+", " "))
-
-  /** Boilerplate-line stripping: drop lines matching any marker regex
-    * (copyright/nav/footer patterns), rejoin. Line-wise filter over a
-    * split — codegen'd, shuffle-free. */
-  def stripBoilerplate(text: Column,
-                       markers: Seq[String] = DefaultBoilerplate): Column = {
-    val keep = filter(split(text, "\n"), line =>
-      markers.map(m => !line.rlike(m)).reduce((a: Column, b: Column) => a && b))
-    array_join(keep, "\n")
-  }
-
-  val DefaultBoilerplate: Seq[String] = Seq(
-    "(?i)copyright|all rights reserved",
-    "(?i)^\\s*(home|about|contact|privacy policy)\\s*$",
-    "(?i)subscribe|sign up for our newsletter")
 
   /** PII patterns shared by [[redactPii]] and [[piiCounts]]. Kept to the
     * RE2-compatible subset (no lookaround, no backreferences) so the same
@@ -303,15 +276,6 @@ object TextAnalysis {
     "n_phone" -> regexp_count(
       regexp_replace(regexp_replace(text, PiiEmail, "<EMAIL>"), PiiIp, "<IP>"),
       lit(PiiPhone)))
-
-  /** Per-document report over a corpus frame. */
-  def analyze(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-      qualityMetrics(col(textCol)).as("metrics"),
-      qualityScore(col(textCol)).as("quality"),
-      langId(col(textCol)).as("lang_pred"),
-      fingerprint(col(textCol)).as("fingerprint"),
-      tokenEstimate(col(textCol)).as("token_estimate"))
 
   val DefaultStopwords: Seq[String] = Seq(
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "it", "that",

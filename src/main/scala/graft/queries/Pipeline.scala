@@ -846,9 +846,10 @@ object Pipeline {
       val removed = Similarity.deleteFromIvfPqResidualIndex(
         e.filter(col("vec_id") % 2 === 1).select("vec_id"), "vec_id",
         path, expectedSource = Some(dir))
-      require(removed > 0,
-        s"res_del rig deleted $removed rows — the rig corpus must " +
-          "contain odd ids")
+      if (removed == 0L) throw graft.core.EngineError.AnalysisError(
+        "sim_topk_ivfpq_res_del needs a corpus with an odd vec_id: " +
+          "it deletes the odd ids and probes the survivors, and this " +
+          "corpus has none")
       probeResidualIndex(s, dir, e, path)
     }),
 
@@ -1044,8 +1045,7 @@ object Pipeline {
         .orderBy("h")
     }),
 
-    // batch sessionization: 30-min-gap sessions via lag + running sum —
-    // the batch twin of streaming.EventsStreaming.sessionize (oracled)
+    // batch sessionization: 30-min-gap sessions via lag + running sum (oracled)
     "ev_sessionize" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = Tables.load(s, dir, "events")
@@ -1585,15 +1585,12 @@ object Pipeline {
         .select("doc_id", "text", "bucket", "split").orderBy("doc_id")
     }),
 
-    // streaming INGEST, certified through its batch collapse (r14 — the
-    // ev_attrib argument applied to docs): DocsStreaming.ingestBatch
-    // shares the gate / corpus-probe / token-accounting code with the
-    // streaming transform verbatim and replaces only the watermarked
-    // keep-first state with its order-explicit batch equivalent
-    // (keep lowest (ts, doc_id) per content_hash). Landed corpus =
-    // every 5th doc's hashes; the rest arrive as the drop with a
-    // deterministic doc_id-derived arrival time. The oracle replays
-    // gates, keep-first, the anti-probe, and both token counts
+    // corpus INGEST (DocsStreaming.ingestBatch): gates, keep-first
+    // (lowest (ts, doc_id) per content_hash), the landed-corpus probe
+    // and token accounting over one drop. Landed corpus = every 5th
+    // doc's hashes; the rest arrive as the drop with a deterministic
+    // doc_id-derived arrival time. The oracle replays gates,
+    // keep-first, the anti-probe, and both token counts
     "ds_ingest" -> ((s, dir) => {
       val d = docs(s, dir)
       val landed = d.filter(col("doc_id") % 5 === 0)
@@ -3281,7 +3278,7 @@ object Pipeline {
                 WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
          FROM dec2 JOIN corpus c ON dec2.doc_id = c.doc_id
          WHERE kept = 1 ORDER BY dec2.doc_id"""),
-    // the batch collapse of streaming ingest: quality+lang gates over
+    // corpus ingest: quality+lang gates over
     // the non-landed docs, keep-first (lowest doc_id — arrival order is
     // doc_id-derived) per content hash, anti-probe against the landed
     // hashes, token accounting. The gates are curateDecisionCtes'

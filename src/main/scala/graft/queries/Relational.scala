@@ -214,7 +214,7 @@ object Relational {
         .orderBy("city")
     }),
 
-    // streaming-analogue batch query: tumbling hourly window over events
+    // tumbling hourly window over events
     "q_events_hourly" -> ((s, dir) => {
       t(s, dir, "events")
         .groupBy(date_trunc("hour", col("ts")).cast("string").as("h"),

@@ -5,29 +5,28 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis
 
-/** Streaming INGEST for a training-data corpus: the path new documents
-  * take BEFORE they land — quality/language gating, intra-stream
-  * content dedup, and dedup against the already-landed corpus — as one
-  * composed Structured Streaming transform.
+/** INGEST for a training-data corpus: the path a new drop of
+  * documents takes BEFORE it lands — quality/language gating, keep-first
+  * content dedup within the drop, and dedup against the already-landed
+  * corpus, as one composed batch transform ([[ingestBatch]], the
+  * `ds_ingest` contract query).
   *
-  * This is the streaming twin of the batch curation chain
+  * This is the ingest-side twin of the batch curation chain
   * ([[graft.operators.Curate.curate]] gates +
   * [[graft.operators.Dedup.exactByContent]]): at 100 TB you do not
   * re-curate the lake per crawl drop; you gate and dedup each drop AS
   * IT ARRIVES and only clean rows ever land. Everything here composes
   * EXISTING operators — the gates are stateless codegen Column
-  * expressions (safe in streaming by construction), the intra-stream
-  * dedup is watermark-bounded built-in state, and the corpus probe is
-  * a stream-static join against a hash index; no custom state store
-  * logic to get wrong.
+  * expressions, the keep-first is one window, and the corpus probe is
+  * a join against a content-hash index.
   *
   * Reference analogue: none — cj-zhukov/datafusion-example is
   * batch-only; this extends the LLM-pipeline surface the survey
   * demands at the ingest end. */
 object DocsStreaming {
 
-  /** The landed corpus's content-hash index — the STATIC side the
-    * streaming probe joins. Same hash as
+  /** The landed corpus's content-hash index — the side the ingest
+    * probe joins. Same hash as
     * [[graft.operators.Dedup.exactByContent]] (md5 over the raw text
     * bytes), so "already in the corpus" means exactly what the batch
     * dedup means by it. Build it once per drop cycle (or maintain it
@@ -38,191 +37,23 @@ object DocsStreaming {
     corpus.select(md5(col(textCol).cast("binary")).as("content_hash"))
       .distinct()
 
-  /** Materialize the corpus-hash index as a BUCKETED table on
-    * `content_hash` — the layout that makes the per-micro-batch probe
-    * affordable: a stream-static join re-plans the static side every
-    * batch, and an unbucketed index pays a full shuffle exchange each
-    * time; a bucketed scan already satisfies the join's partitioning,
-    * so only the (small) micro-batch side ever exchanges
-    * (plan-pinned in DocsStreamingSpec). Rebuild per drop cycle or
-    * grow with appends — either way the 100 TB cost moves to
-    * write-once instead of shuffle-per-batch. */
-  def writeCorpusHashIndex(corpus: DataFrame, textCol: String,
-                           table: String, buckets: Int = 32): Unit =
-    graft.operators.ScaleJoins.writeBucketed(
-      corpusHashIndex(corpus, textCol), table, "content_hash", buckets)
-
-  /** Grow the bucketed index with a landed batch's hashes — the
-    * per-drop maintenance step: the batch's (deduped) hashes append as
-    * new files in the SAME bucketing spec (Spark validates the spec
-    * against the table, so a mismatched bucket count refuses), and the
-    * next micro-batch's probe sees them with the same exchange-free
-    * scan. O(batch) work; the corpus-sized index is never rewritten.
-    * A hash already present lands again (the probe is existence-only,
-    * so duplicates cost bytes, not correctness) — feed this the
-    * SURVIVORS the ingest admitted, which are new-to-corpus by
-    * construction. */
-  def appendCorpusHashes(landed: DataFrame, textCol: String,
-                         table: String, buckets: Int = 32): Unit =
-    corpusHashIndex(landed, textCol).write.mode("append")
-      .bucketBy(buckets, "content_hash").sortBy("content_hash")
-      .format("parquet").saveAsTable(table)
-
-  /** Compact the bucketed corpus-hash index — the maintenance twin of
-    * [[graft.operators.Dedup.compactMinhashIndex]] for the third
-    * persisted artifact: every [[appendCorpusHashes]] drop lands its
-    * own files per bucket (and may re-land hashes already present —
-    * the probe is existence-only, so duplicates cost bytes, not
-    * correctness), so a run of drops accumulates small files and
-    * duplicate rows. Rewrites the table as DISTINCT hashes in the same
-    * bucket spec (pass a different `buckets` to deliberately resize —
-    * the data is being rewritten anyway), staged through
-    * `<table>__compact` so the index is never dropped before its
-    * replacement is fully written: a crash between the final DROP and
-    * RENAME leaves the intact rewrite at the staging name, and the
-    * next call self-heals it back (the
-    * [[graft.operators.ArtifactMaintenance]] contract, spelled in
-    * catalog operations because bucketing lives in table metadata,
-    * not in the dir layout). The compacted table still satisfies the
-    * probe join's partitioning — the exchange-free micro-batch scan is
-    * spec-pinned in DocsStreamingSpec. */
-  def compactCorpusHashIndex(spark: org.apache.spark.sql.SparkSession,
-                             table: String, buckets: Int = 32): Unit =
-    rewriteCorpusHashIndex(spark, table, buckets)(_.distinct())
-
-  /** Remove forgotten content from the corpus-hash index — the
-    * right-to-be-forgotten twin of
-    * [[graft.operators.Dedup.deleteFromMinhashIndex]] for the fourth
-    * persisted artifact: without it, re-submitted content whose
-    * original was deleted from the lake would be dropped by the ingest
-    * probe forever (the index remembers a doc the corpus no longer
-    * has). Rewrites the table WITHOUT the given docs' content hashes
-    * (left-anti on md5, same hash rule as the probe), deduplicated,
-    * same bucket spec, via the same staged/self-healing swap as
-    * [[compactCorpusHashIndex]]. Returns the number of hash rows
-    * removed.
-    *
-    * Caller contract: the hash index is content-only (no doc ids), so
-    * pass content that NO surviving doc still carries — if a kept doc
-    * shares the forgotten doc's exact text, deleting the hash would
-    * re-admit duplicates of content that still exists; anti-join the
-    * forgotten docs against the surviving corpus first when that can
-    * happen. */
-  def deleteCorpusHashes(forgotten: DataFrame, textCol: String,
-                         table: String, buckets: Int = 32): Long = {
-    val spark = forgotten.sparkSession
-    healCorpusHashIndex(spark, table) // the count below needs a live table
-    require(spark.catalog.tableExists(table),
-      s"deleteCorpusHashes: no corpus-hash index table '$table'")
-    // materialize: the staged swap drops the table the plan reads
-    val gone = corpusHashIndex(forgotten, textCol).localCheckpoint()
-    val before = spark.table(table).count()
-    rewriteCorpusHashIndex(spark, table, buckets)(
-      _.join(gone, Seq("content_hash"), "left_anti").distinct())
-    before - spark.table(table).count()
-  }
-
-  /** Shared staged rewrite for the bucketed corpus-hash table
-    * (compaction and deletion): write the transformed index to
-    * `<table>__compact` in the same bucket spec, then DROP + RENAME —
-    * the index is never dropped before its replacement is fully
-    * written, and the crash window between DROP and RENAME self-heals
-    * at the next call (the [[graft.operators.ArtifactMaintenance]]
-    * contract in catalog operations, because bucketing lives in table
-    * metadata, not the dir layout). */
-  private def rewriteCorpusHashIndex(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      buckets: Int)(transform: DataFrame => DataFrame): Unit = {
-    val staged = table + "__compact"
-    healCorpusHashIndex(spark, table)
-    require(spark.catalog.tableExists(table),
-      s"rewriteCorpusHashIndex: no corpus-hash index table '$table'")
-    spark.sql(s"DROP TABLE IF EXISTS $staged") // orphan from a crash
-    graft.operators.ScaleJoins.writeBucketed(
-      transform(spark.table(table)), staged, "content_hash", buckets)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $staged RENAME TO $table")
-  }
-
-  /** The documented crash window of [[rewriteCorpusHashIndex]] — index
-    * table missing, intact result at `<table>__compact` — promoted
-    * back at entry of every maintenance call (a heal never skips the
-    * calling operation's own transform). */
-  private def healCorpusHashIndex(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table) &&
-        spark.catalog.tableExists(table + "__compact"))
-      spark.sql(s"ALTER TABLE ${table}__compact RENAME TO $table")
-
-  /** Streaming content dedup: keep the FIRST arrival of each distinct
-    * text within the watermark window, and drop anything whose content
-    * already exists in the landed corpus.
-    *
-    * Intra-stream state is bounded by the watermark
-    * (`dropDuplicatesWithinWatermark` — the [[EventsStreaming.dedupeExact]]
-    * argument: only keys younger than the watermark are remembered, so
-    * state is O(docs per window), never O(corpus)). Cross-drop
-    * exactness comes from the corpus probe instead of from unbounded
-    * stream state: a duplicate that re-arrives AFTER the watermark
-    * expired its key is still dropped if its first copy landed. The
-    * probe is a stream-static LEFT OUTER + null-filter (semantically
-    * left-anti; spelled via outer join because stream-static left-anti
-    * is not in Structured Streaming's supported-join matrix while left
-    * outer with a static right side is). */
-  def contentDedup(docs: DataFrame, corpusHashes: Option[DataFrame],
-                   textCol: String = "text", tsCol: String = "ts",
-                   watermark: String = "2 hours"): DataFrame = {
-    val intra = docs
-      .withColumn("content_hash", md5(col(textCol).cast("binary")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("content_hash")
-    corpusProbe(intra, corpusHashes)
-  }
-
-  /** The landed-corpus probe half of [[contentDedup]]: drop rows whose
-    * content_hash exists in the index (stream-static left-outer +
-    * null-filter — see [[contentDedup]] for why not left-anti). Shared
-    * by the streaming path and [[ingestBatch]] so the two can never
-    * disagree about what "already landed" means. */
+  /** The landed-corpus probe of [[ingestBatch]]: drop rows whose
+    * content_hash exists in the index. */
   private def corpusProbe(docs: DataFrame,
                           corpusHashes: Option[DataFrame]): DataFrame =
-    corpusHashes.fold(docs) { idx =>
-      val marked = idx.select(col("content_hash"),
-        lit(1).as("__in_corpus"))
-      docs.join(marked, Seq("content_hash"), "left_outer")
-        .filter(col("__in_corpus").isNull)
-        .drop("__in_corpus")
-    }
+    corpusHashes.fold(docs)(idx =>
+      docs.join(idx.select("content_hash"), Seq("content_hash"), "left_anti"))
 
   /** The composed ingest transform: quality + language gates FIRST
-    * (stateless, codegen, and they shrink what the dedup state must
-    * remember — the batch curation chain's narrow-gates-first rule),
-    * then [[contentDedup]], then token accounting (exact whitespace
-    * count + the BPE-ish estimate) stamped on the survivors so the
-    * landing sink can budget without re-scanning. Returns a streaming
-    * DataFrame ready for `writeStream` (append mode). */
-  def ingest(docs: DataFrame, corpusHashes: Option[DataFrame] = None,
-             textCol: String = "text", tsCol: String = "ts",
-             watermark: String = "2 hours",
-             minQuality: Double = 0.5,
-             keepLangs: Seq[String] = Seq("en")): DataFrame =
-    tokenAccounting(
-      contentDedup(gate(docs, textCol, minQuality, keepLangs),
-        corpusHashes, textCol, tsCol, watermark),
-      textCol)
-
-  /** The deterministic BATCH COLLAPSE of [[ingest]] — the same gates,
-    * the same corpus probe, the same token accounting, with the one
-    * streaming-only mechanic (watermarked keep-first state) replaced by
-    * its order-explicit batch equivalent: keep the row with the lowest
-    * (tsCol, idCol) per content_hash. `dropDuplicatesWithinWatermark`
-    * keeps whichever copy ARRIVES first, which a batch plan has no
-    * notion of — the window spelling pins arrival order to the data so
-    * the result is replayable (and oracle-able: the `ds_ingest`
-    * CORRECTNESS row runs exactly this against DuckDB). Everything else
-    * is shared code, so a green batch row certifies the transform the
-    * stream executes, minus only state-expiry mechanics — the
-    * `ev_attrib` batch-collapse argument applied to ingest. */
+    * (stateless, codegen, and they shrink what the keep-first window
+    * must hold — the batch curation chain's narrow-gates-first rule),
+    * then keep-first content dedup — the row with the lowest
+    * (tsCol, idCol) per content_hash, so arrival order is pinned to the
+    * data and the result replays (the `ds_ingest` contract query runs
+    * exactly this against DuckDB) — then the landed-corpus probe, then
+    * token accounting (exact whitespace count + the BPE-ish estimate)
+    * stamped on the survivors so the landing sink can budget without
+    * re-scanning. */
   def ingestBatch(docs: DataFrame, corpusHashes: Option[DataFrame] = None,
                   textCol: String = "text", idCol: String = "doc_id",
                   tsCol: String = "ts",
@@ -240,9 +71,8 @@ object DocsStreaming {
     tokenAccounting(corpusProbe(kept, corpusHashes), textCol)
   }
 
-  /** Stateless quality + language gates — first in both paths: they are
-    * pure codegen and they shrink what the dedup state (streaming) or
-    * the keep-first window (batch) must hold. */
+  /** Stateless quality + language gates: pure codegen, run before the
+    * keep-first window so it holds only rows that can land. */
   private def gate(docs: DataFrame, textCol: String, minQuality: Double,
                    keepLangs: Seq[String]): DataFrame =
     docs.filter(

@@ -1,68 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface over the `events` table shape
-  * (event_id, ts, user_id, event_type, value, props).
+/** Streaming operators over the `events` table shape
+  * (event_id, ts, user_id, event_type, value), each with a batch
+  * collapse that a contract query runs: [[distinctUsersPerWindow]]
+  * (`ev_distinct`) and [[purchaseAttribution]] (`ev_attrib`). The same
+  * code runs on a streaming frame (file or kafka source, or a
+  * MemoryStream in the specs that pin stream ≡ batch) and on a batch
+  * frame.
   *
   * The reference has no streaming (its `execute_stream` is bounded batch
-  * pull — SURVEY §2.11); this module is part of the training-pipeline
-  * extension surface: watermarked windowed aggregation and stateful
-  * sessionization, both runnable identically from a file/kafka source at
-  * cluster scale or from a MemoryStream in tests.
+  * pull — SURVEY §2.11); this is part of the training-pipeline
+  * extension surface.
   */
 object EventsStreaming {
-
-  /** Watermarked tumbling-window counts/sums per event type.
-    * Late data beyond the watermark is dropped, state is bounded — the
-    * 100-TB-stream-safe default. */
-  def hourlyAggregates(events: DataFrame,
-                       watermark: String = "2 hours",
-                       window: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window),
-        col("event_type"))
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("cnt"), col("sum_value"))
-
-  case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-                   event_type: String, value: Double)
-  case class SessionState(count: Long, sum: Double, lastTs: Long)
-  case class Session(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Stateful sessionization via mapGroupsWithState: a session closes
-    * after `gapMs` of inactivity (processing-time timeout). State per key
-    * is O(1) — counters only — so keyed state scales with active users,
-    * not event volume. */
-  def sessionize(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L):
-      Dataset[Session] = {
-    implicit val stateEnc = Encoders.product[SessionState]
-    implicit val outEnc = Encoders.product[Session]
-    implicit val longEnc = Encoders.scalaLong
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, Session](
-        GroupStateTimeout.ProcessingTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Session(userId, s.count, s.sum)
-          } else {
-            val evs = batch.toSeq
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-            val next = SessionState(prev.count + evs.size,
-              prev.sum + evs.map(_.value).sum,
-              math.max(prev.lastTs, evs.map(_.ts.getTime).max))
-            state.update(next)
-            state.setTimeoutDuration(gapMs)
-            Session(userId, next.count, next.sum)
-          }
-      }
-  }
 
   /** JVM twin of [[graft.operators.Sketches]]' md5 HLL hash family —
     * register = first 32 md5 bits of "hl:r:"+key mod m, rho = 33 -
@@ -165,51 +118,6 @@ object EventsStreaming {
         est(col("registers")).as("est_users"))
   }
 
-  /** Streaming exact dedup on arbitrary key columns with BOUNDED state:
-    * `dropDuplicatesWithinWatermark` only remembers keys younger than the
-    * watermark, so state is O(keys per watermark window), not O(all keys
-    * ever) — the only safe form on an unbounded 100 TB/day stream. Exact
-    * global dedup (plain `dropDuplicates`) would grow state forever; run
-    * that as the batch `Dedup.exact` over the landed data instead. */
-  def dedupeExact(events: DataFrame, keyCols: Seq[String] = Seq("event_id"),
-                  watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Sessionization emitting only CLOSED sessions, via
-    * flatMapGroupsWithState + event-time timeout: a session closes when
-    * the watermark passes its last event + gap, i.e. closure is driven by
-    * stream time, not wall clock — replayable and deterministic, unlike
-    * the processing-time variant above (which emits running updates).
-    * Append output mode; state per key is O(1) counters. */
-  def sessionizeClosed(events: Dataset[Event], gapMs: Long = 30 * 60 * 1000L,
-                       watermark: String = "0 seconds"): Dataset[Session] = {
-    implicit val stateEnc = Encoders.product[SessionState]
-    implicit val outEnc = Encoders.product[Session]
-    implicit val longEnc = Encoders.scalaLong
-    events.withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(Session(userId, s.count, s.sum))
-          } else {
-            val evs = batch.toSeq
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-            val next = SessionState(prev.count + evs.size,
-              prev.sum + evs.map(_.value).sum,
-              math.max(prev.lastTs, evs.map(_.ts.getTime).max))
-            state.update(next)
-            // close when the watermark passes last-event-time + gap
-            state.setTimeoutTimestamp(next.lastTs + gapMs)
-            Iterator.empty
-          }
-      }
-  }
-
   /** Watermarked stream-stream interval join: each purchase joins the
     * same user's view events from the preceding `horizon` — the
     * attribution join ("which impression led to this purchase"), as a
@@ -240,10 +148,4 @@ object EventsStreaming {
       .select("purchase_id", "user_id", "p_ts", "purchase_value",
         "view_id", "v_ts")
   }
-
-  /** File-source stream over a directory of event parquet files — the
-    * production entry point (swap path for kafka, same downstream plan). */
-  def fromParquetDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-                     schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(dir)
 }

@@ -17,7 +17,7 @@ class AnnRigSpec extends RigSpec {
   private val Probes = 2
 
   private lazy val corpus =
-    Similarity.syntheticClusteredCorpus(spark, N, clusters = Clusters)
+    Rigs.syntheticClusteredCorpus(spark, N, clusters = Clusters)
       .localCheckpoint()
   private lazy val queries = corpus.filter(col("vec_id") % 100 === 0)
   private lazy val cents = Similarity.labelCentroids(
@@ -116,9 +116,9 @@ class AnnRigSpec extends RigSpec {
       sampleN = SampleN, iters = iters)
 
   test("sampled k-means: inertia within 1.10x of the full trainer's") {
-    val fi = Similarity.kmeansInertia(corpus, "vec_id", "embedding",
+    val fi = Rigs.kmeansInertia(corpus, "vec_id", "embedding",
       full(corpus))
-    val si = Similarity.kmeansInertia(corpus, "vec_id", "embedding",
+    val si = Rigs.kmeansInertia(corpus, "vec_id", "embedding",
       sampled(corpus))
     info(f"inertia full=$fi%.3f sampled=$si%.3f ratio=${si / fi}%.4f")
     assert(si <= 1.10 * fi)
@@ -130,7 +130,7 @@ class AnnRigSpec extends RigSpec {
     // every block the trainer materializes (its sample, its centroids)
     def rowsRead(train: => DataFrame): Long =
       measured(spark)(train.collect())._2.recordsRead
-    val big = Similarity.syntheticClusteredCorpus(spark, 4 * N,
+    val big = Rigs.syntheticClusteredCorpus(spark, 4 * N,
       clusters = Clusters).localCheckpoint()
     def assigned(df: DataFrame, cents: => DataFrame): Long = rowsRead(
       Similarity.ivfAssign(df, "vec_id", "embedding", cents)

@@ -112,14 +112,14 @@ class AsOfJoinSpec extends SparkTestBase {
   }
 
   test("syntheticTimeline: deterministic, right side unique per (key, ts)") {
-    val (p1, v1) = AsOfJoin.syntheticTimeline(spark, 5, 40, 10)
+    val (p1, v1) = Rigs.syntheticTimeline(spark, 5, 40, 10)
     // right-side uniqueness is the operator's contract — the rig must
     // honor it by construction
     assert(v1.groupBy("user_id", "ts").count()
       .filter($"count" > 1).count() == 0)
     assert(p1.count() == 50)
     // deterministic: a rebuild is value-identical
-    val (p2, v2) = AsOfJoin.syntheticTimeline(spark, 5, 40, 10)
+    val (p2, v2) = Rigs.syntheticTimeline(spark, 5, 40, 10)
     assert(v1.collect().toSet == v2.collect().toSet)
     assert(p1.collect().toSet == p2.collect().toSet)
   }
@@ -129,7 +129,7 @@ class AsOfJoinSpec extends SparkTestBase {
     // rig scale: the naive expansion is the semantic REFERENCE; the
     // union form must match it exactly, including unmatched rows
     import org.apache.spark.sql.functions.{col, max, struct}
-    val (p, v) = AsOfJoin.syntheticTimeline(spark, 4, 30, 15)
+    val (p, v) = Rigs.syntheticTimeline(spark, 4, 30, 15)
     val union = AsOfJoin.asofBackward(p, v, Seq("user_id"), "ts", Seq("v"))
       .select($"purchase_id", $"asof_v")
       .as[(Long, Option[Double])].collect().toMap

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
 
-/** The BPE scale rigs at test scale, built from [[Bpe.syntheticDict]]:
+/** The BPE scale rigs at test scale, built from [[Rigs.syntheticDict]]:
   * pair counting per occurrence vs over the word dict, the encode
   * kernel's executed passes as the merge table grows 8x, and the driver
   * trainer against the distributed loop and the heap model its gate is
@@ -14,7 +14,7 @@ class BpeRigSpec extends RigSpec {
 
   /** Dict words as plain text: one symbol string per row, spaces out. */
   private def words(n: Long): DataFrame =
-    Bpe.syntheticDict(spark, n)
+    Rigs.syntheticDict(spark, n)
       .select(regexp_replace(col("ws"), " ", "").as("word"), col("cnt"))
 
   private def pairs(df: DataFrame, weight: org.apache.spark.sql.Column) =
@@ -51,7 +51,7 @@ class BpeRigSpec extends RigSpec {
   test("encode kernel: passes <= total symbols, and an 8x merge table " +
       "grows the executed passes <= 1.4x; kernel equals the expression " +
       "path") {
-    val merges = Bpe.trainDriver(spark, Bpe.syntheticDict(spark, 30000),
+    val merges = Bpe.trainDriver(spark, Rigs.syntheticDict(spark, 30000),
         8192).orderBy("step").collect()
       .map(r => (r.getString(1), r.getString(2))).toIndexedSeq
     assert(merges.size == 8192)
@@ -80,7 +80,7 @@ class BpeRigSpec extends RigSpec {
 
   test("driver trainer: distributed trajectory prefix equal, peak heap " +
       "within the per-word model the dict gate assumes") {
-    val prefix = Bpe.syntheticDict(spark, 5000).localCheckpoint()
+    val prefix = Rigs.syntheticDict(spark, 5000).localCheckpoint()
     def rows(df: DataFrame) = df.orderBy("step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getString(3), r.getLong(4))).toSeq
@@ -92,7 +92,7 @@ class BpeRigSpec extends RigSpec {
     // sampler forces a collection every 100 ms while the trainer runs,
     // so what it reads is live data, not uncollected garbage. The
     // 5.2M-word / 32k-merge envelope is shrunk 26x in both.
-    val dict = Bpe.syntheticDict(spark, 200000).localCheckpoint()
+    val dict = Rigs.syntheticDict(spark, 200000).localCheckpoint()
     val nDict = dict.count()
     val rt = Runtime.getRuntime
     def live(): Long = { System.gc(); rt.totalMemory - rt.freeMemory }

@@ -20,9 +20,9 @@ class CcRigSpec extends RigSpec {
   private val StarFrac = 0.8
 
   private lazy val chains =
-    Dedup.syntheticComponentEdges(spark, Nodes, Size).localCheckpoint()
+    Rigs.syntheticComponentEdges(spark, Nodes, Size).localCheckpoint()
   private lazy val skew =
-    Dedup.syntheticSkewedEdges(spark, Nodes, StarFrac, Size)
+    Rigs.syntheticSkewedEdges(spark, Nodes, StarFrac, Size)
       .localCheckpoint()
   private lazy val pairs = spark.range(Nodes / 2)
     .select((col("id") * 2 + 1).as("id_a"), (col("id") * 2).as("id_b"))

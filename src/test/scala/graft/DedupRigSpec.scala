@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.PlanCounters._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.Dedup
 
 /** The near-dup crossover rigs at test scale: planted near-dup corpora
   * of 1,000 and 4,000 docs (families of 20, 20% of docs carrying a
@@ -20,7 +20,7 @@ class DedupRigSpec extends RigSpec {
   private val PruneCap = 100
 
   private def corpus(nDocs: Long): DataFrame =
-    Dedup.syntheticNearDupCorpus(spark, nDocs, familySize = 20,
+    Rigs.syntheticNearDupCorpus(spark, nDocs, familySize = 20,
       boilerplateFrac = 0.2).localCheckpoint()
   private lazy val small = corpus(1000)
   private lazy val large = corpus(4000)
@@ -102,7 +102,7 @@ class DedupRigSpec extends RigSpec {
   }
 
   test("embedding LSH scores far fewer pairs than the brute pair scan") {
-    val emb = Similarity.syntheticClusteredCorpus(spark, 2000,
+    val emb = Rigs.syntheticClusteredCorpus(spark, 2000,
       clusters = 100).localCheckpoint()
     val lsh = Dedup.embeddingPairs(emb, "vec_id", "embedding",
       threshold = 0.9, tables = 8, bits = 8)

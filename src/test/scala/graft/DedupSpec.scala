@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.EngineError.AnalysisError
-import graft.operators.{ArtifactMaintenance, Dedup, Similarity}
+import graft.operators.{ArtifactMaintenance, Dedup}
 
 class DedupSpec extends SparkTestBase {
   import spark.implicits._
@@ -436,7 +436,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("syntheticComponentEdges plants worst-case chains of the stated size") {
-    val g = Dedup.syntheticComponentEdges(spark, nNodes = 100, componentSize = 10)
+    val g = Rigs.syntheticComponentEdges(spark, nNodes = 100, componentSize = 10)
     // 100 nodes in 10 chains of 10: 90 edges, every node exactly once
     val edges = g.as[(Long, Long)].collect()
     assert(edges.length == 90)
@@ -449,7 +449,7 @@ class DedupSpec extends SparkTestBase {
       .as[(Long, Long)].collect()
     assert(sizes.length == 10 && sizes.forall(_._2 == 10L))
     // deterministic: a second build is bit-identical
-    val again = Dedup.syntheticComponentEdges(spark, 100, 10)
+    val again = Rigs.syntheticComponentEdges(spark, 100, 10)
       .as[(Long, Long)].collect()
     assert(edges.toSet == again.toSet)
     // the distributed path earns its log bound on the planted chains
@@ -525,7 +525,7 @@ class DedupSpec extends SparkTestBase {
     Dedup.appendToMinhashIndex(drop, "doc_id", "text", path)
     // crash-retry: the SAME drop re-delivered must refuse, not
     // double-count signatures and inflate bucket collision stats
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[AnalysisError] {
       Dedup.appendToMinhashIndex(drop, "doc_id", "text", path)
     }
     assert(e.getMessage.contains("appendToMinhashIndex") &&
@@ -539,7 +539,7 @@ class DedupSpec extends SparkTestBase {
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(bloomDir).iterator().asScala.toSeq
       .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-    val e2 = intercept[IllegalArgumentException] {
+    val e2 = intercept[AnalysisError] {
       Dedup.appendToMinhashIndex(drop, "doc_id", "text", path)
     }
     assert(e2.getMessage.contains("shares ids"))
@@ -555,7 +555,7 @@ class DedupSpec extends SparkTestBase {
       "doc_id", "text", path)
     // DOUBLE 5.5 would silently coerce to BIGINT 5 — a COLLIDING id —
     // under the old bare cast (r16 advice); now it refuses by name
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[AnalysisError] {
       Dedup.appendToMinhashIndex(Seq((5.5, C)).toDF("doc_id", "text"),
         "doc_id", "text", path)
     }
@@ -773,10 +773,7 @@ class DedupSpec extends SparkTestBase {
       expectedSource = Some("/data/corpusA")).hashes.count() == 2)
   }
 
-  test("a minhash index stamped hashMode = xx is refused by name: read, " +
-      "append and streaming probe") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  test("a minhash index stamped hashMode = xx is refused by name") {
     import org.apache.spark.sql.types.MetadataBuilder
     val tmp = java.nio.file.Files.createTempDirectory("graft-mh-xx")
     val md5Path = tmp.resolve("md5").toString
@@ -808,54 +805,10 @@ class DedupSpec extends SparkTestBase {
       "doc_id", "text", path)))
     assert(spark.read.parquet(s"$path/signatures").count() == 1,
       "the refused append wrote rows")
-    val mem = MemoryStream[(Long, String)]
-    val q = Dedup.streamingDedup(mem.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", path)(_ => ())
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try {
-      mem.addData((10L, A))
-      refusedByName(intercept[
-        org.apache.spark.sql.streaming.StreamingQueryException](
-        q.processAllAvailable()))
-    } finally q.stop()
-  }
-
-  test("streamingDedup: micro-batches dedup against everything admitted") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mh-stream")
-    val path = tmp.resolve("index").toString
-    val A = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val C = "red orange yellow green blue indigo violet cyan magenta teal pink grey"
-    val D = "north south east west up down left right front back over under"
-    Dedup.writeMinhashIndex(Seq((1L, A)).toDF("doc_id", "text"),
-      "doc_id", "text", path)
-    val mem = MemoryStream[(Long, String)]
-    val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Dedup.streamingDedup(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", path,
-        threshold = 0.3) { surv =>
-        admitted ++= surv.select("doc_id").as[Long].collect()
-      }
-      .option("checkpointLocation", tmp.resolve("ckpt").toString)
-      .start()
-    try {
-      // batch 1: corpus dup A dropped, C admitted (and appended)
-      mem.addData((10L, A), (11L, C))
-      q.processAllAvailable()
-      // batch 2: near-dup of the batch-1 survivor dropped, D admitted —
-      // proving batch 2 probed the index GROWN by batch 1, while batch 1
-      // itself was not emptied by its own append (the localCheckpoint
-      // ordering the scaladoc documents)
-      mem.addData((20L, C.replace("grey", "zz")), (21L, D))
-      q.processAllAvailable()
-      assert(admitted.toSeq == Seq(11L, 21L))
-    } finally q.stop()
   }
 
   test("syntheticSkewedEdges plants one giant star component plus chains") {
-    val g = Dedup.syntheticSkewedEdges(spark, nNodes = 100,
+    val g = Rigs.syntheticSkewedEdges(spark, nNodes = 100,
       starFrac = 0.8, componentSize = 10)
     val edges = g.as[(Long, Long)].collect()
     // 79 star edges + 2 chains of 10 over the remaining 20 nodes
@@ -881,13 +834,13 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("syntheticNearDupCorpus plants near-dup families at the stated rate") {
-    val c = Dedup.syntheticNearDupCorpus(spark, nDocs = 40, familySize = 4,
+    val c = Rigs.syntheticNearDupCorpus(spark, nDocs = 40, familySize = 4,
       docLen = 60, mutationRate = 0.01)
     val rows = c.as[(Long, String)].collect().sortBy(_._1)
     assert(rows.length == 40)
     assert(rows.forall(_._2.split(" ").length == 60))
     // deterministic: a second build is bit-identical
-    val again = Dedup.syntheticNearDupCorpus(spark, 40, 4, 60, 0.01)
+    val again = Rigs.syntheticNearDupCorpus(spark, 40, 4, 60, 0.01)
       .as[(Long, String)].collect().sortBy(_._1)
     assert(rows.toSeq == again.toSeq)
     // same-family docs are near-dups; cross-family docs share nothing
@@ -909,11 +862,11 @@ class DedupSpec extends SparkTestBase {
     // hit ~frac of docs, while non-boilerplate docs are byte-identical
     // to the frac=0 corpus
     val n = 400
-    val bp = Dedup.syntheticNearDupCorpus(spark, n, familySize = 4,
+    val bp = Rigs.syntheticNearDupCorpus(spark, n, familySize = 4,
         docLen = 20, mutationRate = 0.01,
         boilerplateFrac = 0.5, boilerplateLen = 5)
       .as[(Long, String)].collect().toMap
-    val plain = Dedup.syntheticNearDupCorpus(spark, n, familySize = 4,
+    val plain = Rigs.syntheticNearDupCorpus(spark, n, familySize = 4,
         docLen = 20, mutationRate = 0.01)
       .as[(Long, String)].collect().toMap
     val prefixed = bp.filter { case (id, t) => t != plain(id) }
@@ -929,7 +882,7 @@ class DedupSpec extends SparkTestBase {
     }.toSet
     assert(blocks.size == 1, s"block not corpus-wide constant: $blocks")
     // deterministic: a rebuild is bit-identical
-    val again = Dedup.syntheticNearDupCorpus(spark, n, 4, 20, 0.01, 0.5, 5)
+    val again = Rigs.syntheticNearDupCorpus(spark, n, 4, 20, 0.01, 0.5, 5)
       .as[(Long, String)].collect().toMap
     assert(bp == again)
   }
@@ -986,7 +939,7 @@ class DedupSpec extends SparkTestBase {
 
   test("semanticDedup: one row per vector, drop rule follows " +
       "(cent_cos, id)-max over within-cluster pairs") {
-    val emb = graft.operators.Similarity.syntheticClusteredCorpus(spark,
+    val emb = Rigs.syntheticClusteredCorpus(spark,
       40, dim = 8, clusters = 4, noiseScale = 0.15)
     val out = Dedup.semanticDedup(emb, "vec_id", "embedding",
       k = 4, iters = 2, threshold = 0.85)
@@ -1030,7 +983,7 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("semanticDedup: of two identical vectors the higher id is dropped") {
-    val emb = graft.operators.Similarity.syntheticClusteredCorpus(spark,
+    val emb = Rigs.syntheticClusteredCorpus(spark,
       30, dim = 8, clusters = 3, noiseScale = 0.2)
     val twinOf = emb.filter(col("vec_id") === 7L)
       .withColumn("vec_id", lit(1000L))

@@ -1,15 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-
-import graft.operators.{Dedup, TextAnalysis}
 import graft.streaming.DocsStreaming
 
-/** Streaming ingest (DocsStreaming): gate → intra-stream content dedup →
-  * landed-corpus probe, pinned EQUAL to the batch twins on the same
-  * data — the streaming path must land exactly the rows the batch
-  * curation chain would have kept. */
+/** Batch ingest (DocsStreaming.ingestBatch, the `ds_ingest` contract
+  * query): gates → keep-first content dedup → landed-corpus probe →
+  * token stamps, pinned against the survivors worked out by hand. */
 class DocsStreamingSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -20,75 +15,7 @@ class DocsStreamingSpec extends SparkTestBase {
   private def goodText(tag: String): String =
     s"the quick brown fox $tag jumps over the lazy dog and runs far away"
 
-  test("contentDedup: intra-stream keep-first plus landed-corpus drop, " +
-      "equal to the batch twin") {
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq((100L, goodText("landed"))).toDF("doc_id", "text")
-    val idx = DocsStreaming.corpusHashIndex(corpus, "text")
-      .localCheckpoint() // static side: materialized once per drop cycle
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val out = DocsStreaming.contentDedup(docs, Some(idx))
-    val q = out.writeStream.format("memory").queryName("cd_test")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, t0, goodText("a")),
-        (2L, t0, goodText("a")),      // intra-batch duplicate of 1
-        (3L, t0, goodText("landed")), // already in the corpus
-        (4L, t0, goodText("b")))
-      q.processAllAvailable()
-      mem.addData((5L, t0, goodText("a"))) // still within watermark
-      q.processAllAvailable()
-      val got = spark.sql("select doc_id from cd_test order by 1")
-        .as[Long].collect().toSeq
-      assert(got == Seq(1L, 4L))
-      // batch twin on the same rows: exact keep-first among arrivals
-      // minus anything whose hash is landed — identical survivor set
-      val arrivals = Seq((1L, goodText("a")), (2L, goodText("a")),
-        (3L, goodText("landed")), (4L, goodText("b")),
-        (5L, goodText("a"))).toDF("doc_id", "text")
-      val batch = Dedup.exactByContent(arrivals, "doc_id", "text")
-        .join(idx.withColumn("__c", lit(1)), Seq("content_hash"), "left")
-        .filter(col("__c").isNull)
-        .select("doc_id").as[Long].collect().toSeq.sorted
-      assert(batch == got)
-    } finally q.stop()
-  }
-
-  test("ingest: quality and language gates drop before dedup state, " +
-      "token accounting stamped on survivors") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val out = DocsStreaming.ingest(docs, corpusHashes = None)
-    val q = out.writeStream.format("memory").queryName("ingest_test")
-      .outputMode("append").start()
-    try {
-      mem.addData(
-        (1L, t0, goodText("x")),
-        (2L, t0, "short junk"),            // fails the length band
-        (3L, t0, goodText("x")),           // duplicate of 1
-        (4L, t0, goodText("y")))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "select doc_id, n_tokens, n_tokens_est from ingest_test order by 1")
-        .collect()
-      assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 4L))
-      // exact whitespace token count of goodText = 14
-      assert(rows.forall(_.getInt(1) == 14))
-      assert(rows.forall(_.getInt(2) > 0))
-      // the gates are the SAME Column expressions the batch side runs —
-      // pin one value so a gate drift breaks here too
-      val s = Seq(goodText("x")).toDF("text")
-        .select(TextAnalysis.qualityScore(col("text"))).head().getDouble(0)
-      assert(s >= 0.5, s"quality gate fixture drifted: $s")
-    } finally q.stop()
-  }
-
-  test("ingestBatch is the stream's batch collapse: same survivors, " +
-      "same stamps, on the same rows") {
-    implicit val sqlCtx = spark.sqlContext
+  test("ingestBatch: gates, keep-first, corpus probe and token stamps") {
     val corpus = Seq((100L, goodText("landed"))).toDF("doc_id", "text")
     val idx = DocsStreaming.corpusHashIndex(corpus, "text")
       .localCheckpoint()
@@ -98,256 +25,18 @@ class DocsStreamingSpec extends SparkTestBase {
       (3L, t0, goodText("landed")), // already landed
       (4L, t0, "short junk"),       // fails the quality gate
       (5L, t0, goodText("b")))
-    val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val docs = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = DocsStreaming.ingest(docs, Some(idx))
-      .writeStream.format("memory").queryName("ib_test")
-      .outputMode("append").start()
-    val streamed = try {
-      mem.addData(rows: _*)
-      q.processAllAvailable()
-      spark.sql(
-        "select doc_id, content_hash, n_tokens, n_tokens_est from ib_test")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
-          r.getInt(3))).toSet
-    } finally q.stop()
-    val batch = DocsStreaming.ingestBatch(
+    val got = DocsStreaming.ingestBatch(
         rows.toDF("doc_id", "ts", "text"), Some(idx))
       .select("doc_id", "content_hash", "n_tokens", "n_tokens_est")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
         r.getInt(3))).toSet
-    assert(batch == streamed && batch.map(_._1) == Set(1L, 5L),
-      s"batch collapse diverged: stream=$streamed batch=$batch")
-  }
-
-  test("bucketed corpus-hash index: a LIVE micro-batch probes it " +
-      "without re-shuffling the static side") {
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val corpus = spark.range(2000)
-        .select(col("id").as("doc_id"),
-          concat(lit("text body number "), col("id")).as("text"))
-      DocsStreaming.writeCorpusHashIndex(corpus, "text",
-        "graft_corpus_hashes_live", buckets = 4)
-      val mem = MemoryStream[(Long, java.sql.Timestamp, String)]
-      val docs = mem.toDF().toDF("doc_id", "ts", "text")
-      val out = DocsStreaming.contentDedup(docs,
-        Some(spark.table("graft_corpus_hashes_live")))
-      val q = out.writeStream.format("memory").queryName("bq_live")
-        .outputMode("append").start()
-      try {
-        mem.addData((5000L, t0, goodText("fresh")),
-          (10L, t0, "text body number 10")) // already landed
-        q.processAllAvailable()
-        assert(spark.sql("select doc_id from bq_live").as[Long]
-          .collect().toSeq == Seq(5000L))
-        // the plan the micro-batch ACTUALLY executed: the bucketed
-        // scan must not sit under an Exchange — at 100 TB that
-        // exchange would re-shuffle the whole index every batch
-        val baos = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(baos, true, "UTF-8")) {
-          q.explain(extended = false)
-        }
-        val plan = baos.toString("UTF-8")
-        assert(plan.contains("graft_corpus_hashes_live"),
-          "expected the micro-batch plan to scan the bucketed index:\n"
-            + plan)
-        val lines = plan.split("\n").toSeq
-        val scanIdx = lines.indexWhere(_.contains("graft_corpus_hashes_live"))
-        val above = lines.slice(math.max(0, scanIdx - 3), scanIdx)
-        assert(!above.exists(_.contains("Exchange")),
-          "the live micro-batch re-shuffled the bucketed index:\n" + plan)
-        // grow the index with the admitted survivor, then re-deliver
-        // it: the appended hash must drop the duplicate, and the probe
-        // must STILL scan the grown index without an exchange
-        DocsStreaming.appendCorpusHashes(
-          Seq((5000L, goodText("fresh"))).toDF("doc_id", "text"),
-          "text", "graft_corpus_hashes_live", buckets = 4)
-        mem.addData((5001L, t0, goodText("fresh")))
-        q.processAllAvailable()
-        assert(spark.sql("select doc_id from bq_live").as[Long]
-          .collect().toSeq == Seq(5000L),
-          "a re-delivered survivor must drop against the grown index")
-        val baos2 = new java.io.ByteArrayOutputStream()
-        Console.withOut(new java.io.PrintStream(baos2, true, "UTF-8")) {
-          q.explain(extended = false)
-        }
-        val lines2 = baos2.toString("UTF-8").split("\n").toSeq
-        val scan2 = lines2.indexWhere(_.contains("graft_corpus_hashes_live"))
-        assert(scan2 >= 0 && !lines2.slice(math.max(0, scan2 - 3), scan2)
-          .exists(_.contains("Exchange")),
-          "the grown index must still probe exchange-free:\n" +
-            lines2.mkString("\n"))
-      } finally q.stop()
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_corpus_hashes_live")
-    }
-  }
-
-  test("bucketed corpus-hash index: the probe join scans the static " +
-      "side with no exchange") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val corpus = spark.range(2000)
-        .select(col("id").as("doc_id"),
-          concat(lit("text body number "), col("id")).as("text"))
-      DocsStreaming.writeCorpusHashIndex(corpus, "text",
-        "graft_corpus_hashes", buckets = 4)
-      val idx = spark.table("graft_corpus_hashes")
-      // half the drop (ids 1750..1999) is already landed, half is new
-      val drop = spark.range(500)
-        .select((col("id") + 1750).as("doc_id"),
-          concat(lit("text body number "), col("id") + 1750).as("text"),
-          lit(t0).as("ts"))
-      val out = DocsStreaming.ingestBatch(drop, Some(idx),
-        minQuality = 0.0, keepLangs = Seq("en", "und"))
-      val plan = out.queryExecution.executedPlan.toString
-      // the probe's static side must come straight off the bucketed
-      // scan: exchanges elsewhere (the drop side repartitioning to
-      // match, the keep-first window) are fine, but none may sit
-      // between the join and the index scan — at 100 TB that exchange
-      // would re-shuffle the whole index once per micro-batch. In the
-      // printed tree an exchange feeding the scan prints directly
-      // above it, so the lines between are the structural check.
-      val lines = plan.split("\n").toSeq
-      val scanIdx = lines.indexWhere(_.contains("graft_corpus_hashes"))
-      assert(scanIdx >= 0, "expected a scan of the bucketed index:\n" + plan)
-      val above = lines.slice(math.max(0, scanIdx - 3), scanIdx)
-      assert(!above.exists(_.contains("Exchange")),
-        "the bucketed index scan must not be re-shuffled per batch:\n" +
-          plan)
-      // contrast: the unbucketed frame probe pays that exchange
-      val plain = DocsStreaming.ingestBatch(drop,
-        Some(DocsStreaming.corpusHashIndex(corpus, "text")),
-        minQuality = 0.0, keepLangs = Seq("en", "und"))
-      val plainPlan = plain.queryExecution.executedPlan.toString
-      assert(plainPlan.contains("Exchange hashpartitioning(content_hash"),
-        "contrast fixture drifted — expected the unbucketed probe to " +
-          "shuffle the index:\n" + plainPlan)
-      assert(out.count() > 0)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_corpus_hashes")
-    }
-  }
-
-  test("compactCorpusHashIndex: duplicate hashes and small files fold " +
-      "away, the probe stays exchange-free, the crash window self-heals") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val table = "graft_corpus_hashes_cpt"
-    try {
-      val corpus = spark.range(1000)
-        .select(col("id").as("doc_id"),
-          concat(lit("text body number "), col("id")).as("text"))
-      DocsStreaming.writeCorpusHashIndex(corpus, "text", table,
-        buckets = 4)
-      // three drops, two of them RE-LANDING already-present hashes
-      // (append admits duplicates by design — existence-only probe)
-      val drop = corpus.filter(col("doc_id") < 300)
-      for (_ <- 0 until 2)
-        DocsStreaming.appendCorpusHashes(drop, "text", table, buckets = 4)
-      DocsStreaming.appendCorpusHashes(
-        Seq((5000L, "a brand new doc body")).toDF("doc_id", "text"),
-        "text", table, buckets = 4)
-      val distinctBefore = spark.table(table).distinct().count()
-      assert(spark.table(table).count() == 1001L + 600L &&
-        distinctBefore == 1001L,
-        "rig must contain duplicate hash rows before compaction")
-      val filesBefore = spark.table(table).inputFiles.length
-      DocsStreaming.compactCorpusHashIndex(spark, table, buckets = 4)
-      // row count == distinct count, fewer files, same hash set
-      assert(spark.table(table).count() == 1001L)
-      assert(spark.table(table).inputFiles.length < filesBefore,
-        s"compaction must shrink the file count ($filesBefore -> " +
-          s"${spark.table(table).inputFiles.length})")
-      // the compacted table still probes exchange-free
-      val probe = DocsStreaming.ingestBatch(
-        spark.range(100)
-          .select((col("id") + 950).as("doc_id"),
-            concat(lit("text body number "), col("id") + 950).as("text"),
-            lit(t0).as("ts")),
-        Some(spark.table(table)), minQuality = 0.0,
-        keepLangs = Seq("en", "und"))
-      val lines = probe.queryExecution.executedPlan.toString.split("\n")
-        .toSeq
-      val scanIdx = lines.indexWhere(_.contains(table))
-      assert(scanIdx >= 0)
-      assert(!lines.slice(math.max(0, scanIdx - 3), scanIdx)
-        .exists(_.contains("Exchange")),
-        "the compacted index must still probe without an exchange:\n" +
-          lines.mkString("\n"))
-      assert(probe.count() == 50L) // 950..999 landed, 1000..1049 new
-      // the index still grows after compaction (bucket spec intact)
-      DocsStreaming.appendCorpusHashes(
-        Seq((6000L, "another fresh doc body")).toDF("doc_id", "text"),
-        "text", table, buckets = 4)
-      assert(spark.table(table).count() == 1002L)
-      // crash window: a previous compaction died between DROP and
-      // RENAME — the intact rewrite sits at the staging name and the
-      // next call promotes it
-      spark.sql(s"ALTER TABLE $table RENAME TO ${table}__compact")
-      DocsStreaming.compactCorpusHashIndex(spark, table, buckets = 4)
-      assert(spark.catalog.tableExists(table) &&
-        !spark.catalog.tableExists(s"${table}__compact"))
-      assert(spark.table(table).count() == 1002L)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__compact")
-    }
-  }
-
-  test("deleteCorpusHashes: forgotten content stops gating re-ingest; " +
-      "absent hashes are a no-op; the probe stays exchange-free") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val table = "graft_corpus_hashes_del"
-    try {
-      val corpus = spark.range(500)
-        .select(col("id").as("doc_id"),
-          concat(lit("text body number "), col("id")).as("text"))
-      DocsStreaming.writeCorpusHashIndex(corpus, "text", table,
-        buckets = 4)
-      def probe(ids: Seq[Long]): Seq[Long] = DocsStreaming.ingestBatch(
-          ids.map(i => (i + 9000, s"text body number $i", t0))
-            .toDF("doc_id", "text", "ts"),
-          Some(spark.table(table)), minQuality = 0.0,
-          keepLangs = Seq("en", "und"))
-        .select("doc_id").as[Long].collect().toSeq.sorted.map(_ - 9000)
-      // pre-delete: re-submitted copies of docs 7 and 8 are gated out
-      assert(probe(Seq(7L, 8L)).isEmpty)
-      // docs 7 and 8 are deleted from the lake; forget their content
-      val removed = DocsStreaming.deleteCorpusHashes(
-        corpus.filter(col("doc_id").isin(7L, 8L)), "text", table,
-        buckets = 4)
-      assert(removed == 2L)
-      assert(spark.table(table).count() == 498L)
-      // post-delete: the same content re-ingests (nothing remembers
-      // it), while un-forgotten content still gates
-      assert(probe(Seq(7L, 8L, 9L)) == Seq(7L, 8L))
-      // no surviving doc carries the hash anymore -> re-delete no-op
-      assert(DocsStreaming.deleteCorpusHashes(
-        corpus.filter(col("doc_id") === 7L), "text", table,
-        buckets = 4) == 0L)
-      // the rewritten table still probes exchange-free
-      val plan = DocsStreaming.ingestBatch(
-          Seq((9100L, "text body number 100", t0))
-            .toDF("doc_id", "text", "ts"),
-          Some(spark.table(table)), minQuality = 0.0,
-          keepLangs = Seq("en", "und"))
-        .queryExecution.executedPlan.toString
-      val lines = plan.split("\n").toSeq
-      val scanIdx = lines.indexWhere(_.contains(table))
-      assert(scanIdx >= 0 &&
-        !lines.slice(math.max(0, scanIdx - 3), scanIdx)
-          .exists(_.contains("Exchange")),
-        "the post-delete index must still probe without an exchange:\n"
-          + plan)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table}__compact")
-    }
+    // content_hash is md5 over the text bytes; n_tokens the whitespace
+    // count (14); n_tokens_est max(word pieces, ceil(chars / 4))
+    def expected(id: Long, text: String) = (id,
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(text.getBytes("UTF-8")).map(b => f"$b%02x").mkString,
+      14, math.max(14, math.ceil(text.length / 4.0).toInt))
+    assert(got == Set(expected(1L, goodText("a")),
+      expected(5L, goodText("b"))))
   }
 }

@@ -44,7 +44,7 @@ class JoinRigSpec extends RigSpec {
 
   test("as-of: the union+window form feeds its window each row once; " +
       "join+argmax feeds its aggregate every earlier-view pair") {
-    val (p0, v0) = AsOfJoin.syntheticTimeline(spark, 20, 1000, 100)
+    val (p0, v0) = Rigs.syntheticTimeline(spark, 20, 1000, 100)
     val (p, v) = (p0.localCheckpoint(), v0.localCheckpoint())
     val union = AsOfJoin.asofBackward(p, v, Seq("user_id"), "ts", Seq("v"))
     val vv = v.select(col("user_id").as("v_user"), col("ts").as("v_ts"),

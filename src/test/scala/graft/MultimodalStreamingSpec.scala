@@ -78,37 +78,6 @@ class MultimodalStreamingSpec extends SparkTestBase {
     assert(f.feature.isEmpty) // meta survives, pixels honestly absent
   }
 
-  test("frameSamplePlan and resizePlan are lazy metadata ops") {
-    val df = Seq((1L, 25, 1280, 720)).toDF("id", "n_frames", "w", "h")
-    val sampled = Multimodal.frameSamplePlan(df, "n_frames", every = 10)
-      .select("sampled_frames").collect()(0).getSeq[Int](0)
-    assert(sampled == Seq(0, 10, 20))
-    val resized = Multimodal.resizePlan(df, "w", "h", maxSide = 256)
-      .select("target_w", "target_h").collect()(0)
-    assert(resized.getInt(0) == 256 && resized.getInt(1) == 144)
-  }
-
-  test("streaming hourlyAggregates with watermark over MemoryStream") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val events = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = EventsStreaming.hourlyAggregates(events, "2 hours", "1 hour")
-    val q = agg.writeStream.format("memory").queryName("hourly_test")
-      .outputMode("complete").start()
-    try {
-      def ts(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-      mem.addData((ts(0, 10), "click", 1.0), (ts(0, 40), "click", 2.0),
-        (ts(1, 5), "view", 5.0))
-      q.processAllAvailable()
-      val rows = spark.sql("select * from hourly_test order by window_start, event_type")
-        .collect()
-      assert(rows.length == 2)
-      assert(rows(0).getAs[Long]("cnt") == 2L)
-      assert(rows(0).getAs[Double]("sum_value") == 3.0)
-      assert(rows(1).getAs[String]("event_type") == "view")
-    } finally q.stop()
-  }
-
   test("distinctUsersPerWindow batch collapse equals the SQL-expression " +
       "sketch exactly (JVM md5 registers ≡ Sketches family)") {
     import spark.implicits._
@@ -166,52 +135,6 @@ class MultimodalStreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("streaming dedupeExact drops in-watermark duplicate keys") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val events = mem.toDF().toDF("event_id", "ts", "value")
-    val out = EventsStreaming.dedupeExact(events, Seq("event_id"), "1 hour")
-    val q = out.writeStream.format("memory").queryName("dedupe_test")
-      .outputMode("append").start()
-    try {
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      mem.addData((1L, t0, 1.0), (1L, t0, 1.0), (2L, t0, 2.0))
-      q.processAllAvailable()
-      mem.addData((1L, t0, 1.0)) // still within watermark -> dropped
-      q.processAllAvailable()
-      val rows = spark.sql("select event_id from dedupe_test order by 1")
-        .as[Long].collect().toSeq
-      assert(rows == Seq(1L, 2L))
-    } finally q.stop()
-  }
-
-  test("sessionizeClosed emits a session only when the watermark passes the gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[EventsStreaming.Event]
-    val sessions = EventsStreaming.sessionizeClosed(mem.toDS(),
-      gapMs = 60000L, watermark = "0 seconds")
-    val q = sessions.writeStream.format("memory").queryName("closed_test")
-      .outputMode("append").start()
-    try {
-      def ev(id: Long, user: Long, t: String, v: Double) =
-        EventsStreaming.Event(id,
-          java.sql.Timestamp.valueOf(s"2024-01-01 $t"), user, "click", v)
-      mem.addData(ev(1, 7, "00:00:00", 1.0), ev(2, 7, "00:00:30", 2.0))
-      q.processAllAvailable()
-      // watermark is still 00:00:30 — nothing closed yet
-      assert(spark.sql("select * from closed_test").collect().isEmpty)
-      // a much later event advances the watermark past 00:01:30
-      mem.addData(ev(3, 8, "00:10:00", 5.0))
-      q.processAllAvailable()
-      mem.addData(ev(4, 9, "00:20:00", 0.0)) // push watermark again
-      q.processAllAvailable()
-      val r = spark.sql("select * from closed_test where user_id = 7")
-        .as[EventsStreaming.Session].collect()
-      assert(r.length == 1)
-      assert(r(0).n_events == 2L && r(0).total_value == 3.0)
-    } finally q.stop()
-  }
-
   test("stream-stream purchase attribution joins views within the horizon") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
@@ -238,30 +161,6 @@ class MultimodalStreamingSpec extends SparkTestBase {
         .collect()
       assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
         Seq((4L, 1L)))
-    } finally q.stop()
-  }
-
-  test("streaming sessionize via mapGroupsWithState emits running sessions") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[EventsStreaming.Event]
-    val sessions = EventsStreaming.sessionize(mem.toDS(), gapMs = 60000L)
-    val q = sessions.writeStream.format("memory").queryName("sessions_test")
-      .outputMode("update").start()
-    try {
-      def ev(id: Long, user: Long, v: Double) = EventsStreaming.Event(
-        id, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), user, "click", v)
-      mem.addData(ev(1, 7, 1.0), ev(2, 7, 2.0), ev(3, 8, 5.0))
-      // processAllAvailable() would never settle here: ProcessingTimeTimeout
-      // keeps scheduling timeout-check batches. Poll the sink instead.
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      def rows() = spark.sql("select * from sessions_test order by user_id").collect()
-      while (rows().length < 2 && System.nanoTime() < deadline)
-        Thread.sleep(200)
-      val r = rows()
-      assert(r.length == 2)
-      assert(r(0).getAs[Long]("n_events") == 2L)
-      assert(r(0).getAs[Double]("total_value") == 3.0)
-      assert(r(1).getAs[Long]("user_id") == 8L)
     } finally q.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ParquetStats, ZOrder}
+import graft.operators.ZOrder
 
 /** Row-group stats audit: the same table written arrival-order vs
   * clustered must read back as overlapping vs disjoint stanzas. */
@@ -21,7 +21,7 @@ class ParquetStatsSpec extends SparkTestBase {
   test("rowGroupStats reads per-group min/max; totals match the data") {
     val path = tmp("ps_plain")
     fact.repartition(4).write.mode("overwrite").options(opts).parquet(path)
-    val stats = ParquetStats.rowGroupStats(spark, path, "key")
+    val stats = Rigs.rowGroupStats(spark, path, "key")
     assert(stats.count() >= 4, "expected multiple row groups")
     assert(stats.agg(sum("rows")).as[Long].collect()(0) == 200000L)
     // stanzas must bracket the actual data
@@ -37,10 +37,10 @@ class ParquetStatsSpec extends SparkTestBase {
     fact.repartition(4).write.mode("overwrite").options(opts).parquet(plain)
     graft.sinks.Sinks.writeClustered(
       fact.repartitionByRange(4, col("key")), clus, Seq("key"), opts)
-    val fPlain = ParquetStats.overlapFraction(
-      ParquetStats.rowGroupStats(spark, plain, "key"))
-    val fClus = ParquetStats.overlapFraction(
-      ParquetStats.rowGroupStats(spark, clus, "key"))
+    val fPlain = Rigs.overlapFraction(
+      Rigs.rowGroupStats(spark, plain, "key"))
+    val fClus = Rigs.overlapFraction(
+      Rigs.rowGroupStats(spark, clus, "key"))
     // uniform keys in arrival order: every stanza spans the key space
     assert(fPlain > 0.9, s"plain copy should overlap heavily: $fPlain")
     // range-clustered: only file-boundary groups may touch
@@ -59,10 +59,10 @@ class ParquetStatsSpec extends SparkTestBase {
     // dimension's ranges by design); what clustering buys is narrow
     // per-group stanzas — mean coverage, the width a range predicate
     // actually decodes against
-    val zCov = ParquetStats.meanStanzaCoverage(
-      ParquetStats.rowGroupStats(spark, zpath, "x"))
-    val pCov = ParquetStats.meanStanzaCoverage(
-      ParquetStats.rowGroupStats(spark, ppath, "x"))
+    val zCov = Rigs.meanStanzaCoverage(
+      Rigs.rowGroupStats(spark, zpath, "x"))
+    val pCov = Rigs.meanStanzaCoverage(
+      Rigs.rowGroupStats(spark, ppath, "x"))
     assert(pCov > 0.9, s"arrival-order stanzas should span the key space: $pCov")
     assert(zCov < 0.8 * pCov,
       s"z-ordered x stanzas should be materially narrower: $zCov vs $pCov")
@@ -82,10 +82,10 @@ class ParquetStatsSpec extends SparkTestBase {
       opts)
     df3.repartition(4).write.mode("overwrite").options(opts).parquet(ppath)
     for (c <- Seq("x", "y", "w")) {
-      val zCov = ParquetStats.meanStanzaCoverage(
-        ParquetStats.rowGroupStats(spark, zpath, c))
-      val pCov = ParquetStats.meanStanzaCoverage(
-        ParquetStats.rowGroupStats(spark, ppath, c))
+      val zCov = Rigs.meanStanzaCoverage(
+        Rigs.rowGroupStats(spark, zpath, c))
+      val pCov = Rigs.meanStanzaCoverage(
+        Rigs.rowGroupStats(spark, ppath, c))
       assert(pCov > 0.9,
         s"arrival-order $c stanzas should span the key space: $pCov")
       assert(zCov < 0.8 * pCov,
@@ -98,13 +98,13 @@ class ParquetStatsSpec extends SparkTestBase {
     val path = tmp("ps_str")
     spark.range(1000).select(concat(lit("s"), col("id")).as("s"))
       .coalesce(1).write.mode("overwrite").parquet(path)
-    val stats = ParquetStats.rowGroupStats(spark, path, "s")
+    val stats = Rigs.rowGroupStats(spark, path, "s")
     assert(stats.count() >= 1)
-    assert(ParquetStats.overlapFraction(stats) == 1.0)
-    assert(ParquetStats.meanStanzaCoverage(stats) == 1.0)
+    assert(Rigs.overlapFraction(stats) == 1.0)
+    assert(Rigs.meanStanzaCoverage(stats) == 1.0)
     // an empty dir fails loudly at the read, whatever the exception type
     intercept[Exception] {
-      ParquetStats.rowGroupStats(spark, tmp("ps_empty"), "s")
+      Rigs.rowGroupStats(spark, tmp("ps_empty"), "s")
     }
   }
 }

@@ -221,7 +221,7 @@ class PartitionInvarianceSpec extends SparkTestBase {
   }
 
   test("semanticDedup: the keep/drop decision table survives any layout") {
-    val emb = Similarity.syntheticClusteredCorpus(spark, 48, dim = 8,
+    val emb = Rigs.syntheticClusteredCorpus(spark, 48, dim = 8,
         clusters = 4, noiseScale = 0.15)
       .withColumn("grp", col("vec_id") % 3)
     assertInvariant(emb, "semanticDedup")(df =>

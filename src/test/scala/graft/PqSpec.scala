@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.EngineError.AnalysisError
-import graft.operators.{ArtifactMaintenance, Dedup, Similarity, TextAnalysis}
+import graft.operators.{ArtifactMaintenance, Dedup, Similarity}
 
 /** Product-quantization ANN: codebook shape, encode/ADC semantics, the
   * flat-LUT indexing under dropped clusters, and the re-rank path. */
@@ -99,7 +99,7 @@ class PqSpec extends SparkTestBase {
     val brute = Similarity.bruteForceTopK(corpus, corpus, "vec_id",
       "embedding", k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
-        TextAnalysis.round4Value(r.getDouble(2))).toMap
+        Rigs.round4Value(r.getDouble(2))).toMap
     assert(pq.size == brute.size)
     // same pairs need not be chosen under ADC ties, but every shared
     // pair must carry the identical 4dp cosine — and on this corpus the
@@ -446,7 +446,7 @@ class PqSpec extends SparkTestBase {
       "incrementally appended index must probe identically to a " +
         "from-scratch build on the union corpus")
     // a re-delivered drop (overlapping ids) refuses before writing
-    val ex1 = intercept[IllegalArgumentException] {
+    val ex1 = intercept[AnalysisError] {
       Similarity.appendIvfPqResidualIndex(drop, "id", "vec", incPath)
     }
     assert(ex1.getMessage.contains("shares ids"))
@@ -491,7 +491,7 @@ class PqSpec extends SparkTestBase {
     }
     assert(probe(incPath) == probe(fullPath) && probe(incPath).nonEmpty,
       "base+append must probe identically to a from-scratch build")
-    val ex = intercept[IllegalArgumentException] {
+    val ex = intercept[AnalysisError] {
       Similarity.appendPqIndex(corpus.filter(col("id") < 2), "id", "vec",
         incPath)
     }
@@ -659,7 +659,7 @@ class PqSpec extends SparkTestBase {
     assert(Similarity.readPqIndex(spark, path).codes.count() == 32L)
     // and the re-added ids are duplicates now — refusal via the merged
     // bloom
-    intercept[IllegalArgumentException] {
+    intercept[AnalysisError] {
       Similarity.appendPqIndex(corpus.filter(col("id") === 30), "id",
         "vec", path)
     }
@@ -689,7 +689,7 @@ class PqSpec extends SparkTestBase {
     assert(clean.bloomUsed && !clean.scannedCodes && clean.maybeHits == 0)
     // a real duplicate: bloom maybe-hit falls through to the pruned
     // id-column probe and refuses with the same named message
-    val ex = intercept[IllegalArgumentException] {
+    val ex = intercept[AnalysisError] {
       ArtifactMaintenance.requireDisjointIds(spark, idx.codes, "id",
         Seq(5L, 200L).toDF("id"), path, "test")
     }
@@ -701,7 +701,7 @@ class PqSpec extends SparkTestBase {
       .toDF("id", "vec")
     Similarity.appendPqIndex(drop, "id", "vec", path,
       expectedSource = Some("unit"))
-    val ex2 = intercept[IllegalArgumentException] {
+    val ex2 = intercept[AnalysisError] {
       Similarity.appendPqIndex(drop, "id", "vec", path)
     }
     assert(ex2.getMessage.contains("shares ids"))
@@ -729,7 +729,7 @@ class PqSpec extends SparkTestBase {
       Similarity.readPqIndex(spark, path).codes, "id",
       Seq(900L, 901L).toDF("id"), path, "test")
     assert(again.bloomUsed && !again.scannedCodes)
-    intercept[IllegalArgumentException] {
+    intercept[AnalysisError] {
       Similarity.appendPqIndex(drop2, "id", "vec", path)
     }
     // the residual index runs the same guard: a clean drop is certified
@@ -752,7 +752,7 @@ class PqSpec extends SparkTestBase {
     Similarity.appendIvfPqResidualIndex(drop, "id", "vec", resPath)
     val resClean2 = resClean(900L)
     assert(resClean2.bloomUsed && !resClean2.scannedCodes)
-    intercept[IllegalArgumentException] {
+    intercept[AnalysisError] {
       Similarity.appendIvfPqResidualIndex(drop, "id", "vec", resPath)
     }
   }
@@ -771,7 +771,7 @@ class PqSpec extends SparkTestBase {
     // against an indexed 100
     val lossy = Seq((100.5, Array.tabulate(4)(d => d / 10.0f)))
       .toDF("id", "vec")
-    val ex = intercept[IllegalArgumentException] {
+    val ex = intercept[AnalysisError] {
       Similarity.appendPqIndex(lossy, "id", "vec", path)
     }
     assert(ex.getMessage.contains("round-trip") &&
@@ -780,7 +780,7 @@ class PqSpec extends SparkTestBase {
     // bypassed the bloom entirely — refused now
     val junk = Seq(("not-a-number", Array.tabulate(4)(d => d / 10.0f)))
       .toDF("id", "vec")
-    val ex2 = intercept[IllegalArgumentException] {
+    val ex2 = intercept[AnalysisError] {
       Similarity.appendPqIndex(junk, "id", "vec", path)
     }
     assert(ex2.getMessage.contains("round-trip"))
@@ -960,7 +960,7 @@ class PqSpec extends SparkTestBase {
     // bloom probe would always miss and ADMIT the duplicate
     val dupDbl = base.filter(col("id") === 5)
       .select(col("id").cast("double").as("id"), col("vec"))
-    val ex = intercept[IllegalArgumentException] {
+    val ex = intercept[AnalysisError] {
       Similarity.appendPqIndex(dupDbl, "id", "vec", path)
     }
     assert(ex.getMessage.contains("shares ids"))
@@ -975,7 +975,7 @@ class PqSpec extends SparkTestBase {
       "codes/ must keep ONE id type across differently-typed appends")
     assert(idx.codes.count() == 33)
     // the folded bloom remembers the coerced id: re-delivery refuses
-    intercept[IllegalArgumentException] {
+    intercept[AnalysisError] {
       Similarity.appendPqIndex(newDbl, "id", "vec", path)
     }
   }

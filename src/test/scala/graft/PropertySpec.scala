@@ -180,7 +180,7 @@ class PropertySpec extends SparkTestBase {
   test("semanticDedup: kept+dropped partitions the input; survivors " +
       "have no surviving qualifying partner pair") {
     forAll(Gen.chooseNum(12, 36), n = 4) { nVecs =>
-      val emb = Similarity.syntheticClusteredCorpus(spark, nVecs,
+      val emb = Rigs.syntheticClusteredCorpus(spark, nVecs,
         dim = 8, clusters = 3, noiseScale = 0.2)
       val out = graft.operators.Dedup.semanticDedup(emb, "vec_id",
         "embedding", k = 3, iters = 2, threshold = 0.9)

@@ -45,7 +45,7 @@ class ScaleJoinsSpec extends SparkTestBase {
     // key 1 (the (k, salt) composite is the exchange key), and with an
     // explicit partition count (exempt from AQE coalescing) the rows land
     // on several reducers
-    val salted = left.withColumn("__salt", (rand(7) * f).cast("int"))
+    val salted = left.withColumn("__salt", ScaleJoins.salt(left, f))
     val hotSalts = salted.filter(col("k") === 1L)
       .select("__salt").distinct().count()
     assert(hotSalts > 1, s"hot key got $hotSalts salt value(s)")
@@ -74,14 +74,15 @@ class ScaleJoinsSpec extends SparkTestBase {
         concat(lit("n"), col("id")).as("name"))
       ScaleJoins.writeBucketed(facts, "graft_facts", "k", buckets = 4)
       ScaleJoins.writeBucketed(dims, "graft_dims", "k", buckets = 4)
-      val joined = ScaleJoins.bucketedJoin(spark, "graft_facts", "graft_dims", "k")
-      assert(!ScaleJoins.hasShuffleExchange(joined),
+      val joined = spark.table("graft_facts")
+        .join(spark.table("graft_dims"), Seq("k"))
+      assert(!Rigs.hasShuffleExchange(joined),
         "bucketed join must not shuffle:\n" +
           joined.queryExecution.executedPlan.toString)
       assert(joined.count() == 100)
       // contrast: the same join from plain (unbucketed) frames shuffles
       val plain = facts.join(dims, Seq("k"))
-      assert(ScaleJoins.hasShuffleExchange(plain))
+      assert(Rigs.hasShuffleExchange(plain))
     } finally {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.sql("DROP TABLE IF EXISTS graft_facts")

@@ -13,29 +13,6 @@ class SearchSpec extends SparkTestBase {
     (3L, "sort merge join plan"),
     (4L, "scan scan scan scan scan scan")).toDF("doc_id", "text")
 
-  test("invertedIndex posts (term, doc, tf)") {
-    val idx = Search.invertedIndex(corpus, "doc_id", "text")
-      .as[(String, Long, Long)].collect().toSet
-    assert(idx.contains(("spark", 1L, 2L)))
-    assert(idx.contains(("scan", 4L, 6L)))
-    assert(!idx.exists(p => p._1 == "join" && p._2 == 2L))
-  }
-
-  test("invertedIndex maxDocFreqFrac drops corpus-wide stopterms") {
-    val stop = Seq((1L, "the a"), (2L, "the b"), (3L, "the c"), (4L, "the d"))
-      .toDF("doc_id", "text")
-    val idx = Search.invertedIndex(stop, "doc_id", "text", maxDocFreqFrac = 0.5)
-      .select("term").distinct().as[String].collect().toSet
-    assert(!idx.contains("the") && idx == Set("a", "b", "c", "d"))
-  }
-
-  test("invertedIndex minTf floors per-doc term frequency") {
-    // doc 1 has spark x2; every other (term, doc) posting is tf=1
-    val idx = Search.invertedIndex(corpus, "doc_id", "text", minTf = 2)
-      .as[(String, Long, Long)].collect().toSet
-    assert(idx == Set(("spark", 1L, 2L), ("scan", 4L, 6L)))
-  }
-
   test("bm25 matches the formula computed by hand") {
     val out = Search.bm25(corpus, "doc_id", "text", Seq("spark", "join"))
       .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
@@ -87,32 +64,6 @@ class SearchSpec extends SparkTestBase {
     val clean = Seq("no pii here at all").toDF("t")
       .select(counts.map { case (n, c) => c.as(n) }: _*).head()
     assert(clean.getInt(0) == 0 && clean.getInt(1) == 0 && clean.getInt(2) == 0)
-  }
-
-  test("bigram LM: in-domain text outscores OOV text; unseen falls back " +
-    "to smoothing mass; short docs carry NULL") {
-    import graft.operators.LanguageModel
-    val ref = Seq(
-      (1L, "the cat sat on the mat"),
-      (2L, "the cat ran on the mat")).toDF("doc_id", "text")
-    val model = LanguageModel.trainBigram(ref, "doc_id", "text")
-    val docs = Seq(
-      (10L, "the cat sat"),          // every bigram seen in the model
-      (11L, "zz qq ww"),             // fully OOV: pure smoothing mass
-      (12L, "one")).toDF("doc_id", "text") // no bigram -> NULL score
-    val out = LanguageModel
-      .scoreBigram(docs, "doc_id", "text", model, k = 0.5)
-      .orderBy("doc_id")
-      .as[(Long, Long, Option[Double])].collect().toSeq
-    assert(out.map(r => (r._1, r._2)) ==
-      Seq((10L, 2L), (11L, 2L), (12L, 0L)))
-    assert(out(0)._3.get > out(1)._3.get,
-      "in-domain text must outscore out-of-vocabulary text")
-    assert(out(2)._3.isEmpty, "a doc with no bigram has no evidence")
-    // OOV bigram with OOV context = ln(k / (k*V)) = -ln V exactly
-    val v = model.vocab.as[Long].head().toDouble
-    assert(math.abs(out(1)._3.get - TextAnalysis.round4Value(
-      -math.log(v))) < 1e-9)
   }
 
   test("unigramDivergence: zero on identical corpora, positive and " +
